@@ -24,15 +24,18 @@ _M32 = 0x00000000FFFFFFFF
 
 
 def _spread_col(c: Column) -> Column:
+    # Morton interleave, for STORAGE ORDER only: stored cell keys and
+    # range decomposition (cell_col, cell_col_crs) need the Z-order
+    # locality. Equality keys never need it: the extent × point joins
+    # (operators/spatial_join.extent_point_join), nn_join, knn_join
+    # and geom_join key on packed ids instead (_packed_cell).
     # PITFALL: each level references its input TWICE, so the expression
     # tree holds 2^6 = 64 inlined copies of whatever ``c`` is. With a
     # plain column input that's harmless (codegen CSE / cheap reads),
     # but feeding a COMPUTED expression makes Filter conditions blow
     # past the codegen method limit and fall back to per-reference
     # interpreted evaluation (measured 118 s vs 1 s on a 20M-row
-    # filter). Only call this on attribute columns in hot paths;
-    # equi-join keys that don't need SFC ordering should use packed
-    # (gx, gy) ids instead (see operators/geom_join.py).
+    # filter).
     c = c.bitwiseAND(F.lit(_M32))
     c = (c.bitwiseOR(F.shiftleft(c, 16))).bitwiseAND(F.lit(_M16))
     c = (c.bitwiseOR(F.shiftleft(c, 8))).bitwiseAND(F.lit(_M8))
@@ -60,6 +63,13 @@ def cell_col(x_u: Column, y_u: Column, res: int) -> Column:
     gx = grid_coord_col(x_u, res, LON_OFF_U)
     gy = grid_coord_col(y_u, res, LAT_OFF_U)
     return _spread_col(gx).bitwiseOR(F.shiftleft(_spread_col(gy), 1))
+
+
+def _packed_cell(gx: Column, gy: Column) -> Column:
+    """Packed ``(gx << 32) | gy`` cell id from grid coords (< 2^31): the
+    equality key of the engine's equi-joins — a bijective id with no
+    ordering, and none of the Morton spread's expression blowup."""
+    return F.shiftleft(gx, 32).bitwiseOR(gy)
 
 
 def parent_cell_col(cell: Column, d_res: int) -> Column:

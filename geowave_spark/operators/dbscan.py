@@ -40,21 +40,19 @@ def eps_pairs(
     equi-join (AQE skew-split applies) for corpora beyond broadcast
     size — mirrors nn_self_join's flag so DBSCAN has the same
     escape hatch instead of a guaranteed driver/executor OOM."""
-    from geowave_spark.index.native import cell_col
-    from geowave_spark.operators.nn_join import _ring_exploded
+    from geowave_spark.operators.nn_join import _cell_at, _ring_exploded
 
     res = res_for_distance(eps_u)
     left = points.select(
         F.col(key).alias("a_id"),
         F.col("x_u").alias("ax"),
         F.col("y_u").alias("ay"),
-        cell_col(F.col("x_u"), F.col("y_u"), res).alias("_cell"),
+        _cell_at(res).alias("_cell"),
     ).repartition("a_id")
 
     # candidate side = the ONE 3×3 ring-explode implementation (shared
-    # with nn_self_join — including its two-step spread projection that
-    # keeps codegen inside the JIT limit); duplicating it here let the
-    # two copies drift as that workaround was re-tuned
+    # with nn_self_join, and with it the cell-id format both sides of
+    # the join must agree on)
     right = _ring_exploded(points, res, key)
     if broadcast_candidates:
         right = F.broadcast(right)

@@ -6,19 +6,18 @@ exact distance (SqlQueryRunner.java:214-245;
 udf/GeomWithinDistance.java:13-45 — bufferAmount = radius applied to
 the non-build side only, TieredSpatialJoin.java:146,413-419).
 
-Engine: the right point-set is expanded to radius boxes (native), run
-through the single (res, cell) equi-join, then refined with the exact
-integer squared distance — the whole plan is JVM-side, one shuffle."""
+Engine: the right point-set is expanded to radius boxes (native) and
+keyed like any box, then run through the extent × point join skeleton
+(operators/spatial_join.extent_point_join: one packed-key broadcast
+equi-join) with the exact integer squared distance as the refine — the
+whole plan is JVM-side, no shuffle."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from geowave_spark.operators.spatial_join import (
-    boxes_with_cells,
-    points_keyed_by_res,
-)
+from geowave_spark.operators.spatial_join import boxes_with_cells, extent_point_join
 
 
 def point_distance_join(
@@ -43,23 +42,14 @@ def point_distance_join(
         (F.col("x_u") + r).alias("x_hi"),
         (F.col("y_u") + r).alias("y_hi"),
     )
-    # broadcast the buffered side: no shuffle, and hotspot cells fan out
-    # across stream partitions (see box_point_join on strategy + why no
-    # DedupeFilter stage is needed: ≤1 (res, cell) match per pair)
-    b = F.broadcast(boxes_with_cells(right_boxed).withColumnRenamed("res", "_bres"))
-    keyed = points_keyed_by_res(left_points, b.select(F.col("_bres").alias("res")).distinct())
     dx = F.col("x_u") - F.col("rx")
     dy = F.col("y_u") - F.col("ry")
-    matched = (
-        keyed.join(
-            b,
-            (keyed["res"] == b["_bres"]) & (keyed["_jcell"] == b["cell"]),
-            "inner",
-        )
-        .withColumn("dist2", dx * dx + dy * dy)
-        .where(F.col("dist2") <= F.lit(r * r))
-        .select(left_key, right_key, "dist2")
+    dist2 = dx * dx + dy * dy
+    return extent_point_join(
+        left_points,
+        boxes_with_cells(right_boxed),
+        dist2 <= F.lit(r * r),
+        "leftanti" if negative else "inner",
+        point_key=left_key,
+        extent_key=[right_key, dist2.alias("dist2")],
     )
-    if negative:
-        return left_points.join(matched.select(left_key), left_key, "leftanti")
-    return matched

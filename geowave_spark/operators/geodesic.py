@@ -257,10 +257,7 @@ def nn_self_join_geodesic(
     span_deg = 360.0 / n_side
 
     from geowave_spark import LAT_OFF_U, LON_OFF_U
-    from geowave_spark.index.native import grid_coord_col
-
-    def packed(gx, gy):
-        return F.shiftleft(gx, 32).bitwiseOR(gy)
+    from geowave_spark.index.native import _packed_cell, grid_coord_col
 
     def clamp_y(g):
         return F.least(F.greatest(g, F.lit(0)), F.lit(n_side - 1))
@@ -285,7 +282,7 @@ def nn_self_join_geodesic(
                 *[
                     F.transform(
                         F.sequence(-kx, kx),
-                        lambda dx: packed(
+                        lambda dx: _packed_cell(
                             F.pmod(gx0 + dx, F.lit(n_side)), clamp_y(gy0 + F.lit(dy))
                         ),
                     )
@@ -294,7 +291,7 @@ def nn_self_join_geodesic(
             )
         )
     )
-    own = packed(gx0, gy0)
+    own = _packed_cell(gx0, gy0)
 
     side = explode_side
     if side == "auto":
@@ -359,7 +356,7 @@ def nn_self_join_geodesic(
         # weakening but never invalidating the bound. Queries with < k
         # fine candidates fall back to max_dist (no prune — exactly the
         # sparse queries whose coarse candidate sets are small anyway).
-        from geowave_spark.operators.nn_join import _ring_exploded
+        from geowave_spark.operators.nn_join import _cell_at, _ring_exploded
 
         fres = min(res + prune_offset, 30)
         max_m = F.lit(float(max_dist_m))
@@ -367,7 +364,7 @@ def nn_self_join_geodesic(
             F.col(key).alias("a_id"),
             F.col("x_u").alias("ax"),
             F.col("y_u").alias("ay"),
-            cell_col(F.col("x_u"), F.col("y_u"), fres).alias("_fcell"),
+            _cell_at(fres).alias("_fcell"),
         ).repartition("a_id")
         fright = _ring_exploded(points, fres, key).withColumnRenamed(
             "_cell", "_fcell"

@@ -7,7 +7,9 @@ which joins any two indexed geometry sets — the IT exercises hail
 points × tornado-track LINES (test/.../spark/GeoWaveSparkSpatialJoinIT.java:104-172).
 The convex fast paths (box_point_join, octagon_point_join, xz join)
 stay preferred when their shape assumptions hold; this operator is the
-path for everything else.
+path for everything else. Points × geometries (geom_point_join) run on
+the extent × point join skeleton (spatial_join.extent_point_join) with
+polyfill keys; the plan below is geometry × geometry (geom_geom_join).
 
 Plan shape (idiomatic-Spark re-expression of the tier algorithm):
 
@@ -70,9 +72,10 @@ from geowave_spark.geom.predicates import (
     points_pred_batch,
 )
 from geowave_spark.geom.wkb import box, wkb_loads
+from geowave_spark.index.native import _packed_cell
 from geowave_spark.index.polyfill import polyfill
 from geowave_spark.index.zorder import morton_decode, pick_res_for_extent
-from geowave_spark.operators.spatial_join import POINT_RES, points_keyed_by_res
+from geowave_spark.operators.spatial_join import POINT_RES, _join_key, extent_point_join
 from geowave_spark import X_SCALE
 
 DEFAULT_MAX_CELLS = 32
@@ -237,7 +240,7 @@ def _packed_parent(c: Column, d_res: Column) -> Column:
     are non-negative so arithmetic shift is exact."""
     gx = F.call_function("shiftright", F.shiftright(c, 32), d_res)
     gy = F.call_function("shiftright", c.bitwiseAND(F.lit(_M32_PACK)), d_res)
-    return F.shiftleft(gx, 32).bitwiseOR(gy)
+    return _packed_cell(gx, gy)
 
 
 def _coarsen_to(cells: Column, d_res: Column) -> Column:
@@ -668,7 +671,7 @@ def geom_geom_join(
         d = F.lit(POINT_RES) - F.col("_cres")
         gx = F.call_function("shiftright", grid_coord_col(refx, POINT_RES), d)
         gy = F.call_function("shiftright", grid_coord_col(refy, POINT_RES, LAT_OFF_U), d)
-        cand = cand.where(F.col("_ccell") == F.shiftleft(gx, 32).bitwiseOR(gy))
+        cand = cand.where(F.col("_ccell") == _packed_cell(gx, gy))
 
     if native_pred is not None:
         matched = cand.where(native_pred).select(left_key, right_key)
@@ -798,11 +801,13 @@ def geom_point_join(
     broadcast_geoms: bool | None = None,
 ) -> DataFrame:
     """Points (x_u, y_u columns, no WKB materialization) × general
-    geometries. The point side is re-keyed per distinct geometry res by
-    an exact parent shift (points_keyed_by_res); each geometry carries
-    distinct cells at ONE res and a point maps to one cell per res, so
-    a pair matches at most once — no dedupe stage, same argument as
-    box_point_join.
+    geometries, through the extent × point join skeleton
+    (spatial_join.extent_point_join): polyfill cells on the geometry
+    side, the point side re-keyed per distinct geometry res by an exact
+    parent shift (points_keyed_by_res), one packed-key equi-join, then
+    the vectorized refine. Each geometry carries distinct cells at ONE
+    res and a point maps to one cell per res, so a pair matches at most
+    once — no dedupe stage, same argument as box_point_join.
 
     ``predicate`` is evaluated as pred(geom, point) for asymmetric ops:
     'contains' keeps points strictly interior, 'covers'/'intersects'
@@ -845,34 +850,8 @@ def geom_point_join(
         refine = _point_refine_udf(predicate, distance_u)(
             F.col("_g"), F.col("x_u"), F.col("y_u")
         )
+    # polyfill cells are packed (gx << 32) | gy ids at the geometry's
+    # res ≤ POINT_RES: tagging them with res gives the skeleton's key
     g = g.withColumn("cell", F.explode("cells")).drop("cells")
-    if use_broadcast:
-        g = F.broadcast(g)
-    # distinct-res collect (tiny, bounded) → literal explode: every
-    # point re-keys at each geometry res with no dimension join at all
-    res_vals = sorted(x[0] for x in keyed_geoms.select("res").distinct().collect())
-    from geowave_spark import LAT_OFF_U
-    from geowave_spark.index.native import grid_coord_col
-
-    pts = points.withColumn(
-        "_pcell",
-        F.shiftleft(grid_coord_col(F.col("x_u"), POINT_RES), 32).bitwiseOR(
-            grid_coord_col(F.col("y_u"), POINT_RES, LAT_OFF_U)
-        ),
-    ).withColumn("res", F.explode(F.array(*[F.lit(int(v)) for v in res_vals])))
-    keyed = pts.withColumn(
-        "_jcell", _packed_parent(F.col("_pcell"), F.lit(POINT_RES) - F.col("res"))
-    )
-
-    j = keyed.join(
-        g.withColumnRenamed("res", "_gres"),
-        (keyed["res"] == F.col("_gres")) & (keyed["_jcell"] == g["cell"]),
-        "inner",
-    ).where(refine)
-    matched = j.select(point_key, geom_key)
-
-    if how == "inner":
-        return matched
-    if how in ("leftsemi", "leftanti"):
-        return points.join(matched.select(point_key), point_key, how)
-    raise ValueError(how)
+    g = g.withColumn("cell", _join_key(F.col("res"), F.col("cell")))
+    return extent_point_join(points, g, refine, how, use_broadcast, point_key, geom_key)

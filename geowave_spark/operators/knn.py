@@ -163,7 +163,7 @@ def knn_join(
 
     Returns (query_id, point_key, dist2, rank), identical to knn()."""
     from geowave_spark import WORLD_X_U
-    from geowave_spark.index.native import grid_coord_col
+    from geowave_spark.index.native import _packed_cell, grid_coord_col
     from geowave_spark import LAT_OFF_U, LON_OFF_U
 
     n_pts = points.count()
@@ -197,9 +197,7 @@ def knn_join(
         cells = F.array_distinct(
             F.array(
                 *[
-                    F.shiftleft(clamp(F.col("_gx") + dx), 32).bitwiseOR(
-                        clamp(F.col("_gy") + dy)
-                    )
+                    _packed_cell(clamp(F.col("_gx") + dx), clamp(F.col("_gy") + dy))
                     for dx in (-1, 0, 1)
                     for dy in (-1, 0, 1)
                 ]
@@ -210,8 +208,9 @@ def knn_join(
         )
         pts = points.withColumn(
             "_cell",
-            F.shiftleft(grid_coord_col(F.col("x_u"), res_r, LON_OFF_U), 32).bitwiseOR(
-                grid_coord_col(F.col("y_u"), res_r, LAT_OFF_U)
+            _packed_cell(
+                grid_coord_col(F.col("x_u"), res_r, LON_OFF_U),
+                grid_coord_col(F.col("y_u"), res_r, LAT_OFF_U),
             ),
         )
         dx = F.col("x_u") - F.col("qx")

@@ -27,11 +27,11 @@ for extreme hotspots compose with plans.stats salting.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from geowave_spark import LAT_OFF_U, LON_OFF_U, WORLD_X_U
-from geowave_spark.index.native import cell_col, grid_coord_col
+from geowave_spark.index.native import _packed_cell, grid_coord_col
 
 
 def res_for_distance(max_dist_u: int) -> int:
@@ -43,21 +43,21 @@ def res_for_distance(max_dist_u: int) -> int:
     return res
 
 
+def _cell_at(res: int) -> Column:
+    """Packed cell id of (x_u, y_u) at ``res`` (≤ 30, so gx, gy < 2^30)."""
+    return _packed_cell(
+        grid_coord_col(F.col("x_u"), res, LON_OFF_U),
+        grid_coord_col(F.col("y_u"), res, LAT_OFF_U),
+    )
+
+
 def _ring_exploded(points: DataFrame, res: int, key: str) -> DataFrame:
     """Candidate side exploded to its 3×3 cell neighborhood at ``res``
     (b_id, bx, by, _cell). The 9 neighbor cells are made DISTINCT per
     row natively (array_distinct handles domain-edge clamping
     collisions) — combined with a single query cell per point, a pair
     can match at most ONE join key, so no dedupe stage is needed (same
-    proof as box_point_join).
-
-    Two-step projection: materialize the SIX clamped bit-spreads
-    (3 per axis) once, then OR-combine into the 9 neighbor cells.
-    Inlining a spread chain per cell (18 total) explodes the codegen
-    method past the JIT limit and Spark silently falls back to
-    interpreted evaluation — measured ~80× slower on this expression."""
-    from geowave_spark.index.native import _spread_col
-
+    proof as box_point_join)."""
     n_side = 1 << res
     gx0 = grid_coord_col(F.col("x_u"), res, LON_OFF_U)
     gy0 = grid_coord_col(F.col("y_u"), res, LAT_OFF_U)
@@ -65,26 +65,21 @@ def _ring_exploded(points: DataFrame, res: int, key: str) -> DataFrame:
     def clamp(g):
         return F.least(F.greatest(g, F.lit(0)), F.lit(n_side - 1))
 
-    spread = points.select(
-        F.col(key).alias("b_id"),
-        F.col("x_u").alias("bx"),
-        F.col("y_u").alias("by"),
-        *[_spread_col(clamp(gx0 + d)).alias(f"_sx{i}") for i, d in enumerate((-1, 0, 1))],
-        *[
-            F.shiftleft(_spread_col(clamp(gy0 + d)), 1).alias(f"_sy{i}")
-            for i, d in enumerate((-1, 0, 1))
-        ],
-    )
     cells = F.array_distinct(
         F.array(
             *[
-                F.col(f"_sx{i}").bitwiseOR(F.col(f"_sy{j}"))
-                for i in range(3)
-                for j in range(3)
+                _packed_cell(clamp(gx0 + dx), clamp(gy0 + dy))
+                for dx in (-1, 0, 1)
+                for dy in (-1, 0, 1)
             ]
         )
     )
-    return spread.select("b_id", "bx", "by", F.explode(cells).alias("_cell"))
+    return points.select(
+        F.col(key).alias("b_id"),
+        F.col("x_u").alias("bx"),
+        F.col("y_u").alias("by"),
+        F.explode(cells).alias("_cell"),
+    )
 
 
 def nn_self_join(
@@ -121,20 +116,12 @@ def nn_self_join(
     left = points
     if left_filter is not None:
         left = left.where(left_filter)
-    fine_cols = (
-        [
-            cell_col(
-                F.col("x_u"), F.col("y_u"), min(res + prune_offset, 30)
-            ).alias("_fcell")
-        ]
-        if prune_offset
-        else []
-    )
+    fine_cols = [_cell_at(min(res + prune_offset, 30)).alias("_fcell")] if prune_offset else []
     left = left.select(
         F.col(key).alias("a_id"),
         F.col("x_u").alias("ax"),
         F.col("y_u").alias("ay"),
-        cell_col(F.col("x_u"), F.col("y_u"), res).alias("_cell"),
+        _cell_at(res).alias("_cell"),
         *fine_cols,
     )
     # spread the query side across the cluster BEFORE the broadcast

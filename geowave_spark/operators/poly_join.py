@@ -1,19 +1,19 @@
 """Polygon ⋈ point spatial join (convex polygons, exact refinement).
 
-The general-geometry counterpart of box_point_join: the extent side is
-an arbitrary convex polygon instead of an axis-aligned box. The join
-reuses the flagship plan shape (TieredSpatialJoin semantics,
+The convex-polygon caller of the extent × point join skeleton
+(operators/spatial_join.extent_point_join — TieredSpatialJoin semantics,
 analytics/spark/.../spatial/TieredSpatialJoin.java:59-552):
 
   1. coarse index: the polygon's bbox is keyed exactly like a box —
-     per-row resolution + ≤4 corner cells (boxes_with_cells);
-  2. candidates: one (res, cell) equi-join against the re-keyed points;
+     per-row resolution + ≤4 corner-cell keys (boxes_with_cells);
+  2. candidates: the single packed-key equi-join against the re-keyed
+     points;
   3. exact refinement: for a CCW convex polygon, containment is the AND
      of per-edge integer cross products — a native Column expression,
      so the refine stays in whole-stage codegen (the role JTS
      PreparedGeometry.intersects plays in SpatialQueryFilter.java:254-297).
-     Non-convex geometries fall back to the vectorized ray-cast UDF
-     (geowave_spark.geom.predicates.points_in_polygon).
+     Non-convex geometries go through operators/geom_join.geom_point_join
+     (same skeleton, polyfill keys, vectorized refine).
 
 All arithmetic is BIGINT-exact in micro-degrees, which is what lets the
 DuckDB oracle reproduce the join row-for-row.
@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from geowave_spark.operators.spatial_join import boxes_with_cells, points_keyed_by_res
+from geowave_spark.operators.spatial_join import boxes_with_cells, extent_point_join
 
 
 def convex_contains_pred(
@@ -76,18 +76,8 @@ def octagon_point_join(
         (F.col("cx") + F.col("r")).alias("x_hi"),
         (F.col("cy") + F.col("r")).alias("y_hi"),
     )
-    # broadcast + no dedupe: same reasoning as box_point_join (distinct
-    # cells at one res per polygon → ≤1 key match per pair; broadcast
-    # keeps dense hotspot cells parallel across stream partitions)
-    b = F.broadcast(boxes_with_cells(boxes))
-    res_dim = b.select("res").distinct()
-    keyed = points_keyed_by_res(points, res_dim)
-
     verts = octagon_vertices(F.col("cx"), F.col("cy"), F.col("r"), F.col("a"))
     refine = convex_contains_pred(verts, F.col("x_u"), F.col("y_u"))
-    j = keyed.join(
-        b.withColumnRenamed("res", "_bres"),
-        (keyed["res"] == F.col("_bres")) & (keyed["_jcell"] == b["cell"]),
-        "inner",
-    ).where(refine)
-    return j.select(point_key, poly_key)
+    return extent_point_join(
+        points, boxes_with_cells(boxes), refine, point_key=point_key, extent_key=poly_key
+    )

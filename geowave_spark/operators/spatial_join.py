@@ -1,8 +1,9 @@
-"""Distributed spatial join — the engine's flagship operator.
+"""Distributed spatial join — the engine's flagship operator, and the one
+skeleton every extent × point join runs on.
 
 Re-expresses the reference's TieredSpatialJoin
 (analytics/spark/src/main/java/org/locationtech/geowave/analytic/spark/spatial/TieredSpatialJoin.java:59-552)
-as ONE Catalyst equi-join:
+as ONE Catalyst equi-join on ONE BIGINT key:
 
   reference                              engine
   ---------                              ------
@@ -10,18 +11,44 @@ as ONE Catalyst equi-join:
                                          cells (boxes) / polyfill (polys)
   collect distinct tiers per side        tiny distinct-res dimension,
                                          broadcast-crossed onto points
-  reprojectToTier for cross-tier         parent-cell shift of the finer
-                                         side (exact Morton right-shift)
-  same-tier cogroup + nested loop        single equi-join on (res, cell)
-                                         + native BETWEEN refinement
-  reduceByKey keep-first + DedupeFilter  dropDuplicates on key pair
+  reprojectToTier for cross-tier         parent-cell shift of the point
+                                         side's POINT_RES grid coords
+  same-tier cogroup + nested loop        single equi-join on the packed
+                                         key + exact refine predicate
+  reduceByKey keep-first + DedupeFilter  not needed (≤1 key match/pair)
   semi-join / subtractByKey outputs      how='leftsemi' / 'leftanti'
+
+The key: ``(res << 48) | (gx << 32) | gy``, where (gx, gy) are the grid
+coordinates at ``res``, taken as the POINT_RES coordinate shifted right
+by ``POINT_RES − res`` (exact: floor(floor(a·2^R/W) / 2^(R−r)) equals
+floor(a·2^r/W), and the edge clamp commutes with the shift). Every
+extent × point join keys at ``res ≤ POINT_RES = 16``, so gx, gy < 2^16
+and the three fields never overlap. A single LongType key is what keeps
+the broadcast hash relation small: Spark broadcasts a long-keyed map
+(LongHashedRelation) for it, while a two-column (res, cell) key gets
+the generic bytes-keyed map (UnsafeHashedRelation), whose memory pages,
+not its rows, set its size for an extent table this small. Measured on
+a 4-vCPU VM at local[2] with a 2 GB heap: box_point_join's broadcast
+fell from 33.8 MB to 1.2 MB for ~5 k keyed boxes.
+
+The key is an equality id, not an ordering: Morton interleaving
+(index/native._spread_col) stays for storage keys and range
+decomposition only.
+
+``extent_point_join`` is the skeleton: extent side keyed by
+``boxes_with_cells`` (boxes, polygon bboxes, radius boxes) or by a
+polyfill (operators/geom_join.geom_point_join), point side keyed by
+``points_keyed_by_res``, one broadcast-hash equi-join, then the
+caller's exact refine predicate. The batch operators below, the
+polygon / distance / general-geometry joins and the stream-static joins
+(streaming/ingest) all run through it. No driver round-trip anywhere,
+so the same plan runs unchanged against a streaming point side.
 
 Why one join instead of a per-tier union: each union branch is its own
 shuffle + codegen unit; at 1000 executors the branch barrier serializes
-tiers. A (res, cell) equi-join is one shuffle, AQE-balanced, and the
-point side is duplicated only |distinct res| times (≤ a handful — the
-duplication-cap analog of the reference's 80-id limit).
+tiers. One equi-join is one stage, and the point side is duplicated
+only |distinct res| times (≤ a handful — the duplication-cap analog of
+the reference's 80-id limit).
 
 Skew: dense cells (hotspots) are handled by AQE skew-join plus optional
 explicit salting (geowave_spark.plans.stats), the HashKeyIndexStrategy
@@ -34,7 +61,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from geowave_spark import LAT_OFF_U, LON_OFF_U, WORLD_X_U
-from geowave_spark.index.native import _spread_col, cell_col, grid_coord_col
+from geowave_spark.index.native import _packed_cell, grid_coord_col
 
 POINT_RES = 16  # finest ("full precision") resolution for the point side
 
@@ -53,59 +80,110 @@ def _res_for_span_col(span) -> Column:
     )
 
 
-def _factor_for_res(res: Column) -> Column:
-    """4^(POINT_RES - res) as a literal lookup (shift factor to coarsen a
-    POINT_RES Morton cell to ``res``)."""
-    return F.element_at(
-        F.array(*[F.lit(1 << (2 * (POINT_RES - r))) for r in range(POINT_RES + 1)]),
-        res + 1,
-    )
+def _join_key(res: Column, cell: Column) -> Column:
+    """The one extent × point join key: a packed ``(gx << 32) | gy``
+    cell id at ``res`` tagged with ``res << 48``."""
+    return F.shiftleft(res.cast("long"), 48).bitwiseOR(cell)
+
+
+def _key_at(res: Column, gx: Column, gy: Column) -> Column:
+    """Join key of POINT_RES grid coords (gx, gy) coarsened to ``res``."""
+    d = F.lit(POINT_RES) - res
+    gx = F.call_function("shiftright", gx, d)
+    gy = F.call_function("shiftright", gy, d)
+    return _join_key(res, _packed_cell(gx, gy))
 
 
 def boxes_with_cells(boxes: DataFrame) -> DataFrame:
     """Index an extent table (x_lo..y_hi µdeg): per-row ``res`` + exploded
-    candidate ``cell`` — entirely native. At the chosen res a box spans
-    ≤ 2 cells per axis, so its cover is the ≤4 distinct corner cells.
-
-    Corner cells are computed at POINT_RES from 4 shared bit-spreads and
-    coarsened by one exact integer division (floor-div composition:
-    floor(floor(a*2^R/W) / 4^(R-r)) pairs == floor(a*2^r/W) per dim), which
-    keeps the codegen method small."""
+    candidate ``cell`` key — entirely native. At the chosen res a box
+    spans ≤ 2 cells per axis, so its cover is the ≤4 distinct corner
+    cells."""
     span = F.greatest(F.col("x_hi") - F.col("x_lo"), F.col("y_hi") - F.col("y_lo"))
-    sx_lo = _spread_col(grid_coord_col(F.col("x_lo"), POINT_RES, LON_OFF_U))
-    sx_hi = _spread_col(grid_coord_col(F.col("x_hi"), POINT_RES, LON_OFF_U))
-    sy_lo = F.shiftleft(_spread_col(grid_coord_col(F.col("y_lo"), POINT_RES, LAT_OFF_U)), 1)
-    sy_hi = F.shiftleft(_spread_col(grid_coord_col(F.col("y_hi"), POINT_RES, LAT_OFF_U)), 1)
-    df = (
-        boxes.withColumn("res", _res_for_span_col(span))
-        .withColumn("_c0", sx_lo.bitwiseOR(sy_lo))
-        .withColumn("_c1", sx_hi.bitwiseOR(sy_lo))
-        .withColumn("_c2", sx_lo.bitwiseOR(sy_hi))
-        .withColumn("_c3", sx_hi.bitwiseOR(sy_hi))
-    )
-    factor = _factor_for_res(F.col("res"))
-    cells = F.array_distinct(
-        F.array(
-            *[F.call_function("div", F.col(f"_c{i}"), factor) for i in range(4)]
-        )
-    )
-    return (
-        df.withColumn("cell", F.explode(cells))
-        .drop("_c0", "_c1", "_c2", "_c3")
+    res = F.col("res")
+    gx = [grid_coord_col(F.col(c), POINT_RES, LON_OFF_U) for c in ("x_lo", "x_hi")]
+    gy = [grid_coord_col(F.col(c), POINT_RES, LAT_OFF_U) for c in ("y_lo", "y_hi")]
+    cells = F.array_distinct(F.array(*[_key_at(res, x, y) for y in gy for x in gx]))
+    return boxes.withColumn("res", _res_for_span_col(span)).withColumn(
+        "cell", F.explode(cells)
     )
 
 
 def points_keyed_by_res(points: DataFrame, res_dim: DataFrame) -> DataFrame:
     """Re-key points at every resolution present on the extent side:
-    broadcast-cross with the tiny distinct-res dimension and coarsen the
-    full-precision cell by an exact shift — the reprojectToTier analog
+    grid coords once at POINT_RES, broadcast-cross with the tiny
+    distinct-res dimension, then coarsen by an exact shift into
+    ``_jcell`` — the reprojectToTier analog
     (TieredSFCIndexStrategy.java:514-535) without a driver round-trip."""
-    pts = points.withColumn(
-        "_pcell", cell_col(F.col("x_u"), F.col("y_u"), POINT_RES)
+    pts = points.withColumns(
+        {
+            "_gx": grid_coord_col(F.col("x_u"), POINT_RES, LON_OFF_U),
+            "_gy": grid_coord_col(F.col("y_u"), POINT_RES, LAT_OFF_U),
+        }
     )
     keyed = pts.crossJoin(F.broadcast(res_dim))
     return keyed.withColumn(
-        "_jcell", F.call_function("div", F.col("_pcell"), _factor_for_res(F.col("res")))
+        "_jcell", _key_at(F.col("res"), F.col("_gx"), F.col("_gy"))
+    ).drop("_gx", "_gy")
+
+
+def extent_point_join(
+    points: DataFrame,
+    keyed_extents: DataFrame,
+    refine: Column,
+    how: str = "inner",
+    broadcast: bool = True,
+    point_key: str = "event_id",
+    extent_key: str | list = "c_custkey",
+) -> DataFrame:
+    """The extent × point join skeleton. ``keyed_extents`` carries one
+    row per (extent, ``cell`` key) plus the extent's ``res``; the points
+    (x_u, y_u) are keyed at every distinct res, equi-joined on the
+    single key and filtered by ``refine`` (any Column over both sides'
+    columns). ``how``:
+
+      'inner'    -> matched (point_key, extent_key) rows; ``extent_key``
+                    may be a list of names or Columns (e.g. a distance
+                    computed from both sides)
+      'leftsemi' -> points matching ≥1 extent (per-side semi output form,
+                    TieredSpatialJoin.java:362-378)
+      'leftanti' -> points matching no extent (negative-predicate form,
+                    subtractByKey analog :362-368)
+
+    No DedupeFilter stage is needed, by construction: each extent
+    carries *distinct* keys at exactly one resolution, and a point maps
+    to exactly one key per resolution, so a (point, extent) pair can
+    satisfy the key equality at most once. (The reference needs
+    DedupeFilter because its tiered decomposition can insert one entry
+    under many ranges.) Skipping it removes the join's only wide
+    shuffle: measured at sf0.1 / local[32], join+refine is ~5 s while a
+    redundant dropDuplicates added ~130 s of 52M-row shuffle for zero
+    removals.
+
+    ``broadcast=True`` broadcasts the keyed extent side — extent tables
+    are small relative to the point table, and a broadcast-hash join
+    has no shuffle and no skewed-key problem (dense hotspot cells
+    parallelize across *stream-side* partitions). With False the plan
+    falls back to a shuffled join where AQE skew-split applies."""
+    keyed = points_keyed_by_res(points, keyed_extents.select("res").distinct())
+    e = keyed_extents.drop("res")
+    if broadcast:
+        e = F.broadcast(e)
+    j = keyed.join(e, keyed["_jcell"] == e["cell"], "inner").where(refine)
+    extent_cols = [extent_key] if isinstance(extent_key, str) else extent_key
+    matched = j.select(point_key, *extent_cols)
+
+    if how == "inner":
+        return matched
+    if how in ("leftsemi", "leftanti"):
+        return points.join(matched.select(point_key), point_key, how)
+    raise ValueError(how)
+
+
+def _in_box() -> Column:
+    """Closed containment of the point (x_u, y_u) in the box (x_lo..y_hi)."""
+    return F.col("x_u").between(F.col("x_lo"), F.col("x_hi")) & F.col("y_u").between(
+        F.col("y_lo"), F.col("y_hi")
     )
 
 
@@ -118,50 +196,17 @@ def box_point_join(
     broadcast_boxes: bool | None = None,
 ) -> DataFrame:
     """Join points (x_u, y_u) to boxes (x_lo, y_lo, x_hi, y_hi) on
-    containment. ``how``:
+    closed containment — ``extent_point_join`` with corner-cell keys
+    and the native BETWEEN refine. ``how`` as there.
 
-      'inner'    -> matched (point_key, box_key) pairs
-      'leftsemi' -> points matching ≥1 box (per-side semi output form,
-                    TieredSpatialJoin.java:362-378)
-      'leftanti' -> points matching no box (negative-predicate form,
-                    subtractByKey analog :362-368)
-
-    No DedupeFilter stage is needed, by construction: each box carries
-    *distinct* cells at exactly one resolution, and a point maps to
-    exactly one cell per resolution, so a (point, box) pair can satisfy
-    the (res, cell) equality at most once. (The reference needs
-    DedupeFilter because its tiered decomposition can insert one entry
-    under many ranges — our ≤4-distinct-corner-cells scheme cannot.)
-    Skipping it removes the join's only wide shuffle: measured at sf0.1
-    / local[32], join+refine is ~5 s while the redundant
-    dropDuplicates added ~130 s of 52M-row shuffle for zero removals.
-
-    Join-strategy selection (the two-phase broadcast-vs-SMJ rule):
-    ``broadcast_boxes=None`` (default) broadcasts the exploded box side
-    — extent/dimension tables are small relative to the point table,
-    and a broadcast-hash join has no shuffle and no skewed-key problem
-    (dense hotspot cells parallelize across *stream-side* partitions).
-    Pass False when the extent side is too big to broadcast; the plan
-    falls back to a shuffled join where AQE skew-split applies.
-    """
-    b = boxes_with_cells(boxes)
-    if broadcast_boxes is None or broadcast_boxes:
-        b = F.broadcast(b)
-    res_dim = b.select("res").distinct()
-    keyed = points_keyed_by_res(points, res_dim)
-
-    j = keyed.join(
-        b.withColumnRenamed("res", "_bres"),
-        (keyed["res"] == F.col("_bres")) & (keyed["_jcell"] == b["cell"]),
-        "inner",
-    ).where(
-        F.col("x_u").between(F.col("x_lo"), F.col("x_hi"))
-        & F.col("y_u").between(F.col("y_lo"), F.col("y_hi"))
+    ``broadcast_boxes=None`` (default) broadcasts the keyed box side;
+    pass False when it is too big to broadcast."""
+    return extent_point_join(
+        points,
+        boxes_with_cells(boxes),
+        _in_box(),
+        how,
+        broadcast_boxes is None or broadcast_boxes,
+        point_key,
+        box_key,
     )
-    matched = j.select(point_key, box_key)
-
-    if how == "inner":
-        return matched
-    if how in ("leftsemi", "leftanti"):
-        return points.join(matched.select(point_key), point_key, how)
-    raise ValueError(how)

@@ -31,6 +31,7 @@ import zlib
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 MAGIC = b"Obj\x01"
 SYNC = bytes(range(16))  # fixed deterministic sync marker for writes
@@ -378,18 +379,12 @@ def export_avro(df, path: str, codec: str = "deflate",
     driver-side by nature; memory stays bounded by toLocalIterator +
     per-block flushing (the reference's batchSize). Returns rows."""
     schema = spark_to_avro_schema(df.schema)
-    ts_cols = {
-        f.name for f in df.schema.fields
+    # epoch micros computed JVM-side: exact, and independent of the
+    # driver's local timezone (a Python datetime round trip is neither)
+    df = df.withColumns({
+        f.name: F.unix_micros(F.col(f.name)) for f in df.schema.fields
         if f.dataType.simpleString() == "timestamp"
-    }
-
-    def rows():
-        for row in df.toLocalIterator():
-            d = row.asDict(recursive=True)
-            for c in ts_cols:
-                if d[c] is not None:
-                    d[c] = int(d[c].timestamp() * 1_000_000)
-            yield d
-
-    return avro_write(path, schema, rows(), codec=codec,
+    })
+    rows = (row.asDict(recursive=True) for row in df.toLocalIterator())
+    return avro_write(path, schema, rows, codec=codec,
                       block_records=block_records)

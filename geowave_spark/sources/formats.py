@@ -305,9 +305,16 @@ def _gpx_text(el, name):
 
 
 def _gpx_time(txt):
+    """GPX/ISO-8601 time text → naive UTC Timestamp; a malformed time is
+    null, not fatal (the line readers' try_to_timestamp policy)."""
     if not txt:
         return None
-    t = pd.Timestamp(txt)
+    try:
+        t = pd.Timestamp(txt)
+    except (ValueError, OverflowError):
+        return None
+    if t is pd.NaT:
+        return None
     if t.tzinfo is not None:
         t = t.tz_convert("UTC").tz_localize(None)
     return t

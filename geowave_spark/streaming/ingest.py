@@ -13,6 +13,13 @@ cell assignment is pure JVM column arithmetic (no Python between the
 source and the sink), the sink appends per micro-batch without
 touching old files, and exactly-once comes from the checkpointLocation
 + file-sink manifest.
+
+The stream-static joins (stream_spatial_join, stream_distance_join) are
+the batch extent × point operators applied to a streaming point side:
+the same skeleton (operators/spatial_join.extent_point_join), the same
+packed BIGINT cell key, the same exact refine. The skeleton never
+collects to the driver, so a stream plugs in unchanged and every
+micro-batch is one broadcast-hash join against the static side.
 """
 
 from __future__ import annotations
@@ -111,73 +118,38 @@ def stream_spatial_join(
     how: str = "inner",
 ) -> DataFrame:
     """Continuous indexed spatial join: a stream of points joined
-    against a STATIC extent table through the same (res, cell) keys as
-    the batch TieredSpatialJoin path (operators/spatial_join
-    .box_point_join) — a stream-static broadcast equi-join, natively
-    incremental in Structured Streaming (no state store: the static
-    side is fixed, so each micro-batch joins independently).
+    against a STATIC extent table. The inner form IS the batch operator
+    (operators/spatial_join.box_point_join): the extent × point join
+    skeleton has no driver round-trip — the distinct-res dimension is a
+    broadcast stream-static cross join, the packed-key join a
+    stream-static broadcast equi-join — so it is natively incremental
+    in Structured Streaming (no state store: the static side is fixed,
+    so each micro-batch joins independently) and pair-for-pair equal to
+    the batch join by construction.
 
     The reference has no streaming query surface (SURVEY §2.10); this
     is the engine-side extension that turns the batch join into a
     continuous enrichment operator (geofencing / region tagging at
-    ingest). The distinct-res set of the extent side is collected ONCE
-    at plan time (static table, tiny tier dimension — the
-    TierIndexMetaData pruning analog) and the stream fans out per res
-    via a literal-array explode, keeping the streaming plan a pure
-    broadcast-hash equi-join per micro-batch. Per-pair dedupe is
-    unnecessary by the same ≤1-key-match-per-pair construction as the
-    batch operator.
+    ingest).
 
     Output forms mirror the batch operator (per-side semi/anti,
     TieredSpatialJoin.java:362-378): ``how='leftsemi'`` emits arriving
     points inside ≥1 extent (each point exactly once), ``'leftanti'``
     points inside none — stateless per micro-batch, since membership
     depends only on the static side. The batch shape (inner pairs →
-    anti-join back) would read as a stream-stream join to the
+    semi/anti join back) would read as a stream-stream join to the
     analyzer, so semi/anti go directly against the broadcast extent
     table with the containment predicate: a broadcast nested-loop
     probe, exact and short-circuiting, sized for dimension-scale fence
     sets (for huge extent tables, run the indexed ``'inner'`` form and
     reduce downstream)."""
+    from geowave_spark.operators.spatial_join import _in_box, box_point_join
+
     if how == "inner":
-        return _stream_static_cell_join(stream_points, boxes).select(point_key, box_key)
+        return box_point_join(stream_points, boxes, "inner", point_key, box_key)
     if how in ("leftsemi", "leftanti"):
-        cond = (
-            F.col("x_u").between(F.col("x_lo"), F.col("x_hi"))
-            & F.col("y_u").between(F.col("y_lo"), F.col("y_hi"))
-        )
-        return stream_points.join(F.broadcast(boxes), cond, how)
+        return stream_points.join(F.broadcast(boxes), _in_box(), how)
     raise ValueError(how)
-
-
-def _stream_static_cell_join(stream_points: DataFrame, boxes: DataFrame) -> DataFrame:
-    """Shared core of the streaming joins: key the stream at every
-    resolution present on the static (boxed) side and broadcast-equi-
-    join on (res, cell), refined by closed-bbox containment. Returns
-    the full joined row set (stream columns + box columns)."""
-    from geowave_spark.operators.spatial_join import (
-        POINT_RES,
-        _factor_for_res,
-        boxes_with_cells,
-    )
-
-    b = boxes_with_cells(boxes)
-    res_vals = sorted(r[0] for r in b.select("res").distinct().collect())
-
-    pts = stream_points.withColumn(
-        "_pcell", cell_col(F.col("x_u"), F.col("y_u"), POINT_RES)
-    ).withColumn("res", F.explode(F.array(*[F.lit(int(r)) for r in res_vals])))
-    keyed = pts.withColumn(
-        "_jcell", F.call_function("div", F.col("_pcell"), _factor_for_res(F.col("res")))
-    )
-    return keyed.join(
-        F.broadcast(b.withColumnRenamed("res", "_bres")),
-        (keyed["res"] == F.col("_bres")) & (keyed["_jcell"] == b["cell"]),
-        "inner",
-    ).where(
-        F.col("x_u").between(F.col("x_lo"), F.col("x_hi"))
-        & F.col("y_u").between(F.col("y_lo"), F.col("y_hi"))
-    )
 
 
 def stream_distance_join(
@@ -189,29 +161,14 @@ def stream_distance_join(
 ) -> DataFrame:
     """Continuous within-distance join (GeomWithinDistance as a stream
     operator): each arriving point is paired with every static right
-    point within ``radius_u``, via the batch operator's exact shape —
-    the static side buffered to radius boxes (TieredSpatialJoin
-    bufferAmount semantics), the same stream-static (res, cell)
-    broadcast equi-join as stream_spatial_join, then the exact integer
-    squared-distance refine. Returns (point_key, right_key, dist2)."""
-    r = int(radius_u)
-    right_boxed = right_points.select(
-        F.col(right_key),
-        F.col("x_u").alias("rx"),
-        F.col("y_u").alias("ry"),
-        (F.col("x_u") - r).alias("x_lo"),
-        (F.col("y_u") - r).alias("y_lo"),
-        (F.col("x_u") + r).alias("x_hi"),
-        (F.col("y_u") + r).alias("y_hi"),
-    )
-    dx = F.col("x_u") - F.col("rx")
-    dy = F.col("y_u") - F.col("ry")
-    return (
-        _stream_static_cell_join(stream_points, right_boxed)
-        .withColumn("dist2", dx * dx + dy * dy)
-        .where(F.col("dist2") <= F.lit(r * r))
-        .select(point_key, right_key, "dist2")
-    )
+    point within ``radius_u``. Like stream_spatial_join, this IS the
+    batch operator (operators/distance_join.point_distance_join: radius
+    boxes through the extent × point join skeleton, exact integer
+    squared-distance refine) applied to a streaming left side.
+    Returns (point_key, right_key, dist2)."""
+    from geowave_spark.operators.distance_join import point_distance_join
+
+    return point_distance_join(stream_points, right_points, radius_u, point_key, right_key)
 
 
 def stream_dedupe(

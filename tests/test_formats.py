@@ -451,6 +451,40 @@ def test_avro_codec_edge_cases(tmp_path):
         avro_read(bytes(raw))
 
 
+def test_avro_export_timestamps_exact_in_any_timezone(spark, tmp_path, monkeypatch):
+    """export_avro writes exact epoch micros: no float truncation (the
+    pre-1970 and early-epoch values lost a microsecond through
+    ``datetime.timestamp() * 1e6``) and no dependence on the driver's
+    local timezone (both instants of a DST fold share one New York
+    wall-clock time)."""
+    import time
+
+    from pyspark.sql import functions as F
+
+    from geowave_spark.sources.avro import avro_read, export_avro
+
+    micros = [
+        1_704_067_199_999_999,  # 2023-12-31T23:59:59.999999Z
+        1_636_263_059_999_999,  # 2021-11-07T05:30:59.999999Z = 01:30:59.999999 EDT
+        1_636_266_659_999_999,  # 2021-11-07T06:30:59.999999Z = 01:30:59.999999 EST
+        66_740_828_191,  # 1970-01-01T18:32:20.828191Z
+        -500_001,  # 1969-12-31T23:59:59.499999Z
+    ]
+    df = spark.createDataFrame(list(enumerate(micros)), "id long, us long").select(
+        "id", F.timestamp_micros("us").alias("ts")
+    )
+    p = str(tmp_path / "ts.avro")
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    try:
+        assert export_avro(df, p) == len(micros)
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+    _schema, recs = avro_read(open(p, "rb").read())
+    assert sorted((r["id"], r["ts"]) for r in recs) == list(enumerate(micros))
+
+
 def test_avro_spark_reader(spark, root):
     from geowave_spark.sources.avro import read_avro
 
@@ -530,6 +564,23 @@ def test_gpx_missing_latlon_skipped(spark, tmp_path):
     assert len(p) == 1 and p["Longitude"][0] == 0.6
     t = FM.read_gpx_tracks(spark, str(tmp_path)).toPandas()
     assert t["NumberPoints"][0] == 1  # skipped point not counted
+
+
+def test_gpx_bad_time_is_null(spark, tmp_path):
+    """One malformed <time> nulls that point's timestamp; the job and
+    every other point survive."""
+    (tmp_path / "badtime.gpx").write_text(
+        '<gpx><trk><name>T</name><trkseg>'
+        '<trkpt lat="0.5" lon="0.5"><time>2020-01-01T00:00:00Z</time></trkpt>'
+        '<trkpt lat="0.6" lon="0.6"><time>not-a-time</time></trkpt>'
+        '<trkpt lat="0.7" lon="0.7"><time>2020-01-01T02:00:00Z</time></trkpt>'
+        "</trkseg></trk></gpx>"
+    )
+    p = FM.read_gpx_points(spark, str(tmp_path)).toPandas()
+    assert list(p["Longitude"]) == [0.5, 0.6, 0.7]
+    assert p["Timestamp"].isna().tolist() == [False, True, False]
+    t = FM.read_gpx_tracks(spark, str(tmp_path)).toPandas()
+    assert t["NumberPoints"][0] == 3 and t["Duration"][0] == 7200_000
 
 
 def test_tdrive_bad_date_is_epoch_zero(spark, tmp_path):

@@ -61,3 +61,53 @@ def test_boxes_with_cells_duplication_bounded(boxes):
 def test_join_broadcast_hint(points, boxes, brute_pairs):
     got = box_point_join(points, boxes, broadcast_boxes=True)
     assert got.count() == brute_pairs.count()
+
+
+def _broadcast_hash_joins(df):
+    """Every BroadcastHashJoinExec of ``df``'s executed plan (the AQE
+    final plan, walked through its query stages)."""
+    found = []
+
+    def walk(p):
+        name = p.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            return walk(p.executedPlan())
+        if name.endswith("QueryStageExec"):
+            return walk(p.plan())
+        if name == "BroadcastHashJoinExec":
+            found.append(p)
+        children = p.children()
+        for i in range(children.size()):
+            walk(children.apply(i))
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return found
+
+
+def _extent_point_joins(spark, sf, points):
+    from geowave_spark.operators.distance_join import point_distance_join
+    from geowave_spark.operators.geom_join import geom_point_join
+    from geowave_spark.operators.poly_join import octagon_point_join
+    from geowave_spark.sources.testgeo import supplier_lshapes, supplier_octagons
+
+    right = points.limit(50).select(F.col("event_id").alias("c_custkey"), "x_u", "y_u")
+    return {
+        "box_point_join": lambda: box_point_join(points, customer_boxes(spark, sf)),
+        "octagon_point_join": lambda: octagon_point_join(points, supplier_octagons(spark, sf)),
+        "point_distance_join": lambda: point_distance_join(points, right, 500_000),
+        "geom_point_join": lambda: geom_point_join(points, supplier_lshapes(spark, sf)),
+    }
+
+
+@pytest.mark.parametrize(
+    "op", ["box_point_join", "octagon_point_join", "point_distance_join", "geom_point_join"]
+)
+def test_key_join_is_one_broadcast_long_key(spark, sf_dir, points, op):
+    """Each extent × point join plans its key join as ONE broadcast-hash
+    join on ONE LongType key: a two-column (res, cell) key makes Spark
+    broadcast a generic bytes-keyed hash relation several times larger."""
+    df = _extent_point_joins(spark, sf_dir, points.limit(2000))[op]()
+    assert df.collect()
+    (bhj,) = _broadcast_hash_joins(df)
+    assert bhj.leftKeys().size() == 1
+    assert bhj.leftKeys().apply(0).dataType().typeName() == "long"
