@@ -2,90 +2,26 @@
 
 North-rule requirement: "every stage checkpoints per-partition lineage
 and metrics ... so a killed job resumes without recomputing completed
-partitions". The engine implements this as a parquet-backed stage store
-(Iceberg-equivalent layout — partitioned directories + a _SUCCESS-style
-manifest; the storage API is identical so swapping in an Iceberg
-catalog writer is a config change, not a code change):
+partitions". ``IceStageStore`` keeps one snapshot table
+(sources/icetable.py) per stage:
 
-  stage output  -> <root>/<stage>/data/part_key=<k>/...
-  lineage row   -> <root>/<stage>/lineage (part_key, n_rows, wall_ms,
-                                           input_fingerprint)
+  stage output  -> <root>/<stage>/, one append snapshot per partition
+  lineage row   -> that snapshot's summary (part_key, fingerprint,
+                   wall_ms) plus its added_rows / added_paths
 
-``run_stage`` skips partitions whose lineage row already exists with a
-matching input fingerprint — the resume path.
+``run_stage`` skips partitions with a committed snapshot under the
+current input fingerprint — the resume path. A partition is visible
+only once its snapshot publishes, so a killed job never leaves a
+partial one behind.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-
-class StageStore:
-    def __init__(self, root: str):
-        self.root = root
-        os.makedirs(root, exist_ok=True)
-
-    def _paths(self, stage: str) -> tuple[str, str]:
-        return f"{self.root}/{stage}/data", f"{self.root}/{stage}/_lineage.json"
-
-    def completed_keys(self, stage: str, fingerprint: str) -> set:
-        _, lin = self._paths(stage)
-        if not os.path.exists(lin):
-            return set()
-        with open(lin) as f:
-            rows = [json.loads(line) for line in f]
-        return {r["part_key"] for r in rows if r["fingerprint"] == fingerprint}
-
-    def run_stage(
-        self,
-        spark: SparkSession,
-        stage: str,
-        part_keys: list,
-        make_partition,  # (part_key) -> DataFrame
-        fingerprint: str,
-    ) -> DataFrame:
-        """Compute each partition of a stage unless its lineage row says
-        it's already done; append lineage + metrics per partition.
-        Returns the full stage output (checkpointed data for all keys)."""
-        data_path, lin_path = self._paths(stage)
-        done = self.completed_keys(stage, fingerprint)
-        for k in part_keys:
-            if k in done:
-                continue
-            t0 = time.time()
-            df = make_partition(k)
-            (
-                df.withColumn("part_key", F.lit(k))
-                .write.mode("overwrite")
-                .parquet(f"{data_path}/part_key={k}")
-            )
-            n = spark.read.parquet(f"{data_path}/part_key={k}").count()
-            with open(lin_path, "a") as f:
-                f.write(
-                    json.dumps(
-                        {
-                            "part_key": k,
-                            "n_rows": n,
-                            "wall_ms": int((time.time() - t0) * 1000),
-                            "fingerprint": fingerprint,
-                            "ts": time.time(),
-                        }
-                    )
-                    + "\n"
-                )
-        return spark.read.parquet(*[f"{data_path}/part_key={k}" for k in part_keys])
-
-    def metrics(self, stage: str):
-        _, lin = self._paths(stage)
-        if not os.path.exists(lin):
-            return []
-        with open(lin) as f:
-            return [json.loads(line) for line in f]
 
 
 class IceStageStore:

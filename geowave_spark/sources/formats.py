@@ -680,6 +680,10 @@ def read_geojson(spark: SparkSession, path) -> DataFrame:
     Accepts whole-file FeatureCollection / single Feature documents AND
     feature-per-line ndjson; geometries (Point / MultiPoint /
     LineString / Polygon / MultiPolygon) become the engine's WKB.
+    Malformed input never fails the job: an unparseable ndjson line or
+    a JSON value that is not an object is skipped, and a feature whose
+    geometry is unsupported (e.g. GeometryCollection) or malformed
+    keeps its row with ``gtype`` set and ``geometry`` null.
     Property values keep their JSON text form in a map<string,string>
     column — the same schema-on-read stance as read_shapefile; callers
     cast with element_at + try_cast."""
@@ -703,7 +707,10 @@ def read_geojson(spark: SparkSession, path) -> DataFrame:
         def xy(coords):
             # RFC 7946 positions may carry a third (altitude) element —
             # per POSITION, so the array can be ragged; keep x/y only
-            return np.asarray([p[:2] for p in coords], float)
+            a = np.asarray([p[:2] for p in coords], float)
+            if a.ndim != 2 or a.shape[1] != 2:
+                raise ValueError("GeoJSON positions need x and y")
+            return a
 
         def to_wkb(geom):
             t, c = geom["type"], geom["coordinates"]
@@ -721,37 +728,54 @@ def read_geojson(spark: SparkSession, path) -> DataFrame:
                         [polygon(xy(p[0]), [xy(h) for h in p[1:]]) for p in c]
                     )
                 )
-            raise NotImplementedError(f"GeoJSON geometry type {t}")
+            return None  # unsupported type (e.g. GeometryCollection)
+
+        def geometry(geom):
+            """(gtype, WKB): an unsupported or malformed geometry keeps
+            its row with the geometry null."""
+            if not isinstance(geom, dict) or geom.get("type") is None:
+                return None, None
+            try:
+                wkb = to_wkb(geom)
+            except (LookupError, TypeError, ValueError):
+                wkb = None  # malformed coordinates
+            return str(geom["type"]), wkb
 
         def features(doc):
             doc = doc.strip()
             try:
-                obj = json.loads(doc)
+                objs = [json.loads(doc)]
             except json.JSONDecodeError:
-                # feature-per-line ndjson
+                # feature-per-line ndjson; an unparseable line is skipped
+                objs = []
                 for ln in doc.splitlines():
-                    ln = ln.strip()
-                    if ln:
-                        yield json.loads(ln)
-                return
-            if obj.get("type") == "FeatureCollection":
-                yield from obj.get("features", [])
-            else:
-                yield obj
+                    try:
+                        objs.append(json.loads(ln))
+                    except json.JSONDecodeError:
+                        continue
+            for obj in objs:
+                if not isinstance(obj, dict):
+                    continue  # a JSON value that is no feature object
+                if obj.get("type") != "FeatureCollection":
+                    yield obj
+                elif isinstance(obj.get("features"), list):
+                    yield from (f for f in obj["features"] if isinstance(f, dict))
 
         cols = [c.split(" ")[0] for c in _GEOJSON_SCHEMA.split(", ")]
         for pdf in batches:
             rows = []
             for doc, fname in zip(pdf["doc"], pdf["file"]):
                 for feat in features(doc):
-                    geom = feat.get("geometry")
-                    props = feat.get("properties") or {}
+                    gtype, wkb = geometry(feat.get("geometry"))
+                    props = feat.get("properties")
+                    if not isinstance(props, dict):
+                        props = {}
                     rows.append(
                         {
                             "file": fname,
                             "fid": str(feat.get("id", "")),
-                            "gtype": geom["type"] if geom else None,
-                            "geometry": to_wkb(geom) if geom else None,
+                            "gtype": gtype,
+                            "geometry": wkb,
                             "props": {
                                 k: v if isinstance(v, str) else json.dumps(v)
                                 for k, v in props.items()

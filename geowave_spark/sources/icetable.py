@@ -9,13 +9,32 @@ per-file column stats, atomic metadata swap, time travel):
   <root>/metadata/version-hint.text      latest metadata version N
   <root>/metadata/v<N>.metadata.json     snapshot log + current pointer
   <root>/metadata/manifest-<snap>.json   file list + per-file stats
-  <root>/data/snap-<id>/part-*.parquet   immutable data files
+  <root>/data/<op>-<uuid>/part-*.parquet immutable files of ONE write;
+                                         op is w (commit_write), d (CoW
+                                         delete), u (upsert), a
+                                         (apply_deletes) or del (a
+                                         merge-on-read key file)
+
+Commit protocol — one path, ``IceTable._publish``, for every writer:
+
+1. the writer lands its parquet files in a fresh data dir, outside any
+   lock; no snapshot names them yet, so no reader sees them;
+2. under the table's commit lock it re-reads the log and — for a
+   row-level write (delete, upsert, apply_deletes, rollback) — checks
+   the table still sits on the snapshot it planned against and raises
+   RuntimeError otherwise (append and overwrite stack on whatever is
+   current);
+3. it takes the next snapshot id (also the sequence number of the new
+   files), writes ``manifest-<id>.json`` and ``v<N+1>.metadata.json``;
+4. ``os.replace`` of version-hint publishes. A crash before this step
+   leaves only files no snapshot references: readers keep the old
+   snapshot, a retry overwrites the leftovers, and ``remove_orphans``
+   reclaims the data dir.
 
 Guarantees the engine uses:
 
-- **Atomic commits**: data + manifest are written first; the commit is
-  the `os.replace` of version-hint (readers see the old or the new
-  snapshot, never a partial write). Appends never rewrite old files.
+- **Atomic commits**: readers see the old or the new snapshot, never a
+  partial write. Appends never rewrite old files.
 - **Snapshot isolation / time travel**: `read(snapshot_id=...)` and
   `rollback()` replay any historical state (a killed pipeline resumes
   against the snapshot it planned on).
@@ -51,10 +70,12 @@ from __future__ import annotations
 import contextlib
 import json
 import os
+import shutil
 import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 
 def _json_safe(v):
@@ -104,6 +125,36 @@ def _file_stats(path: str, stats_cols: list[str] | None) -> dict:
     }
 
 
+def _inherit_stats_cols(stats_cols: list[str] | None, files: list[dict]):
+    """Stats columns of a rewrite: the caller's, else every column the
+    rewritten files carried stats for (None = all when they had none)."""
+    if stats_cols is not None:
+        return stats_cols
+    return sorted({c for f in files for c in f["stats"]}) or None
+
+
+def _removes_rows(s: dict) -> bool:
+    """Whether a snapshot entry removed rows — a point where the
+    add-only occupancy and sketch deltas stop describing the table."""
+    summary = s.get("summary") or {}
+    return (
+        str(s.get("operation", "")) in ("delete", "upsert")
+        or int(summary.get("deleted_rows", 0)) > 0
+        or int(summary.get("replaced_rows", 0)) > 0
+    )
+
+
+@contextlib.contextmanager
+def _distinct_keys(df: DataFrame, key_col: str):
+    """The distinct ``key_col`` values of ``df``, cached while in use:
+    the key range, the rewrite and a delete file all read them."""
+    keys = df.select(F.col(key_col)).distinct().persist()
+    try:
+        yield keys
+    finally:
+        keys.unpersist()
+
+
 # field-sketch geometry — shared with plans/stats.field_sketches so
 # commit-maintained and on-demand sketches are bit-identical (same
 # md5-prefix hash family, same table shapes)
@@ -120,8 +171,6 @@ def _sketch_delta(batch, col: str) -> dict:
     Bloom bit positions (merge = or), HLL per-register max rho
     (merge = max). Everything is exact integer arithmetic over the
     md5-prefix draw, computable identically by the DuckDB oracle."""
-    from pyspark.sql import functions as F
-
     from geowave_spark.plans.stats import sketch_bucket_rows, sketch_hash_col
 
     # CMS + Bloom ride THE shared pipeline (plans/stats) — on-demand and
@@ -220,6 +269,72 @@ class IceTable:
         with open(os.path.join(self.meta_dir, f"manifest-{snapshot_id}.json")) as f:
             return json.loads(f.read())
 
+    def _publish(
+        self,
+        operation: str,
+        new_files: list[dict],
+        manifest: list[dict],
+        base_sid: int | None,
+        summary: dict,
+        **entry,
+    ) -> int:
+        """The one locked commit (steps 2-4 of the module's protocol).
+        A row-level ``operation`` must still find the table at
+        ``base_sid``; 'append' and 'overwrite' commit on top of whatever
+        is current, and an append carries the current manifest forward
+        ahead of ``manifest``. The new snapshot id becomes the ``seq``
+        of every entry in ``new_files``; ``entry`` adds or overrides
+        snapshot entry fields. Returns the new snapshot id."""
+        with self._commit_lock():
+            meta = self._metadata()
+            cur = meta["current_snapshot_id"]
+            if operation not in ("append", "overwrite") and cur != base_sid:
+                raise RuntimeError(
+                    "concurrent commit detected: table moved from snapshot "
+                    f"{base_sid} to {cur} during {operation}"
+                )
+            sid = max((s["id"] for s in meta["snapshots"]), default=0) + 1
+            for x in new_files:
+                x["seq"] = sid  # sequence number: orders rows vs eq-deletes
+            if operation == "append" and cur is not None:
+                # append carries the parent manifest verbatim — including
+                # any live eq-delete entries (they keep applying to the
+                # older files they postdate; never to this new batch)
+                manifest = self._manifest(cur) + manifest
+            with open(os.path.join(self.meta_dir, f"manifest-{sid}.json"), "w") as f:
+                f.write(json.dumps(manifest))
+            meta["snapshots"].append(
+                {
+                    "id": sid,
+                    "parent": cur,
+                    "ts": time.time(),
+                    "operation": operation,
+                    "added_files": len(new_files),
+                    "added_rows": sum(x["rows"] for x in new_files),
+                    "added_paths": [x["path"] for x in new_files],
+                    "summary": summary,
+                    **entry,
+                }
+            )
+            meta["current_snapshot_id"] = sid
+            self._commit_metadata(meta)
+        return sid
+
+    def _write(
+        self, df: DataFrame, stats_cols: list[str] | None, op: str
+    ) -> tuple[str, list[dict]]:
+        """Step 1 of the protocol: write ``df`` to a fresh
+        ``data/<op>-<uuid>/`` dir (collision-free — the snapshot id is
+        only assigned under the lock) and read each file's footer
+        stats. Returns (data dir, file entries)."""
+        data_dir = os.path.join(self.root, "data", f"{op}-{uuid.uuid4().hex[:12]}")
+        df.write.mode("error").parquet(data_dir)
+        return data_dir, [
+            _file_stats(os.path.join(data_dir, fn), stats_cols)
+            for fn in sorted(os.listdir(data_dir))
+            if fn.endswith(".parquet")
+        ]
+
     # ---------------------------------------------------------- snapshots
 
     def snapshots(self) -> list[dict]:
@@ -294,12 +409,8 @@ class IceTable:
         sketches are bit-identical. Returns the new snapshot id."""
         if mode not in ("append", "overwrite"):
             raise ValueError(mode)
-        # data files land OUTSIDE the lock (the slow part, and they are
-        # invisible until the metadata publish) under a collision-free
-        # name — the snapshot id is only assigned under the lock
-        data_dir = os.path.join(self.root, "data", f"w-{uuid.uuid4().hex[:12]}")
-        df.write.mode("error").parquet(data_dir)
-        occ_entry = None
+        data_dir, new_files = self._write(df, stats_cols, "w")
+        entry: dict = {}
         if occupancy is not None:
             # aggregate the WRITTEN files, not the input frame: re-
             # executing df here would run its lineage a second time and
@@ -309,8 +420,6 @@ class IceTable:
             # parquet back is consistent by construction and costs one
             # column-pruned local scan of the batch.
             res, x_col, y_col = occupancy
-            from pyspark.sql import functions as F
-
             from geowave_spark.index.native import grid_coord_col
             from geowave_spark import LAT_OFF_U, LON_OFF_U
 
@@ -323,56 +432,18 @@ class IceTable:
                 .count()
                 .collect()
             )
-            occ_entry = {
+            entry["occupancy"] = {
                 "res": int(res),
                 "cells": [[int(r["gx"]), int(r["gy"]), int(r["count"])] for r in occ_rows],
             }
-        sk_entry = None
         if sketch_cols:
             batch = df.sparkSession.read.parquet(data_dir)
-            sk_entry = {
-                col: _sketch_delta(batch, col) for col in sketch_cols
-            }
-        new_files = [
-            _file_stats(os.path.join(data_dir, fn), stats_cols)
-            for fn in sorted(os.listdir(data_dir))
-            if fn.endswith(".parquet")
-        ]
-        with self._commit_lock():
-            meta = self._metadata()
-            sid = max((s["id"] for s in meta["snapshots"]), default=0) + 1
-            for x in new_files:
-                x["seq"] = sid  # sequence number: orders rows vs eq-deletes
-            manifest = list(new_files)
-            if mode == "append" and meta["current_snapshot_id"] is not None:
-                # append carries the parent manifest verbatim — including
-                # any live eq-delete entries (they keep applying to the
-                # older files they postdate; never to this new batch)
-                manifest = self._manifest(meta["current_snapshot_id"]) + manifest
-            with open(os.path.join(self.meta_dir, f"manifest-{sid}.json"), "w") as f:
-                f.write(json.dumps(manifest))
-            meta["snapshots"].append(
-                {
-                    "id": sid,
-                    "parent": meta["current_snapshot_id"],
-                    "ts": time.time(),
-                    "operation": mode,
-                    "added_files": len(new_files),
-                    "added_rows": sum(x["rows"] for x in new_files),
-                    "added_paths": [x["path"] for x in new_files],
-                    # a callable summary is evaluated HERE — after the
-                    # data write has executed the (lazy) input frame —
-                    # so wall-clock metrics in it measure the real cost
-                    # (plans/checkpoint.IceStageStore lineage rows)
-                    "summary": (summary() if callable(summary) else summary)
-                    or {},
-                    **({"occupancy": occ_entry} if occ_entry is not None else {}),
-                    **({"sketches": sk_entry} if sk_entry is not None else {}),
-                }
-            )
-            meta["current_snapshot_id"] = sid
-            self._commit_metadata(meta)
-        return sid
+            entry["sketches"] = {col: _sketch_delta(batch, col) for col in sketch_cols}
+        # a callable summary is evaluated HERE — after the data write has
+        # executed the (lazy) input frame — so wall-clock metrics in it
+        # measure the real cost (plans/checkpoint.IceStageStore lineage)
+        summary = (summary() if callable(summary) else summary) or {}
+        return self._publish(mode, new_files, new_files, None, summary, **entry)
 
     # ------------------------------------- incrementally-maintained stats
 
@@ -413,110 +484,87 @@ class IceTable:
             merged.pop(name, None)
         return {"n_rows": n_rows, "cols": merged, "mor_pending": mor_pending}
 
-    def merged_occupancy(self) -> dict:
-        """Fold the per-snapshot occupancy deltas along the lineage of
-        the CURRENT snapshot: walk parent pointers, summing appended
-        deltas; an 'overwrite' snapshot is a reset point (its delta IS
-        the table state, stop there); a rollback entry redirects the
-        walk to its target snapshot. Returns {"res": r, "cells":
-        {(gx, gy): n}, "complete": bool} — empty when no snapshot
-        recorded occupancy. ``complete`` is False when any data-adding
-        snapshot in the walked chain carries no occupancy entry (or one
-        at a different res): its rows are then missing from the fold,
-        so the counts UNDERCOUNT the table — callers must not present a
-        partial fold as the table state without checking the flag.
-        Metadata-only: the stat read never touches data files."""
-        by_id = {s["id"]: s for s in self.snapshots()}
-        sid = self.current_snapshot_id()
-        cells: dict = {}
-        res = None
-        complete = True
+    def _lineage(self) -> tuple[list[dict], bool]:
+        """The snapshot entries whose deltas make up the CURRENT state,
+        newest first — the walk both metadata-only stat folds share.
+        Follows parent pointers; a rollback entry redirects the walk to
+        its target; a compaction (data-identical rewrite) is
+        transparent, neither a reset point nor a gap; an 'overwrite' is
+        the reset point (its delta IS the table state, the walk stops
+        there). Returns (chain, intact): ``intact`` is False when the
+        walk reached a snapshot expire_snapshots dropped — its deltas
+        are unrecoverable from metadata, so any fold is PARTIAL."""
+        meta = self._metadata()
+        by_id = {s["id"]: s for s in meta["snapshots"]}
+        sid = meta["current_snapshot_id"]
+        chain: list[dict] = []
         while sid is not None:
             s = by_id.get(sid)
             if s is None:
-                # lineage truncated — the parent (or a rollback target)
-                # was dropped by expire_snapshots, so its deltas are
-                # unrecoverable from metadata: the fold is PARTIAL
-                complete = False
-                break
+                return chain, False
             op = str(s.get("operation", ""))
             if op.startswith("rollback-to-"):
                 sid = int(op[len("rollback-to-") :])
                 continue
-            if (s.get("summary") or {}).get("compaction"):
-                # data-identical rewrite: occupancy-transparent — the
-                # pre-compaction fold IS the table state; neither a reset
-                # point nor a gap
-                sid = s.get("parent")
-                continue
-            summary = s.get("summary") or {}
-            removes_rows = (
-                op in ("delete", "upsert")
-                or int(summary.get("deleted_rows", 0)) > 0
-                or int(summary.get("replaced_rows", 0)) > 0
-            )
+            if not (s.get("summary") or {}).get("compaction"):
+                chain.append(s)
+                if op == "overwrite":
+                    break
+            sid = s.get("parent")
+        return chain, True
+
+    def merged_occupancy(self) -> dict:
+        """Fold the per-snapshot occupancy deltas along the lineage of
+        the CURRENT snapshot (``_lineage``), summing them. Returns
+        {"res": r, "cells": {(gx, gy): n}, "complete": bool} — empty
+        when no snapshot recorded occupancy. ``complete`` is False when
+        any data-adding snapshot in the walked chain carries no
+        occupancy entry (or one at a different res): its rows are then
+        missing from the fold, so the counts UNDERCOUNT the table —
+        callers must not present a partial fold as the table state
+        without checking the flag. Metadata-only: the stat read never
+        touches data files."""
+        chain, complete = self._lineage()
+        cells: dict = {}
+        res = None
+        for s in chain:
             occ = s.get("occupancy")
             if occ is not None and (res is None or occ["res"] == res):
-                if res is None:
-                    res = occ["res"]
+                res = occ["res"]
                 for gx, gy, n in occ["cells"]:
                     k = (int(gx), int(gy))
                     cells[k] = cells.get(k, 0) + int(n)
-            elif int(s.get("added_rows", 0)) > 0 or removes_rows:
+            elif int(s.get("added_rows", 0)) > 0 or _removes_rows(s):
                 # a row-REMOVING snapshot without an occupancy delta is
                 # an incompleteness point even when added_rows == 0 (a
                 # delete emptying every touched file adds no rows, yet
                 # the removed rows stay counted in ancestor deltas — the
                 # fold would OVERcount, so the flag must not read true)
                 complete = False
-            if op == "overwrite":
-                break
-            sid = s.get("parent")
         return {"res": res, "cells": cells, "complete": complete}
 
     def merged_field_sketches(self, col: str) -> dict:
         """Fold the per-snapshot field-sketch deltas for ``col`` along
-        the CURRENT snapshot's lineage — each sketch with its own merge
-        operator (CMS cells: sum; Bloom positions: or/union; HLL
-        registers: max), the same walk rules as merged_occupancy
-        (overwrite = reset point, rollback redirects, compaction
-        transparent). ``complete`` is False when any row-adding OR
-        row-removing snapshot in the chain carries no sketch entry for
-        the column — none of the three sketches supports deletion, so a
-        delete/upsert always flips the flag. Metadata-only: never
-        touches data files.
+        the CURRENT snapshot's lineage (``_lineage``) — each sketch with
+        its own merge operator (CMS cells: sum; Bloom positions:
+        or/union; HLL registers: max). ``complete`` is False when any
+        row-adding OR row-removing snapshot in the chain carries no
+        sketch entry for the column — none of the three sketches
+        supports deletion, so a delete/upsert always flips the flag.
+        Metadata-only: never touches data files.
 
         Returns {"cms": {(d, bucket): n}, "bloom": set[int],
         "hll": {register: max_rho}, "complete": bool}."""
-        by_id = {s["id"]: s for s in self.snapshots()}
-        sid = self.current_snapshot_id()
+        chain, complete = self._lineage()
         cms: dict = {}
         bloom: set = set()
         hll: dict = {}
-        complete = True
-        while sid is not None:
-            s = by_id.get(sid)
-            if s is None:
-                complete = False  # lineage truncated by expire_snapshots
-                break
-            op = str(s.get("operation", ""))
-            if op.startswith("rollback-to-"):
-                sid = int(op[len("rollback-to-") :])
-                continue
-            if (s.get("summary") or {}).get("compaction"):
-                sid = s.get("parent")
-                continue
-            summary = s.get("summary") or {}
-            removes_rows = (
-                op in ("delete", "upsert")
-                or int(summary.get("deleted_rows", 0)) > 0
-                or int(summary.get("replaced_rows", 0)) > 0
-            )
-            sk = (s.get("sketches") or {}).get(col)
-            if removes_rows:
+        for s in chain:
+            if _removes_rows(s):
                 # CMS/HLL/Bloom cannot subtract: removed rows stay
                 # counted in ancestor deltas, so the fold OVERcounts
                 complete = False
+            sk = (s.get("sketches") or {}).get(col)
             if sk is not None:
                 for d, b, n in sk["cms"]:
                     k = (int(d), int(b))
@@ -527,36 +575,119 @@ class IceTable:
                     hll[r] = max(hll.get(r, 0), int(rho))
             elif int(s.get("added_rows", 0)) > 0:
                 complete = False  # this snapshot's rows are not folded
-            if op == "overwrite":
-                break
-            sid = s.get("parent")
         return {"cms": cms, "bloom": bloom, "hll": hll, "complete": complete}
 
     def rollback(self, snapshot_id: int) -> int:
         """Commit a new snapshot whose state is a historical one (time
         travel as a WRITE — the audit trail keeps going forward)."""
-        with self._commit_lock():
-            meta = self._metadata()
-            if snapshot_id not in {s["id"] for s in meta["snapshots"]}:
-                raise KeyError(snapshot_id)
-            sid = max(s["id"] for s in meta["snapshots"]) + 1
-            with open(os.path.join(self.meta_dir, f"manifest-{sid}.json"), "w") as f:
-                f.write(json.dumps(self._manifest(snapshot_id)))
-            meta["snapshots"].append(
-                {
-                    "id": sid,
-                    "parent": meta["current_snapshot_id"],
-                    "ts": time.time(),
-                    "operation": f"rollback-to-{snapshot_id}",
-                    "added_files": 0,
-                    "added_rows": 0,
-                }
-            )
-            meta["current_snapshot_id"] = sid
-            self._commit_metadata(meta)
-        return sid
+        meta = self._metadata()
+        if snapshot_id not in {s["id"] for s in meta["snapshots"]}:
+            raise KeyError(snapshot_id)
+        return self._publish(
+            f"rollback-to-{snapshot_id}",
+            [],
+            self._manifest(snapshot_id),
+            meta["current_snapshot_id"],
+            {},
+        )
 
-    # -------------------------------------------------------- maintenance
+    # ------------------------------------------------------ row-level writes
+
+    @staticmethod
+    def _split(
+        files: list[dict], ranges: dict[str, tuple]
+    ) -> tuple[list[dict], list[dict]]:
+        """Footer-stat pruning: (files that may hold a row inside every
+        inclusive ``(lo, hi)`` range — None is open —, files provably
+        holding none). A file without stats for a column is kept."""
+        kept, skipped = [], []
+        for fi in files:
+            miss = False
+            for col, (lo, hi) in ranges.items():
+                st = fi["stats"].get(col)
+                if st is not None and (
+                    (hi is not None and st[0] > hi) or (lo is not None and st[1] < lo)
+                ):
+                    miss = True
+                    break
+            (skipped if miss else kept).append(fi)
+        return kept, skipped
+
+    def _key_split(
+        self, files: list[dict], keys: DataFrame, key_col: str
+    ) -> tuple[list[dict], list[dict]]:
+        """``_split`` on the [min, max] of a key set — the only pruning a
+        key set whose members can sit anywhere admits. An empty key set
+        matches no file."""
+        b = keys.agg(F.min(key_col).alias("lo"), F.max(key_col).alias("hi")).first()
+        if b["lo"] is None:
+            return [], list(files)
+        return self._split(files, {key_col: (b["lo"], b["hi"])})
+
+    def _rewrite(
+        self,
+        spark: SparkSession,
+        base_sid: int | None,
+        touched: list[dict],
+        survivors,
+        stats_cols: list[str] | None,
+        op: str,
+    ) -> tuple[int, str, list[dict]]:
+        """The copy-on-write rewrite: read ``touched`` with the live
+        eq-deletes of ``base_sid`` applied, keep ``survivors(frame)``
+        and write it as new files. No broadcast hint: AQE picks
+        broadcast vs shuffle from the key set's actual size (a polygon
+        delete or a large upsert batch can match millions of keys;
+        forcing a broadcast would be the 100 TB failure mode). Returns
+        (live rows read, data dir, new files) — with live deletes the
+        raw footer counts include rows already logically deleted, so
+        the live base is counted instead, keeping reports exact."""
+        dels = self.delete_entries(base_sid)
+        base = self._read_with_deletes(spark, touched, dels)
+        n_before = base.count() if dels else sum(f["rows"] for f in touched)
+        data_dir, new_files = self._write(
+            survivors(base), _inherit_stats_cols(stats_cols, touched), op
+        )
+        return n_before, data_dir, new_files
+
+    def _cow_delete(
+        self,
+        spark: SparkSession,
+        base_sid: int | None,
+        touched: list[dict],
+        untouched: list[dict],
+        survivors,
+        stats_cols: list[str] | None,
+    ) -> tuple[int, dict]:
+        """Shared tail of delete_where and delete_keys(mode='cow'):
+        rewrite ``touched``, carry ``untouched`` as is, and commit one
+        'delete' snapshot — or nothing when no row goes."""
+        report = {
+            "files_total": len(touched) + len(untouched),
+            "files_rewritten": len(touched),
+            "files_skipped": len(untouched),
+        }
+        deleted = 0
+        if touched:
+            n_before, data_dir, new_files = self._rewrite(
+                spark, base_sid, touched, survivors, stats_cols, "d"
+            )
+            deleted = n_before - sum(x["rows"] for x in new_files)
+            if deleted == 0:
+                shutil.rmtree(data_dir)  # no empty delete snapshots
+            else:
+                # live eq-delete entries carry forward: they still apply
+                # to the untouched (older-seq) files; the rewritten files
+                # get a seq above every delete's, so re-applying is a no-op
+                self._publish(
+                    "delete",
+                    new_files,
+                    untouched + new_files + self.delete_entries(base_sid),
+                    base_sid,
+                    {"deleted_rows": int(deleted), **report},
+                )
+        report["deleted_rows"] = int(deleted)
+        return int(deleted), report
 
     def delete_where(
         self,
@@ -590,29 +721,6 @@ class IceTable:
         files = self.files(base_sid)
         if not files:
             raise ValueError("empty table")
-        touched, untouched = [], []
-        for fi in files:
-            maybe = True
-            for col, (lo, hi) in ranges.items():
-                st = fi["stats"].get(col)
-                if st is None:
-                    continue  # no stats -> must assume a match
-                if (hi is not None and st[0] > hi) or (
-                    lo is not None and st[1] < lo
-                ):
-                    maybe = False
-                    break
-            (touched if maybe else untouched).append(fi)
-        report = {
-            "files_total": len(files),
-            "files_rewritten": len(touched),
-            "files_skipped": len(untouched),
-        }
-        if not touched:
-            return 0, report
-
-        from pyspark.sql import functions as F
-
         cond = F.lit(True)
         for col, (lo, hi) in ranges.items():
             if lo is not None:
@@ -623,66 +731,10 @@ class IceTable:
             cond = cond & F.expr(predicate)
         # NULL never matches a delete: keep the row unless cond is TRUE
         keep = ~F.coalesce(cond, F.lit(False))
-
-        live_dels = self.delete_entries(base_sid)
-        cand = self._read_with_deletes(spark, touched, live_dels)
-        kept_df = cand.where(keep)
-        # with live eq-deletes the raw footer counts include rows
-        # already logically deleted; count the live base instead so the
-        # rewrite never resurrects them and the report stays exact
-        n_before = cand.count() if live_dels else sum(f["rows"] for f in touched)
-        # rewritten files land outside the lock, invisible until publish
-        data_dir = os.path.join(self.root, "data", f"d-{uuid.uuid4().hex[:12]}")
-        kept_df.write.mode("error").parquet(data_dir)
-        if stats_cols is None:
-            cols = set()
-            for fi in touched:
-                cols.update(fi["stats"].keys())
-            stats_cols = sorted(cols) or None
-        new_files = [
-            _file_stats(os.path.join(data_dir, fn), stats_cols)
-            for fn in sorted(os.listdir(data_dir))
-            if fn.endswith(".parquet")
-        ]
-        n_after = sum(x["rows"] for x in new_files)
-        deleted = n_before - n_after
-        if deleted == 0:
-            for fn in os.listdir(data_dir):
-                os.unlink(os.path.join(data_dir, fn))
-            os.rmdir(data_dir)
-            return 0, report
-        with self._commit_lock():
-            meta = self._metadata()
-            if meta["current_snapshot_id"] != base_sid:
-                raise RuntimeError(
-                    "concurrent commit detected: table moved from snapshot "
-                    f"{base_sid} to {meta['current_snapshot_id']} during delete"
-                )
-            sid = max((s["id"] for s in meta["snapshots"]), default=0) + 1
-            for x in new_files:
-                x["seq"] = sid
-            # live eq-delete entries carry forward: they still apply to
-            # the untouched (older-seq) files; the rewritten files get
-            # seq = sid > every delete seq, so re-applying is a no-op
-            manifest = untouched + new_files + self.delete_entries(base_sid)
-            with open(os.path.join(self.meta_dir, f"manifest-{sid}.json"), "w") as f:
-                f.write(json.dumps(manifest))
-            meta["snapshots"].append(
-                {
-                    "id": sid,
-                    "parent": base_sid,
-                    "ts": time.time(),
-                    "operation": "delete",
-                    "added_files": len(new_files),
-                    "added_rows": n_after,
-                    "added_paths": [x["path"] for x in new_files],
-                    "summary": {"deleted_rows": int(deleted), **report},
-                }
-            )
-            meta["current_snapshot_id"] = sid
-            self._commit_metadata(meta)
-        report["deleted_rows"] = int(deleted)
-        return int(deleted), report
+        touched, untouched = self._split(files, ranges)
+        return self._cow_delete(
+            spark, base_sid, touched, untouched, lambda b: b.where(keep), stats_cols
+        )
 
     def delete_keys(
         self,
@@ -717,100 +769,22 @@ class IceTable:
         keeps later re-inserts of the same key alive.
 
         Returns (deleted_rows, report)."""
-        from pyspark.sql import functions as F
-
         if mode not in ("cow", "mor"):
             raise ValueError(mode)
         if mode == "mor":
             return self._delete_keys_mor(keys_df, key_col)
         base_sid = self.current_snapshot_id()
         files = self.files(base_sid)
-        spark = keys_df.sparkSession
-        keys = keys_df.select(F.col(key_col)).distinct().persist()
-        bounds = keys.agg(
-            F.min(key_col).alias("lo"), F.max(key_col).alias("hi")
-        ).first()
-        k_lo, k_hi = bounds["lo"], bounds["hi"]
-        touched, untouched = [], []
-        for fi in files:
-            st = fi["stats"].get(key_col)
-            if (
-                k_lo is None  # empty key set: nothing can match
-                or (st is not None and (st[0] > k_hi or st[1] < k_lo))
-            ):
-                untouched.append(fi)
-            else:
-                touched.append(fi)
-        report = {
-            "files_total": len(files),
-            "files_rewritten": len(touched),
-            "files_skipped": len(untouched),
-        }
-        if not touched:
-            keys.unpersist()
-            report["deleted_rows"] = 0
-            return 0, report
-
-        live_dels = self.delete_entries(base_sid)
-        base = self._read_with_deletes(spark, touched, live_dels)
-        # with live eq-deletes the raw footer row counts include rows
-        # already logically deleted — count the live base so the
-        # reported deleted_rows is THIS delete's effect only
-        n_before = base.count() if live_dels else sum(f["rows"] for f in touched)
-        survivors = base.join(keys, key_col, "leftanti")
-        data_dir = os.path.join(self.root, "data", f"d-{uuid.uuid4().hex[:12]}")
-        survivors.write.mode("error").parquet(data_dir)
-        keys.unpersist()
-        if stats_cols is None:
-            cols = set()
-            for fi in touched:
-                cols.update(fi["stats"].keys())
-            stats_cols = sorted(cols) or None
-        new_files = [
-            _file_stats(os.path.join(data_dir, fn), stats_cols)
-            for fn in sorted(os.listdir(data_dir))
-            if fn.endswith(".parquet")
-        ]
-        n_after = sum(x["rows"] for x in new_files)
-        deleted = n_before - n_after
-        if deleted == 0:
-            for fn in os.listdir(data_dir):
-                os.unlink(os.path.join(data_dir, fn))
-            os.rmdir(data_dir)
-            report["deleted_rows"] = 0
-            return 0, report
-        with self._commit_lock():
-            meta = self._metadata()
-            if meta["current_snapshot_id"] != base_sid:
-                raise RuntimeError(
-                    "concurrent commit detected: table moved from snapshot "
-                    f"{base_sid} to {meta['current_snapshot_id']} during delete"
-                )
-            sid = max((s["id"] for s in meta["snapshots"]), default=0) + 1
-            for x in new_files:
-                x["seq"] = sid
-            # live eq-delete entries carry forward: they still apply to
-            # the untouched (older-seq) files; the rewritten files get
-            # seq = sid > every delete seq, so re-applying is a no-op
-            manifest = untouched + new_files + self.delete_entries(base_sid)
-            with open(os.path.join(self.meta_dir, f"manifest-{sid}.json"), "w") as f:
-                f.write(json.dumps(manifest))
-            meta["snapshots"].append(
-                {
-                    "id": sid,
-                    "parent": base_sid,
-                    "ts": time.time(),
-                    "operation": "delete",
-                    "added_files": len(new_files),
-                    "added_rows": n_after,
-                    "added_paths": [x["path"] for x in new_files],
-                    "summary": {"deleted_rows": int(deleted), **report},
-                }
+        with _distinct_keys(keys_df, key_col) as keys:
+            touched, untouched = self._key_split(files, keys, key_col)
+            return self._cow_delete(
+                keys_df.sparkSession,
+                base_sid,
+                touched,
+                untouched,
+                lambda b: b.join(keys, key_col, "leftanti"),
+                stats_cols,
             )
-            meta["current_snapshot_id"] = sid
-            self._commit_metadata(meta)
-        report["deleted_rows"] = int(deleted)
-        return int(deleted), report
 
     def _delete_keys_mor(
         self, keys_df: DataFrame, key_col: str
@@ -826,83 +800,37 @@ class IceTable:
         actually hits (also what flips the metadata-stat completeness
         guards); the key file itself carries footer stats on the key
         column so apply_deletes can prune which data files to rewrite."""
-        from pyspark.sql import functions as F
-
         base_sid = self.current_snapshot_id()
         files = self.files(base_sid)
         if not files:
             raise ValueError("empty table")
-        spark = keys_df.sparkSession
-        keys = keys_df.select(F.col(key_col)).distinct().persist()
-        bounds = keys.agg(
-            F.min(key_col).alias("lo"), F.max(key_col).alias("hi")
-        ).first()
-        k_lo, k_hi = bounds["lo"], bounds["hi"]
         report = {
             "files_total": len(files),
             "files_rewritten": 0,
             "files_skipped": len(files),
             "mor": True,
         }
-        if k_lo is None:  # empty key set
-            keys.unpersist()
-            report["deleted_rows"] = 0
-            return 0, report
-        touched = [
-            fi
-            for fi in files
-            if (st := fi["stats"].get(key_col)) is None
-            or not (st[0] > k_hi or st[1] < k_lo)
-        ]
         deleted = 0
-        if touched:
-            live = self._read_with_deletes(
-                spark, touched, self.delete_entries(base_sid)
-            )
-            deleted = live.join(keys, key_col, "leftsemi").count()
-        if deleted == 0:
-            keys.unpersist()
-            report["deleted_rows"] = 0
-            return 0, report
-        data_dir = os.path.join(self.root, "data", f"del-{uuid.uuid4().hex[:12]}")
-        keys.write.mode("error").parquet(data_dir)
-        keys.unpersist()
-        del_files = [
-            _file_stats(os.path.join(data_dir, fn), [key_col])
-            for fn in sorted(os.listdir(data_dir))
-            if fn.endswith(".parquet")
-        ]
-        with self._commit_lock():
-            meta = self._metadata()
-            if meta["current_snapshot_id"] != base_sid:
-                raise RuntimeError(
-                    "concurrent commit detected: table moved from snapshot "
-                    f"{base_sid} to {meta['current_snapshot_id']} during delete"
+        with _distinct_keys(keys_df, key_col) as keys:
+            touched, _ = self._key_split(files, keys, key_col)
+            if touched:
+                live = self._read_with_deletes(
+                    keys_df.sparkSession, touched, self.delete_entries(base_sid)
                 )
-            sid = max((s["id"] for s in meta["snapshots"]), default=0) + 1
-            for x in del_files:
-                x.update(kind="eq-delete", key_col=key_col, seq=sid)
-            manifest = self._manifest(base_sid) + del_files
-            with open(os.path.join(self.meta_dir, f"manifest-{sid}.json"), "w") as f:
-                f.write(json.dumps(manifest))
-            meta["snapshots"].append(
-                {
-                    "id": sid,
-                    "parent": base_sid,
-                    "ts": time.time(),
-                    "operation": "delete",
-                    "added_files": 0,
-                    "added_rows": 0,
-                    "added_paths": [x["path"] for x in del_files],
-                    "summary": {
-                        "deleted_rows": int(deleted),
-                        "delete_files": len(del_files),
-                        **report,
-                    },
-                }
-            )
-            meta["current_snapshot_id"] = sid
-            self._commit_metadata(meta)
+                deleted = live.join(keys, key_col, "leftsemi").count()
+            if deleted:
+                _, del_files = self._write(keys, [key_col], "del")
+                for x in del_files:
+                    x.update(kind="eq-delete", key_col=key_col)
+                self._publish(
+                    "delete",
+                    del_files,
+                    self._manifest(base_sid) + del_files,
+                    base_sid,
+                    {"deleted_rows": int(deleted), "delete_files": len(del_files), **report},
+                    added_files=0,
+                    added_rows=0,
+                )
         report["deleted_rows"] = int(deleted)
         return int(deleted), report
 
@@ -943,54 +871,23 @@ class IceTable:
             (touched if may_hit(fi) else untouched).append(fi)
         report["files_rewritten"] = len(touched)
         new_files: list[dict] = []
-        n_before = sum(f["rows"] for f in touched)
-        n_after = 0
         if touched:
-            survivors = self._read_with_deletes(spark, touched, dels)
-            data_dir = os.path.join(self.root, "data", f"a-{uuid.uuid4().hex[:12]}")
-            survivors.write.mode("error").parquet(data_dir)
-            if stats_cols is None:
-                cols: set = set()
-                for fi in touched:
-                    cols.update(fi["stats"].keys())
-                stats_cols = sorted(cols) or None
-            new_files = [
-                _file_stats(os.path.join(data_dir, fn), stats_cols)
-                for fn in sorted(os.listdir(data_dir))
-                if fn.endswith(".parquet")
-            ]
-            n_after = sum(x["rows"] for x in new_files)
-        folded = n_before - n_after
-        with self._commit_lock():
-            meta = self._metadata()
-            if meta["current_snapshot_id"] != base_sid:
-                raise RuntimeError(
-                    "concurrent commit detected: table moved from snapshot "
-                    f"{base_sid} to {meta['current_snapshot_id']} during "
-                    "apply_deletes"
-                )
-            sid = max((s["id"] for s in meta["snapshots"]), default=0) + 1
-            for x in new_files:
-                x["seq"] = sid
-            manifest = untouched + new_files
-            with open(os.path.join(self.meta_dir, f"manifest-{sid}.json"), "w") as f:
-                f.write(json.dumps(manifest))
-            meta["snapshots"].append(
-                {
-                    "id": sid,
-                    "parent": base_sid,
-                    "ts": time.time(),
-                    "operation": "rewrite-deletes",
-                    "added_files": len(new_files),
-                    "added_rows": n_after,
-                    "added_paths": [x["path"] for x in new_files],
-                    # data-identical to the parent's LOGICAL state: the
-                    # occupancy/sketch folds treat it like a compaction
-                    "summary": {"compaction": True, "folded_rows": int(folded)},
-                }
+            _, new_files = self._write(
+                self._read_with_deletes(spark, touched, dels),
+                _inherit_stats_cols(stats_cols, touched),
+                "a",
             )
-            meta["current_snapshot_id"] = sid
-            self._commit_metadata(meta)
+        # raw footer rows in minus rows out: the rows the deletes removed
+        folded = sum(f["rows"] for f in touched) - sum(x["rows"] for x in new_files)
+        self._publish(
+            "rewrite-deletes",
+            new_files,
+            untouched + new_files,
+            base_sid,
+            # data-identical to the parent's LOGICAL state: the
+            # occupancy/sketch folds treat it like a compaction
+            {"compaction": True, "folded_rows": int(folded)},
+        )
         report["folded_rows"] = int(folded)
         return int(folded), report
 
@@ -1014,97 +911,42 @@ class IceTable:
         deleted-but-not-yet-reinserted intermediate state.
 
         Returns (replaced_rows, report)."""
-        from pyspark.sql import functions as F
-
         base_sid = self.current_snapshot_id()
         files = self.files(base_sid)
-        spark = df.sparkSession
-        keys = df.select(F.col(key_col)).distinct().persist()
-        bounds = keys.agg(
-            F.min(key_col).alias("lo"), F.max(key_col).alias("hi")
-        ).first()
-        k_lo, k_hi = bounds["lo"], bounds["hi"]
-        touched, untouched = [], []
-        for fi in files:
-            st = fi["stats"].get(key_col)
-            if st is not None and k_lo is not None and (
-                st[0] > k_hi or st[1] < k_lo
-            ):
-                untouched.append(fi)
-            else:
-                touched.append(fi)
+        with _distinct_keys(df, key_col) as keys:
+            touched, untouched = self._key_split(files, keys, key_col)
+            stats_cols = _inherit_stats_cols(stats_cols, touched)
+            replaced, new_files = 0, []
+            if touched:
+                n_before, _, new_files = self._rewrite(
+                    df.sparkSession,
+                    base_sid,
+                    touched,
+                    lambda b: b.join(keys, key_col, "leftanti"),
+                    stats_cols,
+                    "u",
+                )
+                replaced = n_before - sum(x["rows"] for x in new_files)
+            _, batch_files = self._write(df, stats_cols, "u")
         report = {
             "files_total": len(files),
             "files_rewritten": len(touched),
             "files_skipped": len(untouched),
         }
-        data_dir = os.path.join(self.root, "data", f"u-{uuid.uuid4().hex[:12]}")
-        live_dels = self.delete_entries(base_sid)
-        n_before = sum(f["rows"] for f in touched)
-        n_after = n_before
-        new_files: list[dict] = []
-        if touched:
-            base = self._read_with_deletes(spark, touched, live_dels)
-            if live_dels:
-                n_before = base.count()
-            survivors = base.join(F.broadcast(keys), key_col, "leftanti")
-            survivors.write.mode("error").parquet(data_dir)
-            if stats_cols is None:
-                cols = set()
-                for fi in touched:
-                    cols.update(fi["stats"].keys())
-                stats_cols = sorted(cols) or None
-            new_files = [
-                _file_stats(os.path.join(data_dir, fn), stats_cols)
-                for fn in sorted(os.listdir(data_dir))
-                if fn.endswith(".parquet")
-            ]
-            n_after = sum(x["rows"] for x in new_files)
-        batch_dir = os.path.join(self.root, "data", f"u-{uuid.uuid4().hex[:12]}")
-        df.write.mode("error").parquet(batch_dir)
-        batch_files = [
-            _file_stats(os.path.join(batch_dir, fn), stats_cols)
-            for fn in sorted(os.listdir(batch_dir))
-            if fn.endswith(".parquet")
-        ]
-        keys.unpersist()
-        replaced = n_before - n_after
-        with self._commit_lock():
-            meta = self._metadata()
-            if meta["current_snapshot_id"] != base_sid:
-                raise RuntimeError(
-                    "concurrent commit detected: table moved from snapshot "
-                    f"{base_sid} to {meta['current_snapshot_id']} during upsert"
-                )
-            sid = max((s["id"] for s in meta["snapshots"]), default=0) + 1
-            for x in new_files + batch_files:
-                x["seq"] = sid
-            # carried eq-deletes apply only to older-seq files; the
-            # fresh batch outranks them, so an upsert of a previously
-            # MoR-deleted key correctly resurrects it (Iceberg seq rule)
-            manifest = untouched + new_files + batch_files + self.delete_entries(base_sid)
-            with open(os.path.join(self.meta_dir, f"manifest-{sid}.json"), "w") as f:
-                f.write(json.dumps(manifest))
-            meta["snapshots"].append(
-                {
-                    "id": sid,
-                    "parent": base_sid,
-                    "ts": time.time(),
-                    "operation": "upsert",
-                    "added_files": len(new_files) + len(batch_files),
-                    "added_rows": sum(
-                        x["rows"] for x in new_files + batch_files
-                    ),
-                    "added_paths": [
-                        x["path"] for x in new_files + batch_files
-                    ],
-                    "summary": {"replaced_rows": int(replaced), **report},
-                }
-            )
-            meta["current_snapshot_id"] = sid
-            self._commit_metadata(meta)
+        # carried eq-deletes apply only to older-seq files; the fresh
+        # batch outranks them, so an upsert of a previously MoR-deleted
+        # key correctly resurrects it (Iceberg seq rule)
+        self._publish(
+            "upsert",
+            new_files + batch_files,
+            untouched + new_files + batch_files + self.delete_entries(base_sid),
+            base_sid,
+            {"replaced_rows": int(replaced), **report},
+        )
         report["replaced_rows"] = int(replaced)
         return int(replaced), report
+
+    # -------------------------------------------------------- maintenance
 
     def compact(
         self,
@@ -1190,8 +1032,6 @@ class IceTable:
         touched — the lock only guards metadata, data lands outside it.
         Runs under the commit lock so the live-path set is a consistent
         snapshot of the log."""
-        import shutil
-
         data_root = os.path.join(self.root, "data")
         removed_dirs = 0
         removed_bytes = 0
@@ -1236,8 +1076,6 @@ class IceTable:
         live deletes this is exactly the old single parquet scan."""
         if not delete_entries:
             return spark.read.parquet(*[f["path"] for f in data_entries])
-        from pyspark.sql import functions as F
-
         by_seq: dict[int, list[dict]] = {}
         for fi in data_entries:
             by_seq.setdefault(int(fi.get("seq", 0)), []).append(fi)
@@ -1276,26 +1114,11 @@ class IceTable:
         files = self.files(snapshot_id)
         if not files:
             raise ValueError("empty table")
-        kept, skipped_rows = [], 0
-        for fi in files:
-            keep = True
-            for col, (lo, hi) in ranges.items():
-                st = fi["stats"].get(col)
-                if st is None:
-                    continue  # no stats -> cannot prune, must read
-                if (hi is not None and st[0] > hi) or (
-                    lo is not None and st[1] < lo
-                ):
-                    keep = False
-                    break
-            if keep:
-                kept.append(fi)
-            else:
-                skipped_rows += fi["rows"]
+        kept, skipped = self._split(files, ranges)
         report = {
             "files_total": len(files),
             "files_read": len(kept),
-            "rows_skipped": skipped_rows,
+            "rows_skipped": sum(fi["rows"] for fi in skipped),
         }
         if not kept:
             df = spark.read.parquet(files[0]["path"]).limit(0)

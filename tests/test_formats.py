@@ -415,6 +415,55 @@ def test_geojson_ndjson_and_multipolygon(spark, tmp_path):
     assert df["props"][1] == {"note": "no geom", "flag": "true"}
 
 
+
+def test_geojson_planted_corruption_is_skipped_not_fatal(spark, tmp_path):
+    """Malformed GeoJSON never fails the ingest. Unparseable ndjson lines
+    and JSON values that are not objects are skipped; a feature whose
+    geometry is unsupported or malformed keeps its row, with its type
+    and a null geometry."""
+    import json
+
+    from geowave_spark.geom.wkb import wkb_loads
+    from geowave_spark.sources import formats as FM
+
+    def feat(fid, geom, props=None):
+        return {"type": "Feature", "id": fid, "geometry": geom, "properties": props}
+
+    lines = [
+        json.dumps(feat("ok", {"type": "Point", "coordinates": [1.5, 2.5]}, {"n": 1})),
+        '{"type": "Feature", "id": "truncated", "geometry": {"type": "Po',
+        "42",
+        '["not", "a", "feature"]',
+        json.dumps(feat("gc", {"type": "GeometryCollection", "geometries": []})),
+        json.dumps(feat("short", {"type": "Point", "coordinates": [7]})),
+        json.dumps(feat("ragged", {"type": "LineString", "coordinates": [[0, 0], [1]]})),
+        json.dumps(feat("nocoords", {"type": "Polygon"}, ["not", "a", "map"])),
+    ]
+    (tmp_path / "corrupt.geojson").write_text("\n".join(lines) + "\n")
+    (tmp_path / "fc.geojson").write_text(json.dumps({
+        "type": "FeatureCollection",
+        "features": [
+            7,
+            feat("emptyring", {"type": "Polygon", "coordinates": [[]]}),
+            feat("line", {"type": "LineString", "coordinates": [[0, 0], [1, 1]]}),
+        ],
+    }))
+    (tmp_path / "array.geojson").write_text("[1, 2, 3]")
+
+    df = FM.read_geojson(spark, str(tmp_path)).toPandas().set_index("fid")
+    assert sorted(df.index) == [
+        "emptyring", "gc", "line", "nocoords", "ok", "ragged", "short",
+    ]
+    assert wkb_loads(bytes(df.loc["ok", "geometry"])).gtype == "Point"
+    assert df.loc["ok", "props"] == {"n": "1"}
+    assert wkb_loads(bytes(df.loc["line", "geometry"])).gtype == "LineString"
+    for fid, gtype in [
+        ("gc", "GeometryCollection"), ("short", "Point"), ("ragged", "LineString"),
+        ("nocoords", "Polygon"), ("emptyring", "Polygon"),
+    ]:
+        assert df.loc[fid, "gtype"] == gtype and df.loc[fid, "geometry"] is None
+    assert df.loc["nocoords", "props"] == {}
+
 # ------------------------------------------------------------------- avro
 
 

@@ -950,3 +950,125 @@ def test_sketch_columns_tolerate_nulls(spark, tmp_path):
     assert m["cms"] == cms._t
     assert m["bloom"] == bf._bits
     assert None not in bf._bits
+
+
+# ----------------------------------------- crash between write and publish
+
+
+def _batch(spark, rows):
+    return spark.createDataFrame(rows, "id LONG, val LONG")
+
+
+# op -> (set-up, the write under test, live rows after it publishes);
+# every table starts as ids 0..99 in four files with id stats
+CRASH_OPS = {
+    "append": (
+        None,
+        lambda spark, t: t.commit_write(_mk(spark, 100, 120), stats_cols=["id"]),
+        120,
+    ),
+    "overwrite": (
+        None,
+        lambda spark, t: t.commit_write(_mk(spark, 0, 10), mode="overwrite"),
+        10,
+    ),
+    "rollback": (
+        lambda spark, t: t.commit_write(_mk(spark, 100, 110), stats_cols=["id"]),
+        lambda spark, t: t.rollback(t.snapshots()[0]["id"]),
+        100,
+    ),
+    "delete_where": (
+        None,
+        lambda spark, t: t.delete_where(spark, ranges={"id": (0, 9)}),
+        90,
+    ),
+    "delete_keys_cow": (
+        None,
+        lambda spark, t: t.delete_keys(spark.range(0, 10), "id"),
+        90,
+    ),
+    "delete_keys_mor": (
+        None,
+        lambda spark, t: t.delete_keys(spark.range(0, 10), "id", mode="mor"),
+        90,
+    ),
+    "apply_deletes": (
+        lambda spark, t: t.delete_keys(spark.range(0, 10), "id", mode="mor"),
+        lambda spark, t: t.apply_deletes(spark),
+        90,
+    ),
+    "upsert": (
+        None,
+        lambda spark, t: t.upsert(_batch(spark, [(5, 9), (500, 1)]), "id"),
+        101,
+    ),
+    "compact": (
+        None,
+        lambda spark, t: t.compact(spark, sort_by=["id"], target_files=1),
+        100,
+    ),
+}
+
+
+@pytest.mark.parametrize("op", list(CRASH_OPS))
+def test_crash_before_publish_leaves_table_intact(spark, tmp_path, monkeypatch, op):
+    """Every writer shares one commit path, so one injected crash covers
+    them all: the version-hint swap fails after the manifest and the
+    metadata JSON are written. The table must still read its previous
+    snapshot, hold no commit lock, accept a retry over the leftovers,
+    and keep every live file through an orphan sweep."""
+    from geowave_spark.sources import icetable
+
+    setup, write, n_after = CRASH_OPS[op]
+    t = IceTable(str(tmp_path / op))
+    t.commit_write(_mk(spark, 0, 100), mode="overwrite", stats_cols=["id"])
+    if setup is not None:
+        setup(spark, t)
+    sid = t.current_snapshot_id()
+    rows = sorted(tuple(r) for r in t.read(spark).collect())
+    real_replace = icetable.os.replace
+
+    def crash(src, dst, *a, **kw):
+        if os.path.basename(dst) == "version-hint.text":
+            raise OSError("simulated crash before publish")
+        return real_replace(src, dst, *a, **kw)
+
+    monkeypatch.setattr(icetable.os, "replace", crash)
+    with pytest.raises(OSError, match="simulated crash"):
+        write(spark, t)
+    monkeypatch.undo()
+
+    assert t.current_snapshot_id() == sid
+    assert sorted(tuple(r) for r in t.read(spark).collect()) == rows
+    assert not os.path.exists(os.path.join(t.meta_dir, "commit.lock"))
+    # the crash came after the manifest and metadata JSON were written
+    assert os.path.exists(os.path.join(t.meta_dir, f"manifest-{sid + 1}.json"))
+    assert os.path.exists(
+        os.path.join(t.meta_dir, f"v{t._version() + 1}.metadata.json")
+    )
+
+    write(spark, t)  # the retry publishes over the leftovers
+    assert t.current_snapshot_id() == sid + 1
+    assert t.read(spark).count() == n_after
+    live = {f["path"] for s in t.snapshots() for f in t._manifest(s["id"])}
+    t.remove_orphans(older_than_s=0)
+    assert all(os.path.exists(p) for p in live)
+    assert t.read(spark).count() == n_after
+
+
+def test_upsert_leaves_the_join_strategy_to_aqe(spark, tmp_path, monkeypatch):
+    """An upsert's key set is as large as its batch, which is unbounded:
+    a broadcast hint would force all of it through the driver. Like
+    delete_keys, upsert lets AQE choose between broadcast and shuffle."""
+    t = IceTable(str(tmp_path / "upb"))
+    t.commit_write(_mk(spark, 0, 100), mode="overwrite", stats_cols=["id"])
+
+    def no_broadcast(df):
+        raise AssertionError("upsert hinted a broadcast of its key set")
+
+    monkeypatch.setattr(F, "broadcast", no_broadcast)
+    replaced, rep = t.upsert(_batch(spark, [(5, 9), (500, 1)]), "id")
+    monkeypatch.undo()
+    assert replaced == 1 and rep["files_rewritten"] >= 1
+    assert t.read(spark).count() == 101
+    assert t.read(spark).where("id = 5").first()["val"] == 9

@@ -5,7 +5,6 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from geowave_spark.operators.nn_join import nn_self_join, res_for_distance
-from geowave_spark.plans.checkpoint import StageStore
 from geowave_spark.plans.stats import hot_cells, table_stats
 from geowave_spark.sources.testgeo import events_points
 
@@ -73,34 +72,6 @@ def test_hot_cells_finds_hotspots(spark, sf_dir):
     # the 5 deliberate hotspot clusters (20% of rows) must surface
     assert 1 <= len(hot) <= 12
     assert sum(r.n for r in hot) >= n // 10
-
-
-def test_stage_store_resumes_without_recompute(spark, tmp_path):
-    store = StageStore(str(tmp_path / "stages"))
-    calls = []
-
-    def make(k):
-        calls.append(k)
-        return spark.range(k * 10, k * 10 + 5).withColumn("v", F.col("id") * 2)
-
-    out1 = store.run_stage(spark, "s1", [1, 2, 3], make, fingerprint="fp1")
-    assert out1.count() == 15
-    assert sorted(calls) == [1, 2, 3]
-
-    # resume: nothing recomputed
-    calls.clear()
-    out2 = store.run_stage(spark, "s1", [1, 2, 3], make, fingerprint="fp1")
-    assert out2.count() == 15
-    assert calls == []
-
-    # changed input fingerprint -> full recompute
-    calls.clear()
-    store.run_stage(spark, "s1", [1, 2, 3], make, fingerprint="fp2")
-    assert sorted(calls) == [1, 2, 3]
-
-    # metrics/lineage rows recorded per partition
-    m = store.metrics("s1")
-    assert len(m) == 6 and all("wall_ms" in r and "n_rows" in r for r in m)
 
 
 def test_field_sketches(spark, sf_dir):
