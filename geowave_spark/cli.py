@@ -64,11 +64,32 @@ def _save_manifest(store: str, manifest: dict) -> None:
         json.dump(manifest, f, indent=1, sort_keys=True)
 
 
+def _finish_swap(spark, store: str, name: str) -> None:
+    """Roll a half-finished DELETE swap of type ``name`` forward. The
+    swap renames the type's dir to ``.old``, renames the complete
+    survivor dir ``.tmp`` in, records the row count and drops ``.old``;
+    a process that died on the way leaves ``.old`` behind. A ``.tmp``
+    without ``.old`` is a survivor write that never reached the swap:
+    the type's data is intact and the leftover goes."""
+    path = os.path.join(store, name)
+    old, tmp = path + ".old", path + ".tmp"
+    if not os.path.isdir(old):
+        shutil.rmtree(tmp, ignore_errors=True)
+        return
+    if not os.path.isdir(path):
+        os.rename(tmp, path)
+    manifest = _load_manifest(store)
+    manifest[name]["rows"] = spark.read.parquet(path).count()
+    _save_manifest(store, manifest)
+    shutil.rmtree(old)
+
+
 def _datastore(spark, store: str):
     from geowave_spark.api import DataStore
 
     ds = DataStore(spark)
     for name in sorted(_load_manifest(store)):
+        _finish_swap(spark, store, name)
         ds.add_type(name, spark.read.parquet(os.path.join(store, name)))
     return ds
 
@@ -157,18 +178,31 @@ def cmd_query(args) -> int:
     ds = _datastore(spark, args.store)
     result = ds.gwql(args.statement)
     if isinstance(result, int):  # DELETE → count; persist the type
-        import re
+        from geowave_spark.plans.gwql import parse_statement
 
-        m = re.search(r"\bFROM\s+(\w+)", args.statement, re.I)
-        name = m.group(1)
-        path = os.path.join(args.store, name)
-        tmp = path + ".tmp"
-        ds.type(name).write.mode("overwrite").parquet(tmp)
-        shutil.rmtree(path)
-        os.rename(tmp, path)
+        # the parser's type name, not a regex over the text: GWQL also
+        # takes quoted names (DELETE FROM "gdelt")
+        name = parse_statement(args.statement).table
         manifest = _load_manifest(args.store)
+        if name not in manifest:
+            print(f"cannot persist DELETE: no stored type {name!r}", file=sys.stderr)
+            return 1
+        path = os.path.join(args.store, name)
+        tmp, old = path + ".tmp", path + ".old"
+        ds.type(name).write.mode("overwrite").parquet(tmp)
+        # the type's dir is never absent: a failed swap is undone here,
+        # and one a dead process left half done rolls forward on the
+        # next open (_finish_swap)
+        os.rename(path, old)
+        try:
+            os.rename(tmp, path)
+        except OSError:
+            os.rename(old, path)
+            shutil.rmtree(tmp, ignore_errors=True)
+            raise
         manifest[name]["rows"] = manifest[name]["rows"] - result
         _save_manifest(args.store, manifest)
+        shutil.rmtree(old)
         print(f"deleted {result} rows from '{name}'")
         return 0
     _emit(result, args.format, args.limit)

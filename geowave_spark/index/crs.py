@@ -83,6 +83,15 @@ def grid_coord_col_crs(v: Column, res: int, lo: int, span: int) -> Column:
     return F.least(F.greatest(g, F.lit(0)), F.lit(n - 1))
 
 
+def grid_coord_expr_crs(col: str, res: int, lo: int, span: int) -> str:
+    """Spark SQL text twin of grid_coord_col_crs over the column named
+    ``col`` (the same exact ``div`` arithmetic), for keys built as one
+    ``F.expr`` (operators/spatial_join)."""
+    n = 1 << res
+    g = f"((CAST({col} AS BIGINT) - ({lo})) * {n}) div {span}"
+    return f"least(greatest({g}, 0), {n - 1})"
+
+
 def cell_col_crs(x: Column, y: Column, res: int, crs: CRS) -> Column:
     """Morton cell id at ``res`` over the CRS's bounds — pure JVM."""
     gx = grid_coord_col_crs(x, res, crs.x_lo, crs.x_span)

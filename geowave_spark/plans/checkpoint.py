@@ -95,13 +95,13 @@ class IceStageStore:
             )
         return self.read_parts(spark, stage, fingerprint, part_keys)
 
-    def part_paths(self, stage: str, fingerprint: str, part_keys: list) -> list:
+    def _part_files(self, t, fingerprint: str, part_keys: list) -> list[dict]:
         """Data files of exactly the partitions committed under THIS
         fingerprint (a changed input invalidates prior snapshots without
         deleting them — they stay time-travelable): each append snapshot
         entry records the data files it added, so the matching file set
-        is reconstructible from the snapshot log alone."""
-        t = self._table(stage)
+        is reconstructible from the snapshot log alone. Each file comes
+        as a {path, schema_id} entry carrying its snapshot's schema."""
         want = set(part_keys)
         live = {f["path"] for f in t.files()}
 
@@ -121,7 +121,7 @@ class IceStageStore:
             return sorted(here - prev)
 
         return [
-            p
+            {"path": p, "schema_id": s.get("schema_id")}
             for s in t.snapshots()
             if (s.get("summary") or {}).get("fingerprint") == fingerprint
             and (s.get("summary") or {}).get("part_key") in want
@@ -137,8 +137,11 @@ class IceStageStore:
         rather than a raw table read: on a reused store root the raw
         read returns every live generation's rows, silently mixing
         stale-fingerprint data into the derivation."""
-        paths = self.part_paths(stage, fingerprint, part_keys)
-        if not paths:
+        from geowave_spark.sources.icetable import _read_parquet
+
+        t = self._table(stage)
+        files = self._part_files(t, fingerprint, part_keys)
+        if not files:
             # zero-path spark.read.parquet raises an opaque schema-
             # inference error that points nowhere near the real cause
             raise ValueError(
@@ -146,7 +149,7 @@ class IceStageStore:
                 f"fingerprint {fingerprint!r} for part_keys {list(part_keys)!r} "
                 f"(producer not run, wrong fingerprint, or files expired)"
             )
-        return spark.read.parquet(*paths)
+        return _read_parquet(spark, files, t._schemas())
 
     def metrics(self, stage: str):
         out = []

@@ -31,6 +31,20 @@ Commit protocol — one path, ``IceTable._publish``, for every writer:
    snapshot, a retry overwrites the leftovers, and ``remove_orphans``
    reclaims the data dir.
 
+Schemas, in Iceberg's shape: the metadata JSON holds a table-level
+``schemas`` list of ``{"schema_id": i, "type": "struct", "fields":
+[...]}`` Spark schemas, each recorded once. Every manifest entry (data
+or eq-delete file) carries the ``schema_id`` it was written with — the
+writing frame's schema with every field nullable, which is what the
+parquet reader returns for it — and a snapshot entry carries
+``schema_id`` when all of its data files share one. Readers open files
+under that schema (``spark.read.schema``), so a read starts no Spark
+job; without it Spark infers the schema from a parquet footer, one job
+per read. Files without a recorded schema (tables committed before
+schemas were recorded) or a snapshot mixing schemas fall back to that
+inference. Time travel and rollback read the schema of the snapshot
+they open.
+
 Guarantees the engine uses:
 
 - **Atomic commits**: readers see the old or the new snapshot, never a
@@ -76,6 +90,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 
 def _json_safe(v):
@@ -89,6 +104,7 @@ def _json_safe(v):
 def _file_stats(path: str, stats_cols: list[str] | None) -> dict:
     """Footer-only stats: rows + per-column [min, max] from row-group
     metadata (never scans data pages)."""
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
     md = pq.ParquetFile(path).metadata
@@ -108,7 +124,13 @@ def _file_stats(path: str, stats_cols: list[str] | None) -> dict:
                 ok[name] = False
                 continue
             ok.setdefault(name, True)
-            mn, mx = _json_safe(st.min), _json_safe(st.max)
+            try:
+                mn, mx = _json_safe(st.min), _json_safe(st.max)
+            except pa.ArrowNotImplementedError:
+                # pyarrow cannot decode some physical/logical pairs (a
+                # Spark DECIMAL stored as INT32/INT64): no stats, so
+                # pruning never trusts this column
+                mn = mx = None
             if mn is None or mx is None:
                 ok[name] = False
                 continue
@@ -123,6 +145,52 @@ def _file_stats(path: str, stats_cols: list[str] | None) -> dict:
         "bytes": os.path.getsize(path),
         "stats": stats,
     }
+
+
+def _nullable(t: DataType) -> DataType:
+    """``t`` with every field, element and map value nullable — the
+    schema the parquet reader returns for what was written as ``t``."""
+    if isinstance(t, StructType):
+        return StructType(
+            [StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in t.fields]
+        )
+    if isinstance(t, ArrayType):
+        return ArrayType(_nullable(t.elementType), True)
+    if isinstance(t, MapType):
+        return MapType(_nullable(t.keyType), _nullable(t.valueType), True)
+    return t
+
+
+def _intern_schema(schemas: list[dict], schema: dict) -> int:
+    """Id of ``schema`` (a StructType's JSON) in the table's ``schemas``
+    list, appending it under the next id when no recorded schema equals
+    it."""
+    for s in schemas:
+        if s["fields"] == schema["fields"]:
+            return s["schema_id"]
+    sid = len(schemas)
+    schemas.append({"schema_id": sid, **schema})
+    return sid
+
+
+def _shared_schema_id(entries) -> int | None:
+    """The ``schema_id`` every entry carries; None when they differ or
+    some carry none."""
+    ids = {e.get("schema_id") for e in entries}
+    return ids.pop() if len(ids) == 1 else None
+
+
+def _read_parquet(spark: SparkSession, entries: list[dict], schemas: dict) -> DataFrame:
+    """Open the parquet files of ``entries`` (dicts with ``path`` and,
+    when recorded, ``schema_id``). Files that all carry one recorded
+    schema are read under it, which starts no Spark job; otherwise —
+    files committed before schemas were recorded, or files of different
+    schemas — Spark infers the schema from a footer, which runs a job."""
+    schema_id = _shared_schema_id(entries)
+    reader = spark.read
+    if schema_id is not None:
+        reader = reader.schema(StructType.fromJson(schemas[schema_id]))
+    return reader.parquet(*[e["path"] for e in entries])
 
 
 def _inherit_stats_cols(stats_cols: list[str] | None, files: list[dict]):
@@ -294,8 +362,10 @@ class IceTable:
                     f"{base_sid} to {cur} during {operation}"
                 )
             sid = max((s["id"] for s in meta["snapshots"]), default=0) + 1
+            schemas = meta.setdefault("schemas", [])
             for x in new_files:
                 x["seq"] = sid  # sequence number: orders rows vs eq-deletes
+                x["schema_id"] = _intern_schema(schemas, x.pop("schema"))
             if operation == "append" and cur is not None:
                 # append carries the parent manifest verbatim — including
                 # any live eq-delete entries (they keep applying to the
@@ -303,19 +373,23 @@ class IceTable:
                 manifest = self._manifest(cur) + manifest
             with open(os.path.join(self.meta_dir, f"manifest-{sid}.json"), "w") as f:
                 f.write(json.dumps(manifest))
-            meta["snapshots"].append(
-                {
-                    "id": sid,
-                    "parent": cur,
-                    "ts": time.time(),
-                    "operation": operation,
-                    "added_files": len(new_files),
-                    "added_rows": sum(x["rows"] for x in new_files),
-                    "added_paths": [x["path"] for x in new_files],
-                    "summary": summary,
-                    **entry,
-                }
+            snapshot = {
+                "id": sid,
+                "parent": cur,
+                "ts": time.time(),
+                "operation": operation,
+                "added_files": len(new_files),
+                "added_rows": sum(x["rows"] for x in new_files),
+                "added_paths": [x["path"] for x in new_files],
+                "summary": summary,
+                **entry,
+            }
+            schema_id = _shared_schema_id(
+                x for x in manifest if x.get("kind", "data") == "data"
             )
+            if schema_id is not None:
+                snapshot["schema_id"] = schema_id
+            meta["snapshots"].append(snapshot)
             meta["current_snapshot_id"] = sid
             self._commit_metadata(meta)
         return sid
@@ -326,16 +400,40 @@ class IceTable:
         """Step 1 of the protocol: write ``df`` to a fresh
         ``data/<op>-<uuid>/`` dir (collision-free — the snapshot id is
         only assigned under the lock) and read each file's footer
-        stats. Returns (data dir, file entries)."""
+        stats. Each entry also carries the written schema, which
+        ``_publish`` swaps for its ``schema_id``. Returns (data dir,
+        file entries)."""
         data_dir = os.path.join(self.root, "data", f"{op}-{uuid.uuid4().hex[:12]}")
         df.write.mode("error").parquet(data_dir)
-        return data_dir, [
+        schema = _nullable(df.schema).jsonValue()
+        files = [
             _file_stats(os.path.join(data_dir, fn), stats_cols)
             for fn in sorted(os.listdir(data_dir))
             if fn.endswith(".parquet")
         ]
+        for x in files:
+            x["schema"] = schema
+        return data_dir, files
 
     # ---------------------------------------------------------- snapshots
+
+    def _schemas(self, meta: dict | None = None) -> dict:
+        """The table's recorded schemas, by id (StructType JSON)."""
+        meta = meta if meta is not None else self._metadata()
+        return {s["schema_id"]: s for s in meta.get("schemas", [])}
+
+    def _snapshot_state(self, snapshot_id: int | None) -> tuple[list, list, dict]:
+        """(data entries, eq-delete entries, schemas) of a snapshot — the
+        current one when None — from one metadata and one manifest read.
+        Raises ValueError when the snapshot holds no data file."""
+        meta = self._metadata()
+        sid = snapshot_id if snapshot_id is not None else meta["current_snapshot_id"]
+        entries = self._manifest(sid) if sid is not None else []
+        data = [f for f in entries if f.get("kind", "data") == "data"]
+        if not data:
+            raise ValueError("empty table")
+        dels = [f for f in entries if f.get("kind") == "eq-delete"]
+        return data, dels, self._schemas(meta)
 
     def snapshots(self) -> list[dict]:
         return self._metadata()["snapshots"]
@@ -410,6 +508,10 @@ class IceTable:
         if mode not in ("append", "overwrite"):
             raise ValueError(mode)
         data_dir, new_files = self._write(df, stats_cols, "w")
+
+        def written() -> DataFrame:
+            return df.sparkSession.read.schema(_nullable(df.schema)).parquet(data_dir)
+
         entry: dict = {}
         if occupancy is not None:
             # aggregate the WRITTEN files, not the input frame: re-
@@ -424,7 +526,7 @@ class IceTable:
             from geowave_spark import LAT_OFF_U, LON_OFF_U
 
             occ_rows = (
-                df.sparkSession.read.parquet(data_dir)
+                written()
                 .groupBy(
                     grid_coord_col(F.col(x_col), res, LON_OFF_U).alias("gx"),
                     grid_coord_col(F.col(y_col), res, LAT_OFF_U).alias("gy"),
@@ -437,7 +539,7 @@ class IceTable:
                 "cells": [[int(r["gx"]), int(r["gy"]), int(r["count"])] for r in occ_rows],
             }
         if sketch_cols:
-            batch = df.sparkSession.read.parquet(data_dir)
+            batch = written()
             entry["sketches"] = {col: _sketch_delta(batch, col) for col in sketch_cols}
         # a callable summary is evaluated HERE — after the data write has
         # executed the (lazy) input frame — so wall-clock metrics in it
@@ -643,7 +745,7 @@ class IceTable:
         raw footer counts include rows already logically deleted, so
         the live base is counted instead, keeping reports exact."""
         dels = self.delete_entries(base_sid)
-        base = self._read_with_deletes(spark, touched, dels)
+        base = self._read_with_deletes(spark, touched, dels, self._schemas())
         n_before = base.count() if dels else sum(f["rows"] for f in touched)
         data_dir, new_files = self._write(
             survivors(base), _inherit_stats_cols(stats_cols, touched), op
@@ -815,7 +917,10 @@ class IceTable:
             touched, _ = self._key_split(files, keys, key_col)
             if touched:
                 live = self._read_with_deletes(
-                    keys_df.sparkSession, touched, self.delete_entries(base_sid)
+                    keys_df.sparkSession,
+                    touched,
+                    self.delete_entries(base_sid),
+                    self._schemas(),
                 )
                 deleted = live.join(keys, key_col, "leftsemi").count()
             if deleted:
@@ -873,7 +978,7 @@ class IceTable:
         new_files: list[dict] = []
         if touched:
             _, new_files = self._write(
-                self._read_with_deletes(spark, touched, dels),
+                self._read_with_deletes(spark, touched, dels, self._schemas()),
                 _inherit_stats_cols(stats_cols, touched),
                 "a",
             )
@@ -1061,6 +1166,7 @@ class IceTable:
         spark: SparkSession,
         data_entries: list[dict],
         delete_entries: list[dict],
+        schemas: dict,
     ) -> DataFrame:
         """Assemble a DataFrame over ``data_entries`` with equality
         deletes applied MERGE-ON-READ: a delete entry (key_col K,
@@ -1073,32 +1179,29 @@ class IceTable:
         The anti-join's build side is the key set, small relative to
         data, so AQE plans a broadcast hash anti-join; a huge delete
         set degrades to a shuffled anti-join instead of an OOM. With no
-        live deletes this is exactly the old single parquet scan."""
+        live deletes this is exactly the old single parquet scan. Every
+        file group opens under its recorded schema (``_read_parquet``)."""
         if not delete_entries:
-            return spark.read.parquet(*[f["path"] for f in data_entries])
+            return _read_parquet(spark, data_entries, schemas)
         by_seq: dict[int, list[dict]] = {}
         for fi in data_entries:
             by_seq.setdefault(int(fi.get("seq", 0)), []).append(fi)
         out = None
         for seq, group in sorted(by_seq.items()):
-            df = spark.read.parquet(*[f["path"] for f in group])
-            by_key: dict[str, list[str]] = {}
+            df = _read_parquet(spark, group, schemas)
+            by_key: dict[str, list[dict]] = {}
             for d in delete_entries:
                 if int(d["seq"]) > seq:
-                    by_key.setdefault(d["key_col"], []).append(d["path"])
-            for key_col, paths in sorted(by_key.items()):
-                keys = spark.read.parquet(*paths).select(F.col(key_col)).distinct()
+                    by_key.setdefault(d["key_col"], []).append(d)
+            for key_col, dels in sorted(by_key.items()):
+                keys = _read_parquet(spark, dels, schemas).select(F.col(key_col)).distinct()
                 df = df.join(keys, key_col, "leftanti")
             out = df if out is None else out.unionByName(df)
         return out
 
     def read(self, spark: SparkSession, snapshot_id: int | None = None) -> DataFrame:
-        files = self.files(snapshot_id)
-        if not files:
-            raise ValueError("empty table")
-        return self._read_with_deletes(
-            spark, files, self.delete_entries(snapshot_id)
-        )
+        files, dels, schemas = self._snapshot_state(snapshot_id)
+        return self._read_with_deletes(spark, files, dels, schemas)
 
     def scan(
         self,
@@ -1111,9 +1214,7 @@ class IceTable:
         residual range predicate still applies (parquet row-group
         pruning inside kept files). ``ranges`` maps column -> (lo, hi)
         inclusive; a None bound is open. Returns (df, report)."""
-        files = self.files(snapshot_id)
-        if not files:
-            raise ValueError("empty table")
+        files, dels, schemas = self._snapshot_state(snapshot_id)
         kept, skipped = self._split(files, ranges)
         report = {
             "files_total": len(files),
@@ -1121,14 +1222,12 @@ class IceTable:
             "rows_skipped": sum(fi["rows"] for fi in skipped),
         }
         if not kept:
-            df = spark.read.parquet(files[0]["path"]).limit(0)
+            df = _read_parquet(spark, files[:1], schemas).limit(0)
         else:
             # merge-on-read: live eq-deletes still apply to the kept
             # files (a delete key can live anywhere, so the scan's
             # range pruning never prunes delete files)
-            df = self._read_with_deletes(
-                spark, kept, self.delete_entries(snapshot_id)
-            )
+            df = self._read_with_deletes(spark, kept, dels, schemas)
         for col, (lo, hi) in ranges.items():
             if lo is not None:
                 df = df.where(df[col] >= lo)
@@ -1161,11 +1260,12 @@ class IceTable:
         Returns (df, report) with report = {"snapshots": [ids read],
         "files": n}. ``from_snapshot_id`` must be a live ancestor of
         the end snapshot — an expired or divergent id raises."""
-        by_id = {s["id"]: s for s in self.snapshots()}
+        meta = self._metadata()
+        by_id = {s["id"]: s for s in meta["snapshots"]}
         to_sid = (
             to_snapshot_id
             if to_snapshot_id is not None
-            else self.current_snapshot_id()
+            else meta["current_snapshot_id"]
         )
         if to_sid is None:
             raise ValueError("empty table")
@@ -1189,7 +1289,8 @@ class IceTable:
             raise ValueError(
                 f"snapshot {from_snapshot_id} is not an ancestor of {to_sid}"
             )
-        paths: list[str] = []
+        # an append's added files carry its schema_id when it has one
+        added: list[dict] = []
         snaps_read: list[int] = []
         for s in reversed(chain):  # oldest → newest, changelog order
             if (s.get("summary") or {}).get("compaction"):
@@ -1202,11 +1303,15 @@ class IceTable:
                     "no incremental changelog exists for it"
                 )
             snaps_read.append(int(s["id"]))
-            paths.extend(s.get("added_paths", []))
-        report = {"snapshots": snaps_read, "files": len(paths)}
-        if not paths:
+            added.extend(
+                {"path": p, "schema_id": s.get("schema_id")}
+                for p in s.get("added_paths", [])
+            )
+        report = {"snapshots": snaps_read, "files": len(added)}
+        schemas = self._schemas(meta)
+        if not added:
             base = self.files(to_sid)
             if not base:
                 raise ValueError("empty table")
-            return spark.read.parquet(base[0]["path"]).limit(0), report
-        return spark.read.parquet(*paths), report
+            return _read_parquet(spark, base[:1], schemas).limit(0), report
+        return _read_parquet(spark, added, schemas), report

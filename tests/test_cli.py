@@ -119,6 +119,69 @@ def test_query_delete_persists(store, spark):
     assert manifest["gdelt"]["rows"] == df.count() < 978
 
 
+def _tiny_store(spark, root: str) -> str:
+    """A store of one 20-row point type ``pts`` (eventid 0..19)."""
+    from pyspark.sql import functions as F
+
+    spark.range(0, 20, numPartitions=2).select(
+        F.col("id").cast("int").alias("eventid"),
+        (F.col("id") * 1000).alias("x_u"),
+        (F.col("id") * 1000).alias("y_u"),
+    ).write.parquet(os.path.join(root, "pts"))
+    with open(os.path.join(root, "types.json"), "w") as f:
+        json.dump({"pts": {"format": "gdelt", "rows": 20}}, f)
+    return root
+
+
+def _stored_ids(store):
+    rc, out = run(["query", store, "SELECT eventid FROM pts", "--format", "csv"])
+    assert rc == 0
+    return sorted(int(v) for v in out.split()[1:])
+
+
+def test_query_delete_of_a_quoted_type_name_persists(spark, tmp_path):
+    store = _tiny_store(spark, str(tmp_path))
+    rc, out = run(["query", store, 'DELETE FROM "pts" WHERE eventid < 5'])
+    assert rc == 0 and "deleted 5 rows from 'pts'" in out
+    assert _stored_ids(store) == list(range(5, 20))
+    assert json.load(open(os.path.join(store, "types.json")))["pts"]["rows"] == 15
+
+
+def test_query_delete_failed_swap_keeps_the_pre_delete_rows(spark, tmp_path, monkeypatch):
+    """The second rename of the survivor swap (tmp dir into place)
+    fails: the type still reads every pre-delete row."""
+    store = _tiny_store(spark, str(tmp_path))
+    real = os.rename
+    calls = []
+
+    def failing_second(src, dst):
+        calls.append(dst)
+        if len(calls) == 2:
+            raise OSError("simulated failure in the survivor swap")
+        return real(src, dst)
+
+    monkeypatch.setattr(cli.os, "rename", failing_second)
+    with pytest.raises(OSError, match="simulated failure"):
+        run(["query", store, "DELETE FROM pts WHERE eventid < 5"])
+    monkeypatch.undo()
+    assert _stored_ids(store) == list(range(20))
+    assert json.load(open(os.path.join(store, "types.json")))["pts"]["rows"] == 20
+    assert sorted(os.listdir(store)) == ["pts", "types.json"]
+
+
+def test_half_finished_delete_swap_rolls_forward(spark, tmp_path):
+    """A process that died between the two renames of the swap left the
+    old dir aside and the complete survivors in the tmp dir: the next
+    open moves the survivors in and recounts the type's rows."""
+    store = _tiny_store(spark, str(tmp_path))
+    path = os.path.join(store, "pts")
+    spark.read.parquet(path).where("eventid >= 5").write.parquet(path + ".tmp")
+    os.rename(path, path + ".old")
+    assert _stored_ids(store) == list(range(5, 20))
+    assert json.load(open(os.path.join(store, "types.json")))["pts"]["rows"] == 15
+    assert sorted(os.listdir(store)) == ["pts", "types.json"]
+
+
 def test_type_rm(store):
     rc, out = run(["type", "rm", store, "gdelt"])
     assert rc == 0

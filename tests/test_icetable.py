@@ -5,6 +5,7 @@ file pruning."""
 from __future__ import annotations
 
 import os
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -92,6 +93,25 @@ def test_binary_columns_have_no_stats_but_never_prune_wrong(spark, tmp_path):
         assert "payload" not in fi["stats"]  # binary -> no stats recorded
     got, report = t.scan(spark, {"id": (5, 6)})
     assert got.count() == 2
+
+
+def test_decimal_columns_have_no_stats_but_never_prune_wrong(spark, tmp_path):
+    """pyarrow cannot extract footer statistics from a Spark DECIMAL
+    (stored as INT32/INT64); the commit records no stats for it instead
+    of failing, and a range scan on it prunes nothing."""
+    from decimal import Decimal
+
+    t = IceTable(str(tmp_path / "dec"))
+    df = spark.range(0, 3, numPartitions=1).select("id", F.lit(Decimal("1.5")).alias("d"))
+    t.commit_write(df)
+    assert all("d" not in fi["stats"] and "id" in fi["stats"] for fi in t.files())
+    assert sorted(tuple(r) for r in t.read(spark).collect()) == [
+        (i, Decimal("1.5")) for i in range(3)
+    ]
+    got, report = t.scan(spark, {"d": (Decimal("1.0"), Decimal("2.0"))})
+    assert got.count() == 3 and report["files_read"] == report["files_total"]
+    none, _ = t.scan(spark, {"d": (Decimal("2.0"), None)})
+    assert none.count() == 0
 
 
 # -------------------------------------------- snapshot-backed stage store
@@ -1072,3 +1092,186 @@ def test_upsert_leaves_the_join_strategy_to_aqe(spark, tmp_path, monkeypatch):
     assert replaced == 1 and rep["files_rewritten"] >= 1
     assert t.read(spark).count() == 101
     assert t.read(spark).where("id = 5").first()["val"] == 9
+
+
+# ----------------------------------------------- schema-pinned reads
+
+
+def _jobs_in(spark, group, action):
+    """Spark jobs ``action`` starts, counted through the status tracker
+    under a job group of its own. A schema-inferring read runs after it
+    and must show up first: the tracker is fed asynchronously, in job
+    order, so once the later job is visible the earlier ones are too."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = action()
+        sc.setJobGroup(group + "-probe", group)
+        spark.read.parquet(*[f["path"] for f in out]).schema
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    for _ in range(200):
+        if tracker.getJobIdsForGroup(group + "-probe"):
+            break
+        time.sleep(0.05)
+    assert tracker.getJobIdsForGroup(group + "-probe"), "inference ran no job"
+    return len(tracker.getJobIdsForGroup(group))
+
+
+def test_read_of_a_committed_table_starts_no_spark_job(spark, tmp_path):
+    t = IceTable(str(tmp_path / "pin"))
+    t.commit_write(_mk(spark, 0, 100), mode="overwrite", stats_cols=["id"])
+    frames = []
+
+    def read():
+        frames.append(t.read(spark))
+        frames.append(t.scan(spark, {"id": (10, 20)})[0])
+        return t.files()
+
+    assert _jobs_in(spark, "pinned-read", read) == 0
+    assert frames[0].count() == 100 and frames[1].count() == 11
+
+
+def _overwrite_new_columns(spark, t):
+    t.commit_write(
+        spark.range(5).select(F.col("id").cast("int").alias("k"), F.lit("x").alias("s")),
+        mode="overwrite",
+    )
+
+
+def _all_types(spark, t):
+    from decimal import Decimal
+
+    t.commit_write(
+        spark.range(4).select(
+            F.col("id"),
+            F.encode(F.col("id").cast("string"), "utf-8").alias("bin"),
+            F.timestamp_seconds(F.col("id")).alias("ts"),
+            F.to_date(F.lit("2024-02-29")).alias("day"),
+            F.array(F.col("id"), F.lit(None).cast("long")).alias("arr"),
+            F.struct(F.col("id").alias("a"), F.lit("b").alias("b")).alias("st"),
+            F.create_map(F.lit("k"), F.col("id")).alias("m"),
+            F.lit(None).cast("string").alias("null_s"),
+            F.lit(Decimal("2.25")).alias("dec"),
+        ),
+        mode="overwrite",
+    )
+
+
+# name -> (the writes after the base table of ids 0..99, the snapshot to
+# read: None = current, else an index into snapshots(), whether that
+# snapshot's files share one recorded schema)
+SCHEMA_CASES = {
+    "append": (
+        lambda spark, t: t.commit_write(_mk(spark, 100, 120), stats_cols=["id"]),
+        None,
+        True,
+    ),
+    "append_other_schema": (
+        lambda spark, t: t.commit_write(
+            _mk(spark, 100, 120).withColumn("extra", F.lit("e")), stats_cols=["id"]
+        ),
+        None,
+        False,
+    ),
+    "overwrite_other_columns": (_overwrite_new_columns, None, True),
+    "delete_where": (
+        lambda spark, t: t.delete_where(spark, ranges={"id": (0, 9)}),
+        None,
+        True,
+    ),
+    "delete_keys_cow": (
+        lambda spark, t: t.delete_keys(spark.range(0, 10), "id"),
+        None,
+        True,
+    ),
+    "delete_keys_mor": (
+        lambda spark, t: t.delete_keys(spark.range(0, 10), "id", mode="mor"),
+        None,
+        True,
+    ),
+    "apply_deletes": (
+        lambda spark, t: (
+            t.delete_keys(spark.range(0, 10), "id", mode="mor"),
+            t.apply_deletes(spark),
+        ),
+        None,
+        True,
+    ),
+    "upsert": (
+        lambda spark, t: t.upsert(_batch(spark, [(5, 9), (500, 1)]), "id"),
+        None,
+        True,
+    ),
+    "compact": (
+        lambda spark, t: t.compact(spark, sort_by=["id"], target_files=1),
+        None,
+        True,
+    ),
+    "rollback": (
+        lambda spark, t: (_overwrite_new_columns(spark, t), t.rollback(t.snapshots()[0]["id"])),
+        None,
+        True,
+    ),
+    "time_travel_before_overwrite": (_overwrite_new_columns, 0, True),
+    "all_types": (_all_types, None, True),
+}
+
+
+@pytest.mark.parametrize("case", list(SCHEMA_CASES))
+def test_pinned_read_matches_schema_inference(spark, tmp_path, monkeypatch, case):
+    """After every kind of write, the read under the recorded schema has
+    the schema Spark infers from the files and the rows of the
+    inferring read."""
+    from geowave_spark.sources import icetable
+
+    write, at, uniform = SCHEMA_CASES[case]
+    t = IceTable(str(tmp_path / case))
+    t.commit_write(_mk(spark, 0, 100), mode="overwrite", stats_cols=["id"])
+    write(spark, t)
+    snap = t.snapshots()[at] if at is not None else t.snapshots()[-1]
+    assert ("schema_id" in snap) == uniform
+    pinned = t.read(spark, snapshot_id=snap["id"])
+    paths = [f["path"] for f in t.files(snap["id"])]
+    assert pinned.schema == spark.read.parquet(*paths).schema
+
+    real = icetable._read_parquet
+
+    def inferring(spark, entries, schemas):
+        return real(spark, [{"path": e["path"]} for e in entries], schemas)
+
+    monkeypatch.setattr(icetable, "_read_parquet", inferring)
+    inferred = t.read(spark, snapshot_id=snap["id"])
+    monkeypatch.undo()
+    assert pinned.schema == inferred.schema
+    assert sorted(map(str, pinned.collect())) == sorted(map(str, inferred.collect()))
+
+
+def test_table_without_recorded_schemas_reads_by_inference(spark, tmp_path):
+    """Tables committed before schemas were recorded carry no
+    ``schemas`` list and no ``schema_id``: they still read, through
+    schema inference."""
+    import json
+
+    t = IceTable(str(tmp_path / "legacy"))
+    t.commit_write(_mk(spark, 0, 50), mode="overwrite", stats_cols=["id"])
+    t.delete_keys(spark.range(0, 5), "id", mode="mor")
+    for name in os.listdir(t.meta_dir):
+        path = os.path.join(t.meta_dir, name)
+        if not name.endswith(".json"):
+            continue
+        doc = json.load(open(path))
+        if name.startswith("manifest-"):
+            for e in doc:
+                e.pop("schema_id")
+        else:
+            doc.pop("schemas")
+            for s in doc["snapshots"]:
+                s.pop("schema_id")
+        with open(path, "w") as f:
+            json.dump(doc, f)
+    assert _jobs_in(spark, "legacy-read", lambda: (t.read(spark), t.files())[1]) > 0
+    got = t.read(spark)
+    assert got.schema == spark.read.parquet(*[f["path"] for f in t.files()]).schema
+    assert sorted(r["id"] for r in got.collect()) == list(range(5, 50))

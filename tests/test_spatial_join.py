@@ -111,3 +111,36 @@ def test_key_join_is_one_broadcast_long_key(spark, sf_dir, points, op):
     (bhj,) = _broadcast_hash_joins(df)
     assert bhj.leftKeys().size() == 1
     assert bhj.leftKeys().apply(0).dataType().typeName() == "long"
+
+
+def test_box_join_builds_in_few_gateway_commands(spark, monkeypatch):
+    """Building box_point_join's plan stays within a py4j command budget:
+    each Column node is one driver→JVM round trip, so a key tree built
+    from Column calls (~1,360 commands) would blow it; the SQL-text keys
+    take ~90."""
+    pts = spark.range(10).select(
+        F.col("id").alias("event_id"),
+        (F.col("id") * 1000).alias("x_u"),
+        (F.col("id") * 1000).alias("y_u"),
+    )
+    boxes = spark.range(3).select(
+        F.col("id").alias("c_custkey"),
+        F.lit(0).cast("long").alias("x_lo"),
+        F.lit(0).cast("long").alias("y_lo"),
+        (F.col("id") * 5000).alias("x_hi"),
+        (F.col("id") * 5000).alias("y_hi"),
+    )
+    box_point_join(pts, boxes)  # first build: one-time lookups
+    client = spark.sparkContext._gateway._gateway_client
+    real = client.send_command
+    sent = []
+
+    def counting(*a, **kw):
+        sent.append(1)
+        return real(*a, **kw)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    df = box_point_join(pts, boxes)
+    monkeypatch.undo()
+    assert 0 < len(sent) <= 200
+    assert df.count() == 17
