@@ -94,16 +94,99 @@ def _datastore(spark, store: str):
     return ds
 
 
+_EMIT_BLOCK_ROWS = 10_000
+
+
+def _result_chunks(df):
+    """The rows of ``df`` in partition order, one Spark job per run of
+    consecutive partitions, so the driver holds one run at a time.
+
+    ``toLocalIterator`` runs one single-task job per partition: the scan
+    loses its parallelism and a result of many small partitions pays a
+    job start each (200 partitions of one row: ~9 s against ~0.2 s for
+    one collect, on a 4-vCPU VM). Here a run starts as wide as the
+    default parallelism, and, as Spark's ``take`` does, grows up to 4x
+    per job while partitions come back small, aiming at one output block
+    of rows per job. Rows are read from the JVM as ``collect`` reads
+    them, with no Python worker in between."""
+    from pyspark.util import _load_from_socket
+
+    rdd = df.rdd
+    sc = rdd.context
+    n_parts, first, width = rdd.getNumPartitions(), 0, sc.defaultParallelism
+    while first < n_parts:
+        parts = list(range(first, min(first + width, n_parts)))
+        sock = sc._jvm.PythonRDD.runJob(sc._jsc.sc(), rdd._jrdd, parts)
+        rows = list(_load_from_socket(sock, rdd._jrdd_deserializer))
+        yield rows
+        first += len(parts)
+        per_part = max(len(rows), 1) / len(parts)
+        width = max(
+            sc.defaultParallelism,
+            min(4 * width, int(_EMIT_BLOCK_ROWS / per_part)),
+        )
+
+
 def _emit(df, fmt: str, limit: int | None, out=None) -> None:
+    """Print a query result in blocks of ``_EMIT_BLOCK_ROWS`` rows, so
+    the driver never holds the whole result (``_result_chunks``).
+
+    A column prints the same way in every block, set by its Spark type
+    rather than by the values one block happens to hold: integer
+    columns stay integers when a block has nulls, console cells are
+    each value's own text (floats as ``repr``, nulls as ``NULL``) and a
+    console column is as wide as its widest cell so far, so it never
+    narrows from one block to the next. Timestamps print as
+    session-time-zone wall clock, as ``toPandas`` would give them (a
+    collected Row would render them in the host's zone)."""
+    import itertools
+
+    import pandas as pd
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import IntegralType, TimestampType
+
     out = out if out is not None else sys.stdout  # bind at call time
     if limit is not None:
         df = df.limit(limit)
-    pdf = df.toPandas()
-    if fmt == "csv":
-        pdf.to_csv(out, index=False)
-    else:  # console
-        out.write(pdf.to_string(index=False, max_rows=None) + "\n")
-        out.write(f"({len(pdf)} rows)\n")
+    df = df.withColumns({
+        f.name: F.col(f"`{f.name}`").cast("timestamp_ntz")
+        for f in df.schema.fields
+        if isinstance(f.dataType, TimestampType)
+    })
+    ints = [
+        i for i, f in enumerate(df.schema.fields)
+        if isinstance(f.dataType, IntegralType)
+    ]
+    widths = [len(c) for c in df.columns]
+    rows, n = itertools.chain.from_iterable(_result_chunks(df)), 0
+    while True:
+        block = list(itertools.islice(rows, _EMIT_BLOCK_ROWS))
+        if n and not block:
+            break
+        if fmt == "csv":
+            pdf = pd.DataFrame(block, columns=df.columns)
+            for i in ints:
+                pdf.isetitem(i, pd.array([r[i] for r in block], dtype="Int64"))
+            pdf.to_csv(out, index=False, header=not n)
+        else:  # console
+            cells = [[_console_cell(v) for v in r] for r in block]
+            for r in cells:
+                widths = [max(w, len(c)) for w, c in zip(widths, r)]
+            if not n:
+                cells.insert(0, df.columns)
+            for r in cells:
+                out.write(" ".join(c.rjust(w) for c, w in zip(r, widths)) + "\n")
+        n += len(block)
+        if len(block) < _EMIT_BLOCK_ROWS:
+            break
+    if fmt != "csv":
+        out.write(f"({n} rows)\n")
+
+
+def _console_cell(v) -> str:
+    if v is None:
+        return "NULL"
+    return repr(v) if isinstance(v, float) else str(v)
 
 
 # ------------------------------------------------------------------ verbs

@@ -19,8 +19,9 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from geowave_spark.geom.predicates import points_in_polygon
-from geowave_spark.geom.wkb import Geometry, wkb_dumps, wkb_loads
+from geowave_spark.geom.predicates import points_pred_batch
+from geowave_spark.geom.udfs import parse_cached
+from geowave_spark.geom.wkb import Geometry, wkb_dumps
 from geowave_spark.index.native import cell_col
 from geowave_spark.index.zorder import bbox_ranges
 
@@ -167,15 +168,15 @@ def polygon_refine_udf(
     SpatialQueryFilter.java:254-297, as a vectorized ray cast instead
     of per-row JTS). ``predicate`` selects the CompareOperation:
     intersects/covers are boundary-inclusive, within/contains strict,
-    touches boundary-only (predicates.points_pred_batch kernels)."""
-    from geowave_spark.geom.predicates import points_pred_batch
+    touches boundary-only (predicates.points_pred_batch kernels). The
+    geometry is parsed once per worker (``udfs.parse_cached``), not once
+    per Arrow batch."""
 
     @F.pandas_udf("boolean")
     def _pip(xs: pd.Series, ys: pd.Series) -> pd.Series:
-        g = wkb_loads(geom_wkb)
         mask = points_pred_batch(
             predicate,
-            g,
+            parse_cached(geom_wkb),
             xs.to_numpy(dtype="float64"),
             ys.to_numpy(dtype="float64"),
         )
@@ -200,7 +201,7 @@ def polygon_query(
     ``predicate``: any point-applicable CompareOperation — 'within'
     excludes boundary points (JTS strict), default 'intersects'."""
     x0, y0, x1, y1 = geom.bounds
-    coarse = polygonless = points.where(
+    coarse = points.where(
         F.col(x_col).between(int(x0 * scale) - 1, int(x1 * scale) + 1)
         & F.col(y_col).between(int(y0 * scale) - 1, int(y1 * scale) + 1)
     )

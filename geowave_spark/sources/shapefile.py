@@ -31,6 +31,17 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from geowave_spark.geom.predicates import _points_in_ring, _points_on_ring
+from geowave_spark.geom.wkb import (
+    Geometry,
+    _close_ring,
+    linestring,
+    multipolygon,
+    point,
+    polygon,
+    wkb_dumps,
+)
+
 SHAPE_NULL = 0
 SHAPE_POINT = 1
 SHAPE_POLYLINE = 3
@@ -209,6 +220,59 @@ def shp_decode(data: bytes) -> list[tuple[int, int, list[np.ndarray]]]:
     return out
 
 
+_RING_PROBE = 16  # vertices of one ring tested against another at once
+
+
+def polygon_from_rings(rings: list[np.ndarray]) -> Geometry:
+    """One Polygon record's rings → a Polygon, or a MultiPolygon when the
+    record has more than one outer ring.
+
+    The spec marks holes only by winding (clockwise = outer), which not
+    every writer honours, so rings are classified by nesting instead: a
+    ring inside an even number of the record's other rings (none, for
+    the usual polygon) is an outer ring; one inside an odd number is a
+    hole of the innermost outer ring around it. A ring's position is
+    tested at its first vertex that is not on the other ring.
+
+    Cost stays linear in the vertices of the rings compared: only pairs
+    whose bounding boxes nest are tested, and a ring's vertices go
+    against the other ring ``_RING_PROBE`` at a time, so the first
+    slice almost always decides (an all-pairs vertex × segment test of
+    a 50k-vertex outline and its 20k-vertex hole would need ~8 GB)."""
+    rings = [_close_ring(np.asarray(r, dtype=np.float64)) for r in rings]
+    if len(rings) == 1:
+        return polygon(rings[0])
+    lo = np.array([r.min(axis=0) for r in rings])
+    hi = np.array([r.max(axis=0) for r in rings])
+
+    def inside(a: np.ndarray, b: np.ndarray) -> bool:
+        for k in range(0, len(a), _RING_PROBE):
+            s = a[k : k + _RING_PROBE]
+            off = ~_points_on_ring(s[:, 0], s[:, 1], b)
+            if off.any():
+                i = int(off.argmax())
+                return bool(_points_in_ring(s[i : i + 1, 0], s[i : i + 1, 1], b)[0])
+        return False
+
+    around = []
+    for i, a in enumerate(rings):
+        boxed = ((lo[i] >= lo) & (hi[i] <= hi)).all(axis=1)
+        boxed[i] = False
+        js = np.flatnonzero(boxed).tolist()
+        around.append([j for j in js if inside(a, rings[j])])
+    depth = [len(js) for js in around]
+    parent = {}
+    for i, js in enumerate(around):
+        outers = [j for j in js if depth[j] % 2 == 0]
+        if depth[i] % 2 and outers:
+            parent[i] = max(outers, key=depth.__getitem__)
+    holes = {i: [] for i in range(len(rings)) if i not in parent}
+    for i, p in parent.items():
+        holes[p].append(rings[i])
+    polys = [polygon(rings[i], hs) for i, hs in holes.items()]
+    return polys[0] if len(polys) == 1 else multipolygon(polys)
+
+
 def dbf_decode(data: bytes, keep_deleted: bool = False) -> pd.DataFrame:
     """Parse .dbf bytes → DataFrame of string values (numeric
     conversion is the caller's cast — the map<string,string>
@@ -307,14 +371,6 @@ def read_shapefile(spark: SparkSession, path) -> DataFrame:
     files = shp.join(F.broadcast(dbf), "base", "left")
 
     def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from geowave_spark.geom.wkb import (
-            Geometry,
-            linestring,
-            point,
-            polygon,
-            wkb_dumps,
-        )
-
         cols = [c.split(" ")[0] for c in _READER_SCHEMA.split(", ")]
         for pdf in batches:
             rows = []
@@ -340,7 +396,7 @@ def read_shapefile(spark: SparkSession, path) -> DataFrame:
                         # MultiLineString form)
                         wkbs = [wkb_dumps(linestring(q)) for q in parts]
                     elif stype == SHAPE_POLYGON:
-                        wkbs = [wkb_dumps(polygon(parts[0], parts[1:]))]
+                        wkbs = [wkb_dumps(polygon_from_rings(parts))]
                     else:  # MultiPoint
                         wkbs = [
                             wkb_dumps(

@@ -182,6 +182,105 @@ def test_half_finished_delete_swap_rolls_forward(spark, tmp_path):
     assert sorted(os.listdir(store)) == ["pts", "types.json"]
 
 
+def test_query_result_streams_in_blocks(spark, tmp_path, monkeypatch):
+    """`query` prints its result block by block through toLocalIterator;
+    a toPandas of the whole result would hold all of it on the driver."""
+    store = _tiny_store(spark, str(tmp_path))
+
+    def collect_all(self):
+        raise AssertionError("toPandas collects the whole result")
+
+    monkeypatch.setattr(type(spark.range(1)), "toPandas", collect_all)
+    assert _stored_ids(store) == list(range(20))
+    monkeypatch.setattr(cli, "_EMIT_BLOCK_ROWS", 7)  # 20 rows: 3 blocks
+    rc, out = run(["query", store, "SELECT eventid, x_u FROM pts"])
+    assert rc == 0 and out.count("eventid") == 1 and "(20 rows)" in out
+    assert sorted(int(ln.split()[0]) for ln in out.splitlines()[1:-1]) == list(
+        range(20)
+    )
+
+
+def test_query_output_of_many_partitions_runs_few_jobs(spark):
+    """Streaming costs no Spark job per partition: 200 small partitions
+    print in a handful of jobs (a per-partition local iterator runs 200
+    single-task jobs one after another)."""
+    import time
+
+    sc, group = spark.sparkContext, "cli-emit-jobs"
+    buf = io.StringIO()
+    sc.setJobGroup(group, group)
+    try:
+        cli._emit(spark.range(0, 2000, numPartitions=200), "csv", None, out=buf)
+        sc.setJobGroup(group + "-probe", group)  # events arrive in order
+        spark.range(1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    for _ in range(200):
+        if tracker.getJobIdsForGroup(group + "-probe"):
+            break
+        time.sleep(0.05)
+    assert buf.getvalue().splitlines() == ["id", *map(str, range(2000))]
+    assert 1 <= len(tracker.getJobIdsForGroup(group)) <= 8
+
+
+def test_query_blocks_print_each_column_alike(spark, tmp_path, monkeypatch):
+    """A block holding a null or a wider value prints its columns the
+    way the blocks before it did: integers stay integers, floats keep
+    their own digits, and a console column never narrows."""
+    store = str(tmp_path)
+    spark.createDataFrame(
+        [(1, 1, 0.5), (2, 2, 0.25), (3, 3, 1.0),
+         (4, None, 2.0), (5, 5, None), (6, 123456789, 3.0)],
+        "id int, v bigint, f double",
+    ).coalesce(1).write.parquet(os.path.join(store, "t"))
+    with open(os.path.join(store, "types.json"), "w") as f:
+        json.dump({"t": {"format": "gdelt", "rows": 6}}, f)
+    monkeypatch.setattr(cli, "_EMIT_BLOCK_ROWS", 3)
+    stmt = "SELECT id, v, f FROM t"
+
+    rc, out = run(["query", store, stmt, "--format", "csv"])
+    assert rc == 0 and out.splitlines() == [
+        "id,v,f", "1,1,0.5", "2,2,0.25", "3,3,1.0",
+        "4,,2.0", "5,5,", "6,123456789,3.0",
+    ]
+    rc, out = run(["query", store, stmt])
+    lines = out.splitlines()
+    assert rc == 0 and lines[-1] == "(6 rows)"
+    assert [ln.split() for ln in lines[1:-1]] == [
+        ["1", "1", "0.5"], ["2", "2", "0.25"], ["3", "3", "1.0"],
+        ["4", "NULL", "2.0"], ["5", "5", "NULL"], ["6", "123456789", "3.0"],
+    ]
+    first, second = lines[:4], lines[4:-1]
+    assert len({len(ln) for ln in first}) == 1
+    assert len({len(ln) for ln in second}) == 1
+    assert len(second[0]) >= len(first[0])
+
+
+def test_query_prints_timestamps_in_the_session_time_zone(
+    spark, tmp_path, monkeypatch
+):
+    """Rows fetched one by one carry host-zone datetimes; the printed
+    value is the UTC session's wall clock, whatever the host zone."""
+    import time
+
+    store = str(tmp_path)
+    spark.sql(
+        "SELECT 1 AS eventid, 0L AS x_u, 0L AS y_u, "
+        "TIMESTAMP '2020-01-01 00:00:00.5' AS ts"
+    ).write.parquet(os.path.join(store, "evt"))
+    with open(os.path.join(store, "types.json"), "w") as f:
+        json.dump({"evt": {"format": "gdelt", "rows": 1}}, f)
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    try:
+        rc, out = run(["query", store, "SELECT ts FROM evt", "--format", "csv"])
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+    assert rc == 0 and out.splitlines() == ["ts", "2020-01-01 00:00:00.500"]
+
+
 def test_type_rm(store):
     rc, out = run(["type", "rm", store, "gdelt"])
     assert rc == 0

@@ -329,6 +329,85 @@ def test_shapefile_geometry_roundtrip(spark, tmp_path):
     assert got == [2, 3]
 
 
+def test_shapefile_multi_outer_ring_polygon(spark, tmp_path):
+    """A Polygon record with two disjoint outer rings, one holding a
+    hole, decodes as a MultiPolygon of two polygons (the hole under its
+    own outer ring), not as one polygon whose second ring is a hole.
+    Rings are classified by nesting, whatever their winding; an island
+    inside a hole is an outer ring again."""
+    import numpy as np
+
+    from geowave_spark.geom.predicates import points_in_polygon
+    from geowave_spark.geom.wkb import wkb_loads
+    from geowave_spark.sources.shapefile import (
+        SHAPE_POLYGON,
+        read_shapefile,
+        write_shapefile,
+    )
+
+    def square(x0, y0, side, cw=True):
+        ring = [[x0, y0], [x0, y0 + side], [x0 + side, y0 + side],
+                [x0 + side, y0], [x0, y0]]
+        return np.array(ring if cw else ring[::-1], float)
+
+    write_shapefile(
+        str(tmp_path / "islands"),
+        [
+            # a hole listed before its outer ring, winding reversed
+            (SHAPE_POLYGON, [square(24, 4, 2, cw=False), square(0, 0, 10),
+                             square(20, 0, 10)]),
+            (SHAPE_POLYGON, [square(0, 0, 10), square(2, 2, 6, cw=False),
+                             square(4, 4, 2)]),
+        ],
+        [("NAME", "C", 8, 0)],
+        [["two"], ["nested"]],
+    )
+    df = read_shapefile(spark, str(tmp_path)).toPandas().sort_values("fid")
+    assert list(df["fid"]) == [1, 2]
+    two, nested = (wkb_loads(bytes(b)) for b in df["geometry"])
+    assert two.gtype == "MultiPolygon" and two.poly_ring_counts == [1, 2]
+    xs, ys = np.array([5.0, 21.0, 25.0, 15.0]), np.array([5.0, 1.0, 5.0, 5.0])
+    assert list(points_in_polygon(xs, ys, two)) == [True, True, False, False]
+    assert nested.gtype == "MultiPolygon" and nested.poly_ring_counts == [2, 1]
+    xs, ys = np.array([1.0, 3.0, 5.0]), np.array([1.0, 3.0, 5.0])
+    assert list(points_in_polygon(xs, ys, nested)) == [True, False, True]
+
+
+def test_shapefile_ring_nesting_is_linear_in_vertices():
+    """Classifying a record's rings must not build vertex × segment
+    arrays: a 5,000-vertex outline with a 5,000-vertex hole stays far
+    under 32 MB of numpy memory (all-pairs arrays would take ~200 MB
+    each), and 900 disjoint islands stay 900 polygons."""
+    import tracemalloc
+
+    import numpy as np
+
+    from geowave_spark.sources.shapefile import polygon_from_rings
+
+    def circle(n, r, cw=True):
+        t = np.linspace(0.0, 2 * np.pi, n, endpoint=False)
+        return np.c_[r * np.cos(-t if cw else t), r * np.sin(-t if cw else t)]
+
+    outer, hole = circle(5000, 10.0), circle(5000, 5.0, cw=False)
+    tracemalloc.start()
+    try:
+        g = polygon_from_rings([hole, outer])
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert peak < 32 << 20, peak
+    assert g.gtype == "Polygon" and len(g.parts) == 2
+    assert np.array_equal(g.parts[0][:-1], outer)
+
+    islands = [
+        np.array([[x, y], [x, y + 1], [x + 1, y + 1], [x + 1, y]], float)
+        for x in range(0, 60, 2)
+        for y in range(0, 60, 2)
+    ]
+    g = polygon_from_rings(islands)
+    assert g.gtype == "MultiPolygon" and g.poly_ring_counts == [1] * 900
+
+
 def test_shapefile_deleted_dbf_record(tmp_path, spark):
     import numpy as np
 
