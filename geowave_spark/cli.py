@@ -28,6 +28,8 @@ import os
 import shutil
 import sys
 
+from geowave_spark.results import BLOCK_ROWS, result_rows
+
 
 def _spark(cpus: str):
     from pyspark.sql import SparkSession
@@ -94,42 +96,12 @@ def _datastore(spark, store: str):
     return ds
 
 
-_EMIT_BLOCK_ROWS = 10_000
-
-
-def _result_chunks(df):
-    """The rows of ``df`` in partition order, one Spark job per run of
-    consecutive partitions, so the driver holds one run at a time.
-
-    ``toLocalIterator`` runs one single-task job per partition: the scan
-    loses its parallelism and a result of many small partitions pays a
-    job start each (200 partitions of one row: ~9 s against ~0.2 s for
-    one collect, on a 4-vCPU VM). Here a run starts as wide as the
-    default parallelism, and, as Spark's ``take`` does, grows up to 4x
-    per job while partitions come back small, aiming at one output block
-    of rows per job. Rows are read from the JVM as ``collect`` reads
-    them, with no Python worker in between."""
-    from pyspark.util import _load_from_socket
-
-    rdd = df.rdd
-    sc = rdd.context
-    n_parts, first, width = rdd.getNumPartitions(), 0, sc.defaultParallelism
-    while first < n_parts:
-        parts = list(range(first, min(first + width, n_parts)))
-        sock = sc._jvm.PythonRDD.runJob(sc._jsc.sc(), rdd._jrdd, parts)
-        rows = list(_load_from_socket(sock, rdd._jrdd_deserializer))
-        yield rows
-        first += len(parts)
-        per_part = max(len(rows), 1) / len(parts)
-        width = max(
-            sc.defaultParallelism,
-            min(4 * width, int(_EMIT_BLOCK_ROWS / per_part)),
-        )
+_EMIT_BLOCK_ROWS = BLOCK_ROWS
 
 
 def _emit(df, fmt: str, limit: int | None, out=None) -> None:
     """Print a query result in blocks of ``_EMIT_BLOCK_ROWS`` rows, so
-    the driver never holds the whole result (``_result_chunks``).
+    the driver never holds the whole result (``results.result_rows``).
 
     A column prints the same way in every block, set by its Spark type
     rather than by the values one block happens to hold: integer
@@ -158,7 +130,7 @@ def _emit(df, fmt: str, limit: int | None, out=None) -> None:
         if isinstance(f.dataType, IntegralType)
     ]
     widths = [len(c) for c in df.columns]
-    rows, n = itertools.chain.from_iterable(_result_chunks(df)), 0
+    rows, n = result_rows(df), 0
     while True:
         block = list(itertools.islice(rows, _EMIT_BLOCK_ROWS))
         if n and not block:
@@ -298,8 +270,9 @@ def cmd_export(args) -> int:
     with deflate): export a type, optionally CQL-filtered, to one
     local Avro container (the reference's export format) or a GeoJSON
     FeatureCollection. A local single-file export is driver-side by
-    nature; memory stays bounded (toLocalIterator + block flushing —
-    the reference's batchSize)."""
+    nature; memory stays bounded (rows read in runs of partitions by
+    ``results.result_rows`` + block flushing — the reference's
+    batchSize)."""
     spark = _spark(args.cpus)
     ds = _datastore(spark, args.store)
     if args.type_name not in _load_manifest(args.store):
@@ -349,7 +322,7 @@ def cmd_export(args) -> int:
                 getters.append((f.name, lambda v: v))
             # other types (binary/array/map) have no dBase form: skipped
         shapes, records = [], []
-        for row in df.toLocalIterator():
+        for row in result_rows(df):
             d = row.asDict()
             shapes.append(
                 (SHAPE_POINT,
@@ -367,7 +340,7 @@ def cmd_export(args) -> int:
         n = 0
         with open(args.out, "w") as f:
             f.write('{"type": "FeatureCollection", "features": [\n')
-            for row in df.toLocalIterator():
+            for row in result_rows(df):
                 d = row.asDict()
                 geom = (
                     {

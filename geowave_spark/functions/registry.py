@@ -27,7 +27,6 @@ a UDF is unavoidable (geometry).
 from __future__ import annotations
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
 from geowave_spark.geom.udfs import register_geom_functions
 
@@ -38,7 +37,7 @@ def register_all(spark: SparkSession) -> None:
     # The GWQL text-predicate names are Spark SQL UDFs (RETURN <expr>):
     # Catalyst inlines the body into the caller's plan, so they stay
     # inside whole-stage codegen — no Python boundary, same plan as the
-    # native Column-API twins below.
+    # native Column expression.
     for name, body in (
         ("strStartsWith", "s IS NOT NULL AND startswith(s, p)"),
         ("strEndsWith", "s IS NOT NULL AND endswith(s, p)"),
@@ -51,19 +50,7 @@ def register_all(spark: SparkSession) -> None:
 
 
 # ------------------------------------------------------ Column-API twins
-# (the fast path: same names, native expressions, used by operators)
-
-
-def str_starts_with(c, p):  # noqa: ANN001 - Column in, Column out
-    return F.col(c).startswith(p) if isinstance(c, str) else c.startswith(p)
-
-
-def str_ends_with(c, p):
-    return F.col(c).endswith(p) if isinstance(c, str) else c.endswith(p)
-
-
-def str_contains(c, p):
-    return F.col(c).contains(p) if isinstance(c, str) else c.contains(p)
+# (the fast path: native expressions, used by operators)
 
 
 def bbox(x, y, x0: int, y0: int, x1: int, y1: int):

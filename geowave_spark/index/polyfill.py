@@ -183,17 +183,3 @@ def cells_for_geom(
 @lru_cache(maxsize=500)  # mirrors HilbertSFC's 500-entry LRU (HilbertSFC.java:97-100)
 def cells_for_wkb_cached(wkb: bytes, max_cells: int = 64, finest_res: int = 20):
     return cells_for_geom(wkb_loads(wkb), max_cells, finest_res)
-
-
-def polyfill_batch(
-    wkbs, max_cells: int = 64, finest_res: int = 20
-) -> tuple[np.ndarray, list[list[int]]]:
-    """Vectorized-ish batch entry point for pandas UDFs: list of WKB →
-    (res array, list of cell lists)."""
-    res_out = np.empty(len(wkbs), dtype=np.int32)
-    cells_out = []
-    for i, b in enumerate(wkbs):
-        r, cells = cells_for_wkb_cached(bytes(b), max_cells, finest_res)
-        res_out[i] = r
-        cells_out.append(cells)
-    return res_out, cells_out

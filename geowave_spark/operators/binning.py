@@ -1,14 +1,9 @@
-"""Spatial binned aggregation + statistics surface.
+"""Spatial binned aggregation.
 
 BinningAggregation parity (core/store/.../aggregate/BinningAggregation.java:36;
 spatial binning by cell at a precision, SpatialBinningType.java:15-16):
 ``groupBy(cell) .agg(...)`` with the cell computed natively. Also the
-statistics sketches the reference maintains
-(core/store/.../statistics/: CountMinSketch/HyperLogLog/NumericHistogram
-→ Spark's approx_count_distinct / percentile_approx) and the
-bbox / time-range aggregations
-(core/geotime/.../aggregate/BoundingBoxAggregation.java,
-TimeRangeAggregation.java).
+bbox aggregation (core/geotime/.../aggregate/BoundingBoxAggregation.java).
 """
 
 from __future__ import annotations
@@ -16,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from geowave_spark.index.native import cell_col, grid_coord_col
+from geowave_spark.index.native import grid_coord_col
 from geowave_spark import LAT_OFF_U, LON_OFF_U
 
 
@@ -36,35 +31,4 @@ def bbox_agg(points: DataFrame) -> DataFrame:
         F.max("x_u").alias("x_max"),
         F.min("y_u").alias("y_min"),
         F.max("y_u").alias("y_max"),
-    )
-
-
-def time_range_agg(df: DataFrame, ts_col: str = "ts") -> DataFrame:
-    """TimeRangeAggregation: interval union of a timestamp column."""
-    return df.agg(F.min(ts_col).alias("t_min"), F.max(ts_col).alias("t_max"))
-
-
-def stats_sketches(points: DataFrame, res: int = 8) -> DataFrame:
-    """The maintained-statistics surface: row count, distinct-cell
-    cardinality sketch (HyperLogLogStatistic analog), per-dimension
-    numeric range (NumericRangeStatistic)."""
-    df = points.withColumn("cell", cell_col(F.col("x_u"), F.col("y_u"), res))
-    return df.agg(
-        F.count("*").alias("n_rows"),
-        F.approx_count_distinct("cell").alias("approx_cells"),
-        F.min("x_u").alias("x_min"),
-        F.max("x_u").alias("x_max"),
-        F.min("y_u").alias("y_min"),
-        F.max("y_u").alias("y_max"),
-    )
-
-
-def cell_histogram(points: DataFrame, res: int) -> DataFrame:
-    """Per-cell row counts — the RowRangeHistogram / tier-occupancy stat
-    (TieredSFCIndexStrategy.TierIndexMetaData:543-642) that drives skew
-    salting and join-branch pruning."""
-    return (
-        points.withColumn("cell", cell_col(F.col("x_u"), F.col("y_u"), res))
-        .groupBy("cell")
-        .agg(F.count("*").alias("n"))
     )

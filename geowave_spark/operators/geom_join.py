@@ -120,13 +120,15 @@ def _keys_udf(max_cells: int, finest_res: int, buffer_u: int, scale: int):
     )
     def run(wkbs: pd.Series) -> pd.DataFrame:
         from geowave_spark.geom.wkb import Geometry
+        from geowave_spark.operators import geom_join
 
-        # worker-lifetime MODULE-level cache (not a closure capture):
-        # Catalyst evaluates the struct UDF once per output field and
-        # python workers are reused across queries, so a shared cache
-        # makes the second field projection and repeated fixture keying
-        # near-free
-        cache = _POLYFILL_CACHE
+        # worker-lifetime cache, reached through the imported module:
+        # this closure is pickled by value, and a global it names
+        # directly would arrive as a fresh copy with every task, so
+        # nothing would carry over. Python workers are reused across
+        # tasks and queries, so repeated keying of the same geometries
+        # (every call of a join over an unchanged table) is near-free.
+        cache = geom_join._POLYFILL_CACHE
         n = len(wkbs)
         res_out = np.empty(n, dtype=np.int32)
         cells_out = []
@@ -225,9 +227,9 @@ def geom_keys(
     if scale != 1:
         raise NotImplementedError("store geometries in µdeg; scale=1 only")
     k = _keys_udf(max_cells, finest_res, buffer_u, scale)(F.col(geom_col))
-    return df.withColumns(
-        {f: k[f] for f in ("res", "cells", "bx0", "by0", "bx1", "by1", "rect")}
-    )
+    # the struct's fields by one star expansion: a Column per field
+    # costs ~10 py4j round trips each while the plan is built
+    return df.withColumn("_keys", k).select("*", "_keys.*").drop("_keys")
 
 
 _M32_PACK = (1 << 32) - 1
@@ -262,21 +264,19 @@ BC_MAX_BYTES = 64 << 20
 EAGER_CKPT_MIN_BYTES = 32 << 20
 
 
-def _collect_payload_dict(sc, df: DataFrame, key: str, geom_col: str, strict: bool = True):
-    """Broadcast {key: wkb} for one (small, size-gated) side. Keys must
-    map to ONE geometry — a conflicting duplicate would silently refine
-    candidates against the wrong geometry (same validation stance as
-    DataStore.delete). Byte-identical duplicate rows are deduped (the
-    dict is still correct). On a CONFLICTING duplicate: raise when
-    ``strict`` (caller forced broadcasting), else return None so the
-    auto path degrades to the WKB-carrying shuffle refine instead of
-    failing a join that works without broadcasting."""
-    rows = df.select(key, geom_col).collect()
+def _payload_dict(pairs, key: str, strict: bool) -> dict | None:
+    """{key: wkb} from (key, wkb) pairs. Keys must map to ONE geometry —
+    a conflicting duplicate would silently refine candidates against
+    the wrong geometry (same validation stance as DataStore.delete).
+    Byte-identical duplicate rows are deduped (the dict is still
+    correct). On a CONFLICTING duplicate: raise when ``strict`` (caller
+    forced broadcasting), else return None so the auto path degrades to
+    the WKB-carrying shuffle refine instead of failing a join that
+    works without broadcasting."""
     d = {}
-    for row in rows:
-        k, wkb = row[key], bytes(row[geom_col])
-        prev = d.setdefault(k, wkb)
-        if prev != wkb:
+    for k, wkb in pairs:
+        wkb = bytes(wkb)
+        if d.setdefault(k, wkb) != wkb:
             if strict:
                 raise ValueError(
                     f"geom join: key column {key!r} maps value {k!r} to "
@@ -285,7 +285,15 @@ def _collect_payload_dict(sc, df: DataFrame, key: str, geom_col: str, strict: bo
                     "unique id, or disable broadcasting for this side)"
                 )
             return None
-    return sc.broadcast(d)
+    return d
+
+
+def _collect_payload_dict(sc, df: DataFrame, key: str, geom_col: str, strict: bool = True):
+    """Broadcast {key: wkb} for one (small, size-gated) side; a
+    conflicting duplicate key raises or returns None (``_payload_dict``)."""
+    rows = df.select(key, geom_col).collect()
+    d = _payload_dict(((row[key], row[geom_col]) for row in rows), key, strict)
+    return None if d is None else sc.broadcast(d)
 
 
 def _pair_refine_one_side_udf(bc, predicate: str, distance_u: float | None, dim_is_right: bool):
@@ -788,6 +796,43 @@ def _point_refine_by_id_udf(geom_bc, predicate: str, distance_u: float | None):
     return run
 
 
+def _size_estimate(df: DataFrame) -> int:
+    """The optimizer's size estimate of ``df`` in bytes — the number
+    Spark's own broadcast choice reads. Planning only: no job."""
+    stats = df._jdf.queryExecution().optimizedPlan().stats()
+    return int(str(stats.sizeInBytes()))
+
+
+def _collect_dimension(spark, keyed: DataFrame, key: str, strict: bool):
+    """One ``collect`` of a keyed geometry side (key, wkb and the
+    ``geom_keys`` columns), read as an Arrow table. Returns (payload dict, keyed frame,
+    res levels): the {key: wkb} payload dictionary, the ``(key, cell)``
+    join side (cells packed with their res) as a frame built from a
+    local Arrow table, and the distinct res levels that carry cells.
+    Returns None when the exact WKB total is over ``BC_MAX_BYTES``
+    (unless ``strict``: the caller forced broadcasting) or a key maps
+    to conflicting geometries (``_payload_dict``)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    t = keyed.toArrow()
+    wkb = t.column("_g")
+    if not strict and (pc.sum(pc.binary_length(wkb)).as_py() or 0) > BC_MAX_BYTES:
+        return None
+    payload = _payload_dict(zip(t.column(key).to_pylist(), wkb.to_pylist()), key, strict)
+    if payload is None:
+        return None
+    cells = t.column("cells").combine_chunks()
+    rows = pc.list_parent_indices(cells)
+    res = t.column("res").to_numpy().astype(np.int64)[rows.to_numpy()]
+    cell = (res << 48) | pc.list_flatten(cells).to_numpy()
+    side = pa.table({key: t.column(key).take(rows), "cell": cell})
+    schema = StructType([keyed.schema[key], StructField("cell", LongType(), False)])
+    frame = spark.createDataFrame(side, schema)
+    return payload, frame, np.unique(res).tolist()
+
+
 def geom_point_join(
     points: DataFrame,
     geoms: DataFrame,
@@ -813,45 +858,44 @@ def geom_point_join(
     'contains' keeps points strictly interior, 'covers'/'intersects'
     are boundary-inclusive, 'touches' keeps boundary-only contact.
     ``distance_u`` switches to a buffered-cover + exact-distance join
-    (GeomWithinDistance semantics)."""
-    sc = points.sparkSession.sparkContext
-    _widen_arrow_batches(points.sparkSession)
-    par = sc.defaultParallelism
-    keyed_geoms = geom_keys(
-        geoms.select(F.col(geom_key), F.col(geom_col).alias("_g")).repartition(par),
-        "_g",
-        max_cells,
-        buffer_u=int(distance_u) if distance_u else 0,
-    ).persist()
+    (GeomWithinDistance semantics).
+
+    Broadcast: under auto (``broadcast_geoms=None``) the gate is the
+    optimizer's size estimate of the (key, geometry) side — no job.
+    Under ``BC_MAX_BYTES``, ONE collect of the keyed side (the polyfill
+    runs inside it) gives the exact WKB total, the {key: wkb} payload
+    dictionary (a task broadcast, so candidate rows stay key-only), the
+    (key, cell) join side and the res levels the points are keyed at.
+    Post-check: an exact total over the cap (a wrong estimate) or a key
+    mapped to conflicting geometries drops the rows and falls back to
+    the shuffle refine, whose candidate rows carry the WKB — one wasted
+    job, never a wrong row. ``broadcast_geoms=True`` skips the size
+    checks and raises ValueError on a conflicting key; False goes to
+    the shuffle refine directly. Nothing is persisted; the polyfill
+    stays cached per Python worker (``_POLYFILL_CACHE``)."""
+    spark = points.sparkSession
+    _widen_arrow_batches(spark)
+    side = geoms.selectExpr(f"`{geom_key}`", f"`{geom_col}` AS _g")
+    buffer_u = int(distance_u) if distance_u else 0
     if broadcast_geoms is None:
-        # auto: only a dimension-sized geometry table is collected
-        gbytes = keyed_geoms.agg(F.sum(F.length("_g"))).first()[0] or 0
-        use_broadcast = int(gbytes) <= BC_MAX_BYTES
+        try_broadcast = _size_estimate(side) <= BC_MAX_BYTES
     else:
-        use_broadcast = bool(broadcast_geoms)
-    geom_bc = None
-    if use_broadcast:
-        # ship the WKB payloads ONCE per executor as a task broadcast
-        # and keep candidate rows key-only — repeated per-candidate WKB
-        # through the join + Arrow boundary was the dominant cost at
-        # millions of candidates (hotspot cells)
-        geom_bc = _collect_payload_dict(
-            sc, keyed_geoms, geom_key, "_g", strict=broadcast_geoms is True
-        )
-        if geom_bc is None:
-            use_broadcast = False  # conflicting dup keys → shuffle refine
-    if use_broadcast:
-        g = keyed_geoms.drop("_g")
-        refine = _point_refine_by_id_udf(geom_bc, predicate, distance_u)(
-            F.col(geom_key), F.col("x_u"), F.col("y_u")
-        )
-    else:
-        g = keyed_geoms
-        refine = _point_refine_udf(predicate, distance_u)(
-            F.col("_g"), F.col("x_u"), F.col("y_u")
-        )
+        try_broadcast = broadcast_geoms
+    dim = None
+    if try_broadcast:
+        keyed = geom_keys(side, "_g", max_cells, buffer_u=buffer_u)
+        dim = _collect_dimension(spark, keyed, geom_key, strict=broadcast_geoms is True)
+    if dim is not None:
+        payload, g, levels = dim
+        refine = _point_refine_by_id_udf(spark.sparkContext.broadcast(payload), predicate,
+                                         distance_u)(F.col(geom_key), F.col("x_u"), F.col("y_u"))
+        return extent_point_join(points, g, refine, how, True, point_key, geom_key,
+                                 res_levels=levels)
+    g = geom_keys(side.repartition(spark.sparkContext.defaultParallelism), "_g", max_cells,
+                  buffer_u=buffer_u)
+    refine = _point_refine_udf(predicate, distance_u)(F.col("_g"), F.col("x_u"), F.col("y_u"))
     # polyfill cells are packed (gx << 32) | gy ids at the geometry's
     # res ≤ POINT_RES: tagging them with res gives the skeleton's key
     g = g.withColumn("cell", F.explode("cells")).drop("cells")
     g = g.withColumn("cell", _join_key(F.col("res"), F.col("cell")))
-    return extent_point_join(points, g, refine, how, use_broadcast, point_key, geom_key)
+    return extent_point_join(points, g, refine, how, False, point_key, geom_key)

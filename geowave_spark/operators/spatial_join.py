@@ -49,8 +49,21 @@ polyfill (operators/geom_join.geom_point_join), point side keyed by
 ``points_keyed_by_res``, one broadcast-hash equi-join, then the
 caller's exact refine predicate. The batch operators below, the
 polygon / distance / general-geometry joins and the stream-static joins
-(streaming/ingest) all run through it. No driver round-trip anywhere,
-so the same plan runs unchanged against a streaming point side.
+(streaming/ingest) all run through it. The skeleton itself makes no
+driver round-trip, so the same plan runs unchanged against a streaming
+point side. The point side is keyed at the extent side's distinct res
+levels, passed either as a frame or as a list of ints:
+
+- ``geom_point_join`` passes a list. It collects its geometry side's
+  keys anyway (for the refine's payload dictionary), so the levels come
+  with them, and the points are keyed by one ``explode(array(<key per
+  level>))`` with literal levels: no distinct-res shuffle, no res
+  broadcast, no nested-loop join.
+- The box, octagon, distance and stream joins keep the data-driven
+  ``select("res").distinct()`` dimension. Collecting it would cost
+  them a job they do not otherwise run (box_point_join measured no
+  faster), and a stream join's static side would be pinned to the
+  levels it held when the query started.
 
 Why one join instead of a per-tier union: each union branch is its own
 shuffle + codegen unit; at 1000 executors the branch barrier serializes
@@ -123,18 +136,22 @@ def boxes_with_cells(boxes: DataFrame) -> DataFrame:
     ).withColumn("cell", F.expr(f"explode(array_distinct(array({corners})))"))
 
 
-def points_keyed_by_res(points: DataFrame, res_dim: DataFrame) -> DataFrame:
+def points_keyed_by_res(points: DataFrame, res_dim: DataFrame | list[int]) -> DataFrame:
     """Re-key points at every resolution present on the extent side:
-    grid coords once at POINT_RES, broadcast-cross with the tiny
-    distinct-res dimension, then coarsen by an exact shift into
+    grid coords at POINT_RES, coarsened by an exact shift into
     ``_jcell`` — the reprojectToTier analog
-    (TieredSFCIndexStrategy.java:514-535) without a driver round-trip."""
-    pts = points.withColumns(
-        {
-            "_gx": F.expr(_grid_sql("x_u", LON_OFF_U)),
-            "_gy": F.expr(_grid_sql("y_u", LAT_OFF_U)),
-        }
-    )
+    (TieredSFCIndexStrategy.java:514-535) without a driver round-trip.
+
+    ``res_dim`` is either the tiny distinct-res dimension (a frame with
+    a ``res`` column, broadcast-crossed onto the points, which keep
+    ``res``) or the levels as a list of ints, each keyed as a literal in
+    one ``explode(array(...))``."""
+    gx, gy = _grid_sql("x_u", LON_OFF_U), _grid_sql("y_u", LAT_OFF_U)
+    if not isinstance(res_dim, DataFrame):
+        keys = ", ".join(_key_sql(str(int(r)), f"({gx})", f"({gy})") for r in res_dim)
+        jcell = f"explode(CAST(array({keys}) AS ARRAY<BIGINT>))"
+        return points.select("*", F.expr(jcell).alias("_jcell"))
+    pts = points.withColumns({"_gx": F.expr(gx), "_gy": F.expr(gy)})
     keyed = pts.crossJoin(F.broadcast(res_dim))
     return keyed.withColumn("_jcell", F.expr(_key_sql("res", "_gx", "_gy"))).drop(
         "_gx", "_gy"
@@ -149,12 +166,16 @@ def extent_point_join(
     broadcast: bool = True,
     point_key: str = "event_id",
     extent_key: str | list = "c_custkey",
+    res_levels: list[int] | None = None,
 ) -> DataFrame:
     """The extent × point join skeleton. ``keyed_extents`` carries one
     row per (extent, ``cell`` key) plus the extent's ``res``; the points
     (x_u, y_u) are keyed at every distinct res, equi-joined on the
     single key and filtered by ``refine`` (any Column over both sides'
-    columns). ``how``:
+    columns). A caller that already knows the extent side's distinct
+    res levels passes them as ``res_levels`` (its ``keyed_extents`` then
+    needs no ``res`` column); otherwise they come from the frame.
+    ``how``:
 
       'inner'    -> matched (point_key, extent_key) rows; ``extent_key``
                     may be a list of names or Columns (e.g. a distance
@@ -179,8 +200,11 @@ def extent_point_join(
     has no shuffle and no skewed-key problem (dense hotspot cells
     parallelize across *stream-side* partitions). With False the plan
     falls back to a shuffled join where AQE skew-split applies."""
-    keyed = points_keyed_by_res(points, keyed_extents.select("res").distinct())
-    e = keyed_extents.drop("res")
+    e = keyed_extents
+    if res_levels is None:
+        res_levels = e.select("res").distinct()
+        e = e.drop("res")
+    keyed = points_keyed_by_res(points, res_levels)
     if broadcast:
         e = F.broadcast(e)
     j = keyed.join(e, keyed["_jcell"] == e["cell"], "inner").where(refine)

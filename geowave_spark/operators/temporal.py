@@ -58,11 +58,6 @@ def time_overlaps(s1: Column, e1: Column, s2: Column, e2: Column) -> Column:
     return (s1 < e2) & (e1 > s2)
 
 
-def temporal_equal(s1: Column, e1: Column, s2: Column, e2: Column) -> Column:
-    """Interval equality (TemporalEqualTo)."""
-    return (s1 == s2) & (e1 == e2)
-
-
 # --------------------------------------------------------------- binning
 
 _EPOCH = "1970-01-01"

@@ -33,6 +33,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from geowave_spark.results import result_rows
+
 MAGIC = b"Obj\x01"
 SYNC = bytes(range(16))  # fixed deterministic sync marker for writes
 
@@ -376,8 +378,9 @@ def export_avro(df, path: str, codec: str = "deflate",
     """Export a DataFrame as ONE local Avro container — the
     `vector localexport` path (VectorLocalExportCommand.java: batched
     DataFileWriter with deflate). A local single-file export is
-    driver-side by nature; memory stays bounded by toLocalIterator +
-    per-block flushing (the reference's batchSize). Returns rows."""
+    driver-side by nature; memory stays bounded by reading rows in runs
+    of partitions (``results.result_rows``) + per-block flushing (the
+    reference's batchSize). Returns rows."""
     schema = spark_to_avro_schema(df.schema)
     # epoch micros computed JVM-side: exact, and independent of the
     # driver's local timezone (a Python datetime round trip is neither)
@@ -385,6 +388,6 @@ def export_avro(df, path: str, codec: str = "deflate",
         f.name: F.unix_micros(F.col(f.name)) for f in df.schema.fields
         if f.dataType.simpleString() == "timestamp"
     })
-    rows = (row.asDict(recursive=True) for row in df.toLocalIterator())
+    rows = (row.asDict(recursive=True) for row in result_rows(df))
     return avro_write(path, schema, rows, codec=codec,
                       block_records=block_records)

@@ -241,15 +241,6 @@ def mercator_mm_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def mercator_mm_points_sql() -> str:
-    """DuckDB FROM-clause subquery equivalent of mercator_mm_points."""
-    return (
-        f"(SELECT event_id, "
-        f"((event_id * {K1}) % {2 * MERC_MM}) - {MERC_MM} AS x, "
-        f"((event_id * {K2}) % {2 * MERC_MM}) - {MERC_MM} AS y FROM events)"
-    )
-
-
 def customer_boxes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Polygon-side fixture: one axis-aligned box per customer, centered
     at the derived point, half-width 0.2°–2.2° from the key (regions

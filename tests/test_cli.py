@@ -410,3 +410,38 @@ def test_export_shapefile_roundtrip(store, spark, tmp_path):
     g = wkb_loads(bytes(df["geometry"].iloc[0]))
     x = g.parts[0][0][0]
     assert any(abs(want["Longitude"] - x) < 1e-9)
+
+
+@pytest.mark.parametrize("fmt", ["avro", "geojson", "shapefile"])
+def test_export_of_many_partitions_runs_few_jobs(spark, tmp_path, monkeypatch, fmt):
+    """Export reads its rows in runs of partitions, not one job per
+    partition: a type of 200 small partitions exports in a handful of
+    jobs (a per-partition local iterator runs 200 one after another)."""
+    import time
+
+    df = spark.range(0, 2000, numPartitions=200).selectExpr(
+        "id", "id * 1000 AS x_u", "id * 500 AS y_u"
+    )
+
+    class Store:
+        def type(self, name):
+            return df
+
+    monkeypatch.setattr(cli, "_datastore", lambda spark, store: Store())
+    monkeypatch.setattr(cli, "_load_manifest", lambda store: {"t": {}})
+    out = str(tmp_path / f"t.{fmt}")
+    sc, group = spark.sparkContext, f"cli-export-jobs-{fmt}"
+    sc.setJobGroup(group, group)
+    try:
+        rc, msg = run(["export", str(tmp_path), "t", "--format", fmt, "--out", out])
+        sc.setJobGroup(group + "-probe", group)  # events arrive in order
+        spark.range(1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    for _ in range(200):
+        if tracker.getJobIdsForGroup(group + "-probe"):
+            break
+        time.sleep(0.05)
+    assert rc == 0 and "exported 2000 rows" in msg
+    assert 1 <= len(tracker.getJobIdsForGroup(group)) <= 8

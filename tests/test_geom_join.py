@@ -259,3 +259,140 @@ def test_point_join_size_gate_parity(spark, fixtures, monkeypatch):
         fixtures["pts"], fixtures["lsh"], "intersects", geom_key="s_suppkey"
     )
     assert _pairs(got, "event_id", "s_suppkey") == brute
+
+
+def _brute_point_pairs(pts, geoms, key):
+    """Cross join + the row-carried point refine: the brute-force arm of
+    test_point_join_size_gate_parity."""
+    from geowave_spark.operators.geom_join import _point_refine_udf
+
+    return _pairs(
+        pts.select("event_id", "x_u", "y_u")
+        .crossJoin(geoms.select(key, F.col("geom").alias("_g")))
+        .where(_point_refine_udf("intersects", None)(F.col("_g"), F.col("x_u"), F.col("y_u"))),
+        "event_id",
+        key,
+    )
+
+
+def test_point_join_wrong_size_estimate_falls_back(spark, fixtures, monkeypatch):
+    """The gate reads the optimizer's size estimate, which can be wrong;
+    the exact WKB total of the collected rows decides. An estimate of 0
+    under a cap below the side's real bytes still ends on the
+    row-carried refine, with the brute-force pairs. A conflicting
+    duplicate key falls back under auto and raises when broadcasting is
+    forced."""
+    from geowave_spark.operators import geom_join as GJ
+
+    pts, lsh = fixtures["pts"], fixtures["lsh"]
+    wkb_bytes = int(lsh.agg(F.sum(F.length("geom"))).first()[0])
+    monkeypatch.setattr(GJ, "_size_estimate", lambda df: 0)
+
+    def no_payload_refine(*a, **kw):
+        raise AssertionError("the payload-dictionary refine must not be planned")
+
+    with monkeypatch.context() as m:
+        m.setattr(GJ, "BC_MAX_BYTES", wkb_bytes - 1)
+        m.setattr(GJ, "_point_refine_by_id_udf", no_payload_refine)
+        got = geom_point_join(pts, lsh, "intersects", geom_key="s_suppkey")
+        assert _pairs(got, "event_id", "s_suppkey") == _brute_point_pairs(
+            pts, lsh, "s_suppkey"
+        )
+
+    dup = lsh.select((F.col("s_suppkey") % 3).alias("s_suppkey"), "geom")
+    with monkeypatch.context() as m:
+        m.setattr(GJ, "_point_refine_by_id_udf", no_payload_refine)
+        got = geom_point_join(pts, dup, "intersects", geom_key="s_suppkey")
+        assert _pairs(got, "event_id", "s_suppkey") == _brute_point_pairs(
+            pts, dup, "s_suppkey"
+        )
+    with pytest.raises(ValueError, match="one geometry per key"):
+        geom_point_join(pts, dup, "intersects", geom_key="s_suppkey", broadcast_geoms=True)
+
+
+def _plan_nodes(df):
+    """Every node of ``df``'s executed plan (the AQE final plan, walked
+    through its query stages), as (class name, node)."""
+    found = []
+
+    def walk(p):
+        name = p.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            return walk(p.executedPlan())
+        if name.endswith("QueryStageExec"):
+            return walk(p.plan())
+        found.append((name, p))
+        children = p.children()
+        for i in range(children.size()):
+            walk(children.apply(i))
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return found
+
+
+def _jobs_by_group(spark, run):
+    """Run ``run(set_group)`` and return {group: number of Spark jobs};
+    ``set_group(name)`` tags the jobs that follow it."""
+    import time
+
+    sc, groups = spark.sparkContext, []
+
+    def set_group(name):
+        groups.append(name)
+        sc.setJobGroup(name, name)
+
+    try:
+        run(set_group)
+        sc.setJobGroup("jobs-probe", "jobs-probe")  # job events arrive in order
+        spark.range(1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    for _ in range(200):
+        if tracker.getJobIdsForGroup("jobs-probe"):
+            break
+        time.sleep(0.05)
+    return {g: len(tracker.getJobIdsForGroup(g)) for g in groups}
+
+
+def test_point_join_job_budget_and_plan(spark):
+    """Over a small geometry side the join runs one job before the frame
+    returns (the collect of keys and payloads) and at most three in all
+    (that collect, the broadcast, the join). The points are keyed at
+    literal res levels: one long-keyed broadcast-hash join, no nested
+    loop join, nothing cached, and the refine is the only Python node."""
+    pts = events_points(spark, SF)
+    lsh = supplier_lshapes(spark, SF)
+    out = {}
+
+    def run(set_group):
+        set_group("gpj-build")
+        out["df"] = geom_point_join(pts, lsh, "intersects", geom_key="s_suppkey")
+        set_group("gpj-run")
+        out["rows"] = out["df"].collect()
+
+    jobs = _jobs_by_group(spark, run)
+    assert out["rows"]
+    assert jobs["gpj-build"] == 1
+    assert jobs["gpj-build"] + jobs["gpj-run"] <= 3
+    nodes = _plan_nodes(out["df"])
+    names = [n for n, _ in nodes]
+    (bhj,) = [p for n, p in nodes if n == "BroadcastHashJoinExec"]
+    assert bhj.leftKeys().size() == 1
+    assert bhj.leftKeys().apply(0).dataType().typeName() == "long"
+    assert "BroadcastNestedLoopJoinExec" not in names
+    assert "InMemoryTableScanExec" not in names
+    assert names.count("ArrowEvalPythonExec") == 1
+
+
+def test_point_join_leaves_no_persistent_rdds(spark):
+    """Joins over distinct geometry inputs leave the session's
+    persistent-RDD count where it was: nothing is cached per input."""
+    sc = spark.sparkContext
+    pts = events_points(spark, SF)
+    lsh = supplier_lshapes(spark, SF)
+    before = sc._jsc.getPersistentRDDs().size()
+    for i in range(5):
+        geoms = lsh.where(F.col("s_suppkey") % 5 != i)
+        geom_point_join(pts, geoms, "intersects", geom_key="s_suppkey").collect()
+    assert sc._jsc.getPersistentRDDs().size() == before

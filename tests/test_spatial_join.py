@@ -144,3 +144,19 @@ def test_box_join_builds_in_few_gateway_commands(spark, monkeypatch):
     monkeypatch.undo()
     assert 0 < len(sent) <= 200
     assert df.count() == 17
+
+
+def test_points_keyed_at_literal_levels_match_the_res_dimension(spark, points):
+    """Keying the points at a list of res levels gives the same
+    (point, key) rows as crossing them with a distinct-res frame; an
+    empty list keys nothing."""
+    from geowave_spark.operators.spatial_join import points_keyed_by_res
+
+    pts = points.limit(500)
+    levels = [3, 9, 16]
+    dim = spark.createDataFrame([(r,) for r in levels], "res int")
+    by_frame = points_keyed_by_res(pts, dim).select("event_id", "_jcell").collect()
+    by_list = points_keyed_by_res(pts, levels).select("event_id", "_jcell").collect()
+    assert len(by_list) == 1500
+    assert sorted(by_list) == sorted(by_frame)
+    assert points_keyed_by_res(pts, []).count() == 0
