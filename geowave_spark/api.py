@@ -42,6 +42,14 @@ from geowave_spark.operators.spatial_query import (
 DEFAULT_RES = 16
 
 
+def indexed_frame(df: DataFrame, res: int = DEFAULT_RES) -> DataFrame:
+    """The addIndex rule: a point type (``x_u`` present) carries the
+    materialized index ``cell`` column at ``res`` unless it has one."""
+    if "x_u" in df.columns and "cell" not in df.columns:
+        df = with_cell(df, res)
+    return df
+
+
 class DataStore:
     """Namespace of typed, spatially-indexed DataFrames."""
 
@@ -59,8 +67,8 @@ class DataStore:
         """addType + addIndex: register a DataFrame; point types get the
         materialized cell column (insertion-id computation) and a SQL
         view so DataStore.sql can reference the name."""
-        if indexed and "x_u" in df.columns and "cell" not in df.columns:
-            df = with_cell(df, self.res)
+        if indexed:
+            df = indexed_frame(df, self.res)
         self._types[name] = df
         df.createOrReplaceTempView(name)
 
@@ -331,29 +339,29 @@ class DataStore:
         return self._delete_matched(name, matched, key)
 
     def _delete_snapshot(self, name: str, stmt) -> int:
-        """GWQL DELETE over a snapshot-store-backed type: compile the
-        statement's WHERE into the store's (ranges, predicate) form and
-        run the copy-on-write delete_where — file skipping on footer
-        stats, only overlapping files rewritten, one atomic snapshot
-        (DeleteStatement.java executed against the durable store rather
-        than the session view). The registered view refreshes to the
-        post-delete snapshot. Returns rows removed."""
-        from geowave_spark.plans.gwql import GWQLParseException, compile_filter
+        """GWQL DELETE over a snapshot-store-backed type, executed
+        against the durable store rather than the session view
+        (DeleteStatement.java). A WHERE that compiles to the store's
+        (ranges, predicate) form — BBOX, attribute and temporal
+        conjuncts — runs the copy-on-write delete_where: file skipping
+        on footer stats, only overlapping files rewritten. A polygon or
+        DWITHIN (planar or with units) has no such form, so its rows are
+        selected by the plan a SELECT with the same WHERE runs and
+        removed by key (``_delete_matched`` → delete_keys). Either way
+        the delete is one atomic snapshot and the registered view
+        refreshes to it. Returns rows removed."""
+        from geowave_spark.plans.gwql import compile_filter, execute
 
         plan = compile_filter(stmt.where, x_col="x_u", y_col="y_u")
         if (
             plan.geometry is not None
             or plan.dwithin is not None
             or plan.dwithin_geo is not None  # meters/km units form:
-            # compile_filter consumes it OUT of the residual, so missing
-            # this field here would silently drop the distance constraint
-            # and over-delete every row the remaining ranges match
+            # compile_filter consumes it OUT of the residual, so the
+            # (ranges, predicate) form below would silently drop the
+            # distance constraint and over-delete every row the ranges match
         ):
-            raise GWQLParseException(
-                "snapshot-store DELETE supports BBOX + attribute/temporal "
-                "predicates; polygon/DWITHIN deletes need the query-then-"
-                "delete-by-key path (DataStore.delete)"
-            )
+            return self._delete_matched(name, execute(self._frame(name), stmt))
         ranges: dict[str, tuple] = {}
         if plan.bbox is not None:
             x0, y0, x1, y1 = plan.bbox
@@ -370,10 +378,7 @@ class DataStore:
         deleted, _report = self._ice[name].delete_where(
             self.spark, ranges=ranges or None, predicate=predicate
         )
-        refreshed = self._ice[name].read(self.spark)
-        self._types[name] = refreshed
-        refreshed.createOrReplaceTempView(name)
-        self._ice_sids[name] = self._ice[name].current_snapshot_id()
+        self._frame(name)  # the view follows the new snapshot
         return deleted
 
     def _delete_matched(
@@ -381,7 +386,7 @@ class DataStore:
     ) -> int:
         """Anti-join the matched rows out of the registered type (shared
         by delete() and the GWQL DELETE statement, plans/gwql.py)."""
-        df = self._types[name]
+        df = self._frame(name)
         key = key or df.columns[0]
         # eagerly checkpoint the (single-column) key set instead of
         # persist(): three actions read it (validation agg, whole-table
@@ -420,10 +425,7 @@ class DataStore:
             # alone would be silently resurrected by the next snapshot
             # refresh (and invisible to every other reader of the table)
             deleted, _report = self._ice[name].delete_keys(keys, key)
-            refreshed = self._ice[name].read(self.spark)
-            self._types[name] = refreshed
-            refreshed.createOrReplaceTempView(name)
-            self._ice_sids[name] = self._ice[name].current_snapshot_id()
+            self._frame(name)  # the view follows the new snapshot
             return deleted
         remaining = df.join(keys, key, "leftanti")
         self._types[name] = remaining

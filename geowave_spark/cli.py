@@ -12,12 +12,17 @@ core/ingest/operations):
                           output (ConsoleQueryOutputFormat / CSVQueryOutputFormat)
   stat list               cli/stats/ListStatsCommand.java
 
-A "store" is a directory of parquet-backed types plus a `types.json`
-manifest — the single-backend stance of SURVEY.md §2.1 applied to the
-CLI (the reference's 9 `store add` backends collapse to a path).
-Everything runs through the same engine surfaces the driver gate
-checks: sources/formats.ingest_directory → parquet, api.DataStore +
-plans/gwql for queries, native aggregations for stats.
+A "store" is a directory of IceTable snapshot tables, one per type at
+``<store>/<name>`` — the single-backend stance of SURVEY.md §2.1
+applied to the CLI (the reference's 9 `store add` backends collapse to
+a path). The CLI keeps no metadata of its own: a type is a directory
+holding ``metadata/version-hint.text``, its format rides the creating
+snapshot's summary and its row count the manifest's footer stats. Every
+write — ingest, analytic output, DELETE — is one atomic IceTable
+commit. Everything runs through the same engine surfaces the driver
+gate checks: sources/formats.ingest_directory → IceTable.commit_write,
+api.DataStore + plans/gwql for queries and deletes, native
+aggregations for stats.
 """
 
 from __future__ import annotations
@@ -48,52 +53,48 @@ def _spark(cpus: str):
     )
 
 
-def _manifest_path(store: str) -> str:
-    return os.path.join(store, "types.json")
+def _table(store: str, name: str):
+    """The IceTable of type ``name``, or None when the store holds no
+    such type — checked before opening, since opening a table creates
+    its directory."""
+    from geowave_spark.sources.icetable import IceTable
 
-
-def _load_manifest(store: str) -> dict:
-    try:
-        with open(_manifest_path(store)) as f:
-            return json.load(f)
-    except FileNotFoundError:
-        return {}
-
-
-def _save_manifest(store: str, manifest: dict) -> None:
-    os.makedirs(store, exist_ok=True)
-    with open(_manifest_path(store), "w") as f:
-        json.dump(manifest, f, indent=1, sort_keys=True)
-
-
-def _finish_swap(spark, store: str, name: str) -> None:
-    """Roll a half-finished DELETE swap of type ``name`` forward. The
-    swap renames the type's dir to ``.old``, renames the complete
-    survivor dir ``.tmp`` in, records the row count and drops ``.old``;
-    a process that died on the way leaves ``.old`` behind. A ``.tmp``
-    without ``.old`` is a survivor write that never reached the swap:
-    the type's data is intact and the leftover goes."""
     path = os.path.join(store, name)
-    old, tmp = path + ".old", path + ".tmp"
-    if not os.path.isdir(old):
-        shutil.rmtree(tmp, ignore_errors=True)
-        return
-    if not os.path.isdir(path):
-        os.rename(tmp, path)
-    manifest = _load_manifest(store)
-    manifest[name]["rows"] = spark.read.parquet(path).count()
-    _save_manifest(store, manifest)
-    shutil.rmtree(old)
+    if not os.path.isfile(os.path.join(path, "metadata", "version-hint.text")):
+        return None
+    return IceTable(path)
+
+
+def _type_names(store: str) -> list[str]:
+    if not os.path.isdir(store):
+        return []
+    return [n for n in sorted(os.listdir(store)) if _table(store, n) is not None]
+
+
+def _commit_type(store: str, name: str, df, fmt: str) -> int:
+    """Land ``df`` as type ``name`` in one overwrite snapshot; point
+    types store the index ``cell`` column DataStore.add_type gives
+    them. Returns the committed row count (manifest footer stats)."""
+    from geowave_spark.api import indexed_frame
+    from geowave_spark.sources.icetable import IceTable
+
+    t = IceTable(os.path.join(store, name))
+    t.commit_write(indexed_frame(df), mode="overwrite", summary={"format": fmt})
+    return t.merged_column_stats()["n_rows"]
 
 
 def _datastore(spark, store: str):
     from geowave_spark.api import DataStore
 
     ds = DataStore(spark)
-    for name in sorted(_load_manifest(store)):
-        _finish_swap(spark, store, name)
-        ds.add_type(name, spark.read.parquet(os.path.join(store, name)))
+    for name in _type_names(store):
+        ds.add_snapshot_type(name, _table(store, name))
     return ds
+
+
+def _unknown(name: str) -> int:
+    print(f"unknown type: {name}", file=sys.stderr)
+    return 1
 
 
 _EMIT_BLOCK_ROWS = BLOCK_ROWS
@@ -174,7 +175,7 @@ def cmd_ingest_listplugins(args) -> int:
 
 def cmd_ingest_localtogw(args) -> int:
     """localToGW: walk a directory, route files to format plugins, and
-    land each format as a parquet-backed type in the store."""
+    land each format as a type (an IceTable) in the store."""
     from geowave_spark.sources.formats import ingest_directory
 
     spark = _spark(args.cpus)
@@ -184,80 +185,56 @@ def cmd_ingest_localtogw(args) -> int:
     if not frames:
         print("no ingestable files found", file=sys.stderr)
         return 1
-    manifest = _load_manifest(args.store)
     for fmt, df in sorted(frames.items()):
         name = args.type_prefix + fmt
-        path = os.path.join(args.store, name)
-        df.write.mode("overwrite").parquet(path)
-        n = spark.read.parquet(path).count()
-        manifest[name] = {"format": fmt, "rows": n}
+        n = _commit_type(args.store, name, df, fmt)
         print(f"ingested {n} rows into type '{name}'")
-    _save_manifest(args.store, manifest)
     return 0
 
 
 def cmd_type_list(args) -> int:
-    manifest = _load_manifest(args.store)
-    for name, meta in sorted(manifest.items()):
-        print(f"{name}\t{meta.get('format', '?')}\t{meta.get('rows', '?')} rows")
+    """One line per type: name, format (the summary of the newest
+    snapshot that wrote the type whole) and rows (manifest footer
+    stats — exact, as the CLI commits no merge-on-read deletes)."""
+    for name in _type_names(args.store):
+        t = _table(args.store, name)
+        fmt = next(
+            (s["summary"]["format"] for s in reversed(t.snapshots())
+             if "format" in (s.get("summary") or {})),
+            "?",
+        )
+        print(f"{name}\t{fmt}\t{t.merged_column_stats()['n_rows']} rows")
     return 0
 
 
 def cmd_type_describe(args) -> int:
-    spark = _spark(args.cpus)
-    if args.type_name not in _load_manifest(args.store):
-        print(f"unknown type: {args.type_name}", file=sys.stderr)
-        return 1
-    df = spark.read.parquet(os.path.join(args.store, args.type_name))
-    for f in df.schema.fields:
+    t = _table(args.store, args.type_name)
+    if t is None:
+        return _unknown(args.type_name)
+    for f in t.read(_spark(args.cpus)).schema.fields:
         print(f"{f.name}\t{f.dataType.simpleString()}")
     return 0
 
 
 def cmd_type_rm(args) -> int:
-    manifest = _load_manifest(args.store)
-    if args.type_name not in manifest:
-        print(f"unknown type: {args.type_name}", file=sys.stderr)
-        return 1
-    del manifest[args.type_name]
-    _save_manifest(args.store, manifest)
-    shutil.rmtree(os.path.join(args.store, args.type_name), ignore_errors=True)
+    if _table(args.store, args.type_name) is None:
+        return _unknown(args.type_name)
+    shutil.rmtree(os.path.join(args.store, args.type_name))
     print(f"removed type '{args.type_name}'")
     return 0
 
 
 def cmd_query(args) -> int:
-    """GWQL statement against the store's registered types (SELECT
-    prints rows; DELETE reports the count and persists the survivors)."""
+    """GWQL statement against the store's types: SELECT prints rows;
+    DELETE commits one delete snapshot to the type and reports the
+    count (DataStore.gwql on a snapshot type — durable and atomic)."""
     spark = _spark(args.cpus)
-    ds = _datastore(spark, args.store)
-    result = ds.gwql(args.statement)
-    if isinstance(result, int):  # DELETE → count; persist the type
+    result = _datastore(spark, args.store).gwql(args.statement)
+    if isinstance(result, int):
         from geowave_spark.plans.gwql import parse_statement
 
-        # the parser's type name, not a regex over the text: GWQL also
-        # takes quoted names (DELETE FROM "gdelt")
+        # the parser's type name: GWQL also takes quoted names
         name = parse_statement(args.statement).table
-        manifest = _load_manifest(args.store)
-        if name not in manifest:
-            print(f"cannot persist DELETE: no stored type {name!r}", file=sys.stderr)
-            return 1
-        path = os.path.join(args.store, name)
-        tmp, old = path + ".tmp", path + ".old"
-        ds.type(name).write.mode("overwrite").parquet(tmp)
-        # the type's dir is never absent: a failed swap is undone here,
-        # and one a dead process left half done rolls forward on the
-        # next open (_finish_swap)
-        os.rename(path, old)
-        try:
-            os.rename(tmp, path)
-        except OSError:
-            os.rename(old, path)
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise
-        manifest[name]["rows"] = manifest[name]["rows"] - result
-        _save_manifest(args.store, manifest)
-        shutil.rmtree(old)
         print(f"deleted {result} rows from '{name}'")
         return 0
     _emit(result, args.format, args.limit)
@@ -273,11 +250,9 @@ def cmd_export(args) -> int:
     nature; memory stays bounded (rows read in runs of partitions by
     ``results.result_rows`` + block flushing — the reference's
     batchSize)."""
-    spark = _spark(args.cpus)
-    ds = _datastore(spark, args.store)
-    if args.type_name not in _load_manifest(args.store):
-        print(f"unknown type: {args.type_name}", file=sys.stderr)
-        return 1
+    if _table(args.store, args.type_name) is None:
+        return _unknown(args.type_name)
+    ds = _datastore(_spark(args.cpus), args.store)
     df = (
         ds.cql(args.type_name, args.cql) if args.cql else ds.type(args.type_name)
     )
@@ -333,8 +308,6 @@ def cmd_export(args) -> int:
         write_shapefile(base, shapes, fields, records)
         n = len(shapes)
     else:  # geojson
-        import json as _json
-
         cols = [c for c in df.columns if c not in ("x_u", "y_u")]
         has_xy = "x_u" in df.columns and "y_u" in df.columns
         n = 0
@@ -362,7 +335,7 @@ def cmd_export(args) -> int:
                     "geometry": geom,
                     "properties": props,
                 }
-                f.write(("," if n else "") + _json.dumps(feat) + "\n")
+                f.write(("," if n else "") + json.dumps(feat) + "\n")
                 n += 1
             f.write("]}\n")
     print(f"exported {n} rows from '{args.type_name}' to {args.out}")
@@ -374,13 +347,11 @@ def cmd_analytic(args) -> int:
     analytics CLI operations — KDECommand, KMeansSparkCommand,
     DBScanCommand, NearestNeighborCommand): run the engine operator
     over a store type's (x_u, y_u) points and land the result as a
-    NEW parquet-backed type in the same store."""
-    spark = _spark(args.cpus)
-    manifest = _load_manifest(args.store)
-    if args.type_name not in manifest:
-        print(f"unknown type: {args.type_name}", file=sys.stderr)
-        return 1
-    df = spark.read.parquet(os.path.join(args.store, args.type_name))
+    NEW type in the same store."""
+    t = _table(args.store, args.type_name)
+    if t is None:
+        return _unknown(args.type_name)
+    df = t.read(_spark(args.cpus))
     if "x_u" not in df.columns or "y_u" not in df.columns:
         print(f"type {args.type_name} has no (x_u, y_u) geometry",
               file=sys.stderr)
@@ -404,19 +375,15 @@ def cmd_analytic(args) -> int:
 
         out = nn_self_join(df, args.max_dist_u, args.k, key=args.key)
     name = args.out_type
-    if name in manifest:
-        # never clobber an existing type (and never overwrite a path
+    if _table(args.store, name) is not None:
+        # never clobber an existing type (and never overwrite a table
         # the lazy plan may still be reading from)
         print(
             f"type {name!r} already exists — `type rm` it first",
             file=sys.stderr,
         )
         return 1
-    path = os.path.join(args.store, name)
-    out.write.mode("overwrite").parquet(path)
-    n = spark.read.parquet(path).count()
-    manifest[name] = {"format": f"analytic:{args.sub}", "rows": n}
-    _save_manifest(args.store, manifest)
+    n = _commit_type(args.store, name, out, f"analytic:{args.sub}")
     print(f"analytic {args.sub}: {n} rows into type '{name}'")
     return 0
 
@@ -427,13 +394,12 @@ def cmd_stat_list(args) -> int:
     from pyspark.sql import functions as F
 
     spark = _spark(args.cpus)
-    manifest = _load_manifest(args.store)
-    names = [args.type_name] if args.type_name else sorted(manifest)
+    names = [args.type_name] if args.type_name else _type_names(args.store)
     for name in names:
-        if name not in manifest:
-            print(f"unknown type: {name}", file=sys.stderr)
-            return 1
-        df = spark.read.parquet(os.path.join(args.store, name))
+        t = _table(args.store, name)
+        if t is None:
+            return _unknown(name)
+        df = t.read(spark)
         print(f"{name}: COUNT = {df.count()}")
         aggs, labels = [], []
         for f in df.schema.fields:

@@ -33,6 +33,7 @@ from __future__ import annotations
 
 import hashlib
 import os
+import shutil
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -50,7 +51,8 @@ def _materialize(spark: SparkSession, tag: str, key: str, build) -> DataFrame:
         try:
             os.rename(tmp, path)
         except OSError:
-            pass  # concurrent writer won the race; its copy is identical
+            # a concurrent writer won the race; its copy is identical
+            shutil.rmtree(tmp, ignore_errors=True)
     return spark.read.parquet(path)
 
 

@@ -68,10 +68,9 @@ Guarantees the engine uses:
   delete must not synchronously rewrite terabytes — that is what
   mode='mor' is for.
 
-Composes with sources/layout.py (SFC sort order inside files) and
-plans/checkpoint.py (per-partition lineage): sort by the index key at
-write time and the manifest stats become tight cell ranges, so a bbox
-scan prunes at file, row-group, and row level.
+Composes with plans/checkpoint.py (per-partition lineage). Sort by
+the index key at write time and the manifest stats become tight cell
+ranges, so a bbox ``scan`` prunes at file, row-group, and row level.
 
 Reference parity: the KV backends' tablet/region pruning
 (core/store/.../operations/DataStoreOperations.java splits +

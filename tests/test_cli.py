@@ -3,7 +3,6 @@
 from __future__ import annotations
 
 import io
-import json
 import os
 from contextlib import redirect_stdout
 
@@ -11,6 +10,7 @@ import pytest
 
 from geowave_spark import cli
 from geowave_spark.sources import formats as FM
+from geowave_spark.sources.icetable import IceTable
 
 SF = "/root/testdata/sf0.001"
 
@@ -40,7 +40,7 @@ def test_ingest_listplugins():
     assert set(out.split()) == set(FM.FORMATS)
 
 
-def test_ingest_and_type_list(store):
+def test_ingest_and_type_list(store, spark):
     rc, out = run(["type", "list", store])
     assert rc == 0
     lines = dict(
@@ -49,10 +49,32 @@ def test_ingest_and_type_list(store):
     # superset, not equality: later CLI tests land analytic output
     # types in this shared store
     assert {"gdelt", "tdrive"} <= set(lines)
-    assert "978 rows" in lines["gdelt"]  # skip rules applied at ingest
-    assert "1000 rows" in lines["tdrive"]
-    manifest = json.load(open(os.path.join(store, "types.json")))
-    assert manifest["gdelt"]["rows"] == 978
+    assert lines["gdelt"] == "gdelt\tgdelt\t978 rows"  # skip rules applied at ingest
+    assert lines["tdrive"] == "tdrive\ttdrive\t1000 rows"
+    assert IceTable(os.path.join(store, "gdelt")).read(spark).count() == 978
+
+
+def test_ingest_of_every_format_lists_each_type(spark, tmp_path):
+    """`ingest localtogw` of the whole fixture tree lands one type per
+    format, each holding its format frame's rows; an unknown type is
+    refused without creating its directory."""
+    src = FM.formats_fixture_dir(SF)
+    store = str(tmp_path)
+    rc, _ = run(["ingest", "localtogw", src, store])
+    assert rc == 0
+    rc, out = run(["type", "list", store])
+    assert rc == 0
+    listed = {
+        name: (fmt, int(rows.split()[0]))
+        for name, fmt, rows in (ln.split("\t") for ln in out.strip().splitlines())
+    }
+    want = {
+        fmt: (fmt, df.count()) for fmt, df in FM.ingest_directory(spark, src).items()
+    }
+    assert listed == want and len(want) == 10
+    for verb in ("describe", "rm"):
+        assert run(["type", verb, store, "nope"])[0] == 1
+    assert not os.path.exists(os.path.join(store, "nope"))
 
 
 def test_type_describe(store):
@@ -60,8 +82,10 @@ def test_type_describe(store):
     assert rc == 0
     schema = dict(ln.split("\t") for ln in out.strip().splitlines())
     assert schema["eventid"] == "int" and schema["x_u"] == "bigint"
+    assert schema["cell"] == "bigint"  # stored by the ingest's index rule
     rc, _ = run(["type", "describe", store, "nope"])
     assert rc == 1
+    assert not os.path.exists(os.path.join(store, "nope"))
 
 
 def test_query_select_console_and_csv(store):
@@ -100,8 +124,8 @@ def test_stat_list(store):
 
 
 def test_query_delete_persists(store, spark):
-    """GWQL DELETE through the CLI rewrites the stored type (the
-    in-memory anti-join keys on the unique leading column)."""
+    """GWQL DELETE through the CLI commits one delete snapshot to the
+    stored type."""
     rc, out = run(["query", store, "DELETE FROM gdelt WHERE eventid < 50"])
     assert rc == 0 and "deleted" in out
     rc, out = run(
@@ -114,23 +138,27 @@ def test_query_delete_persists(store, spark):
         ]
     )
     assert len(out.strip().splitlines()) == 1  # header only — durably gone
-    manifest = json.load(open(os.path.join(store, "types.json")))
-    df = spark.read.parquet(os.path.join(store, "gdelt"))
-    assert manifest["gdelt"]["rows"] == df.count() < 978
+    t = IceTable(os.path.join(store, "gdelt"))
+    assert t.snapshots()[-1]["operation"] == "delete"
+    assert t.merged_column_stats()["n_rows"] == t.read(spark).count() < 978
 
 
 def _tiny_store(spark, root: str) -> str:
     """A store of one 20-row point type ``pts`` (eventid 0..19)."""
     from pyspark.sql import functions as F
 
-    spark.range(0, 20, numPartitions=2).select(
+    _commit(root, "pts", spark.range(0, 20, numPartitions=2).select(
         F.col("id").cast("int").alias("eventid"),
         (F.col("id") * 1000).alias("x_u"),
         (F.col("id") * 1000).alias("y_u"),
-    ).write.parquet(os.path.join(root, "pts"))
-    with open(os.path.join(root, "types.json"), "w") as f:
-        json.dump({"pts": {"format": "gdelt", "rows": 20}}, f)
+    ))
     return root
+
+
+def _commit(root: str, name: str, df) -> None:
+    IceTable(os.path.join(root, name)).commit_write(
+        df, mode="overwrite", summary={"format": "gdelt"}
+    )
 
 
 def _stored_ids(store):
@@ -144,42 +172,41 @@ def test_query_delete_of_a_quoted_type_name_persists(spark, tmp_path):
     rc, out = run(["query", store, 'DELETE FROM "pts" WHERE eventid < 5'])
     assert rc == 0 and "deleted 5 rows from 'pts'" in out
     assert _stored_ids(store) == list(range(5, 20))
-    assert json.load(open(os.path.join(store, "types.json")))["pts"]["rows"] == 15
+    assert IceTable(os.path.join(store, "pts")).merged_column_stats()["n_rows"] == 15
 
 
-def test_query_delete_failed_swap_keeps_the_pre_delete_rows(spark, tmp_path, monkeypatch):
-    """The second rename of the survivor swap (tmp dir into place)
-    fails: the type still reads every pre-delete row."""
+@pytest.mark.parametrize(
+    "where",
+    [
+        "eventid < 5",
+        "INTERSECTS(geom, POLYGON((-500 -500, 4500 -500, 4500 4500, "
+        "-500 4500, -500 -500)))",
+    ],
+    ids=["attribute", "polygon"],
+)
+def test_query_delete_failed_publish_keeps_the_pre_delete_rows(
+    spark, tmp_path, monkeypatch, where
+):
+    """The delete snapshot's publish (the version-hint swap) fails: the
+    type still reads every pre-delete row, and a retry deletes them."""
+    from geowave_spark.sources import icetable
+
     store = _tiny_store(spark, str(tmp_path))
-    real = os.rename
-    calls = []
+    real_replace = icetable.os.replace
 
-    def failing_second(src, dst):
-        calls.append(dst)
-        if len(calls) == 2:
-            raise OSError("simulated failure in the survivor swap")
-        return real(src, dst)
+    def crash(src, dst, *a, **kw):
+        if os.path.basename(dst) == "version-hint.text":
+            raise OSError("simulated crash before publish")
+        return real_replace(src, dst, *a, **kw)
 
-    monkeypatch.setattr(cli.os, "rename", failing_second)
-    with pytest.raises(OSError, match="simulated failure"):
-        run(["query", store, "DELETE FROM pts WHERE eventid < 5"])
+    monkeypatch.setattr(icetable.os, "replace", crash)
+    with pytest.raises(OSError, match="simulated crash"):
+        run(["query", store, f"DELETE FROM pts WHERE {where}"])
     monkeypatch.undo()
     assert _stored_ids(store) == list(range(20))
-    assert json.load(open(os.path.join(store, "types.json")))["pts"]["rows"] == 20
-    assert sorted(os.listdir(store)) == ["pts", "types.json"]
-
-
-def test_half_finished_delete_swap_rolls_forward(spark, tmp_path):
-    """A process that died between the two renames of the swap left the
-    old dir aside and the complete survivors in the tmp dir: the next
-    open moves the survivors in and recounts the type's rows."""
-    store = _tiny_store(spark, str(tmp_path))
-    path = os.path.join(store, "pts")
-    spark.read.parquet(path).where("eventid >= 5").write.parquet(path + ".tmp")
-    os.rename(path, path + ".old")
+    rc, out = run(["query", store, f"DELETE FROM pts WHERE {where}"])
+    assert rc == 0 and "deleted 5 rows from 'pts'" in out
     assert _stored_ids(store) == list(range(5, 20))
-    assert json.load(open(os.path.join(store, "types.json")))["pts"]["rows"] == 15
-    assert sorted(os.listdir(store)) == ["pts", "types.json"]
 
 
 def test_query_result_streams_in_blocks(spark, tmp_path, monkeypatch):
@@ -229,13 +256,11 @@ def test_query_blocks_print_each_column_alike(spark, tmp_path, monkeypatch):
     way the blocks before it did: integers stay integers, floats keep
     their own digits, and a console column never narrows."""
     store = str(tmp_path)
-    spark.createDataFrame(
+    _commit(store, "t", spark.createDataFrame(
         [(1, 1, 0.5), (2, 2, 0.25), (3, 3, 1.0),
          (4, None, 2.0), (5, 5, None), (6, 123456789, 3.0)],
         "id int, v bigint, f double",
-    ).coalesce(1).write.parquet(os.path.join(store, "t"))
-    with open(os.path.join(store, "types.json"), "w") as f:
-        json.dump({"t": {"format": "gdelt", "rows": 6}}, f)
+    ).coalesce(1))
     monkeypatch.setattr(cli, "_EMIT_BLOCK_ROWS", 3)
     stmt = "SELECT id, v, f FROM t"
 
@@ -265,12 +290,10 @@ def test_query_prints_timestamps_in_the_session_time_zone(
     import time
 
     store = str(tmp_path)
-    spark.sql(
+    _commit(store, "evt", spark.sql(
         "SELECT 1 AS eventid, 0L AS x_u, 0L AS y_u, "
         "TIMESTAMP '2020-01-01 00:00:00.5' AS ts"
-    ).write.parquet(os.path.join(store, "evt"))
-    with open(os.path.join(store, "types.json"), "w") as f:
-        json.dump({"evt": {"format": "gdelt", "rows": 1}}, f)
+    ))
     monkeypatch.setenv("TZ", "America/New_York")
     time.tzset()
     try:
@@ -284,8 +307,11 @@ def test_query_prints_timestamps_in_the_session_time_zone(
 def test_type_rm(store):
     rc, out = run(["type", "rm", store, "gdelt"])
     assert rc == 0
+    assert not os.path.exists(os.path.join(store, "gdelt"))
     rc, out = run(["type", "list", store])
     assert "gdelt" not in out
+    rc, _ = run(["type", "rm", store, "nope"])
+    assert rc == 1 and not os.path.exists(os.path.join(store, "nope"))
 
 
 def test_export_avro_roundtrip(store, spark, tmp_path):
@@ -300,11 +326,9 @@ def test_export_avro_roundtrip(store, spark, tmp_path):
     assert len(recs) == 1000
     names = [f["name"] for f in schema["fields"]]
     assert names[:2] == ["taxiid", "pointinstance"]
-    # spot-check against the stored parquet (timestamps = epoch micros)
-    import os
-
+    # spot-check against the stored table (timestamps = epoch micros)
     df = (
-        spark.read.parquet(os.path.join(store, "tdrive"))
+        IceTable(os.path.join(store, "tdrive")).read(spark)
         .orderBy("taxiid", "pointinstance")
         .limit(1)
         .collect()[0]
@@ -328,10 +352,8 @@ def test_export_geojson_with_cql(store, spark, tmp_path):
     from geowave_spark.sources import formats as FM
 
     df = FM.read_geojson(spark, str(tmp_path)).toPandas()
-    import os
-
     want = (
-        spark.read.parquet(os.path.join(store, "tdrive"))
+        IceTable(os.path.join(store, "tdrive")).read(spark)
         .where("taxiid < 5.0")
         .count()
     )
@@ -369,7 +391,7 @@ def test_analytic_nn_and_dbscan(tmp_path_factory, spark):
          "--max-dist-u", "4000000", "--k", "3", "--key", "eventid"]
     )
     assert rc == 0 and "rows into type 'nn3'" in msg
-    nn = spark.read.parquet(os.path.join(st, "nn3")).toPandas()
+    nn = IceTable(os.path.join(st, "nn3")).read(spark).toPandas()
     assert set(nn.columns) >= {"a_id", "b_id", "rank"}
     assert (nn.groupby("a_id")["rank"].max() <= 3).all()
     rc, msg = run(
@@ -377,7 +399,7 @@ def test_analytic_nn_and_dbscan(tmp_path_factory, spark):
          "--eps-u", "1500000", "--min-pts", "3", "--key", "eventid"]
     )
     assert rc == 0
-    cl = spark.read.parquet(os.path.join(st, "clusters")).toPandas()
+    cl = IceTable(os.path.join(st, "clusters")).read(spark).toPandas()
     assert {"cluster", "is_core"} <= set(cl.columns)
     assert cl["cluster"].notna().any()  # the hotspot clusters exist
 
@@ -395,7 +417,7 @@ def test_export_shapefile_roundtrip(store, spark, tmp_path):
 
     df = read_shapefile(spark, str(tmp_path)).toPandas()
     want = (
-        spark.read.parquet(os.path.join(store, "tdrive"))
+        IceTable(os.path.join(store, "tdrive")).read(spark)
         .where("taxiid < 2.0")
         .toPandas()
     )
@@ -427,8 +449,8 @@ def test_export_of_many_partitions_runs_few_jobs(spark, tmp_path, monkeypatch, f
         def type(self, name):
             return df
 
+    _commit(str(tmp_path), "t", df.limit(1))
     monkeypatch.setattr(cli, "_datastore", lambda spark, store: Store())
-    monkeypatch.setattr(cli, "_load_manifest", lambda store: {"t": {}})
     out = str(tmp_path / f"t.{fmt}")
     sc, group = spark.sparkContext, f"cli-export-jobs-{fmt}"
     sc.setJobGroup(group, group)

@@ -341,12 +341,17 @@ def test_delete_routes_to_snapshot_store(spark, sf_dir, tmp_path):
         spark.sql("SELECT COUNT(*) c FROM ev_snap").first()["c"]
         == before - removed
     )
-    # polygon deletes are not compilable to (ranges, predicate): loud error
-    with pytest.raises(GWQLParseException, match="snapshot-store DELETE"):
-        ds.gwql(
-            "DELETE FROM ev_snap WHERE INTERSECTS(geom, "
-            "POLYGON((0 0, 10 0, 10 10, 0 0)))"
-        )
+    # a polygon has no (ranges, predicate) form: it deletes by key, and
+    # exactly the rows the same SELECT returns
+    where = (
+        "INTERSECTS(geom, POLYGON((-120000000 -30000000, 120000000 -30000000, "
+        "0 45000000, -120000000 -30000000)))"
+    )
+    left = t.read(spark).count()
+    hit = {r.event_id for r in ds.gwql(f"SELECT event_id FROM ev_snap WHERE {where}").collect()}
+    assert ds.gwql(f"DELETE FROM ev_snap WHERE {where}") == len(hit) > 0
+    assert t.snapshots()[-1]["operation"] == "delete"
+    assert t.read(spark).count() == left - len(hit)
 
 
 def test_select_polygon_refine_matches_cql(store, spark, sf_dir):
@@ -634,21 +639,48 @@ def test_gwql_dwithin_meters_residual_or(store, spark, sf_dir):
 
 
 def test_delete_snapshot_rejects_geodesic_dwithin(snap_store, spark):
-    """Regression: DWITHIN with a units token compiles into
-    plan.dwithin_geo (consumed OUT of the residual), so the snapshot
-    DELETE guard must reject it like the planar form — missing the
-    field silently dropped the distance constraint and deleted every
-    row the remaining ranges matched."""
+    """Regression (named for the guard that once rejected it): DWITHIN
+    with a units token compiles into plan.dwithin_geo, consumed OUT of
+    the residual, so a snapshot DELETE that read only the ranges and
+    residual dropped the distance constraint and deleted every row the
+    remaining ranges matched. The delete now keeps the constraint: it
+    removes exactly the rows within the distance, and none outside."""
     ds, t = snap_store
-    before = t.read(spark).count()
-    with pytest.raises(GWQLParseException, match="snapshot-store DELETE"):
-        ds.gwql(
-            "DELETE FROM ev_snap WHERE "
-            "DWITHIN(geom, POINT(0 0), 2000, 'meters')"
-        )
-    # nothing was deleted and no snapshot was committed
-    assert t.read(spark).count() == before
-    assert t.snapshots()[-1]["operation"] != "delete"
+    where = "DWITHIN(geom, POINT(20000000 70000000), 2000000, 'meters') AND value < 200"
+    rows = {r.event_id for r in t.read(spark).select("event_id").collect()}
+    hit = {r.event_id for r in ds.gwql(f"SELECT event_id FROM ev_snap WHERE {where}").collect()}
+    # rows the residual alone matches but the distance excludes must stay
+    assert 0 < len(hit) < t.read(spark).where("value < 200").count()
+    assert ds.gwql(f"DELETE FROM ev_snap WHERE {where}") == len(hit)
+    assert {r.event_id for r in t.read(spark).select("event_id").collect()} == rows - hit
+
+
+@pytest.mark.parametrize(
+    "where",
+    [
+        "INTERSECTS(geom, POLYGON((-120000000 -30000000, 120000000 -30000000, "
+        "0 45000000, -120000000 -30000000)))",
+        "DWITHIN(geom, POINT(20000000 10000000), 30000000)",
+        "DWITHIN(geom, POINT(20000000 70000000), 2000000, 'meters')",
+    ],
+    ids=["polygon", "dwithin", "dwithin_meters"],
+)
+def test_snapshot_delete_by_shape_removes_the_select_rows(snap_store, spark, where):
+    """A polygon / planar DWITHIN / DWITHIN-with-units DELETE on a
+    snapshot type removes exactly the rows the same-WHERE SELECT
+    returns, in one copy-on-write 'delete' snapshot, and returns their
+    count; the registered view follows the new snapshot."""
+    ds, t = snap_store
+    rows = {r.event_id for r in t.read(spark).select("event_id").collect()}
+    hit = {r.event_id for r in ds.gwql(f"SELECT event_id FROM ev_snap WHERE {where}").collect()}
+    assert 0 < len(hit) < len(rows)
+    n_snaps = len(t.snapshots())
+    assert ds.gwql(f"DELETE FROM ev_snap WHERE {where}") == len(hit)
+    assert len(t.snapshots()) == n_snaps + 1
+    assert t.snapshots()[-1]["operation"] == "delete"
+    assert {r.event_id for r in t.read(spark).select("event_id").collect()} == rows - hit
+    assert ds.gwql("SELECT event_id FROM ev_snap").count() == len(rows - hit)
+    assert ds.gwql(f"SELECT event_id FROM ev_snap WHERE {where}").count() == 0
 
 
 def test_gwql_sees_post_registration_commits(snap_store, spark, sf_dir):
