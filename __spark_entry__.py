@@ -178,8 +178,8 @@ GEO_DW = (20_000_000, 70_000_000, 2_000_000)
 def _q_cql_dwithin_geodesic(spark, sf):
     """ECQL DWITHIN with 'meters' units → GREAT-CIRCLE semantics
     (plans/cql.py dwithin_geo): haversine refine + a sargable coarse
-    bbox whose longitude window is latitude-corrected (the inverted
-    safe_geo_radius_m bound — at 70°N the lon window is ~3× the lat
+    bbox whose longitude window is latitude-corrected
+    (geodesic.geodesic_window — at 70°N the lon window is ~3× the lat
     band, which a naive planar circle would miss). The reference's
     geodesic distance contract (OrthodromicDistancePartitioner)
     surfaced through the ECQL text surface; oracle = the same
@@ -285,8 +285,8 @@ def _q_knn(spark, sf):
 
 def _q_knn_geodesic(spark, sf):
     """Great-circle kNN (operators/geodesic.knn_geodesic): haversine
-    meters on the mean sphere, wrap-aware candidate rings, latitude-
-    corrected ring-sufficiency gate — the OrthodromicDistancePartitioner
+    meters on the mean sphere, ranked inside latitude-corrected bbox
+    windows that wrap at ±180° — the OrthodromicDistancePartitioner
     semantics. Query 2 sits at 70°N where planar µdeg and geodesic
     ranks genuinely differ (pytest asserts the divergence); query 3
     hugs the antimeridian so the wrap path is exercised in the gate.
@@ -2763,7 +2763,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     phash_dedup stay),
     `text_prefix` (text_search.py — stored-NGRAM text_contains stays),
     `doc_tokens` (text.py — doc_repetition/common_passages stay),
-    `knn` (knn.py — knn_bulk exercises the same ring-ladder core).
+    `knn` (knn.py — knn_geodesic runs the same window ladder).
     Wave 4: IN = `xmodal_topk` (cross-modal caption→image retrieval —
     the CLIP-style dual-tower plumbing's first gate row; both towers
     re-derived driver-side in the oracle); OUT = `sim_topk` (green
@@ -2941,7 +2941,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     are a deterministic function of the same rows), and DuckDB
     independently re-parses the raw CSVs in tests/test_formats.py.
     OUT, each green r4 (knn_bulk green r1-r4) with in-window siblings:
-    `knn_bulk` (knn_geodesic keeps the ring-ladder kNN core),
+    `knn_bulk` (knn_geodesic keeps the window-ladder kNN core),
     `subsample_px` (raster_histogram/raster_multiband/raster_pyramid/
     ice_image_tiles keep the raster family on four rows),
     `image_thumbs` (caption_align keeps the mapInPandas image decode +

@@ -3,7 +3,6 @@ from geowave_spark.index.zorder import (  # noqa: F401
     cells_of_points,
     decode_cell,
     grid_coord,
-    kring,
     morton_decode,
     morton_encode,
     parent_cell,

@@ -108,33 +108,6 @@ def parent_cell(cell, d_res: int):
     return cell >> (2 * d_res)
 
 
-def kring(cell: int, res: int, ring: int, wrap_x: bool = False) -> list[int]:
-    """All cells within Chebyshev distance ``ring`` of ``cell``.
-    Latitude clamps at the domain boundary; longitude clamps too by
-    default, or WRAPS across the antimeridian with ``wrap_x=True``
-    (cyclic gx — the geodesic neighborhoods in operators/geodesic.py
-    need a great-circle neighbor on the other side of ±180°).
-    Neighborhood-expansion analog of
-    analytics/api/.../partitioner/OrthodromicDistancePartitioner.java."""
-    gx, gy = morton_decode(int(cell))
-    n = 1 << res
-    out = []
-    for dy in range(-ring, ring + 1):
-        yy = int(gy) + dy
-        if yy < 0 or yy >= n:
-            continue
-        for dx in range(-ring, ring + 1):
-            xx = int(gx) + dx
-            if wrap_x:
-                xx %= n
-            elif xx < 0 or xx >= n:
-                continue
-            out.append(int(morton_encode(xx, yy)))
-    if wrap_x:
-        return sorted(set(out))
-    return out
-
-
 @lru_cache(maxsize=500)  # decomposition cache size per HilbertSFC.java:97-100
 def bbox_ranges(
     x_lo_u: int,

@@ -13,19 +13,29 @@ engine's default metric is exact planar integer micro-degrees
   cos/asin stay inside whole-stage codegen; no Python in the hot
   path). The longitude difference enters through sin(Δλ/2), so the
   formula is dateline-wrap-correct by construction.
-- ``knn_geodesic`` — exact kNN under the haversine metric via the same
-  cell-ring expansion as planar knn(), with two geodesic corrections:
-  candidate rings WRAP across the antimeridian (a nearest neighbor may
-  sit on the other side of ±180°), and the ring-sufficiency gate uses
-  a latitude-corrected safe radius (at high latitude a lon-cell is
-  narrow in meters, so the same ring guarantees a smaller geodesic
-  radius — the "cell-ring widened by latitude-corrected radii"
-  requirement).
+- ``geodesic_window`` — the µdeg box that holds every point within a
+  radius in meters: the coarse constraint of ECQL/GWQL
+  ``DWITHIN(..., 'meters')`` (plans/cql.py) and the window of
+  ``knn_geodesic``.
+- ``knn_geodesic`` — exact kNN under the haversine metric through the
+  planar knn()'s window ladder (operators/knn.py).
 - ``dwithin_geodesic_col`` — radius-in-meters predicate for the
   DWITHIN/BEYOND surface.
 
+Window containment (no point within radius r of (λq, φq) falls outside
+its window): haversine d has sin²(d/2R) = sin²(Δφ/2) +
+cosφq·cosφp·sin²(Δλ/2). The first term gives d ≥ R·|Δφ|, so |Δφ| ≤ r/R
+bounds the latitude band; in it |φp| ≤ φband = min(|φq| + r/R, 90°),
+so the second term gives sin(|Δλ|/2) ≤ sin(r/2R) / √(cosφq·cosφband):
+the longitude half-width, taken cyclically, so a window crossing ±180°
+wraps. When the right side reaches 1 (near a pole) every longitude
+qualifies. Each bound is rounded up and widened by 1 µdeg, covering the
+libm rounding of the closed form, so a point outside the window is
+strictly farther than r under the same expression — the kNN ladder's
+stop rule (tests/test_properties_geodesic.py sweeps it).
+
 Exactness contract: distances are IEEE doubles through libm trig; the
-engine guarantees exact *candidate completeness* (integer ring logic)
+engine guarantees exact *candidate completeness* (the window above)
 and deterministic ordering ties broken by id. Two engines computing
 the same closed-form haversine agree on ordering unless two distinct
 points are within ~1 ulp of equidistant — not observable on the
@@ -39,10 +49,12 @@ import math
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from geowave_spark.index.native import cell_col
-from geowave_spark.index.zorder import cell_of_point
+from geowave_spark import LON_OFF_U, WORLD_X_U
+from geowave_spark.operators.knn import _ladder
 
 EARTH_R_M = 6371008.8  # IUGG mean earth radius, meters
+# meters per µdeg of latitude on the mean sphere (meridional arc)
+M_PER_UDEG = EARTH_R_M * math.pi / 180.0 / 1e6
 
 
 def haversine_m(qx: Column, qy: Column, x: Column, y: Column) -> Column:
@@ -77,41 +89,27 @@ def dwithin_geodesic_col(
     return haversine_m(qx, qy, x, y) <= F.lit(float(radius_m))
 
 
-def kring_wrap(cell: int, res: int, ring: int) -> list[int]:
-    """Cells within Chebyshev ``ring`` of ``cell`` — longitude WRAPS
-    across the antimeridian (cyclic gx), latitude clamps at the domain
-    edge: a great-circle neighbor may sit across ±180°, which the
-    planar ring (clamped both axes) would miss. Delegates to the one
-    ring enumerator (zorder.kring with wrap_x) so the two neighborhood
-    shapes cannot drift apart."""
-    from geowave_spark.index.zorder import kring
-
-    return kring(cell, res, ring, wrap_x=True)
-
-
-def safe_geo_radius_m(lat_q_deg: float, ring: int, res: int) -> float:
-    """Guaranteed geodesic coverage of a ``ring``-cell neighborhood
-    around a query at latitude ``lat_q_deg``: every point OUTSIDE the
-    ring is provably farther than this many meters, so once a query
-    holds ≥ k candidates within it, the exact top-k is in hand.
-
-    A point outside the ring differs from the query by ≥ ring·span in
-    latitude (meridional distance ≥ R·Δφ) OR in true angular longitude
-    (the ring wraps, so cyclic cell distance ≥ ring+1 ⇒ angular lon
-    separation ≥ ring·span); in the lon case both latitudes lie within
-    the ring's lat band, bounding cos φ from below — the
-    latitude-corrected radius. The guarantee is the min of the two
-    escape routes; at extreme latitude the lon bound degrades toward 0
-    and the ring ladder simply widens further (correctness preserved,
-    the documented pole-adjacent cost)."""
-    span_deg = 360.0 / (1 << res)
-    d_deg = ring * span_deg
-    vertical = EARTH_R_M * math.radians(d_deg)
-    phi_bound = min(abs(lat_q_deg) + d_deg, 90.0)
-    half = math.radians(min(d_deg, 180.0)) / 2.0
-    horiz_sin = max(math.cos(math.radians(phi_bound)), 0.0) * math.sin(half)
-    horizontal = 2.0 * EARTH_R_M * math.asin(min(horiz_sin, 1.0))
-    return min(vertical, horizontal)
+def geodesic_window(px: int, py: int, radius_m: float) -> tuple[int, int, int, int]:
+    """µdeg box (x_lo, y_lo, x_hi, y_hi) holding every point within
+    ``radius_m`` great-circle meters of (px, py) — the containment
+    argument in the module docstring. ``x_lo > x_hi`` means the box
+    crosses ±180° (``spatial_query.bbox_query_dateline`` splits it);
+    the whole longitude range when every longitude qualifies."""
+    dy = math.ceil(radius_m / M_PER_UDEG) + 1
+    s = math.sin(min(radius_m / (2.0 * EARTH_R_M), math.pi / 2))
+    phi_q = abs(py) / 1e6
+    phi_band = min(phi_q + dy / 1e6, 90.0)
+    cosprod = math.cos(math.radians(phi_q)) * math.cos(math.radians(phi_band))
+    x_lo, x_hi = -LON_OFF_U, LON_OFF_U
+    if cosprod > s * s:
+        dx = math.ceil(math.degrees(2.0 * math.asin(s / math.sqrt(cosprod))) * 1e6) + 1
+        if dx < LON_OFF_U:
+            x_lo, x_hi = px - dx, px + dx
+            if x_lo < -LON_OFF_U:
+                x_lo += WORLD_X_U
+            elif x_hi > LON_OFF_U:
+                x_hi -= WORLD_X_U
+    return x_lo, py - dy, x_hi, py + dy
 
 
 def knn_geodesic(
@@ -119,83 +117,26 @@ def knn_geodesic(
     points: DataFrame,
     queries: list[tuple[int, int, int]],  # (query_id, qx_u, qy_u)
     k: int,
-    res: int = 8,
     point_key: str = "event_id",
-    max_ring: int | None = None,
 ) -> DataFrame:
     """Exact kNN under the great-circle metric (haversine meters on the
     mean sphere) — the OrthodromicDistancePartitioner semantics for the
-    knn surface. Same ring-ladder plan as planar knn(): candidate cells
-    broadcast, equi-join on cell, windowed rank; the differences are
-    the wrap-aware ring, the haversine distance expression (native
-    codegen), and the latitude-corrected sufficiency gate.
+    knn surface, through the planar knn()'s window ladder with
+    ``geodesic_window`` as the window.
 
     Returns (query_id, point_key, rank) — rank by (haversine, id). The
     float distance itself is intentionally NOT an output column: ranks
     are integer-exact across engines, meters are only libm-exact.
     """
-    n_side = 1 << res
-    if max_ring is None:
-        max_ring = n_side
-
-    pts = points.withColumn(
-        "_cell", cell_col(F.col("x_u"), F.col("y_u"), res)
-    ).persist()
-
-    n_pts = pts.count()
-    density = max(n_pts / float(4**res), 1e-12)
-    ring = 1
-    while (2 * ring + 1) ** 2 * density < 2 * k and ring < max_ring:
-        ring *= 2
-
-    while True:
-        cand_rows = []
-        for qid, qx, qy in queries:
-            c = cell_of_point(qx, qy, res)
-            for cc in kring_wrap(c, res, ring):
-                cand_rows.append((int(qid), int(qx), int(qy), int(cc)))
-        qdf = F.broadcast(
-            spark.createDataFrame(
-                cand_rows, "query_id long, qx long, qy long, _cell long"
-            )
-        )
-        j = pts.join(qdf, "_cell", "inner")
-        cand = j.withColumn(
-            "hav_m",
-            haversine_m(F.col("qx"), F.col("qy"), F.col("x_u"), F.col("y_u")),
-        )
-
-        # per-query latitude-corrected safe radius for THIS ring
-        safe = {
-            q[0]: safe_geo_radius_m(q[2] / 1e6, ring, res) for q in queries
-        }
-        safe_df = F.broadcast(
-            spark.createDataFrame(
-                [(int(q), float(d)) for q, d in safe.items()],
-                "query_id long, safe_m double",
-            )
-        )
-        counts = {
-            r["query_id"]: r["n"]
-            for r in cand.join(safe_df, "query_id")
-            .where(F.col("hav_m") <= F.col("safe_m"))
-            .groupBy("query_id")
-            .agg(F.count("*").alias("n"))
-            .collect()
-        }
-        if all(counts.get(q[0], 0) >= k for q in queries) or ring >= max_ring:
-            w = Window.partitionBy("query_id").orderBy("hav_m", point_key)
-            out = (
-                cand.withColumn("rank", F.row_number().over(w))
-                .where(F.col("rank") <= k)
-                .select("query_id", point_key, "rank")
-            )
-            # materialize the small result, then release the keyed
-            # table (same leak-avoidance as planar knn / knn_join)
-            out = out.localCheckpoint(eager=True)
-            pts.unpersist()
-            return out
-        ring *= 2
+    return _ladder(
+        spark, points, queries, k, point_key,
+        dist=lambda qx, qy: haversine_m(F.lit(qx), F.lit(qy), F.col("x_u"), F.col("y_u")),
+        window=geodesic_window,
+        reach=lambda d: d,
+        unit=M_PER_UDEG,
+        full=math.pi * EARTH_R_M,  # half a great circle: every point
+        dist_field=None,
+    )
 
 
 def nn_self_join_geodesic(
@@ -401,31 +342,4 @@ def nn_self_join_geodesic(
         cand.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
         .select("a_id", "b_id", "rank")
-    )
-
-
-def knn_geodesic_brute(
-    spark: SparkSession,
-    points: DataFrame,
-    queries: list[tuple[int, int, int]],
-    k: int,
-    point_key: str = "event_id",
-) -> DataFrame:
-    """Brute-force oracle twin (cross join) for tests."""
-    qdf = F.broadcast(
-        spark.createDataFrame(
-            [(int(q), int(x), int(y)) for q, x, y in queries],
-            "query_id long, qx long, qy long",
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy("hav_m", point_key)
-    return (
-        points.crossJoin(qdf)
-        .withColumn(
-            "hav_m",
-            haversine_m(F.col("qx"), F.col("qy"), F.col("x_u"), F.col("y_u")),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", point_key, "rank")
     )

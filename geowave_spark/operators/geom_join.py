@@ -56,8 +56,7 @@ exact covers at the same resolution.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
+import functools
 import math
 
 import numpy as np
@@ -105,13 +104,18 @@ def _widen_arrow_batches(spark) -> None:
         spark.conf.set(k, str(_ARROW_BATCH))
 
 
-def _keys_udf(max_cells: int, finest_res: int, buffer_u: int, scale: int):
+@functools.lru_cache(maxsize=64)
+def _keys_udf(sc, max_cells: int, finest_res: int, buffer_u: int, scale: int):
     """(wkb) -> struct(res int, cells array<long>): the insertion-id
     computation for arbitrary geometries (getRowIdsAtTier /
     decomposeRangesForEntry analog, TieredSFCIndexStrategy.java:369-407)
     with the trim of RDDUtils.trimIndexIds:158-184. ``buffer_u``
     expands the cover outward for distance predicates (getBufferAmount
-    semantics, TieredSpatialJoin.java:146,413-419)."""
+    semantics, TieredSpatialJoin.java:146,413-419). Built once per
+    parameter set: building a pandas UDF (pickle + JVM function
+    object) costs ~37 gateway commands. The SparkContext ``sc`` is
+    part of the key because the JVM function object carries that
+    context's Python accumulator."""
 
     params = (max_cells, finest_res, buffer_u)
 
@@ -226,7 +230,9 @@ def geom_keys(
     ingest."""
     if scale != 1:
         raise NotImplementedError("store geometries in µdeg; scale=1 only")
-    k = _keys_udf(max_cells, finest_res, buffer_u, scale)(F.col(geom_col))
+    k = _keys_udf(df.sparkSession.sparkContext, max_cells, finest_res, buffer_u, scale)(
+        F.col(geom_col)
+    )
     # the struct's fields by one star expansion: a Column per field
     # costs ~10 py4j round trips each while the plan is built
     return df.withColumn("_keys", k).select("*", "_keys.*").drop("_keys")

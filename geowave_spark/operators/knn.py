@@ -1,31 +1,117 @@
-"""k-nearest-neighbors via cell-ring expansion + windowed rank.
+"""k-nearest-neighbors (NNMapReduce: a bounded top-K neighbor list per
+entry over a distance-bounded neighborhood,
+analytics/mapreduce/.../nn/NNMapReduce.java:60-165,
+DefaultNeighborList.java:17).
 
-Reference semantics: NNMapReduce partitions space into grid cells with
-an expanded neighborhood, then keeps a bounded top-K neighbor list per
-entry (analytics/mapreduce/.../nn/NNMapReduce.java:60-165,
-DefaultNeighborList.java:17; partitioner
-analytics/api/.../partitioner/OrthodromicDistancePartitioner.java).
-
-Engine plan: query points are few (a query set), so their ring-expanded
-candidate cells form a small broadcast dimension; candidates equi-join
-on cell, exact squared distance is a native integer expression, and
-``row_number() over (partition by query order by dist, id)`` takes the
-top k — the Window.partitionBy analog called for by SURVEY.md §2.3.
-
-Correct-by-construction ring bound: if ring radius w covers distance
-d_w = w * cell_span, then once a query has ≥ k candidates within d_w in
-the ring, no point outside the ring can be closer — the expansion stops
-(same guarantee as the reference's maxDistance-bounded neighborhoods).
+Small query sets: ``knn`` and ``operators/geodesic.knn_geodesic`` share
+``_ladder``, a driver-side ladder of bbox windows over the frame.
+Large query sets: ``knn_join`` (``knn_auto`` cuts over at
+``KNN_DISTRIBUTED_CUTOVER`` queries) keeps no per-query driver state.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+import functools
+import math
+from collections.abc import Callable
+
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
 from geowave_spark import WORLD_X_U
-from geowave_spark.index.native import cell_col
-from geowave_spark.index.zorder import cell_of_point, kring
+from geowave_spark.operators.spatial_query import bbox_query_dateline
+
+# lon × lat extent of the domain in µdeg² (the start radius's density)
+_DOMAIN_AREA_U = WORLD_X_U * (WORLD_X_U // 2)
+
+
+def _ladder(
+    spark: SparkSession,
+    points: DataFrame,
+    queries: list[tuple[int, int, int]],
+    k: int,
+    point_key: str,
+    dist: Callable[[int, int], Column],
+    window: Callable[[int, int, float], tuple[int, int, int, int]],
+    reach: Callable[[float], float],
+    unit: float,
+    full: float,
+    dist_field: StructField | None,
+) -> DataFrame:
+    """Exact top-k of each query, as a local frame of (query_id,
+    point_key[, dist_field], rank) ranked by (distance, key).
+
+    ``dist(qx, qy)``: the distance Column from literal query coords.
+    ``window(qx, qy, r)``: a µdeg box holding every point within radius
+    r (``x_lo > x_hi`` crosses ±180°). ``reach(d)``: the least radius
+    holding distance d. ``unit``: the radius of one µdeg. Every point
+    is within ``full``. ``dist_field=None`` leaves the distance out.
+
+    The start radius is the half-side of a square holding ~2k points at
+    the frame's mean density (one ``count()``; nothing is keyed or
+    persisted). A round filters the frame to each unresolved query's
+    window like a bbox query, takes its k nearest with
+    ``orderBy().limit(k)``, ranks them with ``row_number`` and collects
+    them with ``toArrow()``; each per-query top-k is one partition, so
+    the round needs no exchange and is one Spark job. A query is exact
+    once its k-th distance is within the radius, since any point
+    outside the window is farther; else the next radius is that k-th
+    distance, or double with fewer than k rows. At ``full`` the query
+    ranks the whole frame (k may exceed the rows). The result is a
+    local Arrow table, so no Python runs in its plan.
+    """
+    name = "dist" if dist_field is None else dist_field.name
+    n = points.count()
+    r0 = min(math.ceil(math.sqrt(2 * k * _DOMAIN_AREA_U / n) / 2 * unit), full) if n else full
+    at = {int(q): (int(x), int(y)) for q, x, y in queries}
+    radius = dict.fromkeys(at, r0)
+    w = Window.partitionBy("query_id").orderBy(name, point_key)
+    parts = []
+    while radius:
+        branches = []
+        for q, r in radius.items():
+            qx, qy = at[q]
+            cand = points if r >= full else bbox_query_dateline(points, *window(qx, qy, r))
+            branches.append(
+                cand.select(
+                    F.lit(q).cast("long").alias("query_id"),
+                    point_key,
+                    dist(qx, qy).alias(name),
+                )
+                .orderBy(name, point_key)
+                .limit(k)
+            )
+        cand = functools.reduce(DataFrame.unionAll, branches)
+        top = cand.withColumn("rank", F.row_number().over(w)).toArrow()
+        last = top.filter(pc.equal(top["rank"], k))
+        kth = dict(zip(last["query_id"].to_pylist(), last[name].to_pylist()))
+        done = []
+        for q, r in list(radius.items()):
+            nxt = reach(kth[q]) if q in kth else 2 * r
+            if r >= full or nxt <= r:
+                done.append(q)
+                del radius[q]
+            else:
+                radius[q] = nxt
+        parts.append(top.filter(pc.is_in(top["query_id"], pa.array(done, pa.int64()))))
+    fields = [StructField("query_id", LongType()), points.schema[point_key]]
+    fields += [dist_field] if dist_field else []
+    schema = StructType([*fields, StructField("rank", IntegerType(), False)])
+    if not parts:  # no queries
+        return spark.createDataFrame([], schema)
+    # the unfiltered full-frame round may differ from the windowed
+    # rounds in column nullability only
+    top = pa.concat_tables(parts, promote_options="permissive")
+    return spark.createDataFrame(top.select(schema.fieldNames()), schema=schema)
+
+
+def planar_window(qx: int, qy: int, r: int) -> tuple[int, int, int, int]:
+    """The radius-r square around (qx, qy): ``dist2 ≤ r²`` bounds both
+    |dx| and |dy| by r, so it holds every point within r."""
+    return qx - r, qy - r, qx + r, qy + r
 
 
 def knn(
@@ -33,9 +119,7 @@ def knn(
     points: DataFrame,
     queries: list[tuple[int, int, int]],  # (query_id, qx_u, qy_u)
     k: int,
-    res: int = 8,
     point_key: str = "event_id",
-    max_ring: int | None = None,
 ) -> DataFrame:
     """Exact kNN of each query point, planar metric on µdeg ints.
 
@@ -43,93 +127,19 @@ def knn(
     integer squared distance (deterministic, oracle-matchable); ties
     break by id (documented rule, FIXTURES.md §4).
     """
-    cell_span = WORLD_X_U >> res
-    n_side = 1 << res
-    if max_ring is None:
-        max_ring = n_side  # full-domain fallback (exactness guarantee)
 
-    # keyed once and persisted for the whole ladder — each round joins
-    # the same keyed table instead of re-scanning + re-keying it
-    pts = points.withColumn(
-        "_cell", cell_col(F.col("x_u"), F.col("y_u"), res)
-    ).persist()
+    def dist(qx: int, qy: int) -> Column:
+        dx = F.col("x_u") - F.lit(qx).cast("long")
+        dy = F.col("y_u") - F.lit(qy).cast("long")
+        return dx * dx + dy * dy
 
-    # density-derived starting ring: smallest ring whose (2r+1)² cells
-    # hold ≥ 2k points at the table's mean density. Starting at ring 1
-    # burns a full join+count round per doubling for queries in sparse
-    # regions; starting too large only admits extra candidates (the
-    # safe-distance gate below is what guarantees exactness either
-    # way). Same rationale as knn_join's density resolution.
-    n_pts = pts.count()
-    density = max(n_pts / float(4**res), 1e-12)
-    ring = 1
-    while (2 * ring + 1) ** 2 * density < 2 * k and ring < max_ring:
-        ring *= 2
-
-    while True:
-        cand_rows = []
-        for qid, qx, qy in queries:
-            c = cell_of_point(qx, qy, res)
-            for cc in kring(c, res, ring):
-                cand_rows.append((int(qid), int(qx), int(qy), int(cc)))
-        qdf = F.broadcast(
-            spark.createDataFrame(cand_rows, "query_id long, qx long, qy long, _cell long")
-        )
-        j = pts.join(qdf, "_cell", "inner")
-        dx = F.col("x_u") - F.col("qx")
-        dy = F.col("y_u") - F.col("qy")
-        cand = j.withColumn("dist2", dx * dx + dy * dy)
-
-        # a candidate at dist ≤ (ring)*cell_span is provably closer than
-        # anything outside the ring (ring+1 boundary ≥ ring*cell_span away)
-        safe_d = ring * cell_span
-        counts = {
-            r["query_id"]: r["n"]
-            for r in cand.where(F.col("dist2") <= safe_d * safe_d)
-            .groupBy("query_id")
-            .agg(F.count("*").alias("n"))
-            .collect()
-        }
-        if all(counts.get(q[0], 0) >= k for q in queries) or ring >= max_ring:
-            w = Window.partitionBy("query_id").orderBy("dist2", point_key)
-            out = (
-                cand.withColumn("rank", F.row_number().over(w))
-                .where(F.col("rank") <= k)
-                .select("query_id", point_key, "dist2", "rank")
-            )
-            # materialize the (≤ queries×k rows) result, then release
-            # the keyed table — without this every knn() call leaked a
-            # persisted copy of the point table into the cache manager
-            # for the session's lifetime (knn_join's pattern)
-            out = out.localCheckpoint(eager=True)
-            pts.unpersist()
-            return out
-        ring *= 2
-
-
-def knn_brute(
-    spark: SparkSession,
-    points: DataFrame,
-    queries: list[tuple[int, int, int]],
-    k: int,
-    point_key: str = "event_id",
-) -> DataFrame:
-    """Brute-force oracle twin (cross join), for tests and small inputs."""
-    qdf = F.broadcast(
-        spark.createDataFrame(
-            [(int(q), int(x), int(y)) for q, x, y in queries],
-            "query_id long, qx long, qy long",
-        )
-    )
-    dx = F.col("x_u") - F.col("qx")
-    dy = F.col("y_u") - F.col("qy")
-    w = Window.partitionBy("query_id").orderBy("dist2", point_key)
-    return (
-        points.crossJoin(qdf)
-        .withColumn("dist2", dx * dx + dy * dy)
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", point_key, "dist2", "rank")
+    return _ladder(
+        spark, points, queries, k, point_key, dist,
+        window=planar_window,
+        reach=lambda d2: math.isqrt(d2 - 1) + 1 if d2 else 0,  # ⌈√d2⌉
+        unit=1,
+        full=WORLD_X_U,
+        dist_field=StructField("dist2", LongType()),
     )
 
 
@@ -142,8 +152,8 @@ def knn_join(
 ) -> DataFrame:
     """Distributed kNN for LARGE query sets — queries live in a
     DataFrame, no per-query driver state (the cutover target for
-    ``knn``'s driver-side ring loop, which collects per-ring counts and
-    would thrash the driver at thousands of queries).
+    ``knn``'s driver-side window ladder, which plans one windowed scan
+    per query and would thrash the driver at thousands of queries).
 
     Round r probes a 3×3 neighbor-cell ring at resolution ``res - r``
     (coarsening doubles the covered distance while keeping 9 candidate
@@ -238,7 +248,7 @@ def knn_join(
             # final round: the single res-0 cell holds EVERY point, so
             # the window rank already IS the exact global rank — emit
             # best-effort top-k for every still-unresolved query
-            # (matching knn()'s max_ring exit: k > corpus size, or a
+            # (matching knn()'s full-frame round: k > corpus size, or a
             # k-th neighbor farther than a world span, must yield the
             # available neighbors, not zero rows)
             hit = ranked.where(F.col("rank") <= k).select(
@@ -271,10 +281,10 @@ def knn_auto(
     k: int,
     **kw,
 ) -> DataFrame:
-    """Route small query sets through the driver-ring knn() and large
-    ones through the distributed knn_join() — the documented cutover
-    (driver-side ring counts are fine for a handful of queries, a
-    scale hazard for thousands)."""
+    """Route small query sets through the driver-side ladder knn() and
+    large ones through the distributed knn_join() — the documented
+    cutover (one windowed scan per query is fine for a handful of
+    queries, a scale hazard for thousands)."""
     if len(queries) <= KNN_DISTRIBUTED_CUTOVER:
         return knn(spark, points, queries, k, **kw)
     qdf = spark.createDataFrame(

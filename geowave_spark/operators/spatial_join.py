@@ -147,15 +147,14 @@ def points_keyed_by_res(points: DataFrame, res_dim: DataFrame | list[int]) -> Da
     ``res``) or the levels as a list of ints, each keyed as a literal in
     one ``explode(array(...))``."""
     gx, gy = _grid_sql("x_u", LON_OFF_U), _grid_sql("y_u", LAT_OFF_U)
+    # each grid expression projected once, the keys read the columns
+    pts = points.selectExpr("*", f"{gx} AS _gx", f"{gy} AS _gy")
     if not isinstance(res_dim, DataFrame):
-        keys = ", ".join(_key_sql(str(int(r)), f"({gx})", f"({gy})") for r in res_dim)
+        keys = ", ".join(_key_sql(str(int(r)), "_gx", "_gy") for r in res_dim)
         jcell = f"explode(CAST(array({keys}) AS ARRAY<BIGINT>))"
-        return points.select("*", F.expr(jcell).alias("_jcell"))
-    pts = points.withColumns({"_gx": F.expr(gx), "_gy": F.expr(gy)})
-    keyed = pts.crossJoin(F.broadcast(res_dim))
-    return keyed.withColumn("_jcell", F.expr(_key_sql("res", "_gx", "_gy"))).drop(
-        "_gx", "_gy"
-    )
+    else:
+        pts, jcell = pts.crossJoin(F.broadcast(res_dim)), _key_sql("res", "_gx", "_gy")
+    return pts.selectExpr("*", f"{jcell} AS _jcell").drop("_gx", "_gy")
 
 
 def extent_point_join(

@@ -24,6 +24,10 @@ Supported grammar (a top-level AND of):
   ``col DURING <iso-instant>/<iso-instant>``    half-open [lo, hi)
   ``<any SQL-expressible predicate>``           residual post-filter
 
+With units 'meters'/'kilometers' DWITHIN is great-circle: its coarse
+box is ``operators/geodesic.geodesic_window`` (the containment argument
+is stated there), split at ±180° like a wrapped BBOX.
+
 A top-level ``OR`` disqualifies constraint extraction and the whole
 filter runs as one residual predicate over the full scan — the same
 degradation ``OptimalCQLQuery`` applies when it cannot derive
@@ -34,7 +38,6 @@ filter) raise rather than silently scanning.
 
 from __future__ import annotations
 
-import math
 import re
 from dataclasses import dataclass, field
 
@@ -43,12 +46,10 @@ from pyspark.sql import functions as F
 
 from geowave_spark.geom.udfs import geom_from_wkt
 from geowave_spark.geom.wkb import wkb_loads
-from geowave_spark.operators.geodesic import EARTH_R_M, dwithin_geodesic_col
-from geowave_spark.operators.spatial_query import bbox_query_dateline, polygon_query
+from geowave_spark.operators.geodesic import dwithin_geodesic_col, geodesic_window
+from geowave_spark.operators.knn import planar_window
+from geowave_spark.operators.spatial_query import bbox_query, bbox_query_dateline, polygon_query
 from geowave_spark.plans.sql_rewrite import _mask, _split_conjuncts
-
-# meters per µdeg of latitude on the mean sphere (meridional arc)
-_M_PER_UDEG = EARTH_R_M * math.pi / 180.0 / 1e6
 
 # spatial ops the engine refines exactly (point-applicable subset)
 _SPATIAL_OPS = {"INTERSECTS": "intersects", "WITHIN": "within"}
@@ -265,11 +266,9 @@ def apply_plan(
         if within:
             # sargable bbox coarse constraint first (DistanceQuery
             # stance, operators/distance_join.py), exact circle refine
-            df = df.where(
-                F.col(x_col).between(px - dist, px + dist)
-                & F.col(y_col).between(py - dist, py + dist)
-                & (d2 <= F.lit(int(dist) ** 2))
-            )
+            df = bbox_query(
+                df, *planar_window(px, py, dist), x_col=x_col, y_col=y_col
+            ).where(d2 <= F.lit(int(dist) ** 2))
         else:  # BEYOND — complement, no coarse constraint possible
             df = df.where(d2 > F.lit(int(dist) ** 2))
     if plan.dwithin_geo is not None:
@@ -278,33 +277,11 @@ def apply_plan(
             F.lit(px), F.lit(py), F.col(x_col), F.col(y_col), radius_m
         )
         if within:
-            # sargable coarse bbox first. Latitude: meridional distance
-            # between two latitudes never exceeds the great-circle
-            # distance, so |Δlat| ≤ radius/R always bounds candidates.
-            dy = int(math.ceil(radius_m / _M_PER_UDEG))
-            cond = F.col(y_col).between(py - dy, py + dy)
-            # Longitude: haversine ≥ 2R·asin(√(cosφ_q·cosφ_band)·
-            # sin(|Δλ|/2)) with φ_band the widest candidate latitude, so
-            # |Δλ| beyond the inverted bound is provably out of range —
-            # the latitude-corrected widening (safe_geo_radius_m's
-            # escape-route argument, inverted). Near a pole the cos
-            # product can dip below sin²(radius/2R): every longitude
-            # qualifies, so the lon constraint is dropped (correct,
-            # just unprunable — the documented pole-adjacent cost).
-            # Also dropped when the window would cross ±180° (a
-            # BETWEEN cannot express the wrap; refine stays exact).
-            phi_q = abs(py) / 1e6
-            phi_band = min(phi_q + dy / 1e6, 90.0)
-            cosprod = math.cos(math.radians(phi_q)) * math.cos(
-                math.radians(phi_band)
-            )
-            s = math.sin(radius_m / (2.0 * EARTH_R_M))
-            if cosprod > s * s:
-                dlam_deg = 2.0 * math.degrees(math.asin(s / math.sqrt(cosprod)))
-                dx = int(math.ceil(dlam_deg * 1e6))
-                if px - dx >= -180_000_000 and px + dx <= 180_000_000:
-                    cond = cond & F.col(x_col).between(px - dx, px + dx)
-            df = df.where(cond & refine)
+            # sargable coarse bbox first: the latitude-corrected window
+            # holding every point within the radius (wraps at ±180°)
+            df = bbox_query_dateline(
+                df, *geodesic_window(px, py, radius_m), x_col=x_col, y_col=y_col
+            ).where(refine)
         else:  # BEYOND — complement, refine only
             df = df.where(~refine)
     if plan.time is not None:

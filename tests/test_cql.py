@@ -252,9 +252,9 @@ def test_dwithin_meters_matches_brute_haversine(spark, sf_dir):
 
 
 def test_dwithin_meters_polar_and_antimeridian(spark, sf_dir):
-    """Both unprunable-lon branches: a pole-adjacent query (cos product
-    below sin²(r/2R)) and a window crossing ±180° — the lon constraint
-    drops, results stay haversine-exact."""
+    """A pole-adjacent query (cos product below sin²(r/2R): every
+    longitude qualifies) and a window crossing ±180° (split in two
+    longitude ranges) — results stay haversine-exact."""
     for px, py, r in (
         (0, 89_500_000, 500_000),  # 89.5°N, 500 km: engulfs the pole
         (179_500_000, 0, 1_000_000),  # 1000 km window crosses ±180°
@@ -267,6 +267,27 @@ def test_dwithin_meters_polar_and_antimeridian(spark, sf_dir):
         g = {x["event_id"] for x in got.select("event_id").collect()}
         w = {x["event_id"] for x in want.select("event_id").collect()}
         assert g == w
+
+
+def test_dwithin_meters_across_the_antimeridian_pushes_an_x_constraint(
+    spark, sf_dir, tmp_path
+):
+    """A DWITHIN-'meters' window crossing ±180° wraps through the
+    dateline split instead of dropping its longitude constraint: the
+    parquet scan's pushed filters carry x_u, and the rows are still
+    the brute haversine rows."""
+    path = str(tmp_path / "ev.parquet")
+    events_points(spark, sf_dir).write.parquet(path)
+    stored = spark.read.parquet(path)
+    px, py, r = 179_500_000, 0, 1_000_000  # 1000 km around 179.5°E
+    got = cql_filter(stored, f"DWITHIN(geom, POINT({px} {py}), {r}, 'meters')")
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    pushed = [ln.split("PushedFilters")[1] for ln in plan.split("\n") if "PushedFilters" in ln]
+    assert pushed and "GreaterThanOrEqual(x_u," in pushed[0], plan
+    want = _brute_geo(spark, sf_dir, px, py, r)
+    g = {x["event_id"] for x in got.select("event_id").collect()}
+    w = {x["event_id"] for x in want.select("event_id").collect()}
+    assert g == w and len(g) > 0
 
 
 def test_beyond_meters_complement(spark, sf_dir):

@@ -12,14 +12,13 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
+from knn_oracles import knn_geodesic_brute
+
 from geowave_spark.operators.geodesic import (
     EARTH_R_M,
     dwithin_geodesic_col,
     haversine_m,
     knn_geodesic,
-    knn_geodesic_brute,
-    kring_wrap,
-    safe_geo_radius_m,
 )
 from geowave_spark.operators.knn import knn
 from geowave_spark.sources.testgeo import events_points
@@ -34,9 +33,10 @@ def _ranks(df):
 
 
 def test_geodesic_matches_brute_force(spark, sf_dir):
-    """Ring-ladder kNN must equal the brute cross-join under the same
+    """Window-ladder kNN must equal the brute cross-join under the same
     haversine metric — including the 70°N and near-antimeridian
-    queries where the ring logic does real work."""
+    queries where the latitude-corrected, wrapping window does real
+    work."""
     queries = [(1, 0, 0), (2, 20_000_000, 70_000_000), (3, 179_000_000, -50_000_000)]
     pts = events_points(spark, sf_dir)
     got = _ranks(knn_geodesic(spark, pts, queries, K))
@@ -63,9 +63,9 @@ def test_planar_and_geodesic_diverge_at_high_latitude(spark, sf_dir):
 
 def test_antimeridian_wrap_finds_cross_dateline_neighbors(spark):
     """A planted neighbor 0.2° across the dateline is geodesically
-    ~15 km away; the wrap-aware ring must return it as the nearest —
-    a clamped (non-wrapping) ring would only see the distant same-side
-    points."""
+    ~15 km away; the wrapping window must return it as the nearest —
+    a clamped (non-wrapping) window would only see the distant
+    same-side points."""
     rows = [
         (1, 179_900_000, 0),      # query side, near the antimeridian
         (2, -179_900_000, 0),     # 0.2° across the dateline (~22 km)
@@ -78,37 +78,28 @@ def test_antimeridian_wrap_finds_cross_dateline_neighbors(spark):
     assert got == [1, 2]  # itself, then the cross-dateline point
 
 
-def test_kring_wrap_is_cyclic_in_lon_clamped_in_lat(spark):
-    from geowave_spark.index.zorder import cell_of_point, morton_decode
-
-    res = 4
-    n = 1 << res
-    # cell at the east edge, mid latitude
-    c = cell_of_point(179_000_000, 0, res)
-    cells = kring_wrap(c, res, 1)
-    gxs = {morton_decode(cc)[0] for cc in cells}
-    assert {0, n - 1, n - 2} <= gxs  # wrapped across the edge
-    # cell at the north edge: no wrap in latitude
-    c2 = cell_of_point(0, 179_000_000, res)
-    cells2 = kring_wrap(c2, res, 1)
-    gys = {morton_decode(cc)[1] for cc in cells2}
-    assert 0 not in gys and len(cells2) == 6
-
-
-def test_safe_radius_latitude_correction():
-    """The ring-sufficiency radius must shrink with latitude (the
-    lon-escape bound scales by cos) and stay a true lower bound of the
-    equatorial arc length."""
-    res, ring = 8, 4
-    span = 360.0 / (1 << res)
-    eq = safe_geo_radius_m(0.0, ring, res)
-    hi = safe_geo_radius_m(70.0, ring, res)
-    polar = safe_geo_radius_m(89.9, ring, res)
-    assert polar < hi < eq
-    assert eq <= EARTH_R_M * math.radians(ring * span) + 1e-6
-    assert polar >= 0.0
-    # monotone in ring at fixed latitude
-    assert safe_geo_radius_m(45.0, 8, res) > safe_geo_radius_m(45.0, 4, res)
+def test_geodesic_matches_brute_over_150_queries(spark, sf_dir):
+    """150 queries spread over the globe, plus the hard places: above
+    80° of latitude in both hemispheres and at ±179.9° of longitude,
+    where windows span every longitude or wrap across ±180°."""
+    queries = [
+        (i, (i * 7_919_993) % 360_000_000 - 180_000_000,
+         (i * 3_644_437) % 170_000_000 - 85_000_000)
+        for i in range(140)
+    ]
+    queries += [
+        (140 + j, x, y)
+        for j, (x, y) in enumerate([
+            (179_900_000, 0), (-179_900_000, 0), (179_900_000, 84_000_000),
+            (-179_900_000, -84_000_000), (0, 82_000_000), (90_000_000, -81_500_000),
+            (180_000_000, 45_000_000), (-180_000_000, -45_000_000),
+            (45_000_000, 89_900_000), (-135_000_000, -89_900_000),
+        ])
+    ]
+    pts = events_points(spark, sf_dir)
+    got = _ranks(knn_geodesic(spark, pts, queries, 5))
+    exp = _ranks(knn_geodesic_brute(spark, pts, queries, 5))
+    assert got == exp and len(got) == 150 * 5
 
 
 def test_dwithin_geodesic_high_latitude_semantics(spark):

@@ -396,3 +396,39 @@ def test_point_join_leaves_no_persistent_rdds(spark):
         geoms = lsh.where(F.col("s_suppkey") % 5 != i)
         geom_point_join(pts, geoms, "intersects", geom_key="s_suppkey").collect()
     assert sc._jsc.getPersistentRDDs().size() == before
+
+
+def test_geom_keys_udf_is_built_once_per_parameter_set(spark, monkeypatch):
+    """The keying pandas UDF is memoized: a second geom_keys build with
+    the same parameters creates no Python function object in the JVM
+    and sends fewer gateway commands (the UDF build is ~19 commands in
+    a warm session, ~37 in a fresh one)."""
+    from geowave_spark.operators import geom_join
+
+    lsh = supplier_lshapes(spark, SF)
+    client = spark.sparkContext._gateway._gateway_client
+    real = client.send_command
+
+    def commands(build) -> list[str]:
+        sent = []
+
+        def recording(command, *a, **kw):
+            sent.append(command)
+            return real(command, *a, **kw)
+
+        monkeypatch.setattr(client, "send_command", recording)
+        try:
+            build()
+        finally:
+            monkeypatch.undo()
+        return sent
+
+    def udf_objects(sent) -> int:
+        return sum("PythonFunction" in c for c in sent)
+
+    geom_join._keys_udf.cache_clear()
+    first = commands(lambda: geom_join.geom_keys(lsh))
+    second = commands(lambda: geom_join.geom_keys(lsh))
+    assert udf_objects(first) > 0 and udf_objects(second) == 0
+    assert len(first) - len(second) >= 15, (len(first), len(second))
+    assert len(geom_join.geom_keys(lsh).select("res", "cells").collect()) == lsh.count()

@@ -1,10 +1,12 @@
-"""kNN ring expansion vs brute-force window oracle (NNMapReduce top-K
-semantics, NNMapReduce.java:60-95)."""
+"""kNN window ladder and distributed ladder vs the brute-force oracle
+(NNMapReduce top-K semantics, NNMapReduce.java:60-95)."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from geowave_spark.operators.knn import knn, knn_brute
+from knn_oracles import knn_brute, knn_geodesic_brute
+
+from geowave_spark.operators.knn import knn
 from geowave_spark.sources.testgeo import events_points
 
 QUERIES = [
@@ -35,8 +37,7 @@ def test_knn_matches_brute(spark, points, k):
 def test_knn_join_matches_brute_large_queryset(spark):
     """Distributed knn_join (resolution-ladder rounds, no per-query
     driver state) must equal brute force over a large query set."""
-    from geowave_spark.operators.knn import knn_brute, knn_join
-    from geowave_spark.sources.testgeo import events_points
+    from geowave_spark.operators.knn import knn_join
 
     pts = events_points(spark, "/root/testdata/sf0.001")
     queries = [(i, (i * 7_919_993) % 300_000_000 - 150_000_000,
@@ -112,3 +113,106 @@ def test_knn_join_best_effort_when_k_exceeds_corpus(spark):
         out.sort_values(key).reset_index(drop=True)[["query_id", "event_id", "dist2"]]
         .equals(exp.sort_values(key).reset_index(drop=True)[["query_id", "event_id", "dist2"]])
     )
+
+
+def _jobs(spark, run) -> int:
+    """Spark jobs started by ``run()`` (a job group tags them; a probe
+    job after it marks the point where every job event has arrived)."""
+    import time
+    import uuid
+
+    sc, group, probe = spark.sparkContext, f"knn-{uuid.uuid4()}", f"probe-{uuid.uuid4()}"
+    try:
+        sc.setJobGroup(group, group)
+        run()
+        sc.setJobGroup(probe, probe)
+        spark.range(1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    for _ in range(200):
+        if tracker.getJobIdsForGroup(probe):
+            break
+        time.sleep(0.05)
+    return len(tracker.getJobIdsForGroup(group))
+
+
+def _plan_node_names(df) -> list[str]:
+    names = []
+
+    def walk(p):
+        names.append(p.nodeName())
+        children = p.children()
+        for i in range(children.size()):
+            walk(children.apply(i))
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return names
+
+
+@pytest.fixture(scope="module")
+def snapshot_store(spark, sf_dir, tmp_path_factory):
+    from geowave_spark.api import DataStore
+    from geowave_spark.sources.icetable import IceTable
+
+    t = IceTable(str(tmp_path_factory.mktemp("knn_snap") / "ev"))
+    t.commit_write(events_points(spark, sf_dir), mode="overwrite", stats_cols=["x_u", "y_u"])
+    ds = DataStore(spark)
+    ds.add_snapshot_type("ev", t)
+    return ds
+
+
+@pytest.mark.parametrize("metric", ["planar", "geodesic"])
+def test_single_query_knn_job_budget_and_no_persisted_rdds(spark, snapshot_store, metric):
+    """One query over a snapshot type runs at most 5 Spark jobs from
+    build through collect() (a count for the start radius, one job per
+    window round); five calls persist no RDD; the returned frame is a
+    local table with no Python node."""
+    from geowave_spark.operators.geodesic import knn_geodesic
+
+    ds = snapshot_store
+    q = [(0, -73_950_000, 40_700_000)]
+
+    def build():
+        if metric == "planar":
+            return ds.knn("ev", q, 10)
+        return knn_geodesic(spark, ds.type("ev"), q, 10)
+
+    def persistent_ids():
+        # ids, not a count: earlier tests' RDDs may be released meanwhile
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    build().collect()  # first call: one-time snapshot and plan lookups
+    before = persistent_ids()
+    out = {}
+    assert _jobs(spark, lambda: out.update(rows=build().collect())) <= 5
+    assert len(out["rows"]) == 10
+    for _ in range(4):
+        df = build()
+        assert len(df.collect()) == 10
+    assert persistent_ids() <= before
+    names = _plan_node_names(df)
+    assert names == ["LocalTableScan"], names
+
+
+@pytest.mark.parametrize("metric", ["planar", "geodesic"])
+def test_k_beyond_the_frame_and_empty_frame(spark, metric):
+    """k larger than the frame returns every row per query, ranked; an
+    empty frame returns no rows with the schema of a non-empty call, and
+    so does an empty query list."""
+    from geowave_spark.operators.geodesic import knn_geodesic
+
+    pts = spark.createDataFrame(
+        [(i, i * 1_000_000, (-1) ** i * 2_000_000) for i in range(7)],
+        "event_id LONG, x_u LONG, y_u LONG",
+    )
+    queries = [(1, 0, 0), (2, 179_000_000, -80_000_000)]
+    run, brute = (knn, knn_brute) if metric == "planar" else (knn_geodesic, knn_geodesic_brute)
+    got = run(spark, pts, queries, 20)
+    exp = brute(spark, pts, queries, 20)
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, exp.collect()))
+    assert got.count() == 14
+    empty = run(spark, pts.where("false"), queries, 5)
+    assert empty.collect() == []
+    assert empty.schema == got.schema
+    assert run(spark, pts, [], 5).collect() == []

@@ -14,7 +14,6 @@ from geowave_spark.index.zorder import (
     cell_of_point,
     decode_cell,
     grid_coord,
-    kring,
     morton_decode,
     morton_encode,
     parent_cell,
@@ -82,19 +81,6 @@ def test_bbox_ranges_cover_inner_points(x0, y0, x1, y1, res):
     for px, py in probes:
         c = cell_of_point(px, py, res)
         assert any(lo <= c <= hi for lo, hi in ranges)
-
-
-@given(coord, coord, st.integers(min_value=0, max_value=3))
-@settings(max_examples=50)
-def test_kring_contains_center_and_symmetric(x, y, ring):
-    res = 8
-    c = cell_of_point(x, y, res)
-    cells = kring(c, res, ring)
-    assert c in cells
-    assert len(cells) <= (2 * ring + 1) ** 2
-    # symmetry: center is in the kring of every member (same ring)
-    for m in cells[:5]:
-        assert c in kring(m, res, ring)
 
 
 @given(coord, coord, coord, coord)

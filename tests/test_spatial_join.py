@@ -2,6 +2,8 @@
 (GeoWaveSparkSpatialJoinIT.java:104-172: indexed.except(brute) empty,
 equal counts, per side)."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -148,15 +150,21 @@ def test_box_join_builds_in_few_gateway_commands(spark, monkeypatch):
 
 def test_points_keyed_at_literal_levels_match_the_res_dimension(spark, points):
     """Keying the points at a list of res levels gives the same
-    (point, key) rows as crossing them with a distinct-res frame; an
-    empty list keys nothing."""
+    (point, key) rows as crossing them with a distinct-res frame, with
+    each grid expression in the plan once; an empty list keys
+    nothing."""
     from geowave_spark.operators.spatial_join import points_keyed_by_res
 
     pts = points.limit(500)
     levels = [3, 9, 16]
     dim = spark.createDataFrame([(r,) for r in levels], "res int")
     by_frame = points_keyed_by_res(pts, dim).select("event_id", "_jcell").collect()
-    by_list = points_keyed_by_res(pts, levels).select("event_id", "_jcell").collect()
+    keyed = points_keyed_by_res(pts, levels)
+    by_list = keyed.select("event_id", "_jcell").collect()
     assert len(by_list) == 1500
     assert sorted(by_list) == sorted(by_frame)
     assert points_keyed_by_res(pts, []).count() == 0
+    # each POINT_RES grid expression is analysed once, not once per level
+    analysed = keyed._jdf.queryExecution().analyzed().toString()
+    assert len(re.findall(r"cast\(x_u#\d+L as bigint\)", analysed)) == 1
+    assert len(re.findall(r"cast\(y_u#\d+L as bigint\)", analysed)) == 1

@@ -10,7 +10,6 @@ from geowave_spark.index.zorder import (
     cells_of_points,
     decode_cell,
     grid_coord,
-    kring,
     morton_decode,
     morton_encode,
     parent_cell,
@@ -69,21 +68,6 @@ def test_parent_cell_consistent():
     for d in [1, 3, 8]:
         coarse = cell_of_point(x_u, y_u, 16 - d)
         assert parent_cell(fine, d) == coarse
-
-
-def test_kring_counts_and_membership():
-    c = cell_of_point(10_000_000, 10_000_000, 10)
-    r0 = kring(c, 10, 0)
-    assert r0 == [c]
-    r1 = kring(c, 10, 1)
-    assert len(r1) == 9 and c in r1
-    r2 = kring(c, 10, 2)
-    assert len(r2) == 25
-
-
-def test_kring_clamps_at_boundary():
-    corner = morton_encode(0, 0)
-    assert len(kring(corner, 10, 1)) == 4
 
 
 def test_bbox_ranges_cover_exact_cells():
