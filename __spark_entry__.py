@@ -1054,7 +1054,8 @@ def _q_geom_poly_join(spark, sf):
 
 def _q_geom_line_join(spark, sf):
     """Linestrings × non-convex polygons — true geometry×geometry join
-    (both sides polyfilled, two-branch cross-resolution equi-join)."""
+    (both sides polyfilled and read by one bounded collect each, then
+    one cross-resolution equi-join on a packed BIGINT key)."""
     from geowave_spark.operators.geom_join import geom_geom_join
 
     return geom_geom_join(

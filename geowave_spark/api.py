@@ -212,8 +212,12 @@ class DataStore:
     ) -> DataFrame:
         """General-geometry join (non-convex polygons, linestrings,
         geometry×geometry) on any CompareOperation or within-distance —
-        the TieredSpatialJoin full surface. Sides must carry a WKB
-        ``geom`` column (override with left_geom/right_geom)."""
+        the TieredSpatialJoin full surface, as ``geom_geom_join``: a
+        side under its byte cap is read by one bounded collect and
+        persists nothing; any other is keyed once into a local
+        checkpoint, which lives until its frame is garbage-collected.
+        The sides meet in one packed-key equi-join. Sides must carry a
+        WKB ``geom`` column (override with left_geom/right_geom)."""
         from geowave_spark.operators.geom_join import geom_geom_join
 
         return geom_geom_join(

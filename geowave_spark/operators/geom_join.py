@@ -15,37 +15,39 @@ Plan shape (idiomatic-Spark re-expression of the tier algorithm):
 
   reference                               engine
   ---------                               ------
-  tiered insertion ids per geometry       per-row (res, cells[]) from an
-  (≤80, trimIndexIds)                     Arrow-batched polyfill UDF
-                                          (cells intersecting the geom,
-                                          ≤ max_cells — index/polyfill.py)
-  collect distinct tiers per side         tiny distinct-res dims,
-  (TieredSpatialJoin.java:174-191)        broadcast — no driver collect
-  reprojectToTier cross-tier re-key       coarsen the finer side's cell
-  (:471-511)                              array to the other side's res
-                                          (array_distinct of exact
-                                          parent shifts, pre-explode)
-  same-tier cogroup + nested loop         TWO equi-joins on (res, cell):
-  (:513-551)                              right-res ≤ left-res via
-                                          coarsened-left × natural-right,
-                                          strictly-finer right via
-                                          natural-left × coarsened-right
-                                          (disjoint by construction)
-  exact predicate refinement              vectorized predicates
-                                          (geom/udfs.pair_pred_batch:
-                                          batch WKB parse cache + numpy
-                                          point-group kernels)
-  reduceByKey keep-first + DedupeFilter   dropDuplicates on the candidate
-  (:343-349)                              key pair BEFORE refinement —
-                                          candidates shuffle as key-only
-                                          tuples (payloads join back to
-                                          the deduped pair set from the
-                                          checkpointed keyed frames, so
-                                          WKB never rides the cell
-                                          explode), then a post-refine
-                                          dedupe collapses duplicate-key
-                                          re-expansion
+  tiered insertion ids per geometry       per-row (res, cells[]) polyfill
+  (≤80, trimIndexIds)                     (≤ max_cells — index/polyfill.py,
+                                          _geom_cover)
+  collect distinct tiers per side         per side: ONE bounded collect
+  (TieredSpatialJoin.java:174-191)        under BC_MAX_BYTES, keyed from
+                                          the driver's cover cache or by
+                                          one job across the cores; else
+                                          keyed once by an Arrow UDF into
+                                          a checkpoint + ONE aggregate
+  reprojectToTier cross-tier re-key       coarsen one side's cells to the
+  (:471-511)                              other side's levels (distinct
+                                          exact parent shifts)
+  same-tier cogroup + nested loop         ONE equi-join on one packed
+  (:513-551)                              BIGINT key (below)
+  exact predicate refinement              vectorized predicates, each
+                                          distinct pair once per batch
+  reduceByKey keep-first + DedupeFilter   reference-point filter, else
+  (:343-349)                              dropDuplicates of key pairs; a
+                                          fact side's WKB joins back to
+                                          the deduped pairs, never rides
+                                          the cell explode
   semi/anti output (:362-378)             how='leftsemi' / 'leftanti'
+
+The join key is ``(b << 53) | (m << 48) | (gx << 32) | gy``: a packed
+cell (gx, gy) at res m ≤ POINT_RES = 16 (spatial_join's key layout)
+and a branch bit b. The left side emits its cells coarsened to each
+right level m ≤ its res with b = 0 and its natural cells with b = 1;
+the right side emits its natural cells with b = 0 and its cells
+coarsened to each left level m strictly below its res with b = 1. So
+b = 0 meets a pair whose right res is ≤ the left's at the right's res,
+b = 1 a pair whose right side is strictly finer at the left's res: each
+pair meets at m = min(res_l, res_r), in one branch, once per shared
+cell.
 
 Correctness of the cross-res rule: the set of parents (at res m) of the
 cells intersecting g at a finer res IS polyfill(g, m) — children
@@ -56,31 +58,31 @@ exact covers at the same resolution.
 
 from __future__ import annotations
 
+import contextlib
 import functools
 import math
+import uuid
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import BooleanType
+from pyspark.sql.types import BooleanType, LongType, StructField, StructType
 
 from geowave_spark.geom import predicates as P
-from geowave_spark.geom.predicates import (
-    points_distance_to_geom,
-    points_pred_batch,
-)
+from geowave_spark.geom.predicates import points_distance_to_geom, points_pred_batch
 from geowave_spark.geom.wkb import box, wkb_loads
-from geowave_spark.index.native import _packed_cell
 from geowave_spark.index.polyfill import polyfill
 from geowave_spark.index.zorder import morton_decode, pick_res_for_extent
-from geowave_spark.operators.spatial_join import POINT_RES, _join_key, extent_point_join
-from geowave_spark import X_SCALE
+from geowave_spark.operators.spatial_join import POINT_RES, _grid_sql, _join_key, extent_point_join
+from geowave_spark import LAT_OFF_U, LON_OFF_U, X_SCALE
 
 DEFAULT_MAX_CELLS = 32
 
-# shared across UDF instances within a python worker (see _keys_udf)
+# _geom_cover's cache, one per process (each Python worker, the driver)
 _POLYFILL_CACHE: dict = {}
+_POLYFILL_CACHE_MAX = 65536
 
 _ARROW_BATCH = 65536
 
@@ -104,114 +106,87 @@ def _widen_arrow_batches(spark) -> None:
         spark.conf.set(k, str(_ARROW_BATCH))
 
 
+_KEYS_DDL = "res int, cells array<long>, bx0 long, by0 long, bx1 long, by1 long, rect boolean"
+
+
+def _geom_cover(wkb: bytes, params: tuple) -> tuple:
+    """(res, cells, (bx0, by0, bx1, by1), rect) of one µdeg WKB geometry
+    under ``params`` = (max_cells, finest_res, buffer_u): the insertion
+    ids of getRowIdsAtTier / decomposeRangesForEntry
+    (TieredSFCIndexStrategy.java:369-407) with the trim of
+    RDDUtils.trimIndexIds:158-184. ``buffer_u`` expands the cover
+    outward for distance predicates (getBufferAmount semantics,
+    TieredSpatialJoin.java:146,413-419). Cached per process: a Python
+    worker, or the driver keying a collected side, is reused across
+    queries, so keying an unchanged table again is near-free. A cold
+    cover costs ~0.4 ms per L-shape."""
+    hit = _POLYFILL_CACHE.get((params, wkb))
+    if hit is not None:
+        return hit
+    from geowave_spark.geom.udfs import _as_box_bounds
+    from geowave_spark.geom.wkb import Geometry
+
+    if len(_POLYFILL_CACHE) >= _POLYFILL_CACHE_MAX:
+        _POLYFILL_CACHE.clear()
+    max_cells, finest_res, buffer_u = params
+    g = wkb_loads(wkb)
+    # axis-aligned rectangles: every bbox-cover cell intersects the
+    # geometry — trimming is a no-op, the cover is the closed-bbox
+    # cover, and bounds fully describe the geometry (native refine /
+    # reference-point dedupe both key off this flag)
+    is_rect = _as_box_bounds(g) is not None
+    gx0, gy0, gx1, gy1 = g.bounds
+    x0, y0, x1, y1 = gx0 - buffer_u, gy0 - buffer_u, gx1 + buffer_u, gy1 + buffer_u
+    r = min(pick_res_for_extent(int(x1 - x0), int(y1 - y0), max_cells), finest_res)
+    if buffer_u == 0:
+        # polyfill operates in degrees — scale down once
+        g_deg = Geometry(g.gtype, [p / X_SCALE for p in g.parts], g.poly_ring_counts)
+        cells = polyfill(g_deg, r, exact_trim=not is_rect)
+    else:
+        cells = polyfill(box(x0 / X_SCALE, y0 / X_SCALE, x1 / X_SCALE, y1 / X_SCALE), r)
+    # store cells as packed (gx<<32 | gy), not Morton: the join only
+    # needs a bijective cell id, and packed ids keep every derived
+    # expression (parent shift, the reference-point cell in the dedupe
+    # filter) a handful of shift/mask ops — Morton spread/compact trees
+    # blow up Catalyst filter codegen (see index/native.py _spread_col
+    # pitfall note)
+    if cells:
+        cgx, cgy = morton_decode(np.asarray(cells, dtype=np.int64))
+        cells = ((cgx << 32) | cgy).tolist()
+    bounds = (int(round(gx0)), int(round(gy0)), int(round(gx1)), int(round(gy1)))
+    hit = _POLYFILL_CACHE[(params, wkb)] = (r, cells, bounds, is_rect)
+    return hit
+
+
+def _covers_frame(covers: list) -> pd.DataFrame:
+    """The ``_KEYS_DDL`` columns of a list of ``_geom_cover`` results."""
+    b = np.asarray([c[2] for c in covers], dtype=np.int64).reshape(-1, 4)
+    return pd.DataFrame({
+        "res": np.asarray([c[0] for c in covers], dtype=np.int32),
+        "cells": pd.Series([c[1] for c in covers], dtype=object),
+        "bx0": b[:, 0], "by0": b[:, 1], "bx1": b[:, 2], "by1": b[:, 3],
+        "rect": np.asarray([c[3] for c in covers], dtype=bool),
+    })
+
+
 @functools.lru_cache(maxsize=64)
 def _keys_udf(sc, max_cells: int, finest_res: int, buffer_u: int, scale: int):
-    """(wkb) -> struct(res int, cells array<long>): the insertion-id
-    computation for arbitrary geometries (getRowIdsAtTier /
-    decomposeRangesForEntry analog, TieredSFCIndexStrategy.java:369-407)
-    with the trim of RDDUtils.trimIndexIds:158-184. ``buffer_u``
-    expands the cover outward for distance predicates (getBufferAmount
-    semantics, TieredSpatialJoin.java:146,413-419). Built once per
-    parameter set: building a pandas UDF (pickle + JVM function
-    object) costs ~37 gateway commands. The SparkContext ``sc`` is
-    part of the key because the JVM function object carries that
-    context's Python accumulator."""
+    """(wkb) -> struct of ``_KEYS_DDL``: ``_geom_cover`` per row. Built
+    once per parameter set: building a pandas UDF (pickle + JVM function
+    object) costs ~37 gateway commands. The SparkContext ``sc`` is part
+    of the key because the JVM function object carries that context's
+    Python accumulator."""
 
     params = (max_cells, finest_res, buffer_u)
 
-    @F.pandas_udf(
-        "res int, cells array<long>, bx0 long, by0 long, bx1 long, by1 long, rect boolean"
-    )
+    @F.pandas_udf(_KEYS_DDL)
     def run(wkbs: pd.Series) -> pd.DataFrame:
-        from geowave_spark.geom.wkb import Geometry
+        # reached through the imported module: this closure is pickled
+        # by value, and the cache global of a function pickled with it
+        # would arrive as a fresh copy with every task
         from geowave_spark.operators import geom_join
 
-        # worker-lifetime cache, reached through the imported module:
-        # this closure is pickled by value, and a global it names
-        # directly would arrive as a fresh copy with every task, so
-        # nothing would carry over. Python workers are reused across
-        # tasks and queries, so repeated keying of the same geometries
-        # (every call of a join over an unchanged table) is near-free.
-        cache = geom_join._POLYFILL_CACHE
-        n = len(wkbs)
-        res_out = np.empty(n, dtype=np.int32)
-        cells_out = []
-        bounds_out = np.empty((n, 4), dtype=np.int64)
-        rect_out = np.empty(n, dtype=bool)
-        for i, b in enumerate(wkbs):
-            bb = (params, bytes(b))
-            hit = cache.get(bb)
-            if hit is None:
-                if len(cache) >= 65536:
-                    cache.clear()
-                g = wkb_loads(bb[1])  # µdeg coordinates
-                from geowave_spark.geom.udfs import _as_box_bounds
-
-                # axis-aligned rectangles: every bbox-cover cell
-                # intersects the geometry — trimming is a no-op, the
-                # cover is the closed-bbox cover, and bounds fully
-                # describe the geometry (native refine / reference-
-                # point dedupe both key off this flag)
-                is_rect = _as_box_bounds(g) is not None
-                gx0, gy0, gx1, gy1 = g.bounds
-                if buffer_u == 0:
-                    # polyfill operates in degrees — scale down once
-                    g_deg = Geometry(
-                        g.gtype, [p / X_SCALE for p in g.parts], g.poly_ring_counts
-                    )
-                    r = min(
-                        pick_res_for_extent(
-                            int(gx1 - gx0), int(gy1 - gy0), max_cells
-                        ),
-                        finest_res,
-                    )
-                    cells = polyfill(g_deg, r, exact_trim=not is_rect)
-                else:
-                    x0, y0 = gx0 - buffer_u, gy0 - buffer_u
-                    x1, y1 = gx1 + buffer_u, gy1 + buffer_u
-                    r = min(
-                        pick_res_for_extent(
-                            int(x1 - x0), int(y1 - y0), max_cells
-                        ),
-                        finest_res,
-                    )
-                    cells = polyfill(
-                        box(x0 / X_SCALE, y0 / X_SCALE, x1 / X_SCALE, y1 / X_SCALE),
-                        r,
-                    )
-                # store cells as packed (gx<<32 | gy), not Morton: the
-                # join only needs a bijective cell id, and packed ids
-                # keep every derived expression (parent shift, the
-                # reference-point cell in the dedupe filter) a handful
-                # of shift/mask ops — Morton spread/compact trees
-                # blow up Catalyst filter codegen (see index/native.py
-                # _spread_col pitfall note)
-                if cells:
-                    mc = np.asarray(cells, dtype=np.int64)
-                    cgx, cgy = morton_decode(mc)
-                    cells = ((cgx << 32) | cgy).tolist()
-                hit = (
-                    r,
-                    cells,
-                    (int(round(gx0)), int(round(gy0)), int(round(gx1)), int(round(gy1))),
-                    is_rect,
-                )
-                cache[bb] = hit
-            res_out[i] = hit[0]
-            cells_out.append(hit[1])
-            bounds_out[i] = hit[2]
-            rect_out[i] = hit[3]
-        return pd.DataFrame(
-            {
-                "res": res_out,
-                "cells": cells_out,
-                "bx0": bounds_out[:, 0],
-                "by0": bounds_out[:, 1],
-                "bx1": bounds_out[:, 2],
-                "by1": bounds_out[:, 3],
-                "rect": rect_out,
-            }
-        )
+        return geom_join._covers_frame([geom_join._geom_cover(bytes(b), params) for b in wkbs])
 
     return run
 
@@ -238,135 +213,186 @@ def geom_keys(
     return df.withColumn("_keys", k).select("*", "_keys.*").drop("_keys")
 
 
-_M32_PACK = (1 << 32) - 1
-
-
-def _packed_parent(c: Column, d_res: Column) -> Column:
-    """Ancestor of a packed (gx<<32 | gy) cell id: shift each half by
-    d_res (reprojectToTier analog, TieredSFCIndexStrategy.java:514-535).
-    ``shiftright`` via call_function accepts a column shift count; ids
-    are non-negative so arithmetic shift is exact."""
-    gx = F.call_function("shiftright", F.shiftright(c, 32), d_res)
-    gy = F.call_function("shiftright", c.bitwiseAND(F.lit(_M32_PACK)), d_res)
-    return _packed_cell(gx, gy)
-
-
-def _coarsen_to(cells: Column, d_res: Column) -> Column:
-    """Distinct exact parent cells (pre-explode so duplicates collapse
-    before they multiply join candidates)."""
-    return F.array_distinct(F.transform(cells, lambda c: _packed_parent(c, d_res)))
-
-
-# per-side payload-dictionary cap for the auto broadcast decision: a
-# side whose total WKB exceeds this is never collect()ed to the driver
-# (the 100×-scale hazard: the fact side of a fact×dim geometry join)
+# a side whose WKB total is over this is never read to the driver's
+# Python process (the 100×-scale hazard: the fact side of a fact×dim
+# geometry join)
 BC_MAX_BYTES = 64 << 20
 
-# below this EXACT per-side WKB size the keyed frames keep their
-# persist() mark instead of eager-localCheckpointing (see
-# geom_geom_join) — the checkpoint's block copy is a fixed latency
-# that only pays for itself when recomputing the Arrow polyfill would
-# cost more than the copy
-EAGER_CKPT_MIN_BYTES = 32 << 20
+# a collected side with more distinct geometries missing from the
+# driver's cover cache than this is keyed by one job across the cores,
+# not serially on the driver
+DRIVER_COVER_MAX = 1024
 
 
-def _payload_dict(pairs, key: str, strict: bool) -> dict | None:
-    """{key: wkb} from (key, wkb) pairs. Keys must map to ONE geometry —
-    a conflicting duplicate would silently refine candidates against
-    the wrong geometry (same validation stance as DataStore.delete).
-    Byte-identical duplicate rows are deduped (the dict is still
-    correct). On a CONFLICTING duplicate: raise when ``strict`` (caller
-    forced broadcasting), else return None so the auto path degrades to
-    the WKB-carrying shuffle refine instead of failing a join that
-    works without broadcasting."""
+def _payload_dict(pairs) -> dict | None:
+    """{key: wkb} from (key, wkb) pairs; None when a key maps to two
+    different geometries (a refine would silently read the wrong one),
+    so the caller falls back to its row-carried refine."""
     d = {}
     for k, wkb in pairs:
         wkb = bytes(wkb)
         if d.setdefault(k, wkb) != wkb:
-            if strict:
-                raise ValueError(
-                    f"geom join: key column {key!r} maps value {k!r} to "
-                    "multiple distinct geometries — the broadcast payload "
-                    "dictionary requires one geometry per key (pass a "
-                    "unique id, or disable broadcasting for this side)"
-                )
             return None
     return d
 
 
-def _collect_payload_dict(sc, df: DataFrame, key: str, geom_col: str, strict: bool = True):
-    """Broadcast {key: wkb} for one (small, size-gated) side; a
-    conflicting duplicate key raises or returns None (``_payload_dict``)."""
-    rows = df.select(key, geom_col).collect()
-    d = _payload_dict(((row[key], row[geom_col]) for row in rows), key, strict)
-    return None if d is None else sc.broadcast(d)
+def _arrow_stream(df: DataFrame):
+    """Yield ``df``'s rows as Arrow record batches from ONE collect job,
+    each batch as soon as its partition is done (so in no fixed order).
+    Closing it early cancels the job, so the driver's Python process
+    reads no more; tasks done by then have shipped their results to the
+    driver JVM (all of them, with no more partitions than cores)."""
+    from py4j.protocol import Py4JJavaError
+    from pyspark.sql.pandas.serializers import ArrowCollectSerializer
+    from pyspark.util import local_connect_and_auth
+
+    sc = df.sparkSession.sparkContext
+    tag = f"geowave-collect-{uuid.uuid4().hex}"
+    sc.addJobTag(tag)  # the thread that runs the job inherits it
+    try:
+        port, secret, server = df._jdf.collectAsArrowToPython()
+    finally:
+        sc.removeJobTag(tag)
+    sockfile, sock = local_connect_and_auth(port, secret)
+    sock.settimeout(None)
+    done = False
+    try:
+        for batch in ArrowCollectSerializer().load_stream(sockfile):
+            done = isinstance(batch, list)  # the trailing batch order
+            if not done:
+                yield batch
+    finally:
+        if not done:
+            sc.cancelJobsWithTag(tag)
+        sockfile.close()
+        sock.close()
+        try:
+            server.getResult()  # joins the serving thread
+        except Py4JJavaError:
+            if done:
+                raise  # else the job was cancelled, or load_stream raised
 
 
-def _pair_refine_one_side_udf(bc, predicate: str, distance_u: float | None, dim_is_right: bool):
-    """(fact_wkb, dim_key) -> bool: ONE side's payloads ride a task
-    broadcast (the small dimension side); the other side's WKB stays on
-    the candidate rows and is never collected to the driver — the
-    fact-side-safe variant of _pair_refine_by_keys_udf. Batches group
-    by the dimension key, so each dim geometry's kernel runs once per
-    batch over all its fact candidates."""
-    fn = P.PREDICATES.get(predicate)
+class _Dimension(NamedTuple):
+    payload: dict  # {key: wkb}
+    table: object  # pyarrow.Table: the key and the _KEYS_DDL columns
+    levels: list  # the res levels that carry cells
+    rect: bool  # every geometry an axis-aligned rectangle
+    fulldim: bool  # ... and none of them degenerate
 
-    @F.pandas_udf("boolean")
-    def run(wkbs: pd.Series, keys: pd.Series) -> pd.Series:
-        from geowave_spark.geom.udfs import eval_one_to_many, parse_cached
 
-        d = bc.value
-        out = np.zeros(len(wkbs), dtype=bool)
-        codes, uniq = pd.factorize(keys)
-        for u_i, idx in _group_indices(codes, len(uniq)):
-            g = parse_cached(d[uniq[u_i]])
-            geoms = [parse_cached(bytes(wkbs.iloc[i])) for i in idx]
-            # dim on the right → the varying (fact) geometries are the
-            # predicate's FIRST argument
-            out[idx] = eval_one_to_many(
-                predicate, fn, g, geoms, dim_is_right, distance_u
-            )
-        return pd.Series(out)
+def _keyed_schema(side: DataFrame, key: str) -> StructType:
+    """``side``'s key column and the ``_KEYS_DDL`` columns."""
+    return StructType([side.schema[key], *StructType.fromDDL(_KEYS_DDL).fields])
 
-    return run
+
+def _covers(spark, wkbs: list, params: tuple) -> list:
+    """``_geom_cover`` of each WKB from the driver's cache; up to
+    DRIVER_COVER_MAX distinct misses keyed on the driver, more by one
+    job across the cores (the fact path's ``_keys_udf``)."""
+    import pyarrow as pa
+
+    miss = list({w for w in wkbs if (params, w) not in _POLYFILL_CACHE})
+    if len(_POLYFILL_CACHE) + len(miss) >= _POLYFILL_CACHE_MAX:
+        _POLYFILL_CACHE.clear()  # now, not between the hits
+        miss = list(set(wkbs))
+    got = {}
+    if len(miss) > DRIVER_COVER_MAX:
+        # one chunk per core: a large frame from Arrow gets one partition
+        # per chunk (a small one is a LocalTableScan over the cores)
+        chunks = np.array_split(np.array(miss, dtype=object), spark.sparkContext.defaultParallelism)
+        frame = spark.createDataFrame(pa.table({"_g": pa.chunked_array(chunks, pa.binary())}))
+        t = geom_keys(frame, "_g", *params).drop("_g").toArrow()
+        col = {c: t.column(c).to_pylist() for c in t.column_names}
+        bounds = zip(col["bx0"], col["by0"], col["bx1"], col["by1"])
+        got = dict(zip(miss, zip(col["res"], col["cells"], bounds, col["rect"])))
+        if len(got) < _POLYFILL_CACHE_MAX:
+            _POLYFILL_CACHE.update(((params, w), c) for w, c in got.items())
+    return [got.get(w) or _geom_cover(w, params) for w in wkbs]
+
+
+def _collect_dimension(side: DataFrame, key: str, max_cells: int, buffer_u: int):
+    """Read a geometry side (``key``, WKB ``_g``) to the driver in one
+    collect job and key it (``_covers``). None — the caller takes its
+    row-carried path — when a key maps to two geometries, or once the
+    running WKB total passes BC_MAX_BYTES: the estimate that admitted
+    the side can be far low (9–16× on generated sides), so the driver's
+    Python process never holds more than the cap of it (the driver JVM
+    can: see ``_arrow_stream``)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    keys, wkbs, total = [], [], 0
+    with contextlib.closing(_arrow_stream(side)) as stream:
+        for batch in stream:
+            total += pc.sum(pc.binary_length(batch.column("_g"))).as_py() or 0
+            if total > BC_MAX_BYTES:
+                return None
+            keys += batch.column(key).to_pylist()
+            wkbs += batch.column("_g").to_pylist()
+    payload = _payload_dict(zip(keys, wkbs))
+    if payload is None:
+        return None
+    covers = _covers_frame(_covers(side.sparkSession, wkbs, (max_cells, POINT_RES, buffer_u)))
+    covers.insert(0, key, keys)
+    t = pa.Table.from_pandas(covers, to_arrow_schema(_keyed_schema(side, key)), preserve_index=False)
+    rect = covers["rect"].to_numpy()
+    full = ((covers["bx1"] > covers["bx0"]) & (covers["by1"] > covers["by0"])).to_numpy()
+    levels = np.unique(covers["res"][covers["cells"].map(len) > 0]).tolist()
+    return _Dimension(payload, t, levels, bool(rect.all()), bool((rect & full).all()))
+
+
+def _fanout_sql(levels, cmp: str, coarse_bit: int, natural_bit: int) -> str:
+    """SQL text of one side's exploded join keys (module docstring): its
+    natural cells tagged (``natural_bit``, res), and its cells coarsened
+    to each of the other side's ``levels`` m with ``m <cmp> res``, tagged
+    (``coarse_bit``, m) — distinct parents per level before the explode,
+    so duplicates never multiply candidates."""
+    lv = ", ".join(str(int(v)) for v in levels)
+
+    def tag(bit: int, m: str) -> str:
+        return f"({bit << 53} | shiftleft(CAST({m} AS BIGINT), 48))"
+
+    parent = "shiftleft(shiftright(c, 32 + res - m), 32) | shiftright(c & 4294967295, res - m)"
+    coarse = (
+        f"flatten(transform(filter(CAST(array({lv}) AS ARRAY<INT>), m -> m {cmp} res),"
+        f" m -> array_distinct(transform(cells, c -> {tag(coarse_bit, 'm')} | {parent}))))"
+    )
+    return f"explode(concat({coarse}, transform(cells, c -> {tag(natural_bit, 'res')} | c)))"
 
 
 def _pair_refine_by_keys_udf(l_bc, r_bc, predicate: str, distance_u: float | None):
-    """(left_key, right_key) -> bool: broadcast-dictionary pair
-    refinement — candidate rows carry only the two KEYS (16 B/row at
-    the Arrow boundary instead of two repeated WKB blobs), the payloads
-    ride task broadcasts, and each batch evaluates every distinct
-    (geometry, geometry) pair ONCE and gathers (hotspot candidate sets
-    repeat the same pair through many shared cells). Bulk kernels
-    (all-lines × box, all-boxes × box) come from eval_one_to_many."""
+    """(left, right) -> bool pair refinement. Each side is either a KEY
+    whose geometry rides the task broadcast of its {key: wkb}
+    dictionary (``l_bc`` / ``r_bc``; candidate rows then stay key-only)
+    or, where that is None, a WKB column. Each batch evaluates every
+    distinct (geometry, geometry) pair ONCE and gathers (hotspot
+    candidate sets repeat the same pair through many shared cells);
+    bulk kernels (all-lines × box, all-boxes × box) come from
+    eval_one_to_many."""
     fn = P.PREDICATES.get(predicate)
 
     @F.pandas_udf("boolean")
-    def run(lk: pd.Series, rk: pd.Series) -> pd.Series:
+    def run(lv: pd.Series, rv: pd.Series) -> pd.Series:
         from geowave_spark.geom.udfs import eval_one_to_many, parse_cached
 
-        ldict = l_bc.value
-        rdict = r_bc.value
-        out = np.zeros(len(lk), dtype=bool)
-        codes_l, uniq_l = pd.factorize(lk)
-        codes_r, uniq_r = pd.factorize(rk)
+        lget = bytes if l_bc is None else l_bc.value.__getitem__
+        rget = bytes if r_bc is None else r_bc.value.__getitem__
+        out = np.zeros(len(lv), dtype=bool)
+        codes_l, uniq_l = pd.factorize(lv)
+        codes_r, uniq_r = pd.factorize(rv)
         # group by the side with fewer distinct geometries in this batch
         if len(uniq_r) <= len(uniq_l):
-            codes_g, uniq_g, gdict = codes_r, uniq_r, rdict
-            codes_v, uniq_v, vdict, many_first = codes_l, uniq_l, ldict, True
+            codes_g, uniq_g, gget = codes_r, uniq_r, rget
+            codes_v, uniq_v, vget, many_first = codes_l, uniq_l, lget, True
         else:
-            codes_g, uniq_g, gdict = codes_l, uniq_l, ldict
-            codes_v, uniq_v, vdict, many_first = codes_r, uniq_r, rdict, False
-        order = np.argsort(codes_g, kind="stable")
-        bounds = np.searchsorted(codes_g[order], np.arange(len(uniq_g) + 1))
-        for u_i in range(len(uniq_g)):
-            idx = order[bounds[u_i] : bounds[u_i + 1]]
-            if not len(idx):
-                continue
-            g = parse_cached(gdict[uniq_g[u_i]])
-            sub = codes_v[idx]
-            u_sub, inv = np.unique(sub, return_inverse=True)
-            geoms = [parse_cached(vdict[uniq_v[s]]) for s in u_sub]
+            codes_g, uniq_g, gget = codes_l, uniq_l, lget
+            codes_v, uniq_v, vget, many_first = codes_r, uniq_r, rget, False
+        for u_i, idx in _group_indices(codes_g, len(uniq_g)):
+            g = parse_cached(gget(uniq_g[u_i]))
+            u_sub, inv = np.unique(codes_v[idx], return_inverse=True)
+            geoms = [parse_cached(vget(uniq_v[s])) for s in u_sub]
             res_u = eval_one_to_many(predicate, fn, g, geoms, many_first, distance_u)
             out[idx] = res_u[inv]
         return pd.Series(out)
@@ -443,6 +469,32 @@ def _pair_refine_udf(predicate: str, distance_u: float | None):
     return F.pandas_udf(pair_pred_batch(predicate, P.PREDICATES[predicate]), BooleanType())
 
 
+class _Side(NamedTuple):
+    keyed: DataFrame  # key, res, cells, bx0, by0, bx1, by1, rect
+    levels: list  # the res levels that carry cells
+    rect: bool
+    fulldim: bool
+    payload: dict | None  # {key: wkb} of a collected side
+    geoms: DataFrame | None  # a fact side's (key, _g) rows, joined back
+
+
+def _fact_side(side: DataFrame, key: str, max_cells: int, buffer_u: int) -> _Side:
+    """A side that is not collected: keyed once (repartitioned, so a
+    one-file source does not polyfill in one task) into an eager
+    localCheckpoint that the candidate join and the WKB join-back both
+    read — unlike a cache mark, it cannot be evicted into a second
+    polyfill — then one aggregate for the flags and levels."""
+    par = side.sparkSession.sparkContext.defaultParallelism
+    keyed = geom_keys(side.repartition(par), "_g", max_cells, buffer_u=buffer_u)
+    keyed = keyed.localCheckpoint(eager=True)
+    rect, fulldim, levels = keyed.selectExpr(
+        "coalesce(bool_and(rect), true)",
+        "coalesce(bool_and(rect AND bx1 > bx0 AND by1 > by0), true)",
+        "array_sort(collect_set(IF(size(cells) > 0, res, NULL)))",
+    ).first()
+    return _Side(keyed.drop("_g"), list(levels), rect, fulldim, None, keyed.select(key, "_g"))
+
+
 def geom_geom_join(
     left: DataFrame,
     right: DataFrame,
@@ -454,7 +506,6 @@ def geom_geom_join(
     distance_u: int | None = None,
     how: str = "inner",
     max_cells: int = DEFAULT_MAX_CELLS,
-    broadcast_right: bool | None = None,
     pair_filter: Column | None = None,
 ) -> DataFrame:
     """Geometry×geometry spatial join on ``predicate`` (or within
@@ -463,13 +514,12 @@ def geom_geom_join(
     positive form, exactly like the reference's negative-predicate
     subtractByKey (TieredSpatialJoin.java:362-368).
 
-    ``broadcast_right=None`` (default) size-gates payload broadcasting
-    PER SIDE: a side whose total WKB is under BC_MAX_BYTES ships as a
-    driver-collected {key: wkb} task broadcast (keys must be unique);
-    a larger side keeps its WKB on the candidate rows and is never
-    collected. ``True`` forces both dictionaries (collects BOTH sides
-    — dimension-sized inputs only); ``False`` disables broadcasting
-    entirely (shuffle refine on row-carried WKB)."""
+    A side under BC_MAX_BYTES by the optimizer's estimate (no job), or
+    by its exact WKB total (one aggregate) when the estimate is over (a
+    selective filter keeps its input's estimate without CBO), is read in
+    one bounded collect (``_collect_dimension``): payloads ride a task
+    broadcast, keyed rows a local frame. Any other side takes the fact
+    path (``_fact_side``); its WKB joins back to the candidate pairs."""
     if predicate == "disjoint":
         raise ValueError(
             "disjoint join = leftanti on the positive predicate "
@@ -481,190 +531,47 @@ def geom_geom_join(
     buffer_u = int(math.ceil(distance_u)) if distance_u else 0
     spark = left.sparkSession
     _widen_arrow_batches(spark)
-    par = spark.sparkContext.defaultParallelism
-    # repartition before the polyfill UDF (a single-file source would
-    # otherwise run all of it in one task), MATERIALIZE after it: both
-    # key frames feed TWO join branches plus a res dimension — the
-    # exact spot the reference persists reprojected tiers
-    # (TieredSpatialJoin.java:510 MEMORY_AND_DISK_SER). Round 4: eager
-    # localCheckpoint instead of persist() — a plain persist mark is
-    # advisory (cache eviction under memory pressure, or a caller'''s
-    # clearCache, silently reverts to recomputing the Arrow polyfill
-    # ONCE PER UNION BRANCH — measured 2× covering cost at 1.6M
-    # geometries); the checkpoint truncates lineage so each keyed frame
-    # is computed exactly once regardless of cache state. At cluster
-    # scale the production path is a reliable checkpoint into the stage
-    # store (plans/checkpoint.py) — same contract, durable blocks.
-    # Round 5: the eager checkpoint is SIZE-GATED on the EXACT per-side
-    # WKB bytes. Its two extra Spark jobs + block writes buy the
-    # polyfill-once-regardless-of-cache-state guarantee — essential at
-    # fact scale (the round-4 union-branch recompute bug), pure latency
-    # tax on dimension-sized inputs where the whole join runs ~1 s
-    # (BENCH.md §10.2). Order of operations: the keyed frames first
-    # take a persist() mark; the _side_stats aggregates below
-    # materialize that cache AND return the exact WKB byte totals; a
-    # side above the gate is then checkpointed FROM the cache (a block
-    # copy, not a recompute) and the mark dropped. A Catalyst plan-size
-    # estimate was tried first and rejected: it sees the pre-UDF input
-    # (8 bytes/row for a generated key column), not the constructed
-    # WKB, so a fact-scale side would silently keep the advisory mark.
-    _KEY_FIELDS = ("res", "cells", "bx0", "by0", "bx1", "by1", "rect")
-    l = geom_keys(
-        left.select(F.col(left_key), F.col(left_geom).alias("_lg")).repartition(par),
-        "_lg",
-        max_cells,
-        buffer_u=buffer_u,
-    ).withColumnsRenamed({c: f"_l{c}" for c in _KEY_FIELDS}).persist()
-    r = geom_keys(
-        right.select(F.col(right_key), F.col(right_geom).alias("_rg")).repartition(par),
-        "_rg",
-        max_cells,
-    ).withColumnsRenamed({c: f"_r{c}" for c in _KEY_FIELDS}).persist()
+    sides = []
+    for df, key, geom, buf in ((left, left_key, left_geom, buffer_u),
+                               (right, right_key, right_geom, 0)):
+        side = df.selectExpr(f"`{key}`", f"`{geom}` AS _g")
+        fits = (_size_estimate(side) <= BC_MAX_BYTES
+                or (side.agg(F.sum(F.length("_g"))).first()[0] or 0) <= BC_MAX_BYTES)
+        dim = _collect_dimension(side, key, max_cells, buf) if fits else None
+        if dim is None:
+            sides.append(_fact_side(side, key, max_cells, buf))
+        else:  # the keyed rows become a local frame
+            frame = spark.createDataFrame(dim.table, _keyed_schema(side, key))
+            sides.append(_Side(frame, dim.levels, dim.rect, dim.fulldim, dim.payload, None))
+    l, r = sides
 
-    # driver-side tiny aggregates deciding the two box fast paths AND
-    # the broadcast plan:
+    # the two box fast paths, from the side flags:
     # - every geometry a non-degenerate rect on BOTH sides → refine is
-    #   pure native bounds arithmetic (no Python, no payload broadcast)
+    #   pure native bounds arithmetic (no Python, no payloads)
     # - every COVER a closed-bbox cover (rect geometry, or any geometry
     #   under a distance buffer) → candidate dedupe is a free narrow
     #   filter: keep a pair only in the cell containing the reference
     #   point max(lo_l, lo_r) of the two cover bounds (the PBSM
     #   reference-point technique, Patel & DeWitt SIGMOD'96) instead of
     #   a dropDuplicates shuffle of every shared-cell duplicate
-    # - per-side total WKB bytes gate the payload-dictionary broadcast:
-    #   only a side under BC_MAX_BYTES is ever collect()ed (a fact-
-    #   scale side keeps its WKB on candidate rows — never the driver)
-    def _side_stats(df, p, geom_col):
-        row = df.agg(
-            F.min(F.col(f"_{p}rect")).alias("rect"),
-            F.min(
-                F.col(f"_{p}rect")
-                & (F.col(f"_{p}bx1") > F.col(f"_{p}bx0"))
-                & (F.col(f"_{p}by1") > F.col(f"_{p}by0"))
-            ).alias("fulldim"),
-            F.sum(F.length(geom_col)).alias("bytes"),
-        ).first()
-        return (
-            row["rect"] if row["rect"] is not None else True,
-            row["fulldim"] if row["fulldim"] is not None else True,
-            int(row["bytes"]) if row["bytes"] is not None else 0,
-        )
+    both_full = l.fulldim and r.fulldim
+    native_pred = _box_pair_native_pred(predicate, distance_u) if both_full else None
+    skip_dedupe = r.rect and (l.rect or buffer_u > 0)
+    bounds = ("bx0", "by0", "bx1", "by1") if (skip_dedupe or native_pred is not None) else ()
 
-    l_rect, l_fulldim, l_bytes = _side_stats(l, "l", "_lg")
-    r_rect, r_fulldim, r_bytes = _side_stats(r, "r", "_rg")
+    def keys(s: _Side, p: str, key: str, levels, cmp: str, coarse_bit: int) -> DataFrame:
+        fanout = _fanout_sql(levels, cmp, coarse_bit, 1 - coarse_bit)
+        kept = (f"{c} AS _{p}{c}" for c in bounds)
+        return s.keyed.selectExpr(f"`{key}`", f"{fanout} AS _k", *kept)
 
-    # exact-bytes checkpoint gate (comment at the persist site above):
-    # a fact-scale side trades one cache->block copy for lineage
-    # truncation; a dimension-sized side keeps the (now warm) mark
-    def _harden(df, nbytes):
-        if nbytes <= EAGER_CKPT_MIN_BYTES:
-            return df
-        ck = df.localCheckpoint(eager=True)
-        df.unpersist()
-        return ck
-
-    l = _harden(l, l_bytes)
-    r = _harden(r, r_bytes)
-    native_pred = (
-        _box_pair_native_pred(predicate, distance_u)
-        if (l_fulldim and r_fulldim)
-        else None
-    )
-    skip_dedupe = r_rect and (l_rect or buffer_u > 0)
-
-    # broadcast plan: None = auto (size-gated per side); True forces
-    # BOTH payload dictionaries (collects both sides — only safe when
-    # the caller knows both are dimension-sized); False disables all
-    # payload broadcasting (WKB-carrying shuffle refine).
-    if broadcast_right is None:
-        bc_l = l_bytes <= BC_MAX_BYTES
-        bc_r = r_bytes <= BC_MAX_BYTES
-    else:
-        bc_l = bc_r = bool(broadcast_right)
-    l_bc = r_bc = None
-    sc = spark.sparkContext
-    if native_pred is None:
-        # payload dictionaries ride task broadcasts (the strategy-
-        # broadcast pattern of TieredSpatialJoin.java:138-141) so
-        # candidate rows carry keys, not repeated geometry blobs; the
-        # native-rect path needs no payloads at all — bounds refine
-        forced = broadcast_right is True
-        if bc_l:
-            l_bc = _collect_payload_dict(sc, l, left_key, "_lg", strict=forced)
-            if l_bc is None:
-                bc_l = False  # conflicting dup keys → shuffle refine
-        if bc_r:
-            r_bc = _collect_payload_dict(sc, r, right_key, "_rg", strict=forced)
-            if r_bc is None:
-                bc_r = False
-    # Round 4: payloads NEVER ride the candidate explode. Carrying WKB
-    # through the (res, cell) fan-out duplicated each geometry's bytes
-    # once per emitted cell (~7-15× shuffle amplification) and made
-    # shuffle IO the non-scaling term at 3.2M-geometry scale
-    # (BENCH.md §9.4). Candidate rows shuffle as key/res/cell tuples;
-    # non-broadcast payloads re-attach by an equi-join against the
-    # checkpointed keyed frame AFTER pair dedupe — each side's WKB
-    # shuffles once per distinct candidate pair, not once per cell.
-    l_geoms = (
-        l.select(left_key, "_lg") if (native_pred is None and not bc_l) else None
-    )
-    r_geoms = (
-        r.select(right_key, "_rg") if (native_pred is None and not bc_r) else None
-    )
-    l = l.drop("_lg")
-    r = r.drop("_rg")
-    if bc_r:
-        # the keyed (cells-only) right frame is dimension-sized too —
-        # hint the equi-joins to broadcast it and skip the shuffle
-        r = F.broadcast(r)
-
-    # collect the distinct res sets driver-side — tiny bounded lists,
-    # the "collect distinct tiers per side" step of the reference
-    # (TieredSpatialJoin.java:174-191). Emitting them as literal-array
-    # filter+explode keeps every join in the plan a pure equi-join (no
-    # BroadcastNestedLoopJoin even for the res fan-out).
-    rres_vals = sorted(x[0] for x in r.select("_rres").distinct().collect())
-    lres_vals = sorted(x[0] for x in l.select("_lres").distinct().collect())
-
-    def _res_fanout(res_col: Column, vals, strict: bool) -> Column:
-        arr = F.array(*[F.lit(int(v)) for v in vals])
-        if strict:
-            return F.explode(F.filter(arr, lambda x: x < res_col))
-        return F.explode(F.filter(arr, lambda x: x <= res_col))
-
-    # branch 1: right res ≤ left res — coarsen left to each right res
-    l1 = (
-        l.withColumn("_jres", _res_fanout(F.col("_lres"), rres_vals, False))
-        .withColumn(
-            "_jcell",
-            F.explode(_coarsen_to(F.col("_lcells"), F.col("_lres") - F.col("_jres"))),
-        )
-        .drop("_lcells")
-    )
-    r1 = r.withColumn("_jcell", F.explode("_rcells")).drop("_rcells")
-    cand1 = l1.join(r1, (F.col("_jres") == F.col("_rres")) & (l1["_jcell"] == r1["_jcell"]))
-
-    # branch 2: right strictly finer — coarsen right to each left res
-    r2 = (
-        r.withColumn("_jres", _res_fanout(F.col("_rres"), lres_vals, True))
-        .withColumn(
-            "_jcell",
-            F.explode(_coarsen_to(F.col("_rcells"), F.col("_rres") - F.col("_jres"))),
-        )
-        .drop("_rcells")
-    )
-    l2 = l.withColumn("_jcell", F.explode("_lcells")).drop("_lcells")
-    cand2 = l2.join(r2, (F.col("_jres") == F.col("_lres")) & (l2["_jcell"] == r2["_jcell"]))
-
-    cols = [left_key, right_key]
-    if skip_dedupe or native_pred is not None:
-        cols += ["_lbx0", "_lby0", "_lbx1", "_lby1", "_rbx0", "_rby0", "_rbx1", "_rby1"]
-    sel1 = [F.col(c) for c in cols]
-    sel2 = [F.col(c) for c in cols]
-    if skip_dedupe:
-        sel1 += [F.col("_jres").alias("_cres"), l1["_jcell"].alias("_ccell")]
-        sel2 += [F.col("_jres").alias("_cres"), l2["_jcell"].alias("_ccell")]
-    cand = cand1.select(*sel1).unionByName(cand2.select(*sel2))
+    lk = keys(l, "l", left_key, r.levels, "<=", 0)
+    rk = keys(r, "r", right_key, l.levels, "<", 1)
+    # a collected side is dimension-sized: broadcast it, skip the shuffle
+    if r.payload is not None:
+        rk = F.broadcast(rk)
+    elif l.payload is not None:
+        lk = F.broadcast(lk)
+    cand = lk.join(rk, "_k")
     if pair_filter is not None:
         # e.g. key ordering for symmetric self-joins — applied BEFORE
         # the refine UDF so filtered pairs never reach Python
@@ -672,63 +579,40 @@ def geom_geom_join(
 
     if skip_dedupe:
         # reference-point dedupe: of the cells a pair shares at the
-        # match res, exactly one contains max(lo, lo) of the two cover
+        # match res m, exactly one contains max(lo, lo) of the two cover
         # bounds (bbox covers include every cell of the closed rect by
         # grid_coord monotonicity) — keep the pair only there. Pure
-        # narrow filter; no shuffle, and with packed cell ids the
-        # per-row expression is two divisions and three shifts.
-        from geowave_spark import LAT_OFF_U
-        from geowave_spark.index.native import grid_coord_col
-
-        refx = F.greatest(F.col("_lbx0") - F.lit(buffer_u), F.col("_rbx0"))
-        refy = F.greatest(F.col("_lby0") - F.lit(buffer_u), F.col("_rby0"))
-        d = F.lit(POINT_RES) - F.col("_cres")
-        gx = F.call_function("shiftright", grid_coord_col(refx, POINT_RES), d)
-        gy = F.call_function("shiftright", grid_coord_col(refy, POINT_RES, LAT_OFF_U), d)
-        cand = cand.where(F.col("_ccell") == _packed_cell(gx, gy))
-
+        # narrow filter; m and the cell are read from the key.
+        d = f"({POINT_RES} - (shiftright(_k, 48) & 31))"
+        gx = _grid_sql(f"greatest(_lbx0 - {buffer_u}, _rbx0)", LON_OFF_U)
+        gy = _grid_sql(f"greatest(_lby0 - {buffer_u}, _rby0)", LAT_OFF_U)
+        cell = f"shiftleft(shiftright({gx}, {d}), 32) | shiftright({gy}, {d})"
+        cand = cand.where(f"(_k & {(1 << 48) - 1}) = ({cell})")
     if native_pred is not None:
-        matched = cand.where(native_pred).select(left_key, right_key)
-        if not skip_dedupe:
-            matched = matched.dropDuplicates([left_key, right_key])
-    else:
-        # candidate rows are key/res/cell tuples (~24 B) in EVERY
-        # refine mode — dedupe the pairs BEFORE refinement (cheap
-        # narrow shuffle) so each pair reaches the predicate exactly
-        # once, then attach whichever payloads don't ride a task
-        # broadcast by joining the deduped pair set back to the
-        # checkpointed keyed frames (reduceByKey-before-refine is
-        # now affordable precisely because the rows are thin)
-        if not skip_dedupe:
-            cand = cand.dropDuplicates([left_key, right_key])
-        if l_geoms is not None:
-            cand = cand.join(l_geoms, left_key)
-        if r_geoms is not None:
-            cand = cand.join(r_geoms, right_key)
-        if bc_l and bc_r:
-            refine = _pair_refine_by_keys_udf(l_bc, r_bc, predicate, distance_u)(
-                F.col(left_key), F.col(right_key)
-            )
-        elif bc_r:
-            refine = _pair_refine_one_side_udf(r_bc, predicate, distance_u, True)(
-                F.col("_lg"), F.col(right_key)
-            )
-        elif bc_l:
-            refine = _pair_refine_one_side_udf(l_bc, predicate, distance_u, False)(
-                F.col("_rg"), F.col(left_key)
-            )
-        else:
-            refine = _pair_refine_udf(predicate, distance_u)(
-                F.col("_lg"), F.col("_rg")
-            )
-        matched = cand.where(refine).select(left_key, right_key)
-        if l_geoms is not None or r_geoms is not None:
+        cand = cand.where(native_pred)
+
+    # dedupe the thin key pairs (cheap narrow shuffle). Only a WKB
+    # join-back keeps the refine above it: with both sides collected,
+    # Catalyst pushes the (deterministic) refine filter below this
+    # aggregate, so the refine sees each shared-cell duplicate
+    matched = cand.select(left_key, right_key)
+    if not skip_dedupe:
+        matched = matched.dropDuplicates([left_key, right_key])
+    if native_pred is None:
+        # join a fact side's WKB back to the deduped pair set
+        sc = spark.sparkContext
+        args = []
+        for s, key, g in ((l, left_key, "_lg"), (r, right_key, "_rg")):
+            if s.payload is None:
+                matched = matched.join(s.geoms.withColumnRenamed("_g", g), key)
+            args.append(F.col(g if s.payload is None else key))
+        l_bc, r_bc = (None if s.payload is None else sc.broadcast(s.payload) for s in (l, r))
+        refine = _pair_refine_by_keys_udf(l_bc, r_bc, predicate, distance_u)(*args)
+        matched = matched.where(refine).select(left_key, right_key)
+        if l.payload is None or r.payload is None:
             # duplicate key values re-expand through the payload
             # join-back (one row per key occurrence) — collapse to
-            # distinct pairs; shuffles only matches. Pure-broadcast
-            # mode has no join-back (pairs already distinct), and for
-            # WKB-keyed callers (sql_rewrite) skipping this avoids a
-            # second blob shuffle.
+            # distinct pairs; shuffles only matches
             matched = matched.dropDuplicates([left_key, right_key])
 
     if how == "inner":
@@ -809,36 +693,6 @@ def _size_estimate(df: DataFrame) -> int:
     return int(str(stats.sizeInBytes()))
 
 
-def _collect_dimension(spark, keyed: DataFrame, key: str, strict: bool):
-    """One ``collect`` of a keyed geometry side (key, wkb and the
-    ``geom_keys`` columns), read as an Arrow table. Returns (payload dict, keyed frame,
-    res levels): the {key: wkb} payload dictionary, the ``(key, cell)``
-    join side (cells packed with their res) as a frame built from a
-    local Arrow table, and the distinct res levels that carry cells.
-    Returns None when the exact WKB total is over ``BC_MAX_BYTES``
-    (unless ``strict``: the caller forced broadcasting) or a key maps
-    to conflicting geometries (``_payload_dict``)."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    t = keyed.toArrow()
-    wkb = t.column("_g")
-    if not strict and (pc.sum(pc.binary_length(wkb)).as_py() or 0) > BC_MAX_BYTES:
-        return None
-    payload = _payload_dict(zip(t.column(key).to_pylist(), wkb.to_pylist()), key, strict)
-    if payload is None:
-        return None
-    cells = t.column("cells").combine_chunks()
-    rows = pc.list_parent_indices(cells)
-    res = t.column("res").to_numpy().astype(np.int64)[rows.to_numpy()]
-    cell = (res << 48) | pc.list_flatten(cells).to_numpy()
-    side = pa.table({key: t.column(key).take(rows), "cell": cell})
-    schema = StructType([keyed.schema[key], StructField("cell", LongType(), False)])
-    frame = spark.createDataFrame(side, schema)
-    return payload, frame, np.unique(res).tolist()
-
-
 def geom_point_join(
     points: DataFrame,
     geoms: DataFrame,
@@ -849,7 +703,6 @@ def geom_point_join(
     geom_col: str = "geom",
     distance_u: int | None = None,
     max_cells: int = DEFAULT_MAX_CELLS,
-    broadcast_geoms: bool | None = None,
 ) -> DataFrame:
     """Points (x_u, y_u columns, no WKB materialization) × general
     geometries, through the extent × point join skeleton
@@ -866,37 +719,37 @@ def geom_point_join(
     ``distance_u`` switches to a buffered-cover + exact-distance join
     (GeomWithinDistance semantics).
 
-    Broadcast: under auto (``broadcast_geoms=None``) the gate is the
-    optimizer's size estimate of the (key, geometry) side — no job.
-    Under ``BC_MAX_BYTES``, ONE collect of the keyed side (the polyfill
-    runs inside it) gives the exact WKB total, the {key: wkb} payload
-    dictionary (a task broadcast, so candidate rows stay key-only), the
-    (key, cell) join side and the res levels the points are keyed at.
-    Post-check: an exact total over the cap (a wrong estimate) or a key
-    mapped to conflicting geometries drops the rows and falls back to
-    the shuffle refine, whose candidate rows carry the WKB — one wasted
-    job, never a wrong row. ``broadcast_geoms=True`` skips the size
-    checks and raises ValueError on a conflicting key; False goes to
-    the shuffle refine directly. Nothing is persisted; the polyfill
-    stays cached per Python worker (``_POLYFILL_CACHE``)."""
+    A geometry side under ``BC_MAX_BYTES`` by the optimizer's estimate
+    (no job) is read and keyed in ONE bounded collect
+    (``_collect_dimension``): the {key: wkb} payloads ride a task
+    broadcast, the (key, cell) join side is a local Arrow table and the
+    points are keyed at its res levels. Any other side takes the
+    shuffle refine, whose candidate rows carry the WKB. Nothing is
+    persisted; the polyfill stays cached per process
+    (``_POLYFILL_CACHE``)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
     spark = points.sparkSession
     _widen_arrow_batches(spark)
     side = geoms.selectExpr(f"`{geom_key}`", f"`{geom_col}` AS _g")
     buffer_u = int(distance_u) if distance_u else 0
-    if broadcast_geoms is None:
-        try_broadcast = _size_estimate(side) <= BC_MAX_BYTES
-    else:
-        try_broadcast = broadcast_geoms
     dim = None
-    if try_broadcast:
-        keyed = geom_keys(side, "_g", max_cells, buffer_u=buffer_u)
-        dim = _collect_dimension(spark, keyed, geom_key, strict=broadcast_geoms is True)
+    if _size_estimate(side) <= BC_MAX_BYTES:
+        dim = _collect_dimension(side, geom_key, max_cells, buffer_u)
     if dim is not None:
-        payload, g, levels = dim
-        refine = _point_refine_by_id_udf(spark.sparkContext.broadcast(payload), predicate,
+        # one (key, cell) row per cell, cells packed with their res
+        cells = dim.table.column("cells").combine_chunks()
+        rows = pc.list_parent_indices(cells)
+        res = dim.table.column("res").to_numpy().astype(np.int64)[rows.to_numpy()]
+        cell = (res << 48) | pc.list_flatten(cells).to_numpy()
+        keyed = pa.table({geom_key: dim.table.column(geom_key).take(rows), "cell": cell})
+        schema = StructType([side.schema[geom_key], StructField("cell", LongType(), False)])
+        g = spark.createDataFrame(keyed, schema)
+        refine = _point_refine_by_id_udf(spark.sparkContext.broadcast(dim.payload), predicate,
                                          distance_u)(F.col(geom_key), F.col("x_u"), F.col("y_u"))
         return extent_point_join(points, g, refine, how, True, point_key, geom_key,
-                                 res_levels=levels)
+                                 res_levels=dim.levels)
     g = geom_keys(side.repartition(spark.sparkContext.defaultParallelism), "_g", max_cells,
                   buffer_u=buffer_u)
     refine = _point_refine_udf(predicate, distance_u)(F.col("_g"), F.col("x_u"), F.col("y_u"))

@@ -6,6 +6,7 @@ point×polygon, line×polygon, geometry×geometry, and distance forms,
 including semi/anti outputs."""
 
 import pytest
+from py4j.protocol import MEMORY_COMMAND_NAME, MEMORY_DEL_SUBCOMMAND_NAME
 from pyspark.sql import functions as F
 
 from geowave_spark.operators.geom_join import (
@@ -16,11 +17,16 @@ from geowave_spark.operators.geom_join import (
 from geowave_spark.sources.testgeo import (
     customer_snapped_boxes,
     events_points,
+    lshapes_from_keys,
     part_tracks,
     supplier_lshapes,
+    xy_cols,
 )
 
 SF = "/root/testdata/sf0.001"
+
+# prefix of the py4j message that releases a JVM object (memory delete)
+_GC_COMMAND = MEMORY_COMMAND_NAME + MEMORY_DEL_SUBCOMMAND_NAME
 
 
 @pytest.fixture(scope="module")
@@ -135,6 +141,25 @@ def test_geom_geom_semi_anti(spark, fixtures):
     assert {r["p_partkey"] for r in anti.collect()} == ids - matched
 
 
+@pytest.mark.parametrize("collected", [True, False])
+def test_empty_geometry_side(spark, fixtures, monkeypatch, collected):
+    """An empty side — collected (an empty Arrow table, no res levels)
+    or on the fact path (an empty checkpoint; a cap of -1 admits no
+    side) — matches nothing, on either side of either join."""
+    from geowave_spark.operators import geom_join as GJ
+
+    if not collected:
+        monkeypatch.setattr(GJ, "BC_MAX_BYTES", -1)
+    trk, lsh = fixtures["trk"], fixtures["lsh"]
+    empty = lsh.where(F.col("s_suppkey") < 0)
+    kw = dict(left_key="p_partkey", right_key="s_suppkey")
+    assert geom_geom_join(trk, empty, **kw).count() == 0
+    assert geom_geom_join(trk, empty, how="leftanti", **kw).count() == trk.count()
+    flipped = dict(left_key="s_suppkey", right_key="p_partkey")
+    assert geom_geom_join(empty, trk, **flipped).count() == 0
+    assert geom_point_join(fixtures["pts"], empty, geom_key="s_suppkey").count() == 0
+
+
 def test_size_gate_mixed_broadcast_parity(spark, fixtures, monkeypatch):
     """With the per-side byte cap forced to 0 one or both payload
     dictionaries are disabled — every routing (fact-left×dim-right,
@@ -157,6 +182,24 @@ def test_size_gate_mixed_broadcast_parity(spark, fixtures, monkeypatch):
         left_key="p_partkey", right_key="s_suppkey",
     )
     assert _pairs(auto, "p_partkey", "s_suppkey") == brute
+
+    # a small side estimated over the cap (a selective filter over a
+    # large table, without CBO): its exact WKB total admits it
+    real_collect, collected = GJ._collect_dimension, []
+
+    def recording_collect(side, key, *a):
+        collected.append(key)
+        return real_collect(side, key, *a)
+
+    with monkeypatch.context() as m:
+        m.setattr(GJ, "_size_estimate", lambda df: GJ.BC_MAX_BYTES + 1)
+        m.setattr(GJ, "_collect_dimension", recording_collect)
+        over = geom_geom_join(
+            fixtures["trk"].where(F.col("p_partkey") % 2 == 0), fixtures["lsh"], "intersects",
+            left_key="p_partkey", right_key="s_suppkey",
+        )
+        assert _pairs(over, "p_partkey", "s_suppkey") == {p for p in brute if p[0] % 2 == 0}
+        assert collected == ["p_partkey", "s_suppkey"]
 
     # cap 0: auto degrades to the shuffle path (neither side collected)
     monkeypatch.setattr(GJ, "BC_MAX_BYTES", 0)
@@ -195,10 +238,9 @@ def test_size_gate_mixed_broadcast_parity(spark, fixtures, monkeypatch):
 
 def test_duplicate_payload_keys_degrade_on_auto_raise_on_forced(spark, fixtures):
     """ADVICE r3 (low): a key column with conflicting duplicates must
-    not hard-fail the DEFAULT auto path — the join degrades to the
-    shuffle-refine branch (correct without any payload dictionary).
-    Only the FORCED broadcast mode (broadcast_right=True) raises, and
-    byte-identical duplicate rows broadcast fine in either mode."""
+    not hard-fail the join — it degrades to the row-carried refine
+    (correct without any payload dictionary). Byte-identical duplicate
+    rows still broadcast."""
     dup = fixtures["trk"].select(
         (F.col("p_partkey") % 5).alias("p_partkey"), "geom"
     )
@@ -213,20 +255,12 @@ def test_duplicate_payload_keys_degrade_on_auto_raise_on_forced(spark, fixtures)
     assert _pairs(got, "p_partkey", "s_suppkey") == _pairs(
         brute, "p_partkey", "s_suppkey"
     )
-    # forced broadcast: the hard error is reserved for this mode
-    with pytest.raises(Exception, match="one geometry per key"):
-        geom_geom_join(
-            dup, fixtures["lsh"], "intersects",
-            left_key="p_partkey", right_key="s_suppkey",
-            broadcast_right=True,
-        ).count()
     # byte-identical duplicate rows: dedupe, keep the broadcast plan
     ident = fixtures["trk"].limit(50)
     ident2 = ident.union(ident)
     same = geom_geom_join(
         ident2, fixtures["lsh"], "intersects",
         left_key="p_partkey", right_key="s_suppkey",
-        broadcast_right=True,
     )
     base = geom_geom_join(
         ident, fixtures["lsh"], "intersects",
@@ -277,11 +311,10 @@ def _brute_point_pairs(pts, geoms, key):
 
 def test_point_join_wrong_size_estimate_falls_back(spark, fixtures, monkeypatch):
     """The gate reads the optimizer's size estimate, which can be wrong;
-    the exact WKB total of the collected rows decides. An estimate of 0
-    under a cap below the side's real bytes still ends on the
-    row-carried refine, with the brute-force pairs. A conflicting
-    duplicate key falls back under auto and raises when broadcasting is
-    forced."""
+    the WKB total of the rows as they are collected decides. An
+    estimate of 0 under a cap below the side's real bytes still ends on
+    the row-carried refine, with the brute-force pairs. A conflicting
+    duplicate key falls back the same way."""
     from geowave_spark.operators import geom_join as GJ
 
     pts, lsh = fixtures["pts"], fixtures["lsh"]
@@ -306,8 +339,6 @@ def test_point_join_wrong_size_estimate_falls_back(spark, fixtures, monkeypatch)
         assert _pairs(got, "event_id", "s_suppkey") == _brute_point_pairs(
             pts, dup, "s_suppkey"
         )
-    with pytest.raises(ValueError, match="one geometry per key"):
-        geom_point_join(pts, dup, "intersects", geom_key="s_suppkey", broadcast_geoms=True)
 
 
 def _plan_nodes(df):
@@ -355,13 +386,29 @@ def _jobs_by_group(spark, run):
     return {g: len(tracker.getJobIdsForGroup(g)) for g in groups}
 
 
+def _uncached_points(spark):
+    """The sf0.001 events as (event_id, x_u, y_u): a projection no test
+    module caches, so Spark's cache manager substitutes no
+    ``InMemoryTableScan`` into a plan built over it (other modules
+    ``.cache()`` the full ``events_points`` frame)."""
+    x, y = xy_cols(F.col("event_id"))
+    return spark.read.parquet(f"{SF}/events.parquet").select("event_id", x, y)
+
+
+def _persistent_rdd_ids(spark) -> set:
+    """Ids of the session's persistent RDDs. Compared as sets, not
+    counted: an earlier test's checkpoint that the JVM garbage-collects
+    meanwhile leaves the set, and must not hide a new one."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
 def test_point_join_job_budget_and_plan(spark):
     """Over a small geometry side the join runs one job before the frame
     returns (the collect of keys and payloads) and at most three in all
     (that collect, the broadcast, the join). The points are keyed at
     literal res levels: one long-keyed broadcast-hash join, no nested
     loop join, nothing cached, and the refine is the only Python node."""
-    pts = events_points(spark, SF)
+    pts = _uncached_points(spark)
     lsh = supplier_lshapes(spark, SF)
     out = {}
 
@@ -386,23 +433,175 @@ def test_point_join_job_budget_and_plan(spark):
 
 
 def test_point_join_leaves_no_persistent_rdds(spark):
-    """Joins over distinct geometry inputs leave the session's
-    persistent-RDD count where it was: nothing is cached per input."""
-    sc = spark.sparkContext
-    pts = events_points(spark, SF)
+    """Joins over distinct geometry inputs leave no new persistent RDD
+    behind: nothing is cached per input."""
+    pts = _uncached_points(spark)
     lsh = supplier_lshapes(spark, SF)
-    before = sc._jsc.getPersistentRDDs().size()
+    before = _persistent_rdd_ids(spark)
     for i in range(5):
         geoms = lsh.where(F.col("s_suppkey") % 5 != i)
         geom_point_join(pts, geoms, "intersects", geom_key="s_suppkey").collect()
-    assert sc._jsc.getPersistentRDDs().size() == before
+    assert _persistent_rdd_ids(spark) - before == set()
+
+
+def test_geom_join_job_budget_and_plan(spark):
+    """Dimension × dimension: the join runs at most two jobs before the
+    frame returns (one bounded collect per side) and its plan is ONE
+    join between the keyed sides, on a single long key — no union of
+    branches, no nested loop join, nothing cached."""
+    trk = part_tracks(spark, SF)
+    lsh = supplier_lshapes(spark, SF)
+    out = {}
+
+    def run(set_group):
+        set_group("ggj-build")
+        out["df"] = geom_geom_join(
+            trk, lsh, "intersects", left_key="p_partkey", right_key="s_suppkey"
+        )
+        set_group("ggj-run")
+        out["rows"] = out["df"].collect()
+
+    jobs = _jobs_by_group(spark, run)
+    assert out["rows"]
+    assert jobs["ggj-build"] <= 2
+    nodes = _plan_nodes(out["df"])
+    names = [n for n, _ in nodes]
+    joins = [p for n, p in nodes if n.endswith("JoinExec")]
+    assert len(joins) == 1
+    assert joins[0].leftKeys().size() == 1
+    assert joins[0].leftKeys().apply(0).dataType().typeName() == "long"
+    assert "UnionExec" not in names
+    assert "BroadcastNestedLoopJoinExec" not in names
+    assert "InMemoryTableScanExec" not in names
+
+
+def test_geom_join_leaves_no_persistent_rdds(spark):
+    """geom_geom_join over distinct dimension-sized geometry inputs
+    leaves no new persistent RDD behind."""
+    trk = part_tracks(spark, SF)
+    lsh = supplier_lshapes(spark, SF)
+    before = _persistent_rdd_ids(spark)
+    for i in range(5):
+        geoms = lsh.where(F.col("s_suppkey") % 5 != i)
+        geom_geom_join(
+            trk, geoms, "intersects", left_key="p_partkey", right_key="s_suppkey"
+        ).collect()
+    assert _persistent_rdd_ids(spark) - before == set()
+
+
+def test_collect_stops_at_the_cap_before_the_last_partition(spark, fixtures, monkeypatch):
+    """The size gate admits a side by the plan estimate, which can be
+    far low. With the estimate forced to 0 and a cap of half the real
+    WKB total, the collect of a geometry side spread over 8 partitions
+    stops reading once the running total passes the cap, and both
+    joins fall back to the row-carried refine with the brute-force
+    pairs. The fact path keys that side once, into its checkpoint: the
+    geometry join's plan keeps one Python node, the refine."""
+    from geowave_spark.operators import geom_join as GJ
+
+    lsh = lshapes_from_keys(spark, 800, 8)
+    wkb_bytes = int(lsh.agg(F.sum(F.length("geom"))).first()[0])
+    real_stream, read = GJ._arrow_stream, []
+
+    def counting_stream(df):
+        batches = real_stream(df)
+        read.append([df.columns[0], 0])
+        try:
+            for b in batches:
+                read[-1][1] += 1
+                yield b
+        finally:
+            batches.close()
+
+    monkeypatch.setattr(GJ, "_size_estimate", lambda df: 0)
+    monkeypatch.setattr(GJ, "BC_MAX_BYTES", wkb_bytes // 2)
+    monkeypatch.setattr(GJ, "_arrow_stream", counting_stream)
+
+    pts = fixtures["pts"]
+    got = geom_point_join(pts, lsh, "intersects", geom_key="s_suppkey")
+    assert read == [["s_suppkey", read[0][1]]] and 0 < read[0][1] < 8
+    assert _pairs(got, "event_id", "s_suppkey") == _brute_point_pairs(pts, lsh, "s_suppkey")
+
+    read.clear()
+    trk = fixtures["trk"]
+    got = geom_geom_join(trk, lsh, "intersects", left_key="p_partkey", right_key="s_suppkey")
+    ((k_l, n_l), (k_r, n_r)) = read
+    assert (k_l, k_r) == ("p_partkey", "s_suppkey") and n_l > 0 and 0 < n_r < 8
+    brute = brute_geom_geom(trk, lsh, "intersects", "p_partkey", "s_suppkey")
+    assert _pairs(got, "p_partkey", "s_suppkey") == _pairs(brute, "p_partkey", "s_suppkey")
+    assert [n for n, _ in _plan_nodes(got)].count("ArrowEvalPythonExec") == 1
+
+
+def test_collect_bounds_the_driver_python_process_not_the_jvm(spark, monkeypatch):
+    """With no more partitions than cores (4 on local[4]) every task of
+    the collect runs at once: the driver's Python process stops reading
+    at the cap, but the driver JVM has received each task that finished
+    before the cancel — at least every batch Python read, up to all 4."""
+    from geowave_spark.operators import geom_join as GJ
+
+    lsh = lshapes_from_keys(spark, 800, 4).selectExpr("s_suppkey", "geom AS _g")
+    wkb_bytes = int(lsh.agg(F.sum(F.length("_g"))).first()[0])
+    monkeypatch.setattr(GJ, "BC_MAX_BYTES", wkb_bytes // 2)
+    real_stream, read = GJ._arrow_stream, []
+
+    def counting_stream(df):
+        for b in real_stream(df):
+            read.append(b.num_rows)
+            yield b
+
+    monkeypatch.setattr(GJ, "_arrow_stream", counting_stream)
+    out = {}
+
+    def run(set_group):
+        set_group("bounded-collect")
+        out["dim"] = GJ._collect_dimension(lsh, "s_suppkey", 32, 0)
+
+    _jobs_by_group(spark, run)
+    tracker = spark.sparkContext.statusTracker()
+    (job,) = tracker.getJobIdsForGroup("bounded-collect")
+    (stage,) = tracker.getJobInfo(job).stageIds
+    shipped = tracker.getStageInfo(stage).numCompletedTasks
+    assert out["dim"] is None
+    assert 0 < len(read) < 4 and len(read) <= shipped <= 4
+
+
+def test_collected_side_with_many_cache_misses_is_keyed_by_one_job(spark, fixtures, monkeypatch):
+    """A collected side whose geometries miss the driver's cover cache
+    beyond DRIVER_COVER_MAX is keyed by one more job across the cores;
+    the driver caches those covers (equal to its own), so the next build
+    is the collect alone. Both joins keep the brute-force pairs."""
+    from geowave_spark.operators import geom_join as GJ
+
+    monkeypatch.setattr(GJ, "DRIVER_COVER_MAX", 0)
+    monkeypatch.setattr(GJ, "_POLYFILL_CACHE", {})
+    pts, lsh = _uncached_points(spark), supplier_lshapes(spark, SF)
+    out = {}
+
+    def run(set_group):
+        for build in ("cold", "warm"):
+            set_group(build)
+            out[build] = geom_point_join(pts, lsh, "intersects", geom_key="s_suppkey")
+
+    assert _jobs_by_group(spark, run) == {"cold": 2, "warm": 1}
+    cached = dict(GJ._POLYFILL_CACHE)
+    assert len(cached) == lsh.count()
+    GJ._POLYFILL_CACHE.clear()
+    assert all(GJ._geom_cover(w, params) == c for (params, w), c in cached.items())
+    assert _pairs(out["cold"], "event_id", "s_suppkey") == _brute_point_pairs(pts, lsh, "s_suppkey")
+
+    trk = fixtures["trk"]
+    got = geom_geom_join(trk, lsh, "intersects", left_key="p_partkey", right_key="s_suppkey")
+    brute = brute_geom_geom(trk, lsh, "intersects", "p_partkey", "s_suppkey")
+    assert _pairs(got, "p_partkey", "s_suppkey") == _pairs(brute, "p_partkey", "s_suppkey")
 
 
 def test_geom_keys_udf_is_built_once_per_parameter_set(spark, monkeypatch):
     """The keying pandas UDF is memoized: a second geom_keys build with
     the same parameters creates no Python function object in the JVM
     and sends fewer gateway commands (the UDF build is ~19 commands in
-    a warm session, ~37 in a fresh one)."""
+    a warm session, ~37 in a fresh one). py4j's garbage-collection
+    messages, sent whenever Python drops a JavaObject, are not counted:
+    one GC inside a build would add ~100."""
     from geowave_spark.operators import geom_join
 
     lsh = supplier_lshapes(spark, SF)
@@ -413,7 +612,8 @@ def test_geom_keys_udf_is_built_once_per_parameter_set(spark, monkeypatch):
         sent = []
 
         def recording(command, *a, **kw):
-            sent.append(command)
+            if not command.startswith(_GC_COMMAND):
+                sent.append(command)
             return real(command, *a, **kw)
 
         monkeypatch.setattr(client, "send_command", recording)

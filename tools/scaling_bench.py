@@ -135,26 +135,20 @@ run("xz_join", lambda: xz_box_point_join(pts, boxes), reuse_df=True)
 run("poly_join", lambda: octagon_point_join(pts, octs), reuse_df=True)
 run("kde", lambda: kde_level(pts, 10))
 if jobs is not None and "geom_join_big" in jobs:
-    # fact×fact general-geometry join: BOTH sides above BC_MAX_BYTES
-    # (~80 MB tracks WKB, ~73 MB lshapes WKB), broadcasting forced off,
-    # AND _collect_payload_dict patched to raise — the completed run is
-    # the runtime proof the non-broadcast shuffle-refine path never
-    # collects a payload side to the driver (TieredSpatialJoin.java's
-    # own scale regime). scatter_only keys skip the hotspot mode so the
-    # job measures shuffle-refine scaling, not a deliberate quadratic
+    # fact×fact general-geometry join: at --scale 128 BOTH sides are
+    # above BC_MAX_BYTES (~80 MB tracks WKB, ~73 MB lshapes WKB); the
+    # shared dimension collect (_collect_dimension) is patched to read
+    # nothing, so at every scale both sides take the fact path and no
+    # side is read to the driver (TieredSpatialJoin.java's own scale
+    # regime). scatter_only keys skip the hotspot mode so the job
+    # measures shuffle-refine scaling, not a deliberate quadratic
     # hotspot; radii/deltas are shrunk 16x to keep pair selectivity
     # scale-appropriate at 1M x 600k geometries.
     from geowave_spark.operators import geom_join as GJ
     from geowave_spark.sources.testgeo import lshapes_from_keys, tracks_from_keys
 
-    def _no_collect(*a, **k):
-        raise AssertionError(
-            "driver payload collect attempted in the non-broadcast "
-            "geometry join (scaling_bench geom_join_big)"
-        )
-
-    _orig_collect = GJ._collect_payload_dict
-    GJ._collect_payload_dict = _no_collect
+    _orig_collect = GJ._collect_dimension
+    GJ._collect_dimension = lambda *a, **k: None
     try:
         trk = tracks_from_keys(
             spark, 1_000_000 * scale // 128, int(cpus) * 8,
@@ -168,12 +162,12 @@ if jobs is not None and "geom_join_big" in jobs:
             # overlaps) — see lshapes_from_keys docstring
             decorrelate=True,
         )
-        # timed END-TO-END per iteration (build + covering checkpoint +
-        # candidate joins + refine): geom_geom_join materializes its
-        # keyed frames via eager localCheckpoint at build, so run()'s
-        # pre-t0 make_df would exclude the dominant covering cost —
-        # hand-time the whole call instead (same best-of-2, same
-        # clearCache-between-iterations discipline)
+        # timed END-TO-END per iteration (build + candidate join +
+        # refine): geom_geom_join's build keys each fact side once into
+        # an eager localCheckpoint (the polyfill, the dominant cost) and
+        # aggregates its flags and levels, so run()'s pre-t0 make_df
+        # would exclude that — hand-time the whole call instead (same
+        # best-of-2, same clearCache-between-iterations discipline)
         best = None
         for _ in range(2):
             spark.catalog.clearCache()
@@ -181,13 +175,12 @@ if jobs is not None and "geom_join_big" in jobs:
             counts["geom_join_big"] = GJ.geom_geom_join(
                 trk, lsh, "intersects",
                 left_key="p_partkey", right_key="s_suppkey",
-                broadcast_right=False,
             ).count()
             dt = time.time() - t0
             best = dt if best is None or dt < best else best
         times["geom_join_big"] = round(best, 3)
     finally:
-        GJ._collect_payload_dict = _orig_collect
+        GJ._collect_dimension = _orig_collect
 if jobs is None or "tile_cut_merge" in jobs:
     imgs = images_table(spark, n_img, w=64, h=64, partitions=int(cpus) * 4)
     imgs = imgs.persist(); imgs.count()  # materialize generation outside the timed cut+merge
