@@ -24,7 +24,6 @@ __version__ = "0.1.0"
 
 X_SCALE = 1_000_000  # micro-degrees per degree
 WORLD_X_U = 360_000_000  # full longitude span in micro-degrees
-WORLD_Y_U = 360_000_000  # we index lat on the same +-180 domain for squareness
 LON_OFF_U = 180_000_000
 LAT_OFF_U = 180_000_000
 

@@ -57,16 +57,3 @@ def bbox(x, y, x0: int, y0: int, x1: int, y1: int):
     """BBOX(x, y, box) — exact form (SpatialPredicates BBOX)."""
     return x.between(x0, x1) & y.between(y0, y1)
 
-
-def bbox_loose(x, y, x0: int, y0: int, x1: int, y1: int, res: int):
-    """BBOXLOOSE — coarse-constraint-only form: the bbox widened to the
-    enclosing cell boundaries at ``res`` (skips exact refinement, may
-    return extra rows near the edge — SpatialPredicates.java 'loose').
-    Delegates the widening to spatial_query.loose_bounds so the two
-    BBOXLOOSE implementations can never diverge (the bound is ceil-div;
-    WORLD_X_U is not divisible by 2^res beyond res 9)."""
-    from geowave_spark.operators.spatial_query import loose_bounds
-
-    bx_lo, bx_hi = loose_bounds(x0, x1, res)
-    by_lo, by_hi = loose_bounds(y0, y1, res)
-    return x.between(bx_lo, bx_hi) & y.between(by_lo, by_hi)

@@ -92,23 +92,6 @@ def wgs_y_u_sql(y_mm: str) -> str:
     )
 
 
-def reproject_4326_to_3857(df, x_col: str = "x_u", y_col: str = "y_u"):
-    """Add (x_mm, y_mm) Web-Mercator columns — one codegen projection,
-    no shuffle; the reprojected frame can feed crs_store directly (the
-    reference's ingest-reproject-then-index flow, GeoTools territory
-    there, closed-form here)."""
-    return df.withColumns(
-        {"x_mm": merc_x_mm(F.col(x_col)), "y_mm": merc_y_mm(F.col(y_col))}
-    )
-
-
-def reproject_3857_to_4326(df, x_col: str = "x_mm", y_col: str = "y_mm"):
-    """Inverse: add (x_u, y_u) micro-degree columns."""
-    return df.withColumns(
-        {"x_u": wgs_x_u(F.col(x_col)), "y_u": wgs_y_u(F.col(y_col))}
-    )
-
-
 # ===================================================================
 # WGS84 ↔ UTM (ellipsoidal transverse Mercator, Krüger series)
 # ===================================================================

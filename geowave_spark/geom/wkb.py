@@ -22,15 +22,6 @@ _POLYGON = 3
 _MULTIPOINT = 4
 _MULTIPOLYGON = 6
 
-_TYPE_NAMES = {
-    _POINT: "Point",
-    _LINESTRING: "LineString",
-    _POLYGON: "Polygon",
-    _MULTIPOINT: "MultiPoint",
-    _MULTIPOLYGON: "MultiPolygon",
-}
-
-
 @dataclass
 class Geometry:
     """Lightweight geometry: ``gtype`` + coordinate parts.

@@ -28,7 +28,6 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from geowave_spark import LAT_OFF_U, LON_OFF_U, WORLD_X_U
 from geowave_spark.index.native import _spread_col
 from geowave_spark.index.zorder import ranges_from_grid
 
@@ -54,10 +53,6 @@ class CRS:
     def y_span(self) -> int:
         return self.y_hi - self.y_lo
 
-
-# the engine default — identical cell assignment to index/native.cell_col
-EPSG_4326_U = CRS("EPSG:4326 (micro-degrees)", -LON_OFF_U, WORLD_X_U - LON_OFF_U,
-                  -LAT_OFF_U, WORLD_X_U - LAT_OFF_U)
 
 # web-mercator in integer millimeters: ±20037508.342789244 m, truncated
 # to mm — the standard projected CRS of tile services (EPSG:3857)
@@ -193,15 +188,3 @@ def crs_bbox_query(
         F.col(x_col).between(x_lo, x_hi) & F.col(y_col).between(y_lo, y_hi)
     )
 
-
-def utm_zone_crs(zone: int) -> CRS:
-    """A UTM zone as a custom-CRS index domain in integer METERS —
-    composes with geom/transform.utm_roundtrip: reproject, filter to
-    the zone, index (the reference's stance of indexing data in its
-    own CRS; SpatialDimensionalityTypeProvider accepts any bounded
-    planar CRS the same way). Easting bounds are the zone's official
-    coverage at the equator (~167 km .. ~833 km; the widest section),
-    northing the full hemisphere pair with southern false northing."""
-    if not 1 <= zone <= 60:
-        raise ValueError(f"UTM zone must be 1..60, got {zone}")
-    return CRS(f"UTM zone {zone} (meters)", 166_000, 834_000, 0, 10_000_000)

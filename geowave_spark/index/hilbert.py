@@ -43,31 +43,6 @@ def hilbert_encode(gx, gy, res: int):
     return int(d[0]) if scalar else d
 
 
-def hilbert_decode(d, res: int):
-    """hilbert distance -> (gx, gy)."""
-    scalar = not isinstance(d, np.ndarray)
-    t = np.atleast_1d(np.asarray(d, dtype=np.int64)).copy()
-    x = np.zeros_like(t)
-    y = np.zeros_like(t)
-    s = np.int64(1)
-    while s < (np.int64(1) << res):
-        rx = 1 & (t // 2)
-        ry = 1 & (t ^ rx)
-        swap = ry == 0
-        flip = swap & (rx == 1)
-        x_f = np.where(flip, s - 1 - x, x)
-        y_f = np.where(flip, s - 1 - y, y)
-        x_r = np.where(swap, y_f, x_f)
-        y_r = np.where(swap, x_f, y_f)
-        x = x_r + s * rx
-        y = y_r + s * ry
-        t //= 4
-        s <<= 1
-    if scalar:
-        return int(x[0]), int(y[0])
-    return x, y
-
-
 def hilbert_ranges(
     x_lo_u: int,
     y_lo_u: int,

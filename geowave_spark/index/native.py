@@ -72,29 +72,6 @@ def _packed_cell(gx: Column, gy: Column) -> Column:
     return F.shiftleft(gx, 32).bitwiseOR(gy)
 
 
-def parent_cell_col(cell: Column, d_res: int) -> Column:
-    """Ancestor derivation, the reprojectToTier analog
-    (TieredSFCIndexStrategy.java:514-535) as a shift expression."""
-    return F.shiftright(cell, 2 * d_res)
-
-
-def st_cell_col(x_u: Column, y_u: Column, ts: Column, res: int, unit: str = "YEAR") -> Column:
-    """Spatial-temporal composite key: ``(time_bin ≪ 2·res) | xy_cell``
-    — the SpatialTemporalDimensionalityTypeProvider analog
-    (core/geotime/.../index/SpatialTemporalDimensionalityTypeProvider.java:207-245)
-    with the periodic time bin as the leading key component, exactly
-    like the reference puts the temporal bin id in the partition key
-    (TemporalBinningStrategy.java:36-43, default periodicity YEAR —
-    SpatialTemporalOptions.java:18). A bbox+interval query becomes a
-    range of composite keys per time bin. Bias presets map to ``res``:
-    more spatial bits = SPATIAL bias, fewer = TEMPORAL bias."""
-    from geowave_spark.operators.temporal import time_bin_col
-
-    return F.shiftleft(time_bin_col(ts, unit).cast("long"), 2 * res).bitwiseOR(
-        cell_col(x_u, y_u, res)
-    )
-
-
 def grid_coord_sql(expr: str, res: int, off: int = LON_OFF_U) -> str:
     """The same grid-coord computation as ANSI SQL text (DuckDB oracle)
     — the 4326 specialization of grid_coord_sql_crs (one canonical

@@ -11,18 +11,12 @@ exact refinement runs after the index join).
 
 from __future__ import annotations
 
-from functools import lru_cache
-
 import numpy as np
 
 from geowave_spark import LAT_OFF_U, LON_OFF_U, WORLD_X_U, X_SCALE
 from geowave_spark.geom.predicates import intersects
-from geowave_spark.geom.wkb import Geometry, box, wkb_loads
-from geowave_spark.index.zorder import (
-    grid_coord,
-    morton_encode,
-    pick_res_for_extent,
-)
+from geowave_spark.geom.wkb import Geometry, box
+from geowave_spark.index.zorder import grid_coord, morton_encode
 
 
 def _segs_hit_rects(
@@ -164,22 +158,3 @@ def polyfill(geom: Geometry, res: int, exact_trim: bool = True) -> list[int]:
         gxs, gys = gxs[keep], gys[keep]
     return [int(morton_encode(gx, gy)) for gx, gy in zip(gxs, gys)]
 
-
-def cells_for_geom(
-    geom: Geometry, max_cells: int = 64, finest_res: int = 20
-) -> tuple[int, list[int]]:
-    """(res, cells) for an extent geometry: finest resolution whose bbox
-    cover stays ≤ max_cells (tier-selection semantics,
-    TieredSFCIndexStrategy.java:345-367; cap ≙ the 80-id join cap of
-    GeoWaveIndexedRDD.java:119)."""
-    x0, y0, x1, y1 = geom.bounds
-    res = pick_res_for_extent(
-        int((x1 - x0) * X_SCALE), int((y1 - y0) * X_SCALE), max_cells
-    )
-    res = min(res, finest_res)
-    return res, polyfill(geom, res)
-
-
-@lru_cache(maxsize=500)  # mirrors HilbertSFC's 500-entry LRU (HilbertSFC.java:97-100)
-def cells_for_wkb_cached(wkb: bytes, max_cells: int = 64, finest_res: int = 20):
-    return cells_for_geom(wkb_loads(wkb), max_cells, finest_res)

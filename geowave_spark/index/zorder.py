@@ -28,7 +28,7 @@ from functools import lru_cache
 
 import numpy as np
 
-from geowave_spark import LAT_OFF_U, LON_OFF_U, MAX_RES, WORLD_X_U
+from geowave_spark import LON_OFF_U, MAX_RES, WORLD_X_U
 
 _M1 = 0x5555555555555555
 _M2 = 0x3333333333333333
@@ -82,30 +82,10 @@ def grid_coord(x_u, res: int):
     return grid_coord_crs(x_u, res, -LON_OFF_U, WORLD_X_U)
 
 
-def cell_of_point(x_u: int, y_u: int, res: int) -> int:
-    return int(morton_encode(grid_coord(x_u, res), grid_coord(y_u, res)))
-
-
 def cells_of_points(x_u: np.ndarray, y_u: np.ndarray, res: int) -> np.ndarray:
     gx = grid_coord(x_u, res).astype(np.uint64)
     gy = grid_coord(y_u, res).astype(np.uint64)
     return morton_encode(gx, gy).astype(np.int64)
-
-
-def decode_cell(cell: int, res: int) -> tuple[int, int, int, int]:
-    """Cell id -> micro-degree bounds (x_lo, y_lo, x_hi, y_hi), hi exclusive."""
-    gx, gy = morton_decode(int(cell))
-    n = 1 << res
-    x_lo = int(gx) * WORLD_X_U // n - LON_OFF_U
-    x_hi = (int(gx) + 1) * WORLD_X_U // n - LON_OFF_U
-    y_lo = int(gy) * WORLD_X_U // n - LAT_OFF_U
-    y_hi = (int(gy) + 1) * WORLD_X_U // n - LAT_OFF_U
-    return x_lo, y_lo, x_hi, y_hi
-
-
-def parent_cell(cell, d_res: int):
-    """Ancestor cell ``d_res`` levels up (reprojectToTier analog)."""
-    return cell >> (2 * d_res)
 
 
 @lru_cache(maxsize=500)  # decomposition cache size per HilbertSFC.java:97-100

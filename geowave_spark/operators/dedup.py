@@ -133,66 +133,6 @@ def minhash_lsh_pairs(
     )
 
 
-def ngram_jaccard_pairs_prefix(
-    df: DataFrame, text_col: str = "text", shingle_n: int = 3, threshold: float = 0.5
-) -> DataFrame:
-    """Exact n-gram Jaccard pairs at/above ``threshold``, via
-    **prefix-filtered** inverted-index join (AllPairs/SSJoin, Bayardo
-    et al. WWW'07): under any fixed global shingle order, two sets with
-    J ≥ t must share a shingle within each other's first
-    ``|d| - ⌈t·|d|⌉ + 1`` shingles — so only that prefix is indexed.
-    Common shingles stop exploding quadratically (they sit late in the
-    order for most docs), the candidate join shrinks by ~|prefix|/|d|,
-    and recall at the threshold is exact, not approximate. Verification
-    recomputes the full-set Jaccard, so the output is identical to the
-    all-shingles join."""
-    t = threshold
-    raw = df.select(
-        "doc_id",
-        F.array_distinct(shingles_col(F.col(text_col), shingle_n)).alias("sh0"),
-    )
-    # global order = ascending document frequency (rare shingles first):
-    # common shingles fall OUTSIDE most prefixes, which is what stops
-    # the hot-shingle quadratic blowup (one small aggregation + a
-    # broadcast back — df-ordered AllPairs)
-    freq = raw.select(F.explode("sh0").alias("s")).groupBy("s").agg(
-        F.count("*").alias("df_cnt")
-    )
-    exploded = raw.select("doc_id", F.explode("sh0").alias("s")).join(
-        F.broadcast(freq), "s"
-    )
-    sh_full = exploded.groupBy("doc_id").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("df_cnt", "s"))), lambda e: e["s"]
-        ).alias("sh")
-    )
-    sz = F.size("sh")
-    prefix_len = sz - F.ceil(F.lit(t) * sz).cast("int") + 1
-    prefixed = sh_full.select(
-        "doc_id", "sh", F.slice("sh", 1, F.greatest(prefix_len, F.lit(1))).alias("pf")
-    )
-    idx = prefixed.select("doc_id", F.explode("pf").alias("s"))
-    cand = (
-        idx.select(F.col("doc_id").alias("doc_a"), "s")
-        .join(idx.select(F.col("doc_id").alias("doc_b"), "s"), "s")
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
-    a = sh_full.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
-    b = sh_full.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size(F.array_union("sh_a", "sh_b"))
-    jac_x1000 = F.call_function("div", inter * 1000, F.greatest(union, F.lit(1)))
-    return (
-        cand.join(a, "doc_a")
-        .join(b, "doc_b")
-        .withColumn("jaccard_x1000", jac_x1000)
-        .where(F.col("jaccard_x1000") >= int(threshold * 1000))
-        .select("doc_a", "doc_b", "jaccard_x1000")
-    )
-
-
 def simhash(df: DataFrame, text_col: str = "text", bits: int = 32) -> DataFrame:
     """SimHash document sketch: sign-sum of per-token hash bits
     (Charikar 2002). Native: per-bit majority vote over token hashes."""
@@ -220,10 +160,8 @@ def ngram_jaccard_pairs(
     """Exact n-gram Jaccard pairs at/above ``threshold`` via the
     aggregation-form inverted-index join: co-occurrence counts reduce
     map-side immediately (no arrays cross the shuffle). Best when the
-    shingle vocabulary is small/dense; for long-tail vocabularies at
-    corpus scale prefer ngram_jaccard_pairs_prefix, whose
-    threshold-aware prefix filter caps the hot-shingle quadratic
-    blowup. Both return identical rows (asserted in tests)."""
+    shingle vocabulary is small/dense; a common shingle joins every
+    pair of documents that share it."""
     sh = df.select(
         "doc_id", F.explode(F.array_distinct(shingles_col(F.col(text_col), shingle_n))).alias("s")
     )

@@ -29,8 +29,9 @@ Plan shape (idiomatic-Spark re-expression of the tier algorithm):
                                           exact parent shifts)
   same-tier cogroup + nested loop         ONE equi-join on one packed
   (:513-551)                              BIGINT key (below)
-  exact predicate refinement              vectorized predicates, each
-                                          distinct pair once per batch
+  exact predicate refinement              vectorized predicates on the
+                                          deduped pairs, each distinct
+                                          pair once
   reduceByKey keep-first + DedupeFilter   reference-point filter, else
   (:343-349)                              dropDuplicates of key pairs; a
                                           fact side's WKB joins back to
@@ -68,7 +69,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import BooleanType, LongType, StructField, StructType
+from pyspark.sql.types import LongType, StructField, StructType
 
 from geowave_spark.geom import predicates as P
 from geowave_spark.geom.predicates import points_distance_to_geom, points_pred_batch
@@ -397,7 +398,10 @@ def _pair_refine_by_keys_udf(l_bc, r_bc, predicate: str, distance_u: float | Non
             out[idx] = res_u[inv]
         return pd.Series(out)
 
-    return run
+    # non-deterministic, so Catalyst keeps the refine filter above the
+    # pair dedupe instead of pushing it below, where every shared-cell
+    # duplicate of a pair would reach Python
+    return run.asNondeterministic()
 
 
 def _box_pair_native_pred(predicate: str, distance_u: float | None) -> Column | None:
@@ -444,29 +448,6 @@ def _box_pair_native_pred(predicate: str, distance_u: float | None) -> Column | 
         # area × area can never cross (JTS dimension rule)
         return F.lit(False)
     return None
-
-
-def _pair_refine_udf(predicate: str, distance_u: float | None):
-    """(left_wkb, right_wkb) -> bool, vectorized via pair_pred_batch."""
-    from geowave_spark.geom.udfs import pair_pred_batch, parse_cached
-
-    if distance_u is not None:
-
-        def run(a: pd.Series, b: pd.Series) -> pd.Series:
-            from geowave_spark.geom.udfs import _extract_point_arrays, _grouped
-
-            out = np.zeros(len(a), dtype=bool)
-            for g, idx, varying, _pf in _grouped(a, b):
-                pts = _extract_point_arrays(varying, idx)
-                if pts is not None:
-                    out[idx] = points_distance_to_geom(pts[0], pts[1], g) <= distance_u
-                else:
-                    for i in idx:
-                        out[i] = P.distance(parse_cached(bytes(varying[i])), g) <= distance_u
-            return pd.Series(out)
-
-        return F.pandas_udf(run, BooleanType())
-    return F.pandas_udf(pair_pred_batch(predicate, P.PREDICATES[predicate]), BooleanType())
 
 
 class _Side(NamedTuple):
@@ -591,13 +572,20 @@ def geom_geom_join(
     if native_pred is not None:
         cand = cand.where(native_pred)
 
-    # dedupe the thin key pairs (cheap narrow shuffle). Only a WKB
-    # join-back keeps the refine above it: with both sides collected,
-    # Catalyst pushes the (deterministic) refine filter below this
-    # aggregate, so the refine sees each shared-cell duplicate
+    # dedupe the thin key pairs (cheap narrow shuffle); the refine runs
+    # above it, on distinct pairs (its UDF is non-deterministic, so the
+    # filter is not pushed below the aggregate). With both sides
+    # collected it runs right there, so the pairs are hashed by left key
+    # into one partition per core (AQE would coalesce a few-MB dedupe
+    # into one task and serialize the refine) and sorted, so each Arrow
+    # batch groups the pairs of one geometry
     matched = cand.select(left_key, right_key)
     if not skip_dedupe:
-        matched = matched.dropDuplicates([left_key, right_key])
+        if native_pred is None and l.payload is not None and r.payload is not None:
+            matched = matched.repartition(spark.sparkContext.defaultParallelism, left_key)
+            matched = matched.dropDuplicates([left_key, right_key]).sortWithinPartitions(left_key)
+        else:
+            matched = matched.dropDuplicates([left_key, right_key])
     if native_pred is None:
         # join a fact side's WKB back to the deduped pair set
         sc = spark.sparkContext
@@ -635,48 +623,26 @@ def _group_indices(codes: np.ndarray, n_uniq: int):
             yield u_i, idx
 
 
-def _point_refine_udf(predicate: str, distance_u: float | None):
-    """(geom_wkb, x_u, y_u) -> bool: grouped fully-vectorized point
-    refinement — one numpy kernel per distinct geometry per batch."""
+def _point_refine_udf(predicate: str, distance_u: float | None, geom_bc=None):
+    """(geom, x_u, y_u) -> bool: grouped fully-vectorized point
+    refinement — one numpy kernel per distinct geometry per batch. The
+    geometry is a WKB column, or, with ``geom_bc``, a KEY whose WKB
+    rides the task broadcast of its {key: wkb} dictionary (once per
+    executor, as the reference broadcasts its strategy/predicate,
+    TieredSpatialJoin.java:138-141): at millions of candidates that
+    cuts the Arrow boundary from ~130 B/row of repeated WKB to 8 B/row."""
 
     @F.pandas_udf("boolean")
     def run(g: pd.Series, xs: pd.Series, ys: pd.Series) -> pd.Series:
         from geowave_spark.geom.udfs import parse_cached
 
+        get = bytes if geom_bc is None else geom_bc.value.__getitem__
         out = np.zeros(len(g), dtype=bool)
         x = xs.to_numpy(dtype=np.float64)
         y = ys.to_numpy(dtype=np.float64)
         codes, uniq = pd.factorize(g)
         for u_i, idx in _group_indices(codes, len(uniq)):
-            geom = parse_cached(bytes(uniq[u_i]))
-            if distance_u is not None:
-                out[idx] = points_distance_to_geom(x[idx], y[idx], geom) <= distance_u
-            else:
-                out[idx] = points_pred_batch(predicate, geom, x[idx], y[idx])
-        return pd.Series(out)
-
-    return run
-
-
-def _point_refine_by_id_udf(geom_bc, predicate: str, distance_u: float | None):
-    """(geom_key, x_u, y_u) -> bool: the broadcast-dictionary variant —
-    candidate rows carry only the geometry KEY; the WKB payloads ride a
-    task broadcast once per executor (the reference broadcasts its
-    strategy/predicate the same way, TieredSpatialJoin.java:138-141).
-    At millions of candidates this cuts the Arrow boundary from
-    ~130 B/row of repeated WKB to 8 B/row."""
-
-    @F.pandas_udf("boolean")
-    def run(k: pd.Series, xs: pd.Series, ys: pd.Series) -> pd.Series:
-        from geowave_spark.geom.udfs import parse_cached
-
-        geoms = geom_bc.value
-        out = np.zeros(len(k), dtype=bool)
-        x = xs.to_numpy(dtype=np.float64)
-        y = ys.to_numpy(dtype=np.float64)
-        codes, uniq = pd.factorize(k)
-        for u_i, idx in _group_indices(codes, len(uniq)):
-            geom = parse_cached(geoms[uniq[u_i]])
+            geom = parse_cached(get(uniq[u_i]))
             if distance_u is not None:
                 out[idx] = points_distance_to_geom(x[idx], y[idx], geom) <= distance_u
             else:
@@ -746,8 +712,9 @@ def geom_point_join(
         keyed = pa.table({geom_key: dim.table.column(geom_key).take(rows), "cell": cell})
         schema = StructType([side.schema[geom_key], StructField("cell", LongType(), False)])
         g = spark.createDataFrame(keyed, schema)
-        refine = _point_refine_by_id_udf(spark.sparkContext.broadcast(dim.payload), predicate,
-                                         distance_u)(F.col(geom_key), F.col("x_u"), F.col("y_u"))
+        payload = spark.sparkContext.broadcast(dim.payload)
+        refine = _point_refine_udf(predicate, distance_u, payload)(
+            F.col(geom_key), F.col("x_u"), F.col("y_u"))
         return extent_point_join(points, g, refine, how, True, point_key, geom_key,
                                  res_levels=dim.levels)
     g = geom_keys(side.repartition(spark.sparkContext.defaultParallelism), "_g", max_cells,

@@ -111,56 +111,6 @@ def frame_sample(media: DataFrame, every: int = 2) -> DataFrame:
     )
 
 
-def media_embed(media: DataFrame, dim: int = 8) -> DataFrame:
-    """Feature extraction: media -> fixed-size float vector. The
-    embedding itself is a DETERMINISTIC FAKE (hash of exact decoded
-    statistics — a real model would replace the inner function); the
-    plumbing — decode, batch shape, array<float> output column feeding
-    operators/similarity.py — is the production path."""
-
-    def embed(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                s = decode_audio(r.bytes, r.fmt).astype(np.int64)
-                seed = int(np.sum(s * s)) % (1 << 31)
-                j = np.arange(dim, dtype=np.int64)
-                vec = (((seed + j * 2654435761) % 2000) / 1000.0 - 1.0).astype(
-                    np.float32
-                )
-                rows.append((int(r.media_id), vec))
-            yield pd.DataFrame(rows, columns=["media_id", "embedding"])
-
-    return media.select("media_id", "bytes", "fmt").mapInPandas(
-        embed, "media_id long, embedding array<float>"
-    )
-
-
-def frame_resize(frames: DataFrame, out_w: int, out_h: int) -> DataFrame:
-    """Resize sampled frames (nearest-neighbor, same deterministic
-    resampler as the raster pipeline) — media variant of the raster
-    re-tile decimation. Frame dimensions come from the per-row w/h
-    columns that frame_sample carries through."""
-    from geowave_spark.raster.codec import resample_nearest
-
-    def rs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                fr = np.frombuffer(r.frame, dtype=np.uint8).reshape(
-                    int(r.h), int(r.w)
-                )
-                out = resample_nearest(fr, out_h, out_w)
-                rows.append(
-                    (int(r.media_id), int(r.frame_idx), out_w, out_h, out.tobytes())
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "frame_idx", "w", "h", "frame"])
-
-    return frames.select("media_id", "frame_idx", "w", "h", "frame").mapInPandas(
-        rs, "media_id long, frame_idx int, w int, h int, frame binary"
-    )
-
-
 def image_thumbnails(
     images: DataFrame,
     out_w: int,

@@ -1,14 +1,11 @@
 """Deterministic corpus sampling — mixture control for training data.
 
-Web-scale training pipelines shape their data mixture with two
-primitives this module provides, both DETERMINISTIC functions of the
-row id (no RNG state, no sampling seed to ship; re-running any shard
-reproduces bit-identical output — the property that makes resumable /
+Web-scale training pipelines shape their data mixture with
+primitives that are DETERMINISTIC functions of the row id (no RNG
+state, no sampling seed to ship; re-running any shard reproduces
+bit-identical output — the property that makes resumable /
 incremental pipelines and cross-run A/B diffs possible at 100 TB):
 
-- ``hash_sample``: Bernoulli-style rate subsampling by salted hash —
-  keep a row iff ``h(id) mod 1000 < rate_x1000``. Used to downsample
-  an over-represented corpus to a target mixture weight.
 - ``source_quota``: per-source (per-domain) cap — rank rows within
   each source by salted hash and keep the first ``per_source``. This
   is the C4/RefinedWeb-style domain balancing step that stops a
@@ -16,14 +13,12 @@ incremental pipelines and cross-run A/B diffs possible at 100 TB):
   hash (not by id) makes the kept subset an unbiased uniform draw
   per domain.
 
-Scale shape: ``hash_sample`` is a pure narrow filter (whole-stage
-codegen, no shuffle, pushes below everything Catalyst can reorder).
-``source_quota`` is one hash-partitioned window by source — the same
-single shuffle a groupBy would need; skewed giant domains are exactly
-the rows the quota discards, and the window's rank short-circuits via
-``WindowGroupLimit`` (Spark pushes rank <= k into the sort) so a
-10⁹-row domain never materializes a full sorted partition to keep k
-rows of it.
+Scale shape: ``source_quota`` is one hash-partitioned window by source
+— the same single shuffle a groupBy would need; skewed giant domains
+are exactly the rows the quota discards, and the window's rank short-
+circuits via ``WindowGroupLimit`` (Spark pushes rank <= k into the
+sort) so a 10⁹-row domain never materializes a full sorted partition
+to keep k rows of it.
 
 The salted hash is the engine's portable ``md5``-prefix h64
 (operators/dedup._h64), so the DuckDB oracle reproduces every draw
@@ -49,22 +44,6 @@ def sample_key(id_col, salt: int = 7):
     """The deterministic draw: salted 64-bit hash of the row id."""
     c = F.col(id_col) if isinstance(id_col, str) else id_col
     return _h64(c.cast("string"), salt)
-
-
-def hash_sample(
-    df: DataFrame,
-    rate_x1000: int,
-    id_col: str = "doc_id",
-    salt: int = 7,
-) -> DataFrame:
-    """Keep ≈ rate_x1000/1000 of rows, deterministically by id hash.
-
-    ``pmod(h, 1000) < rate_x1000`` — a pure filter expression: no
-    shuffle, stays in whole-stage codegen, and Catalyst pushes it
-    toward the scan like any other predicate."""
-    if not 0 <= rate_x1000 <= 1000:
-        raise ValueError(f"rate_x1000 out of range: {rate_x1000}")
-    return df.where(F.pmod(sample_key(id_col, salt), F.lit(1000)) < rate_x1000)
 
 
 def source_quota(

@@ -47,23 +47,21 @@ form lives next to its Column form (index/crs.grid_coord_expr_crs).
 ``boxes_with_cells`` (boxes, polygon bboxes, radius boxes) or by a
 polyfill (operators/geom_join.geom_point_join), point side keyed by
 ``points_keyed_by_res``, one broadcast-hash equi-join, then the
-caller's exact refine predicate. The batch operators below, the
-polygon / distance / general-geometry joins and the stream-static joins
-(streaming/ingest) all run through it. The skeleton itself makes no
-driver round-trip, so the same plan runs unchanged against a streaming
-point side. The point side is keyed at the extent side's distinct res
-levels, passed either as a frame or as a list of ints:
+caller's exact refine predicate. The batch operators below and the
+polygon / distance / general-geometry joins all run through it. The
+skeleton itself makes no driver round-trip. The point side is keyed at
+the extent side's distinct res levels, passed either as a frame or as a
+list of ints:
 
 - ``geom_point_join`` passes a list. It collects its geometry side's
   keys anyway (for the refine's payload dictionary), so the levels come
   with them, and the points are keyed by one ``explode(array(<key per
   level>))`` with literal levels: no distinct-res shuffle, no res
   broadcast, no nested-loop join.
-- The box, octagon, distance and stream joins keep the data-driven
+- The box, octagon and distance joins keep the data-driven
   ``select("res").distinct()`` dimension. Collecting it would cost
   them a job they do not otherwise run (box_point_join measured no
-  faster), and a stream join's static side would be pinned to the
-  levels it held when the query started.
+  faster).
 
 Why one join instead of a per-tier union: each union branch is its own
 shuffle + codegen unit; at 1000 executors the branch barrier serializes

@@ -68,10 +68,9 @@ def loose_bounds(lo: int, hi: int, res: int) -> tuple[int, int]:
     """Inclusive µdeg preimage of the grid interval
     [grid(lo), grid(hi)] at ``res`` — exact, honoring the domain-edge
     clamp (the first/last cell absorb everything beyond the domain).
-    The single source of truth for BBOXLOOSE widening — the SQL
-    registry's BBOXLOOSE delegates here so both implementations agree
-    (W is not divisible by 2^res beyond res 9, so the bound is
-    ceil-div, not floor-div)."""
+    The single source of truth for BBOXLOOSE widening (W is not
+    divisible by 2^res beyond res 9, so the bound is ceil-div, not
+    floor-div)."""
     from geowave_spark import LON_OFF_U, WORLD_X_U
     from geowave_spark.index.zorder import grid_coord
 

@@ -1,9 +1,10 @@
-"""Temporal predicates + periodic time binning.
+"""Interval overlap + periodic time binning.
 
-Parity surface for the reference's temporal expression layer
-(core/geotime/src/main/java/org/locationtech/geowave/core/geotime/store/query/filter/expression/temporal/
-— After, Before, BeforeOrDuring, During, DuringOrAfter, TemporalBetween,
-TimeOverlaps, TemporalEqualTo) and its periodic index binning
+Interval overlap (TimeOverlaps) of the reference's temporal expression
+layer
+(core/geotime/src/main/java/org/locationtech/geowave/core/geotime/store/query/filter/expression/temporal/;
+its instant operators After, Before, During, BeforeOrDuring and
+DuringOrAfter are GWQL's, plans/gwql.py) and its periodic index binning
 (core/geotime/.../index/dimension/TemporalBinningStrategy.java:36-43 —
 Unit HOUR/DAY/WEEK/MONTH/YEAR; the bin id becomes part of the partition
 key so one year/month/day of data shares a key prefix).
@@ -23,36 +24,6 @@ from pyspark.sql import functions as F
 # ------------------------------------------------------------ predicates
 
 
-def after(t: Column, other_end: Column) -> Column:
-    """Instant/interval start strictly after the other's end (After)."""
-    return t > other_end
-
-
-def before(t: Column, other_start: Column) -> Column:
-    """Strictly before the other's start (Before)."""
-    return t < other_start
-
-
-def during(start: Column, end: Column, lo: Column, hi: Column) -> Column:
-    """Interval fully contained in [lo, hi) (During)."""
-    return (start >= lo) & (end <= hi)
-
-
-def before_or_during(end: Column, hi: Column) -> Column:
-    """Ends no later than the other interval (BeforeOrDuring)."""
-    return end <= hi
-
-
-def during_or_after(start: Column, lo: Column) -> Column:
-    """Starts no earlier than the other interval (DuringOrAfter)."""
-    return start >= lo
-
-
-def temporal_between(t: Column, lo: Column, hi: Column) -> Column:
-    """Instant within [lo, hi) (TemporalBetween)."""
-    return (t >= lo) & (t < hi)
-
-
 def time_overlaps(s1: Column, e1: Column, s2: Column, e2: Column) -> Column:
     """Half-open interval overlap (TimeOverlaps): s1 < e2 AND e1 > s2."""
     return (s1 < e2) & (e1 > s2)
@@ -67,7 +38,7 @@ def time_bin_col(ts: Column, unit: str) -> Column:
     """Periodic bin id as an integer (TemporalBinningStrategy analog):
     YEAR -> calendar year, MONTH -> months since epoch, DAY -> days since
     epoch, HOUR -> hours since epoch. Integer-exact in both Spark and the
-    DuckDB oracle (see time_bin_sql)."""
+    DuckDB oracle."""
     if unit == "YEAR":
         return F.year(ts)
     if unit == "MONTH":
@@ -85,27 +56,6 @@ def time_bin_col(ts: Column, unit: str) -> Column:
     if unit == "HOUR":
         day = F.datediff(ts.cast("date"), F.lit(_EPOCH).cast("date"))
         return day * 24 + F.hour(ts)
-    raise ValueError(f"unsupported bin unit {unit!r}")
-
-
-def time_bin_sql(expr: str, unit: str) -> str:
-    """DuckDB twin of time_bin_col (oracle text)."""
-    if unit == "YEAR":
-        return f"year({expr})"
-    if unit == "MONTH":
-        return f"year({expr}) * 12 + month({expr}) - 1"
-    if unit == "WEEK":
-        return (
-            "CAST(floor((datediff('day', DATE '1970-01-01', "
-            f"CAST({expr} AS DATE)) + 3) / 7.0) AS INT)"
-        )
-    if unit == "DAY":
-        return f"datediff('day', DATE '1970-01-01', CAST({expr} AS DATE))"
-    if unit == "HOUR":
-        return (
-            f"datediff('day', DATE '1970-01-01', CAST({expr} AS DATE)) * 24"
-            f" + hour({expr})"
-        )
     raise ValueError(f"unsupported bin unit {unit!r}")
 
 

@@ -1,4 +1,4 @@
-"""Text search: EXACT / BEGINS_WITH / ENDS_WITH / CONTAINS, index-shaped.
+"""Text search: BEGINS_WITH / ENDS_WITH / CONTAINS, index-shaped.
 
 Parity with the reference's TextIndexStrategy
 (core/index/src/main/java/org/locationtech/geowave/core/index/text/TextIndexStrategy.java:19,
@@ -95,10 +95,3 @@ def contains_search(
     cand = idx.where(F.col("gram") == needle_n[:n]).select(id_col).distinct()
     return df.join(cand, id_col, "leftsemi").where(c.contains(needle_n))
 
-
-def exact_search(
-    df: DataFrame, col: str, value: str, case_sensitive: bool = True
-) -> DataFrame:
-    """EXACT search — a single sargable equality."""
-    v = value if case_sensitive else value.lower()
-    return df.where(_norm(F.col(col), case_sensitive) == v)

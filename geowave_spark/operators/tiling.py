@@ -61,43 +61,6 @@ def image_extent_cols(half_span_u: int):
     ]
 
 
-def tile_assign(
-    images: DataFrame,
-    half_span_u: int,
-    tile_size: int = TILE_SIZE,
-    level: int | None = None,
-) -> DataFrame:
-    """Assign each image to the grid tiles its footprint covers at the
-    chosen pyramid level. Pure JVM: corner grid coords + sequence-explode
-    (a footprint spans a small rectangle of tiles at the chosen level).
-
-    Output: (image_id, level, tx, ty) — comparable row-for-row."""
-    if level is None:
-        # fixture images share w (native px) and extent — one level for all
-        w0 = images.select(F.first("w")).first()[0]
-        level = pick_level(2 * half_span_u, int(w0), tile_size)
-    n = 1 << level
-    ext = images.select("image_id", *image_extent_cols(half_span_u))
-
-    def grid(col, off):
-        g = F.call_function(
-            "div", (F.col(col).cast("long") + F.lit(off)) * F.lit(n), F.lit(WORLD_X_U)
-        )
-        return F.least(F.greatest(g, F.lit(0)), F.lit(n - 1))
-
-    g = (
-        ext.withColumn("tx0", grid("x_lo", LON_OFF_U))
-        .withColumn("tx1", grid("x_hi", LON_OFF_U))
-        .withColumn("ty0", grid("y_lo", LAT_OFF_U))
-        .withColumn("ty1", grid("y_hi", LAT_OFF_U))
-    )
-    return (
-        g.withColumn("tx", F.explode(F.sequence("tx0", "tx1")))
-        .withColumn("ty", F.explode(F.sequence("ty0", "ty1")))
-        .select("image_id", F.lit(level).alias("level"), "tx", "ty")
-    )
-
-
 def box_tile_cover(
     boxes: DataFrame,
     level: int,

@@ -136,7 +136,6 @@ _TEMPORAL_OPS = {"AFTER", "BEFORE", "DURING", "BEFORE_OR_DURING", "DURING_OR_AFT
 # constraint set): GWQL text predicates registered as Spark temp
 # functions by functions/registry.register_all
 _TEXT_PRED_FNS = {"STRSTARTSWITH", "STRENDSWITH", "STRCONTAINS"}
-_SPATIAL_PRED_FNS = {"BBOX", "BBOXLOOSE", "INTERSECTS", "WITHIN", "DWITHIN", "BEYOND"}
 # recognized spatial predicates with no point-table rendering: fail
 # loudly (same stance as plans/cql.py _SPATIAL_RESERVED)
 _SPATIAL_RESERVED = {

@@ -42,88 +42,6 @@ def salt_column(df: DataFrame, hot: DataFrame, n_salts: int, key: str) -> DataFr
     ).drop("_hot")
 
 
-def table_stats(points: DataFrame, res: int = 8, ts_col: str | None = "ts") -> DataFrame:
-    """One-pass table statistics row — the maintained-statistics analog
-    (core/store/.../statistics/): row count, bounding box
-    (BoundingBoxStatistic), time range (TimeRangeStatistic), HyperLogLog
-    distinct cells (HyperLogLogStatistic → approx_count_distinct), and
-    occupied-cell count at ``res`` (Partitions/IndexMetaDataSet — the
-    tier-occupancy stat that prunes empty join branches,
-    TieredSFCIndexStrategy.java:125-127). Persist the output to the
-    metrics table; readers use it for join pruning and split planning."""
-    cell = cell_col(F.col("x_u"), F.col("y_u"), res)
-    aggs = [
-        F.count("*").alias("n_rows"),
-        F.min("x_u").alias("x_min"),
-        F.max("x_u").alias("x_max"),
-        F.min("y_u").alias("y_min"),
-        F.max("y_u").alias("y_max"),
-        F.approx_count_distinct(cell).alias("approx_cells"),
-    ]
-    if ts_col is not None and ts_col in points.columns:
-        aggs += [F.min(ts_col).alias("t_min"), F.max(ts_col).alias("t_max")]
-    return points.agg(*aggs).withColumn("res", F.lit(res))
-
-
-class CountMinSketch:
-    """Driver-side handle over a distributively-built CMS table."""
-
-    def __init__(self, width: int, depth: int, rows):
-        self.width = width
-        self.depth = depth
-        self._t = {(r["d"], r["bucket"]): r["n"] for r in rows}
-
-    def estimate(self, value: str) -> int:
-        import hashlib
-
-        est = None
-        for d in range(self.depth):
-            h = int(hashlib.md5(f"cms{d}:{value}".encode()).hexdigest()[:15], 16)
-            c = self._t.get((d, h % self.width), 0)
-            est = c if est is None else min(est, c)
-        return est or 0
-
-
-class BloomFilter:
-    """Driver-side handle over a distributively-built bit-position set."""
-
-    def __init__(self, m: int, k: int, positions):
-        self.m = m
-        self.k = k
-        self._bits = set(positions)
-
-    def might_contain(self, value: str) -> bool:
-        import hashlib
-
-        for d in range(self.k):
-            h = int(hashlib.md5(f"bf{d}:{value}".encode()).hexdigest()[:15], 16)
-            if h % self.m not in self._bits:
-                return False
-        return True
-
-
-def field_sketches(
-    df: DataFrame, col: str, width: int = 2048, depth: int = 4, m: int = 1 << 16, k: int = 3
-):
-    """Field-level sketch statistics — the CountMinSketchStatistic /
-    BloomFilterStatistic pair (core/store/.../statistics/field/
-    CountMinSketchStatistic.java:32, BloomFilterStatistic.java:33),
-    built distributively with native expressions: each sketch is ONE
-    groupBy over hash buckets (map-side partial aggregation — only the
-    d×width / bit-position tables reach the driver, never raw values).
-    The salted hash (md5 prefix) matches the python-side probes, so
-    estimates are deterministic.
-
-    Returns (CountMinSketch, BloomFilter); callers persist them to the
-    metrics store and use `cms.estimate(v)` for frequency hints (e.g.
-    hot-key salting decisions) and `bf.might_contain(v)` for membership
-    pruning at plan time."""
-    # NULLs are not sketch elements — without the filter their NULL md5
-    # rides into a NULL bucket/position row (and the commit-maintained
-    cms_table, positions = sketch_bucket_rows(df, col, width, depth, m, k)
-    return CountMinSketch(width, depth, cms_table), BloomFilter(m, k, positions)
-
-
 def sketch_hash_col(c, prefix: str):
     """The md5-prefix hash draw every sketch shares (exact integer
     arithmetic, computable identically by the DuckDB oracle)."""
@@ -133,10 +51,9 @@ def sketch_hash_col(c, prefix: str):
 
 
 def sketch_bucket_rows(df: DataFrame, col: str, width: int, depth: int, m: int, k: int):
-    """THE single CMS/Bloom bucket pipeline — shared by the on-demand
-    field_sketches above and the commit-maintained
-    sources/icetable._sketch_delta, so bit-identity between the two
-    paths is structural rather than a promise two copies must keep.
+    """THE single CMS/Bloom bucket pipeline of the commit-maintained
+    sketches (sources/icetable._sketch_delta); the tests' on-demand
+    sketches call it too, so the two agree by construction.
     NULLs are not sketch elements (a NULL md5 would otherwise ride into
     a NULL bucket). Returns (cms_rows [(d, bucket, n) Rows], sorted
     distinct bloom positions)."""

@@ -420,24 +420,6 @@ def attr_range_query(stored: DataFrame, column: str, lo, hi) -> DataFrame:
     return stored.where(F.col(column).between(lo, hi))
 
 
-def choose_index(constraints: set[str]) -> str:
-    """Index selection for a query's constrained dimensions — the
-    ChooseBestMatchIndexQueryStrategy rule (extensions/adapters/vector/
-    .../index/ChooseBestMatchIndexQueryStrategy.java): prefer the index
-    whose key dimensions are exactly the constrained ones; a composite
-    only wins when BOTH its dimensions are constrained."""
-    if constraints >= {"spatial", "temporal"}:
-        return "spatial_temporal"
-    if "spatial" in constraints:
-        return "spatial"
-    if "temporal" in constraints:
-        return "attribute:ts"
-    attrs = sorted(c for c in constraints if c.startswith("attr:"))
-    if attrs:
-        return "attribute:" + attrs[0].split(":", 1)[1]
-    return "full_scan"
-
-
 # --------------------------------------------- image+caption snapshot table
 
 

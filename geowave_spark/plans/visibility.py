@@ -9,13 +9,9 @@ to everyone, and — load-bearing quirk — ``&`` and ``|`` have EQUAL
 precedence and fold STRICTLY LEFT-ASSOCIATIVELY
 (VisibilityExpression.parseTokens:76-120 builds And/Or nodes in token
 order), so ``a|b&c`` means ``(a|b)&c``, not ``a|(b&c)``. Write-side
-handlers supply the expression per field (GlobalVisibilityHandler,
-FieldMappedVisibilityHandler, JsonFieldLevelVisibilityHandler —
-data/visibility/*.java) and VisibilityComposer merges multiple field
-expressions into one row expression by AND-joining the sorted set of
-minimal tokens (VisibilityComposer.java:18-30,
-VisibilityExpression.addMinimalTokens:61-73 — an OrNode contributes
-itself parenthesized as ONE token; AndNodes contribute their leaves).
+handlers supply the expression per row or per field
+(GlobalVisibilityHandler, JsonFieldLevelVisibilityHandler —
+data/visibility/*.java); the engine reads both forms as stored columns.
 
 Spark-first shape — the key observation is that visibility
 expressions are POLICY LABELS: their distinct cardinality is tiny and
@@ -50,16 +46,13 @@ import re
 from dataclasses import dataclass
 from functools import lru_cache
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 __all__ = [
     "VisibilityParseError",
     "parse_visibility",
     "evaluate_visibility",
-    "minimal_tokens",
-    "compose_visibility",
     "where_authorized",
-    "mask_fields_static",
     "mask_fields_json",
 ]
 
@@ -218,42 +211,6 @@ def evaluate_visibility(expression: str | None, auths) -> bool:
     return parse_visibility(expression).evaluate(frozenset(auths))
 
 
-# --- write-side composition (VisibilityComposer) ---------------------
-
-
-def minimal_tokens(expression: str) -> set[str]:
-    """The reference's addMinimalTokens: AND nodes contribute their
-    leaves; an OR node contributes its WHOLE subtree, parenthesized,
-    as one opaque token (VisibilityExpression.java:65-73)."""
-    out: set[str] = set()
-    _add_minimal(parse_visibility(expression), out)
-    return out
-
-
-def _add_minimal(node, out: set[str]) -> None:
-    if isinstance(node, _Value):
-        out.add(node.token)
-    elif isinstance(node, _And):
-        _add_minimal(node.left, out)
-        _add_minimal(node.right, out)
-    elif isinstance(node, _Or):
-        out.add(f"({node.unparse()})")
-    # _NoAuth contributes nothing
-
-
-def compose_visibility(expressions) -> str:
-    """AND-join the sorted union of minimal tokens across per-field
-    expressions (VisibilityComposer.composeVisibility) — the row
-    expression a write path stores when several field handlers each
-    supply a visibility."""
-    tokens: set[str] = set()
-    for e in expressions:
-        if e is None:
-            continue
-        _add_minimal(parse_visibility(e), tokens)
-    return "&".join(sorted(tokens))
-
-
 # --- read-side filtering ---------------------------------------------
 
 MAX_DISTINCT_VISIBILITIES = 10_000
@@ -302,22 +259,6 @@ def where_authorized(
 
 
 # --- field-level masking ---------------------------------------------
-
-
-def mask_fields_static(
-    df: DataFrame, field_visibilities: dict[str, str], auths
-) -> DataFrame:
-    """FieldMappedVisibilityHandler semantics: a static field→expression
-    map; a field whose expression the auth set does NOT satisfy is
-    nulled for every row (fields absent from the map are
-    unconstrained). Pure projection — decided driver-side, zero row
-    work for authorized fields."""
-    aset = frozenset(auths)
-    out = df
-    for name, expr in field_visibilities.items():
-        if name in df.columns and not evaluate_visibility(expr, aset):
-            out = out.withColumn(name, F.lit(None).cast(df.schema[name].dataType))
-    return out
 
 
 def mask_fields_json(

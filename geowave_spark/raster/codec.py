@@ -178,16 +178,6 @@ RESAMPLERS = {
 }
 
 
-def psnr(a: np.ndarray, b: np.ndarray) -> float:
-    """Peak signal-to-noise ratio in dB (fidelity gate: ≥40 dB lossy)."""
-    a = a.astype(np.float64)
-    b = b.astype(np.float64)
-    mse = float(np.mean((a - b) ** 2))
-    if mse == 0:
-        return float("inf")
-    return 10.0 * np.log10(255.0 * 255.0 / mse)
-
-
 _RAW2_MAGIC = b"RAW2"
 _DTYPES = ["uint8", "int16", "uint16", "int32", "float32", "float64"]
 

@@ -222,9 +222,8 @@ def _distinct_keys(df: DataFrame, key_col: str):
         keys.unpersist()
 
 
-# field-sketch geometry — shared with plans/stats.field_sketches so
-# commit-maintained and on-demand sketches are bit-identical (same
-# md5-prefix hash family, same table shapes)
+# field-sketch geometry: every commit's sketch uses the same md5-prefix
+# hash family and table shapes (plans/stats.sketch_bucket_rows)
 CMS_WIDTH = 2048
 CMS_DEPTH = 4
 BF_M = 1 << 16
@@ -501,9 +500,8 @@ class IceTable:
         the snapshot chain with the sketch's own operator (sum / or /
         max — merged_field_sketches), so the table-level sketch is
         readable from METADATA alone after any append sequence. The
-        hash family is the md5-prefix draw shared with
-        plans/stats.field_sketches, so on-demand and commit-maintained
-        sketches are bit-identical. Returns the new snapshot id."""
+        hash family is the md5-prefix draw of
+        plans/stats.sketch_bucket_rows. Returns the new snapshot id."""
         if mode not in ("append", "overwrite"):
             raise ValueError(mode)
         data_dir, new_files = self._write(df, stats_cols, "w")

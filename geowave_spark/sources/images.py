@@ -117,11 +117,6 @@ def images_table(
     return spark.range(0, n, numPartitions=partitions).mapInPandas(gen, SCHEMA)
 
 
-def images_pdf(n: int, w: int = 64, h: int = 64) -> pd.DataFrame:
-    """Driver-side twin for oracle tests (identical bytes)."""
-    return _gen_batch(np.arange(n), w, h)
-
-
 # --------------------------------------------------- typed multi-band set
 # Fixture for the DataBuffer-type generality of the reference's raster
 # adapter (RasterDataAdapter.java:444-550): int16 samples, 2 bands,
@@ -196,13 +191,6 @@ def images_table_typed(
     return spark.range(0, n, numPartitions=partitions).mapInPandas(gen, TYPED_SCHEMA)
 
 
-def images_pdf_typed(
-    n: int, w: int = 32, h: int = 32, bands: int = 2, dtype: str = "int16"
-) -> pd.DataFrame:
-    """Driver-side twin (identical bytes) for golden tests."""
-    return _gen_batch_typed(np.arange(n), w, h, bands, dtype)
-
-
 # --------------------------------------------- variable-size image set
 # Fixture for aspect-ratio bucketing (operators/batching.py): per-id
 # width/height from pure integer arithmetic, so the DuckDB oracle
@@ -212,9 +200,6 @@ def images_pdf_typed(
 
 def var_dims(i: int) -> tuple[int, int]:
     return 16 * (1 + (i * 7) % 9), 16 * (1 + (i * 13) % 7)
-
-
-VAR_DIMS_SQL = "16 * (1 + (i * 7) % 9)", "16 * (1 + (i * 13) % 7)"
 
 
 def _gen_batch_var(ids: np.ndarray) -> pd.DataFrame:

@@ -316,13 +316,6 @@ def dbf_decode(data: bytes, keep_deleted: bool = False) -> pd.DataFrame:
     return pd.DataFrame(rows, columns=cols)
 
 
-_SHAPE_GEOM = {
-    SHAPE_POINT: "Point",
-    SHAPE_POLYLINE: "LineString",
-    SHAPE_POLYGON: "Polygon",
-    SHAPE_MULTIPOINT: "MultiPoint",
-}
-
 _READER_SCHEMA = (
     "file string, fid int, shape_type int, geometry binary, "
     "attrs map<string,string>"

@@ -6,9 +6,6 @@ the same adapter/index write path as batch
 extensions/formats/* plugins); there are no stream queries, watermarks
 or stateful operators (SURVEY.md §2.10). The engine mirrors that:
 Structured Streaming sources feed the identical cell-indexing
-transformation and append to the indexed table.
+transformation and append to the IceTable snapshot store
+(streaming.ingest.stream_ingest_icetable).
 """
-
-from geowave_spark.streaming.ingest import indexed_stream, stream_ingest
-
-__all__ = ["indexed_stream", "stream_ingest"]

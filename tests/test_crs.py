@@ -8,8 +8,9 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from geowave_spark import LAT_OFF_U, LON_OFF_U, WORLD_X_U
 from geowave_spark.index.crs import (
-    EPSG_4326_U,
+    CRS,
     WEB_MERCATOR_MM,
     bbox_ranges_crs,
     cell_col_crs,
@@ -20,6 +21,9 @@ from geowave_spark.index.crs import (
 K1 = 2654435761
 K2 = 2246822519
 MERC = 20_037_508_342
+# the 4326 micro-degree grid of index/native.cell_col, as a CRS
+EPSG_4326_U = CRS("EPSG:4326 (micro-degrees)", -LON_OFF_U, WORLD_X_U - LON_OFF_U,
+                  -LAT_OFF_U, WORLD_X_U - LAT_OFF_U)
 
 
 @pytest.fixture(scope="module")

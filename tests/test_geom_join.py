@@ -9,11 +9,7 @@ import pytest
 from py4j.protocol import MEMORY_COMMAND_NAME, MEMORY_DEL_SUBCOMMAND_NAME
 from pyspark.sql import functions as F
 
-from geowave_spark.operators.geom_join import (
-    _pair_refine_udf,
-    geom_geom_join,
-    geom_point_join,
-)
+from geowave_spark.operators.geom_join import geom_geom_join, geom_point_join
 from geowave_spark.sources.testgeo import (
     customer_snapped_boxes,
     events_points,
@@ -22,6 +18,7 @@ from geowave_spark.sources.testgeo import (
     supplier_lshapes,
     xy_cols,
 )
+from oracles import pair_refine_udf
 
 SF = "/root/testdata/sf0.001"
 
@@ -49,7 +46,7 @@ def brute_geom_geom(left, right, predicate, lk, rk, distance_u=None):
     r = right.select(F.col(rk), F.col("geom").alias("_rg"))
     return (
         l.crossJoin(r)
-        .where(_pair_refine_udf(predicate, distance_u)(F.col("_lg"), F.col("_rg")))
+        .where(pair_refine_udf(predicate, distance_u)(F.col("_lg"), F.col("_rg")))
         .select(lk, rk)
     )
 
@@ -321,12 +318,15 @@ def test_point_join_wrong_size_estimate_falls_back(spark, fixtures, monkeypatch)
     wkb_bytes = int(lsh.agg(F.sum(F.length("geom"))).first()[0])
     monkeypatch.setattr(GJ, "_size_estimate", lambda df: 0)
 
-    def no_payload_refine(*a, **kw):
-        raise AssertionError("the payload-dictionary refine must not be planned")
+    row_refine = GJ._point_refine_udf
+
+    def no_payload_refine(predicate, distance_u, geom_bc=None):
+        assert geom_bc is None, "the payload-dictionary refine must not be planned"
+        return row_refine(predicate, distance_u)
 
     with monkeypatch.context() as m:
         m.setattr(GJ, "BC_MAX_BYTES", wkb_bytes - 1)
-        m.setattr(GJ, "_point_refine_by_id_udf", no_payload_refine)
+        m.setattr(GJ, "_point_refine_udf", no_payload_refine)
         got = geom_point_join(pts, lsh, "intersects", geom_key="s_suppkey")
         assert _pairs(got, "event_id", "s_suppkey") == _brute_point_pairs(
             pts, lsh, "s_suppkey"
@@ -334,7 +334,7 @@ def test_point_join_wrong_size_estimate_falls_back(spark, fixtures, monkeypatch)
 
     dup = lsh.select((F.col("s_suppkey") % 3).alias("s_suppkey"), "geom")
     with monkeypatch.context() as m:
-        m.setattr(GJ, "_point_refine_by_id_udf", no_payload_refine)
+        m.setattr(GJ, "_point_refine_udf", no_payload_refine)
         got = geom_point_join(pts, dup, "intersects", geom_key="s_suppkey")
         assert _pairs(got, "event_id", "s_suppkey") == _brute_point_pairs(
             pts, dup, "s_suppkey"
@@ -344,6 +344,11 @@ def test_point_join_wrong_size_estimate_falls_back(spark, fixtures, monkeypatch)
 def _plan_nodes(df):
     """Every node of ``df``'s executed plan (the AQE final plan, walked
     through its query stages), as (class name, node)."""
+    return _subtree(df._jdf.queryExecution().executedPlan())
+
+
+def _subtree(plan):
+    """``plan`` and every node below it, as (class name, node)."""
     found = []
 
     def walk(p):
@@ -357,7 +362,7 @@ def _plan_nodes(df):
         for i in range(children.size()):
             walk(children.apply(i))
 
-    walk(df._jdf.queryExecution().executedPlan())
+    walk(plan)
     return found
 
 
@@ -473,6 +478,24 @@ def test_geom_join_job_budget_and_plan(spark):
     assert "UnionExec" not in names
     assert "BroadcastNestedLoopJoinExec" not in names
     assert "InMemoryTableScanExec" not in names
+
+
+def test_geom_join_refines_each_pair_once(spark):
+    """Dimension × dimension: the pair refine runs on the deduped key
+    pairs. Its ArrowEvalPython sits above the dedupe HashAggregate, so
+    a pair that shares several cells reaches Python once."""
+    df = geom_geom_join(
+        part_tracks(spark, SF), supplier_lshapes(spark, SF), "intersects",
+        left_key="p_partkey", right_key="s_suppkey",
+    )
+    assert df.collect()
+    nodes = _plan_nodes(df)
+    refines = [p for n, p in nodes if n == "ArrowEvalPythonExec"]
+    assert len(refines) == 1
+    assert "HashAggregateExec" in {n for n, _ in _subtree(refines[0])}
+    for n, p in nodes:
+        if n == "HashAggregateExec":
+            assert "ArrowEvalPythonExec" not in {m for m, _ in _subtree(p)}
 
 
 def test_geom_join_leaves_no_persistent_rdds(spark):

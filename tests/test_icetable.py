@@ -813,10 +813,10 @@ def test_occupancy_fold_incomplete_after_empty_file_delete(spark, tmp_path):
 
 def test_commit_maintained_sketches_match_on_demand(spark, tmp_path):
     """Field sketches folded from snapshot metadata must equal the
-    on-demand computation (plans/stats.field_sketches) over the live
+    on-demand computation (tests/oracles.field_sketches) over the live
     table — after a multi-snapshot append sequence AND after a
     rollback redirects the fold."""
-    from geowave_spark.plans.stats import field_sketches
+    from oracles import field_sketches
     from geowave_spark.sources.icetable import (
         BF_K,
         BF_M,
@@ -942,7 +942,7 @@ def test_sketch_columns_tolerate_nulls(spark, tmp_path):
     the query on the first null-bearing micro-batch. NULLs are not
     sketch elements: both the commit-maintained path and the on-demand
     twin skip them, and their sketches stay bit-identical."""
-    from geowave_spark.plans.stats import field_sketches
+    from oracles import field_sketches
     from geowave_spark.sources.icetable import (
         BF_K,
         BF_M,

@@ -1,6 +1,6 @@
 """Multimodal audio/video plumbing: real decode round-trips for the
 deterministic formats, stats vs direct numpy recomputation, frame
-sampling/resize shapes, stubbed codecs raising NotImplementedError."""
+sampling shapes, stubbed codecs raising NotImplementedError."""
 
 import numpy as np
 import pytest
@@ -9,9 +9,7 @@ from geowave_spark.operators.multimodal import (
     audio_stats,
     decode_audio,
     decode_video,
-    frame_resize,
     frame_sample,
-    media_embed,
 )
 from geowave_spark.sources.media import (
     VID_H,
@@ -78,24 +76,6 @@ def test_frame_sample(video):
     for key, rows in by_media.items():
         nf = video_frames(key).shape[0]
         assert len(rows) == (nf + every - 1) // every
-
-
-def test_frame_resize(video):
-    frames = frame_sample(video.where("media_id < 5"), every=4)
-    out = frame_resize(frames, 8, 8).collect()
-    assert out
-    for r in out:
-        assert len(bytes(r.frame)) == 64
-
-
-def test_media_embed_shape_and_determinism(audio):
-    a = {r.media_id: r.embedding for r in media_embed(audio, dim=8).collect()}
-    b = {r.media_id: r.embedding for r in media_embed(audio, dim=8).collect()}
-    assert len(a) == N_AUDIO
-    for k in a:
-        assert len(a[k]) == 8
-        assert a[k] == b[k]
-        assert all(-1.0 <= v <= 1.0 for v in a[k])
 
 
 def test_stub_codecs_raise():

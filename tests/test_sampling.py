@@ -4,37 +4,12 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from geowave_spark.operators.sampling import (
-    hash_sample,
-    source_quota,
-    source_quota_sql,
-)
+from geowave_spark.operators.sampling import source_quota, source_quota_sql
 
 
 @pytest.fixture(scope="module")
 def docs(spark, sf_dir):
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
-def test_hash_sample_rate_and_determinism(docs):
-    n = docs.count()
-    kept = hash_sample(docs, 300)
-    k = kept.count()
-    assert abs(k / n - 0.3) < 0.08  # hash-uniformity at 500 rows
-    # deterministic: second evaluation returns the same id set
-    a = {r[0] for r in kept.select("doc_id").collect()}
-    b = {r[0] for r in hash_sample(docs, 300).select("doc_id").collect()}
-    assert a == b
-    # nested rates: a 200-rate sample is a subset of the 300-rate one
-    c = {r[0] for r in hash_sample(docs, 200).select("doc_id").collect()}
-    assert c <= a
-    assert hash_sample(docs, 0).count() == 0
-    assert hash_sample(docs, 1000).count() == n
-
-
-def test_hash_sample_is_pure_filter(docs):
-    plan = hash_sample(docs, 500)._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan  # no shuffle: narrow filter only
 
 
 def test_source_quota_caps_each_source(docs):
@@ -67,8 +42,6 @@ def test_source_quota_matches_duckdb_twin(docs, sf_dir):
 
 
 def test_bad_args_raise(docs):
-    with pytest.raises(ValueError):
-        hash_sample(docs, 1001)
     with pytest.raises(ValueError):
         source_quota(docs, 0)
 

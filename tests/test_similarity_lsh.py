@@ -91,22 +91,6 @@ def test_cos_dedup_finds_planted_near_dups(spark):
     assert found >= 0.7, (found, sorted(got)[:5])
 
 
-def test_prefix_filtered_jaccard_equals_aggregation_form(spark, sf_dir):
-    from geowave_spark.operators.dedup import (
-        ngram_jaccard_pairs,
-        ngram_jaccard_pairs_prefix,
-    )
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    base = {
-        tuple(r) for r in ngram_jaccard_pairs(docs, threshold=0.6).collect()
-    }
-    pref = {
-        tuple(r) for r in ngram_jaccard_pairs_prefix(docs, threshold=0.6).collect()
-    }
-    assert base == pref and len(base) > 0
-
-
 def test_ivf_topk_recall_on_clustered_vectors(spark):
     """IVF with nprobe << nlist achieves high recall on clustered data
     (the regime it exists for), and nprobe == nlist is exact."""

@@ -4,33 +4,33 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from geowave_spark.index.native import cell_col, st_cell_col
+from geowave_spark.index.native import cell_col
+from geowave_spark.plans.store import ST_RES, st_store
 from geowave_spark.operators.tiling import (
     box_tile_cover,
     tile_range_query,
 )
-from geowave_spark.sources.testgeo import customer_boxes, events_points
+from geowave_spark.sources.testgeo import customer_boxes
 
 
 def test_st_cell_composite_layout(spark, sf_dir):
-    pts = events_points(spark, sf_dir)
-    res = 8
-    df = pts.select(
+    """The stored spatial-temporal key is (DAY bin << 2·res) | xy cell."""
+    import datetime
+
+    df = st_store(spark, sf_dir).select(
         "ts",
-        cell_col(F.col("x_u"), F.col("y_u"), res).alias("xy"),
-        st_cell_col(F.col("x_u"), F.col("y_u"), F.col("ts"), res, "MONTH").alias("stc"),
+        "st_cell",
+        cell_col(F.col("x_u"), F.col("y_u"), ST_RES).alias("xy"),
     )
     for r in df.limit(100).collect():
-        tbin = r.ts.year * 12 + r.ts.month - 1
-        assert r.stc == (tbin << (2 * res)) | r.xy
+        tbin = (r.ts.date() - datetime.date(1970, 1, 1)).days
+        assert r.st_cell == (tbin << (2 * ST_RES)) | r.xy
 
 
 def test_st_cell_groups_by_time_bin(spark, sf_dir):
-    """Rows in different YEAR bins can never share a composite key."""
-    pts = events_points(spark, sf_dir)
-    df = pts.select(
-        F.year("ts").alias("y"),
-        st_cell_col(F.col("x_u"), F.col("y_u"), F.col("ts"), 8, "YEAR").alias("stc"),
+    """Rows in different DAY bins can never share a composite key."""
+    df = st_store(spark, sf_dir).select(
+        F.to_date("ts").alias("y"), F.col("st_cell").alias("stc")
     )
     ambiguous = df.groupBy("stc").agg(F.countDistinct("y").alias("ny")).where(
         F.col("ny") > 1

@@ -54,14 +54,3 @@ def test_attribute_index_store_and_range_query(spark, sf_dir, monkeypatch, tmp_p
     plan = buf.getvalue()
     assert "PushedFilters" in plan and "user_id" in plan
 
-
-def test_choose_index_rule():
-    """ChooseBestMatchIndexQueryStrategy: composite only wins when both
-    dimensions are constrained; otherwise the best single-dim index."""
-    from geowave_spark.plans.store import choose_index
-
-    assert choose_index({"spatial", "temporal"}) == "spatial_temporal"
-    assert choose_index({"spatial"}) == "spatial"
-    assert choose_index({"temporal"}) == "attribute:ts"
-    assert choose_index({"attr:user_id"}) == "attribute:user_id"
-    assert choose_index(set()) == "full_scan"

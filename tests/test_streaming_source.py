@@ -1,7 +1,7 @@
 """Non-file streaming ingest end-to-end (BasicKafkaIT analog): the
-rate source stands in for an embedded broker; the assertion recomputes
-every expected row (event ids contiguous, exactly-once, cell ids equal
-to the batch indexing expression's output)."""
+rate source stands in for an embedded broker and feeds the snapshot-table
+sink; the assertion recomputes every expected row (event ids distinct,
+exactly-once, cell ids equal to the batch indexing expression's output)."""
 
 import time
 
@@ -9,37 +9,32 @@ import pytest
 from pyspark.sql import functions as F
 
 from geowave_spark.index.native import cell_col
-from geowave_spark.streaming.ingest import open_stream, stream_ingest_source
+from geowave_spark.sources.icetable import IceTable
+from geowave_spark.streaming.ingest import open_stream, stream_ingest_icetable
 
 RES = 12
 
 
 def test_rate_source_indexed_append(spark, tmp_path):
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    q = stream_ingest_source(
+    table = IceTable(str(tmp_path / "tbl"))
+    q = stream_ingest_icetable(
         spark,
         {"format": "rate", "options": {"rowsPerSecond": "500"}},
-        out,
-        ckpt,
+        table,
+        str(tmp_path / "ckpt"),
         res=RES,
         available_now=False,
     )
     try:
         deadline = time.time() + 60
-        got = 0
         while time.time() < deadline:
-            try:
-                got = spark.read.parquet(out).count()
-            except Exception:
-                got = 0
-            if got >= 300:
+            if table.snapshots() and table.read(spark).count() >= 300:
                 break
             time.sleep(1)
     finally:
         q.stop()
         q.awaitTermination(30)
-    df = spark.read.parquet(out)
+    df = table.read(spark)
     n = df.count()
     assert n >= 300
 

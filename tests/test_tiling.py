@@ -9,14 +9,15 @@ from pyspark.sql import functions as F
 from geowave_spark import LAT_OFF_U, LON_OFF_U, WORLD_X_U
 from geowave_spark.operators.tiling import (
     NO_DATA,
+    box_tile_cover,
     cut_tile,
+    image_extent_cols,
     pick_level,
     retile,
-    tile_assign,
     tile_cut_and_merge,
 )
 from geowave_spark.raster.codec import decode_image
-from geowave_spark.sources.images import dhash64, images_pdf, images_table
+from geowave_spark.sources.images import _gen_batch, dhash64, images_table
 from geowave_spark.sources.testgeo import xy_numpy
 
 HALF_SPAN = 600_000  # 0.6 deg half-span per image
@@ -28,9 +29,16 @@ def images(spark):
     return images_table(spark, N_IMG, w=32, h=32, partitions=4).cache()
 
 
+def _assigned_tiles(images, level):
+    """(image_id, level, tx, ty): the tiles each image footprint
+    (image_extent_cols) covers, by the vector-side cover box_tile_cover."""
+    ext = images.select("image_id", *image_extent_cols(HALF_SPAN))
+    return box_tile_cover(ext, level, key="image_id").withColumn("level", F.lit(level))
+
+
 def test_images_fixture_deterministic(spark, images):
     got = images.select("image_id", "phash", "x_u", "y_u", "fmt", "caption").toPandas()
-    exp = images_pdf(N_IMG, w=32, h=32)
+    exp = _gen_batch(np.arange(N_IMG), 32, 32)  # the generator, driver-side
     got = got.sort_values("image_id").reset_index(drop=True)
     exp2 = exp[["image_id", "phash", "x_u", "y_u", "fmt", "caption"]].sort_values(
         "image_id"
@@ -62,8 +70,11 @@ def test_pick_level_ratio_rule():
 
 
 def test_tile_assign_matches_python_oracle(spark, images):
-    got = tile_assign(images, HALF_SPAN).toPandas()
-    level = int(got["level"].iloc[0])
+    """Image footprints (image_extent_cols) keyed to tiles by the
+    vector-side cover (box_tile_cover) at the pyramid level pick_level
+    chooses."""
+    level = pick_level(2 * HALF_SPAN, 32)
+    got = _assigned_tiles(images, level).toPandas()
     n = 1 << level
     ids = np.arange(N_IMG)
     xs, ys = xy_numpy(ids)
@@ -133,9 +144,8 @@ def test_tile_cut_and_merge_end_to_end(spark, images):
         t = np.frombuffer(r["tile"], dtype=np.uint8).reshape(32, 32)
         assert t.shape == (32, 32)
     # tile ids must equal the assignment output exactly (row-for-row rule)
-    assigned = (
-        tile_assign(images, HALF_SPAN, tile_size=32).select("level", "tx", "ty").distinct()
-    )
+    level = pick_level(2 * HALF_SPAN, 32, 32)
+    assigned = _assigned_tiles(images, level).select("level", "tx", "ty").distinct()
     got_ids = set(map(tuple, pdf[["level", "tx", "ty"]].itertuples(index=False)))
     exp_ids = set(map(tuple, assigned.toPandas().itertuples(index=False)))
     assert got_ids == exp_ids
@@ -239,7 +249,7 @@ def test_multiband_distributed_cut_and_merge_exact(spark):
     two-phase exactness guarantee."""
     from geowave_spark.operators.tiling import merge_no_data
     from geowave_spark.raster.codec import decode_raw_typed
-    from geowave_spark.sources.images import images_pdf_typed, images_table_typed
+    from geowave_spark.sources.images import _gen_batch_typed, images_table_typed
 
     n, ts, bg = 40, 32, (-7777, 7777)
     imgs = images_table_typed(spark, n, w=ts, h=ts, bands=2, dtype="int16", partitions=4)
@@ -250,7 +260,7 @@ def test_multiband_distributed_cut_and_merge_exact(spark):
     # sequential reference
     level = pick_level(2 * HALF_SPAN, ts, ts)
     grid = 1 << level
-    pdf = images_pdf_typed(n, w=ts, h=ts, bands=2, dtype="int16")
+    pdf = _gen_batch_typed(np.arange(n), ts, ts, 2, "int16")
 
     def g(v, off):
         return min(max((v + off) * grid // WORLD_X_U, 0), grid - 1)
@@ -286,7 +296,8 @@ def test_bilinear_resample_reproduces_linear_ramps_exactly():
     image resampled to any size must equal the analytically resampled
     ramp (half-pixel-center mapping), and PSNR vs float truth stays
     effectively infinite."""
-    from geowave_spark.raster.codec import psnr, resample_bilinear
+    from geowave_spark.raster.codec import resample_bilinear
+    from oracles import psnr
 
     h = w = 32
     xs = np.arange(w, dtype=np.float64)
@@ -363,11 +374,8 @@ def test_bicubic_resample_golden():
     flat fields (weights sum to 1), and ≥40 dB vs analytic truth
     overall on the integer path. Downsample of a smooth field beats
     nearest-neighbor fidelity."""
-    from geowave_spark.raster.codec import (
-        psnr,
-        resample_bicubic,
-        resample_nearest,
-    )
+    from geowave_spark.raster.codec import resample_bicubic, resample_nearest
+    from oracles import psnr
 
     h = w = 32
     xs = np.arange(w, dtype=np.float64)

@@ -14,8 +14,6 @@ from geowave_spark.geom.transform import (
     R_MAJOR_M,
     merc_x_mm,
     merc_y_mm,
-    reproject_3857_to_4326,
-    reproject_4326_to_3857,
     wgs_x_u,
     wgs_y_u,
 )
@@ -46,15 +44,13 @@ def test_round_trip_is_mm_exact(spark, sf_dir):
     of longitude at the equator, so anything beyond ±1 is a formula
     error, not rounding)."""
     pts = events_points(spark, sf_dir)
-    rt = reproject_3857_to_4326(
-        reproject_4326_to_3857(pts).select(
-            "event_id",
-            F.col("x_u").alias("ox"),
-            F.col("y_u").alias("oy"),
-            "x_mm",
-            "y_mm",
-        )
-    )
+    rt = pts.select(
+        "event_id",
+        F.col("x_u").alias("ox"),
+        F.col("y_u").alias("oy"),
+        merc_x_mm(F.col("x_u")).alias("x_mm"),
+        merc_y_mm(F.col("y_u")).alias("y_mm"),
+    ).withColumns({"x_u": wgs_x_u(F.col("x_mm")), "y_u": wgs_y_u(F.col("y_mm"))})
     bad = rt.where(
         (F.abs(F.col("x_u") - F.col("ox")) > 1)
         | (F.abs(F.col("y_u") - F.col("oy")) > 1)
@@ -97,7 +93,9 @@ def test_reproject_feeds_custom_crs_index(spark, sf_dir):
     ingest-reproject-then-index flow."""
     from geowave_spark.index.crs import CRS_RES, WEB_MERCATOR_MM, cell_col_crs
 
-    pts = reproject_4326_to_3857(events_points(spark, sf_dir))
+    pts = events_points(spark, sf_dir).withColumns(
+        {"x_mm": merc_x_mm(F.col("x_u")), "y_mm": merc_y_mm(F.col("y_u"))}
+    )
     dom = pts.agg(
         F.min("x_mm"), F.max("x_mm"), F.min("y_mm"), F.max("y_mm")
     ).first()
@@ -220,11 +218,13 @@ def test_utm_feeds_custom_crs_index(spark, sf_dir):
     consistent with the scalar grid transform (the reproject-then-index
     ingest flow over the second projected-CRS family)."""
     from geowave_spark.geom.transform import utm_roundtrip
-    from geowave_spark.index.crs import CRS_RES, cell_col_crs, grid_coord_crs, utm_zone_crs
+    from geowave_spark.index.crs import CRS, CRS_RES, cell_col_crs, grid_coord_crs
 
     utm = utm_roundtrip(events_points(spark, sf_dir).select("event_id", "x_u", "y_u"))
     zone = utm.groupBy("zone").count().orderBy(F.desc("count")).first()["zone"]
-    dom = utm_zone_crs(zone)
+    # the zone in integer meters: easting over its widest (equator)
+    # section, northing over both hemispheres
+    dom = CRS(f"UTM zone {zone} (meters)", 166_000, 834_000, 0, 10_000_000)
     z = utm.where(F.col("zone") == zone)
     assert z.count() > 0
     cells = z.select(

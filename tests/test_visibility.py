@@ -2,8 +2,7 @@
 
 Parity target: the reference's visibility subsystem
 (core/store/.../data/visibility/VisibilityExpression.java grammar and
-evaluate; VisibilityComposer minimal-token composition; the
-Global/FieldMapped/JsonFieldLevel visibility handlers)."""
+evaluate; the Global/JsonFieldLevel visibility handlers)."""
 
 from __future__ import annotations
 
@@ -12,16 +11,13 @@ from pyspark.sql import functions as F
 
 from geowave_spark.plans.visibility import (
     VisibilityParseError,
-    compose_visibility,
     evaluate_visibility,
     mask_fields_json,
-    mask_fields_static,
-    minimal_tokens,
     parse_visibility,
     satisfied_expressions,
     where_authorized,
 )
-from geowave_spark.sources.testgeo import VIS_EXPRS, events_visible
+from geowave_spark.sources.testgeo import events_visible
 
 AUTHS = {"alpha", "gamma"}
 
@@ -81,35 +77,6 @@ def test_empty_parens_alone_is_noauth():
     assert evaluate_visibility("()", set())
 
 
-# --- composer ----------------------------------------------------------
-
-
-def test_minimal_tokens():
-    assert minimal_tokens("a&b&c") == {"a", "b", "c"}
-    # an OR subtree is ONE opaque parenthesized token
-    assert minimal_tokens("a&(b|c)") == {"a", "(b|c)"}
-    assert minimal_tokens("b|c") == {"(b|c)"}
-    assert minimal_tokens("") == set()
-
-
-def test_compose_visibility_sorted_and_joined():
-    # sorted set of minimal tokens AND-joined (VisibilityComposer)
-    assert compose_visibility(["a&b", "c|d"]) == "(c|d)&a&b"
-    assert compose_visibility(["b", "a", "b"]) == "a&b"
-    assert compose_visibility([None, ""]) == ""
-    # composing is idempotent through a round-trip
-    composed = compose_visibility(["x&y", "w|z"])
-    assert compose_visibility([composed]) == composed
-
-
-def test_compose_then_evaluate_matches_conjunction():
-    exprs = ["alpha", "beta|gamma"]
-    composed = compose_visibility(exprs)
-    for auths in [{"alpha", "gamma"}, {"alpha"}, {"beta"}, set()]:
-        expect = all(evaluate_visibility(e, auths) for e in exprs)
-        assert evaluate_visibility(composed, auths) == expect
-
-
 # --- read-side row filter ----------------------------------------------
 
 
@@ -156,16 +123,6 @@ def test_distinct_cardinality_cap(spark):
 
 
 # --- field-level masking -----------------------------------------------
-
-
-def test_mask_fields_static(spark):
-    df = spark.createDataFrame(
-        [(1, 10.0, "x")], "id long, value double, name string"
-    )
-    out = mask_fields_static(
-        df, {"value": "omega", "name": "alpha", "absent": "omega"}, AUTHS
-    ).collect()[0]
-    assert out["value"] is None and out["name"] == "x"
 
 
 def test_mask_fields_json(spark, sf_dir):

@@ -6,15 +6,13 @@ from hypothesis import strategies as st
 from geowave_spark import LON_OFF_U
 from geowave_spark.index.zorder import (
     bbox_ranges,
-    cell_of_point,
     cells_of_points,
-    decode_cell,
     grid_coord,
     morton_decode,
     morton_encode,
-    parent_cell,
     pick_res_for_extent,
 )
+from oracles import cell_of_point, decode_cell, parent_cell
 
 
 def test_morton_roundtrip_scalar():

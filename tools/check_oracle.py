@@ -7,13 +7,22 @@ Usage: python tools/check_oracle.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+# the checkout this script lives in, for the driver and (through the
+# environment Spark passes on) its Python workers; PYTHONSAFEPATH keeps
+# a worker's working directory, maybe another checkout, off its path
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+)
+os.environ["PYTHONSAFEPATH"] = "1"
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",

@@ -33,9 +33,14 @@ import os
 import subprocess
 import sys
 
+# the checkout this script lives in; the worker imports it through
+# PYTHONPATH, which Spark also passes on to its Python workers
+# (PYTHONSAFEPATH keeps the working directory, maybe another checkout,
+# off their path)
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 WORKER = r"""
 import json, os, sys, time
-sys.path.insert(0, "/root/repo")
 cpus = sys.argv[1]
 sf_dir = sys.argv[2]
 n_img = int(sys.argv[3])
@@ -255,6 +260,9 @@ def main():
     args = ap.parse_args()
     levels = [c.strip() for c in args.cpus.split(",")]
 
+    env = dict(os.environ)
+    env["PYTHONPATH"] = os.pathsep.join(p for p in (ROOT, env.get("PYTHONPATH")) if p)
+    env["PYTHONSAFEPATH"] = "1"
     results = []
     for cpus in levels:
         out = subprocess.run(
@@ -262,6 +270,7 @@ def main():
             capture_output=True,
             text=True,
             timeout=3600,
+            env=env,
         )
         line = [ln for ln in out.stdout.splitlines() if ln.startswith("{")]
         if not line:
