@@ -1009,17 +1009,17 @@ U_NX0, U_NX1, U_NY0 = -20_000_000, 20_000_000, 0
 
 def _fixture_cached(tag, sf, build):
     """Stored geometry fixtures: the WKB-construction UDF runs ONCE per
-    (fixture, sf) at materialization time and the result lives as
-    parquet (plans/store._materialize) — the production shape, where
-    geometry tables are stored and every query pays a real scan.
-    Replaces the round-2 in-memory session persist, so geom-join bench
-    entries now include genuine fixture IO."""
+    (fixture, sf) at materialization time and the result lives as a
+    cached snapshot table (plans/store.cached_table) — the production
+    shape, where geometry tables are stored and every query pays a real
+    scan. Replaces the round-2 in-memory session persist, so geom-join
+    bench entries now include genuine fixture IO."""
     from pyspark.sql import SparkSession
 
-    from geowave_spark.plans.store import _materialize
+    from geowave_spark.plans.store import cached_table
 
     spark = SparkSession.getActiveSession()
-    return _materialize(spark, f"fix_{tag}", sf, build)
+    return cached_table(f"fix_{tag}", sf, [build], stats_cols=[]).read(spark)
 
 
 def _lshapes(spark, sf):
@@ -1325,25 +1325,10 @@ def _q_ice_delete(spark, sf):
     over the post-delete manifest — so this row checks commit, delete
     row-accounting, NULL-never-matches semantics, snapshot isolation
     AND the manifest-pruned read in one oracle comparison."""
-    import hashlib as _h
-
-    from geowave_spark.index.native import cell_col
-    from geowave_spark.plans.store import CACHE_ROOT, ice_bbox_query
-    from geowave_spark.sources.icetable import IceTable
-    import os as _os
+    from geowave_spark.plans.store import ice_bbox_query, ice_events_store
 
     x0, y0, x1, y1 = BBOX
-    digest = _h.md5(f"ice_del:{sf}:16".encode()).hexdigest()[:12]
-    t = IceTable(_os.path.join(CACHE_ROOT, f"ice_del_{digest}"))
-    if t.current_snapshot_id() is None:
-        pts = events_points(spark, sf).withColumn(
-            "cell", cell_col(F.col("x_u"), F.col("y_u"), 16)
-        )
-        t.commit_write(
-            pts.repartitionByRange(8, "cell").sortWithinPartitions("cell"),
-            mode="overwrite",
-            stats_cols=["cell"],
-        )
+    t = ice_events_store(spark, sf, "ice_del")
     if t.snapshots()[-1]["operation"] != "delete":
         t.delete_where(
             spark,
@@ -1369,25 +1354,10 @@ def _q_ice_delete_mor(spark, sf):
     The keys come from query-then-delete on the store itself (bbox
     scan + value < 40), matching BaseDataStore.delete(query)'s
     resolve-ids-then-delete shape. Idempotent via the snapshot log."""
-    import hashlib as _h
-    import os as _os
-
-    from geowave_spark.index.native import cell_col
-    from geowave_spark.plans.store import CACHE_ROOT, ice_bbox_query
-    from geowave_spark.sources.icetable import IceTable
+    from geowave_spark.plans.store import ice_bbox_query, ice_events_store
 
     x0, y0, x1, y1 = BBOX
-    digest = _h.md5(f"ice_mor:{sf}:16".encode()).hexdigest()[:12]
-    t = IceTable(_os.path.join(CACHE_ROOT, f"ice_mor_{digest}"))
-    if t.current_snapshot_id() is None:
-        pts = events_points(spark, sf).withColumn(
-            "cell", cell_col(F.col("x_u"), F.col("y_u"), 16)
-        )
-        t.commit_write(
-            pts.repartitionByRange(8, "cell").sortWithinPartitions("cell"),
-            mode="overwrite",
-            stats_cols=["cell", "event_id"],
-        )
+    t = ice_events_store(spark, sf, "ice_mor", ("cell", "event_id"))
     if t.snapshots()[-1]["operation"] != "delete":
         keys = (
             ice_bbox_query(spark, t, x0, y0, x1, y1)
@@ -1411,21 +1381,27 @@ def _q_ice_stream_ingest(spark, sf):
     write path end-to-end against the batch oracle (the reference's
     Kafka ingest rides the same adapter/index write path as files —
     BasicKafkaIT; core/ingest framework)."""
-    import hashlib as _h
     import os as _os
 
-    from geowave_spark.plans.store import CACHE_ROOT, ice_bbox_query
+    import pyarrow.dataset as pads
+
+    from geowave_spark.plans.store import cache_path, ice_bbox_query
+    from geowave_spark.sources.formats import build_dir_once
     from geowave_spark.sources.icetable import IceTable
     from geowave_spark.streaming.ingest import stream_ingest_icetable
 
     x0, y0, x1, y1 = BBOX
-    digest = _h.md5(f"ice_stream:{sf}:16".encode()).hexdigest()[:12]
-    root = _os.path.join(CACHE_ROOT, f"ice_stream_{digest}")
+    root = cache_path("ice_stream", f"{sf}:16")
+    src = _os.path.join(root, "src")
     t = IceTable(_os.path.join(root, "tbl"))
-    if t.current_snapshot_id() is None:
+    # drain until the table holds every staged row: a run killed between
+    # micro-batch commits resumes from its checkpoint, and the sink's
+    # batch-id skip keeps a replayed batch exactly-once
+    if not _os.path.exists(src) or (
+        t.merged_column_stats()["n_rows"] < pads.dataset(src).count_rows()
+    ):
         pts = events_points(spark, sf)
-        src = _os.path.join(root, "src")
-        pts.repartition(4).write.mode("overwrite").parquet(src)
+        build_dir_once(src, lambda tmp: pts.repartition(4).write.mode("overwrite").parquet(tmp))
         q = stream_ingest_icetable(
             spark,
             {
@@ -1439,62 +1415,42 @@ def _q_ice_stream_ingest(spark, sf):
             res=16,
             stats_cols=["cell"],
         )
-        # a timed-out availableNow drain would cache a half-ingested
-        # store and silently mismatch forever — fail loudly instead
+        # a timed-out availableNow drain would leave a half-ingested
+        # store for the next call to finish — fail loudly here instead
         assert q.awaitTermination(600), "stream ingest did not drain"
     return ice_bbox_query(spark, t, x0, y0, x1, y1).select("event_id")
 
 
 def _q_ice_incremental(spark, sf):
     """Incremental append scan (IceTable.scan_appends — the Iceberg
-    incremental-read contract): a two-append store (even event_ids,
-    then odd), read FROM the first snapshot — exactly the second
+    incremental-read contract): the two-append store (even event_ids,
+    then odd), read FROM the batch-0 snapshot — exactly the second
     commit's rows come back, no full-table rescan (at 100 TB: a
     downstream incremental consumer reads one commit's files, not the
     table). The oracle recomputes the second batch's membership from
     the raw events."""
-    import hashlib as _h
-    import os as _os
+    from geowave_spark.plans.store import ice_events_appends_store
 
-    from geowave_spark.index.native import cell_col
-    from geowave_spark.plans.store import CACHE_ROOT
-    from geowave_spark.sources.icetable import IceTable
-
-    digest = _h.md5(f"ice_incr:{sf}:16".encode()).hexdigest()[:12]
-    t = IceTable(_os.path.join(CACHE_ROOT, f"ice_incr_{digest}"))
-    if t.current_snapshot_id() is None:
-        pts = events_points(spark, sf).withColumn(
-            "cell", cell_col(F.col("x_u"), F.col("y_u"), 16)
-        )
-        t.commit_write(
-            pts.where(F.col("event_id") % 2 == 0),
-            mode="overwrite",
-            stats_cols=["cell"],
-        )
-        t.commit_write(
-            pts.where(F.col("event_id") % 2 == 1),
-            mode="append",
-            stats_cols=["cell"],
-        )
-    first_sid = t.snapshots()[0]["id"]
+    t = ice_events_appends_store(spark, sf)
+    first_sid = next(s["id"] for s in t.snapshots() if s["summary"].get("batch") == 0)
     df, _report = t.scan_appends(spark, first_sid)
     return df.select("event_id")
 
 
 def _q_stats_sketch_commit(spark, sf):
     """Commit-maintained field sketches read from METADATA ONLY: the
-    3-append snapshot store records CMS cell counts, Bloom bit
-    positions and HLL register maxima per commit (sketch_cols on
-    icetable.commit_write); merged_field_sketches folds them along the
-    lineage with each sketch's merge operator (sum / or / max). The
-    oracle recomputes all three tables from the raw events — equality
-    proves the per-commit deltas and the metadata fold are together
-    exactly the full-table sketch (StatisticsStore's transactional
-    field statistics)."""
-    from geowave_spark.plans.store import ice_events_sketch_store
+    3-append statistics store (shared with stats_incremental) records
+    CMS cell counts, Bloom bit positions and HLL register maxima per
+    commit (sketch_cols on icetable.commit_write);
+    merged_field_sketches folds them along the lineage with each
+    sketch's merge operator (sum / or / max). The oracle recomputes all
+    three tables from the raw events — equality proves the per-commit
+    deltas and the metadata fold are together exactly the full-table
+    sketch (StatisticsStore's transactional field statistics)."""
+    from geowave_spark.plans.store import ice_events_stats_store
     from geowave_spark.sources.icetable import CMS_WIDTH
 
-    t = ice_events_sketch_store(spark, sf)
+    t = ice_events_stats_store(spark, sf)
     m = t.merged_field_sketches("user_id")
     # every commit in this store writes sketches; a partial fold here
     # means missing snapshots — fail loudly, never present undercounts
@@ -1520,26 +1476,11 @@ def _q_gwql_delete(spark, sf):
     pruned bbox read as ice_delete, over a DIFFERENT store + predicate
     — so this row checks the statement grammar → durable-delete
     routing end-to-end, idempotent via the snapshot log."""
-    import hashlib as _h
-    import os as _os
-
     from geowave_spark.api import DataStore
-    from geowave_spark.index.native import cell_col
-    from geowave_spark.plans.store import CACHE_ROOT, ice_bbox_query
-    from geowave_spark.sources.icetable import IceTable
+    from geowave_spark.plans.store import ice_bbox_query, ice_events_store
 
     x0, y0, x1, y1 = BBOX
-    digest = _h.md5(f"gwql_del:{sf}:16".encode()).hexdigest()[:12]
-    t = IceTable(_os.path.join(CACHE_ROOT, f"gwql_del_{digest}"))
-    if t.current_snapshot_id() is None:
-        pts = events_points(spark, sf).withColumn(
-            "cell", cell_col(F.col("x_u"), F.col("y_u"), 16)
-        )
-        t.commit_write(
-            pts.repartitionByRange(8, "cell").sortWithinPartitions("cell"),
-            mode="overwrite",
-            stats_cols=["cell", "x_u", "y_u"],
-        )
+    t = ice_events_store(spark, sf, "gwql_del", ("cell", "x_u", "y_u"))
     if t.snapshots()[-1]["operation"] != "delete":
         ds = DataStore(spark)
         ds.add_snapshot_type("ev", t)
@@ -1701,34 +1642,13 @@ def _q_gwql_stats_agg(spark, sf):
     five values from the raw events, so equality proves the
     metadata fold IS the table aggregate. At 100 TB this is COUNT(*)
     as a metadata read."""
-    import hashlib as _h
-    import os as _os
-
     from geowave_spark.api import DataStore
-    from geowave_spark.index.native import cell_col
     from geowave_spark.plans.gwql import _stats_select, parse_statement
-    from geowave_spark.plans.store import CACHE_ROOT
-    from geowave_spark.sources.icetable import IceTable
+    from geowave_spark.plans.store import ice_events_appends_store
 
-    digest = _h.md5(f"gwql_stats:{sf}:16".encode()).hexdigest()[:12]
-    t = IceTable(_os.path.join(CACHE_ROOT, f"gwql_stats_{digest}"))
-    if t.current_snapshot_id() is None:
-        pts = events_points(spark, sf).withColumn(
-            "cell", cell_col(F.col("x_u"), F.col("y_u"), 16)
-        )
-        # two appends: the metadata answer must fold across snapshots
-        t.commit_write(
-            pts.where(F.col("event_id") % 2 == 0),
-            mode="overwrite",
-            stats_cols=["cell", "x_u", "y_u", "value"],
-        )
-        t.commit_write(
-            pts.where(F.col("event_id") % 2 == 1),
-            mode="append",
-            stats_cols=["cell", "x_u", "y_u", "value"],
-        )
+    # two appends: the metadata answer must fold across snapshots
     ds = DataStore(spark)
-    ds.add_snapshot_type("ev_stats", t)
+    ds.add_snapshot_type("ev_stats", ice_events_appends_store(spark, sf))
     q = (
         "SELECT COUNT(*) AS n, MIN(value) AS min_v, MAX(value) AS max_v, "
         "BBOX(*) AS env FROM ev_stats"
@@ -2300,25 +2220,21 @@ def _q_raster_pyramid_ingest(spark, sf):
     atomic snapshot commit with per-level lineage; the read-back grid
     must equal the in-memory build_pyramid oracle (RasterDataAdapter
     buildPyramid + GeoWaveOutputFormat per-task commit)."""
-    import hashlib as _h
-    import os as _os
-
     from geowave_spark.operators.tiling import (
         ingest_pyramid,
         pick_level,
         tile_cut_and_merge,
     )
-    from geowave_spark.plans.store import CACHE_ROOT
+    from geowave_spark.plans.store import cache_path
     from geowave_spark.sources.images import images_table
 
     level = pick_level(2 * RASTER_HALF, RASTER_TS, RASTER_TS)
-    # every raster parameter is in the digest AND the fingerprint: the
-    # store root is persistent, so a constant bump must invalidate the
-    # cached pyramid (digest misses → fresh root) and, even on the same
-    # root, the fingerprint scopes which snapshots the read returns
+    # every raster parameter is in the cache key AND the fingerprint:
+    # the store root is persistent, so a constant bump must invalidate
+    # the cached pyramid (key misses → fresh root) and, even on the
+    # same root, the fingerprint scopes which snapshots the read returns
     params = f"{sf}:{RASTER_N}:{RASTER_TS}:{RASTER_HALF}:{level}:{PYR_LEVELS}"
-    digest = _h.md5(f"pyr_ingest:{params}".encode()).hexdigest()[:12]
-    root = _os.path.join(CACHE_ROOT, f"pyr_ingest_{digest}")
+    root = cache_path("pyr_ingest", params)
     imgs = images_table(spark, RASTER_N, w=RASTER_TS, h=RASTER_TS, partitions=8)
     base = tile_cut_and_merge(imgs, RASTER_HALF, tile_size=RASTER_TS, level=level)
     out = ingest_pyramid(

@@ -16,13 +16,14 @@ A "store" is a directory of IceTable snapshot tables, one per type at
 ``<store>/<name>`` — the single-backend stance of SURVEY.md §2.1
 applied to the CLI (the reference's 9 `store add` backends collapse to
 a path). The CLI keeps no metadata of its own: a type is a directory
-holding ``metadata/version-hint.text``, its format rides the creating
-snapshot's summary and its row count the manifest's footer stats. Every
-write — ingest, analytic output, DELETE — is one atomic IceTable
-commit. Everything runs through the same engine surfaces the driver
-gate checks: sources/formats.ingest_directory → IceTable.commit_write,
-api.DataStore + plans/gwql for queries and deletes, native
-aggregations for stats.
+holding ``metadata/version-hint.text``, its format is a table property
+and its row count the manifest's footer stats. Every write — ingest,
+analytic output, DELETE — is one atomic IceTable commit, after which
+the type keeps only its current snapshot (``expire_snapshots``), so
+superseded data files do not pile up. Everything runs through the same
+engine surfaces the driver gate checks: sources/formats.ingest_directory
+→ IceTable.commit_write, api.DataStore + plans/gwql for queries,
+deletes and stats.
 """
 
 from __future__ import annotations
@@ -72,14 +73,17 @@ def _type_names(store: str) -> list[str]:
 
 
 def _commit_type(store: str, name: str, df, fmt: str) -> int:
-    """Land ``df`` as type ``name`` in one overwrite snapshot; point
-    types store the index ``cell`` column DataStore.add_type gives
-    them. Returns the committed row count (manifest footer stats)."""
+    """Land ``df`` as type ``name`` in one overwrite snapshot, dropping
+    the type's older snapshots and their files; point types store the
+    index ``cell`` column DataStore.add_type gives them. Returns the
+    committed row count (manifest footer stats)."""
     from geowave_spark.api import indexed_frame
     from geowave_spark.sources.icetable import IceTable
 
     t = IceTable(os.path.join(store, name))
-    t.commit_write(indexed_frame(df), mode="overwrite", summary={"format": fmt})
+    t.commit_write(indexed_frame(df), mode="overwrite")
+    t.set_properties(format=fmt)
+    t.expire_snapshots(keep_last=1)
     return t.merged_column_stats()["n_rows"]
 
 
@@ -193,16 +197,12 @@ def cmd_ingest_localtogw(args) -> int:
 
 
 def cmd_type_list(args) -> int:
-    """One line per type: name, format (the summary of the newest
-    snapshot that wrote the type whole) and rows (manifest footer
-    stats — exact, as the CLI commits no merge-on-read deletes)."""
+    """One line per type: name, format (a table property) and rows
+    (manifest footer stats — exact, as the CLI commits no
+    merge-on-read deletes)."""
     for name in _type_names(args.store):
         t = _table(args.store, name)
-        fmt = next(
-            (s["summary"]["format"] for s in reversed(t.snapshots())
-             if "format" in (s.get("summary") or {})),
-            "?",
-        )
+        fmt = t.properties().get("format", "?")
         print(f"{name}\t{fmt}\t{t.merged_column_stats()['n_rows']} rows")
     return 0
 
@@ -226,8 +226,9 @@ def cmd_type_rm(args) -> int:
 
 def cmd_query(args) -> int:
     """GWQL statement against the store's types: SELECT prints rows;
-    DELETE commits one delete snapshot to the type and reports the
-    count (DataStore.gwql on a snapshot type — durable and atomic)."""
+    DELETE commits one delete snapshot to the type, drops the
+    pre-delete snapshots and reports the count (DataStore.gwql on a
+    snapshot type — durable and atomic)."""
     spark = _spark(args.cpus)
     result = _datastore(spark, args.store).gwql(args.statement)
     if isinstance(result, int):
@@ -235,6 +236,7 @@ def cmd_query(args) -> int:
 
         # the parser's type name: GWQL also takes quoted names
         name = parse_statement(args.statement).table
+        _table(args.store, name).expire_snapshots(keep_last=1)
         print(f"deleted {result} rows from '{name}'")
         return 0
     _emit(result, args.format, args.limit)
@@ -388,33 +390,40 @@ def cmd_analytic(args) -> int:
     return 0
 
 
+def _quoted(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
 def cmd_stat_list(args) -> int:
     """Per-type, per-field statistics: COUNT plus numeric MIN/MAX —
-    the ListStatsCommand view over the engine's statistics surface."""
-    from pyspark.sql import functions as F
+    the ListStatsCommand view over the engine's statistics surface.
+    Each type is one GWQL aggregate, which the manifest's footer stats
+    answer when they cover every field and one scan answers otherwise."""
+    from geowave_spark.api import DataStore
 
-    spark = _spark(args.cpus)
+    ds = DataStore(_spark(args.cpus))
     names = [args.type_name] if args.type_name else _type_names(args.store)
     for name in names:
         t = _table(args.store, name)
         if t is None:
             return _unknown(name)
-        df = t.read(spark)
-        print(f"{name}: COUNT = {df.count()}")
-        aggs, labels = [], []
-        for f in df.schema.fields:
-            if f.dataType.simpleString() in (
-                "int", "bigint", "double", "float", "smallint", "timestamp"
-            ):
-                aggs += [F.min(f.name), F.max(f.name)]
-                labels.append(f.name)
-        if aggs:
-            row = df.agg(*aggs).collect()[0]
-            for i, col in enumerate(labels):
-                print(
-                    f"{name}.{col}: FIELD_MIN_MAX = "
-                    f"[{row[2 * i]}, {row[2 * i + 1]}]"
-                )
+        ds.add_snapshot_type(name, t)
+        labels = [
+            f.name
+            for f in ds.type(name).schema.fields
+            if f.dataType.simpleString()
+            in ("int", "bigint", "double", "float", "smallint", "timestamp")
+        ]
+        aggs = ["COUNT(*)"] + [
+            f"{fn}({_quoted(col)})" for col in labels for fn in ("MIN", "MAX")
+        ]
+        row = ds.gwql(f"SELECT {', '.join(aggs)} FROM {_quoted(name)}").collect()[0]
+        print(f"{name}: COUNT = {row[0]}")
+        for i, col in enumerate(labels):
+            print(
+                f"{name}.{col}: FIELD_MIN_MAX = "
+                f"[{row[2 * i + 1]}, {row[2 * i + 2]}]"
+            )
     return 0
 
 

@@ -1,14 +1,28 @@
 """Write-time index materialization — the stored-key query paths.
 
 The reference computes insertion ids at WRITE time and scans stored
-key ranges at query time; the engine's equivalent is a parquet table
-carrying the key columns, laid out sorted by the key so the coarse
-constraint prunes at the parquet row-group level (PushedFilters +
-min/max stats), instead of re-deriving the key expressions per query
-(which is correct but pays plan-compile + full-scan cost every run —
-the round-1 xz_extent pathology).
+key ranges at query time; the engine's equivalent is a table carrying
+the key columns, laid out sorted by the key so the coarse constraint
+prunes at the parquet row-group level (PushedFilters + min/max stats),
+instead of re-deriving the key expressions per query (which is correct
+but pays plan-compile + full-scan cost every run — the round-1
+xz_extent pathology).
 
-Three stores:
+Every cached table here is an IceTable snapshot table built once by
+``cached_table``: it lives at ``CACHE_ROOT/<tag>_<md5(key)>``, each
+build batch is one append commit tagged ``{"batch": i}``, and a build
+killed between commits resumes with the batches it lacks. The sorted
+layouts (XZ extents, spatial-temporal, interval, attribute, n-gram,
+reverse text, Hilbert, custom CRS) are one-batch tables with footer
+stats on their sort columns, read back under the recorded schema (no
+schema-inference job); the snapshot stores (cell-sorted events, the
+image corpus, the commit-maintained statistics store, the two-append
+store) are the tables themselves. This is the sandbox stand-in for the
+real write path, where these columns are produced once at ingest
+(df.writeTo(iceberg)); queries on a cache hit read only the stored
+files.
+
+Key layouts:
 
 - XZ extent store: (res, ax, ay) per extent, sorted — the
   XZHierarchicalIndexStrategy storage layout (index/xz.py docstring);
@@ -22,38 +36,61 @@ Three stores:
   SpatialDimensionalityTypeProvider.java:45-46), queried via
   HilbertSFC.decomposeRange-style range decomposition
   (index/hilbert.hilbert_ranges).
-
-Materialization is cached per (store, source, params) under a local
-cache root — the sandbox stand-in for the real write path, where these
-columns are produced once at ingest (df.writeTo(iceberg)). Queries on
-a cache-hit read ONLY the stored parquet.
 """
 
 from __future__ import annotations
 
 import hashlib
 import os
-import shutil
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 CACHE_ROOT = os.environ.get("GEOWAVE_SPARK_CACHE", "/tmp/geowave_spark_cache")
+# part of every cache key: bump it when a cached table's rows, layout or
+# build batches change, so a build opens a fresh directory instead of
+# resuming one an older build wrote
+CACHE_VERSION = "ice1"
 
 
-def _materialize(spark: SparkSession, tag: str, key: str, build) -> DataFrame:
-    digest = hashlib.md5(f"{tag}:{key}".encode()).hexdigest()[:12]
-    path = os.path.join(CACHE_ROOT, f"{tag}_{digest}")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        tmp = f"{path}.tmp{os.getpid()}"
-        build().write.mode("overwrite").parquet(tmp)
-        try:
-            os.rename(tmp, path)
-        except OSError:
-            # a concurrent writer won the race; its copy is identical
-            shutil.rmtree(tmp, ignore_errors=True)
-    return spark.read.parquet(path)
+def cache_path(tag: str, key: str) -> str:
+    """The cache directory of the build ``tag`` keyed by ``key``."""
+    digest = hashlib.md5(f"{tag}:{CACHE_VERSION}:{key}".encode()).hexdigest()[:12]
+    return os.path.join(CACHE_ROOT, f"{tag}_{digest}")
+
+
+def cached_table(tag: str, key: str, batches, **commit):
+    """The IceTable at ``cache_path(tag, key)``, built once from
+    ``batches`` (zero-argument callables returning DataFrames). Batch i
+    is one append commit whose summary records ``{"batch": i}``; a call
+    commits only the batches the snapshot log lacks, so a build killed
+    between commits resumes where it stopped and a built table costs
+    one metadata read. ``commit`` goes to every commit_write
+    (stats_cols, occupancy, sketch_cols). Snapshots committed on top
+    (deletes) carry no batch id and leave the build complete; expiring
+    a cached table's snapshots would drop its batch ids, so none is
+    expired. One process builds a given table at a time."""
+    from geowave_spark.sources.icetable import IceTable
+
+    t = IceTable(cache_path(tag, key))
+    done = {(s.get("summary") or {}).get("batch") for s in t.snapshots()}
+    for i, batch in enumerate(batches):
+        if i not in done:
+            t.commit_write(batch(), mode="append", summary={"batch": i}, **commit)
+    return t
+
+
+def _sorted(df: DataFrame, *cols: str) -> DataFrame:
+    """``df`` range-partitioned into 8 files and sorted by ``cols``."""
+    return df.repartitionByRange(8, *cols).sortWithinPartitions(*cols)
+
+
+def _sorted_layout(spark: SparkSession, tag: str, key: str, build, *cols: str) -> DataFrame:
+    """A stored key layout: ``build()`` sorted by ``cols``, cached as a
+    one-batch table with footer stats on ``cols``, read back."""
+    t = cached_table(tag, key, [lambda: _sorted(build(), *cols)], stats_cols=list(cols))
+    return t.read(spark)
 
 
 # ------------------------------------------------------------- XZ extents
@@ -65,14 +102,10 @@ def xz_extent_store(spark: SparkSession, sf_dir: str, r_max: int = 12) -> DataFr
     from geowave_spark.index.xz import xz_keys
     from geowave_spark.sources.testgeo import customer_boxes
 
-    def build():
-        return (
-            xz_keys(customer_boxes(spark, sf_dir), r_max)
-            .repartitionByRange(8, "res", "ax", "ay")
-            .sortWithinPartitions("res", "ax", "ay")
-        )
-
-    return _materialize(spark, "xzkeys", f"{sf_dir}:{r_max}", build)
+    return _sorted_layout(
+        spark, "xzkeys", f"{sf_dir}:{r_max}",
+        lambda: xz_keys(customer_boxes(spark, sf_dir), r_max), "res", "ax", "ay",
+    )
 
 
 # ------------------------------------------- spatial-temporal composite
@@ -94,19 +127,17 @@ def st_store(
     from geowave_spark.sources.testgeo import events_points
 
     def build():
-        pts = events_points(spark, sf_dir)
         return (
-            pts.withColumn("bin", time_bin_col(F.col("ts"), unit).cast("long"))
+            events_points(spark, sf_dir)
+            .withColumn("bin", time_bin_col(F.col("ts"), unit).cast("long"))
             .withColumn("cell", cell_col(F.col("x_u"), F.col("y_u"), res))
             .withColumn(
                 "st_cell",
                 F.shiftleft(F.col("bin"), 2 * res).bitwiseOR(F.col("cell")),
             )
-            .repartitionByRange(8, "bin", "cell")
-            .sortWithinPartitions("bin", "cell")
         )
 
-    return _materialize(spark, "ststore", f"{sf_dir}:{res}:{unit}", build)
+    return _sorted_layout(spark, "ststore", f"{sf_dir}:{res}:{unit}", build, "bin", "cell")
 
 
 def st_bbox_time_query(
@@ -126,18 +157,10 @@ def st_bbox_time_query(
     bin BETWEEN [day(t_lo), day(t_hi)] AND cell IN ≤max_ranges Morton
     ranges, then exact native refinement. Sargable on the stored
     (bin, cell) layout."""
-    from datetime import date, datetime
-
     from geowave_spark.index.zorder import bbox_ranges
     from geowave_spark.operators.spatial_query import cell_range_predicate
 
-    epoch = date(1970, 1, 1)
-    b_lo = (datetime.fromisoformat(t_lo).date() - epoch).days
-    # t_hi is exclusive; midnight belongs to the previous bin's end
-    dt_hi = datetime.fromisoformat(t_hi)
-    b_hi = (dt_hi.date() - epoch).days
-    if dt_hi.time() == datetime.min.time():
-        b_hi -= 1
+    b_lo, b_hi = interval_query_bin_bounds(t_lo, t_hi)
     ranges = bbox_ranges(x_lo, y_lo, x_hi, y_hi, res, max_ranges)
     coarse = F.col("bin").between(b_lo, b_hi) & cell_range_predicate(
         F.col("cell"), ranges
@@ -207,16 +230,14 @@ def st_interval_store(
     from geowave_spark.sources.testgeo import events_intervals
 
     def build():
-        iv = events_intervals(spark, sf_dir)
         b_lo, b_hi = interval_bin_bounds(F.col("ts_start"), F.col("ts_end"))
         return (
-            iv.withColumn("bin", F.explode(F.sequence(b_lo, b_hi)))
+            events_intervals(spark, sf_dir)
+            .withColumn("bin", F.explode(F.sequence(b_lo, b_hi)))
             .withColumn("cell", cell_col(F.col("x_u"), F.col("y_u"), res))
-            .repartitionByRange(8, "bin", "cell")
-            .sortWithinPartitions("bin", "cell")
         )
 
-    return _materialize(spark, "ivstore", f"{sf_dir}:{res}", build)
+    return _sorted_layout(spark, "ivstore", f"{sf_dir}:{res}", build, "bin", "cell")
 
 
 def st_interval_query(
@@ -261,30 +282,28 @@ def st_interval_query(
 # ------------------------------------------------ snapshot (Iceberg) store
 
 
-def ice_events_store(spark: SparkSession, sf_dir: str, res: int = 16):
+def ice_events_store(
+    spark: SparkSession,
+    sf_dir: str,
+    tag: str = "ice_events",
+    stats_cols: tuple[str, ...] = ("cell",),
+    res: int = 16,
+):
     """Event points committed to the snapshot table format
     (sources/icetable.py) sorted by the SFC cell, so the manifest's
     per-file [min, max] cell stats are tight ranges — bbox scans prune
     whole files from the manifest before Spark lists them, then
-    parquet row-group stats prune inside the kept files."""
-    import hashlib as _h
-
+    parquet row-group stats prune inside the kept files. ``tag`` names
+    a separate table of the same rows: the registry's delete rows each
+    mutate their own."""
     from geowave_spark.index.native import cell_col
-    from geowave_spark.sources.icetable import IceTable
     from geowave_spark.sources.testgeo import events_points
 
-    digest = _h.md5(f"ice_events:{sf_dir}:{res}".encode()).hexdigest()[:12]
-    t = IceTable(os.path.join(CACHE_ROOT, f"ice_events_{digest}"))
-    if t.current_snapshot_id() is None:
-        pts = events_points(spark, sf_dir).withColumn(
-            "cell", cell_col(F.col("x_u"), F.col("y_u"), res)
-        )
-        t.commit_write(
-            pts.repartitionByRange(8, "cell").sortWithinPartitions("cell"),
-            mode="overwrite",
-            stats_cols=["cell"],
-        )
-    return t
+    def build():
+        pts = events_points(spark, sf_dir)
+        return _sorted(pts.withColumn("cell", cell_col(F.col("x_u"), F.col("y_u"), res)), "cell")
+
+    return cached_table(tag, f"{sf_dir}:{res}", [build], stats_cols=list(stats_cols))
 
 
 def ice_bbox_query(
@@ -318,76 +337,55 @@ STATS_RES = 6  # coarse occupancy grid (4096 cells max — metadata-sized)
 def ice_events_stats_store(spark: SparkSession, sf_dir: str, res: int = STATS_RES, n_snaps: int = 3):
     """Events committed as a MULTI-SNAPSHOT append sequence with
     write-path statistics: each append records per-file footer min/max
-    into the manifest and a per-cell occupancy delta into its snapshot
-    entry (icetable.commit_write(occupancy=...)). Readers then answer
-    count/bbox/occupancy questions from metadata alone
-    (merged_column_stats / merged_occupancy) — the reference's
+    into the manifest, a per-cell occupancy delta and COMMIT-MAINTAINED
+    FIELD SKETCHES on user_id (CMS + Bloom + HLL deltas) into its
+    snapshot entry (icetable.commit_write(occupancy=..., sketch_cols=...)).
+    Readers then answer count/bbox/occupancy and frequency/membership/
+    cardinality questions from metadata alone (merged_column_stats /
+    merged_occupancy / merged_field_sketches) — the reference's
     transactionally-maintained statistics (core/store/.../statistics/
-    StatisticsStore updated per write) expressed on the snapshot log.
-    The batch split is a deterministic hash of event_id, so the stats
-    exercise real cross-snapshot folding (every batch touches most
-    cells)."""
-    import hashlib as _h
-
-    from geowave_spark.sources.icetable import IceTable
+    StatisticsStore updated per write; CountMinSketchStatistic /
+    BloomFilterStatistic / HyperLogLogStatistic) expressed on the
+    snapshot log. The batch split is a deterministic hash of event_id,
+    so the stats exercise real cross-snapshot folding (every batch
+    touches most cells)."""
     from geowave_spark.sources.testgeo import events_points
 
-    digest = _h.md5(f"ice_stats:{sf_dir}:{res}:{n_snaps}".encode()).hexdigest()[:12]
-    t = IceTable(os.path.join(CACHE_ROOT, f"ice_stats_{digest}"))
-    # resume by COMMITTED BATCH ID, not by "any snapshot exists": this
-    # store is a multi-commit build, so a process killed between commits
-    # would otherwise be treated as fully built forever after (the
-    # persistent cache root makes that a permanently truncated store —
-    # each commit is atomic, the SEQUENCE is what the batch ids resume)
-    done = {
-        (s.get("summary") or {}).get("batch")
-        for s in t.snapshots()
-    }
-    todo = [i for i in range(n_snaps) if i not in done]
-    if todo:
-        pts = events_points(spark, sf_dir)
-        for i in todo:
-            batch = pts.where(F.pmod(F.xxhash64("event_id"), F.lit(n_snaps)) == i)
-            t.commit_write(
-                batch,
-                mode="append",
-                stats_cols=["x_u", "y_u"],
-                occupancy=(res, "x_u", "y_u"),
-                summary={"batch": i},
-            )
-    return t
+    def batch(i):
+        return lambda: events_points(spark, sf_dir).where(
+            F.pmod(F.xxhash64("event_id"), F.lit(n_snaps)) == i
+        )
+
+    return cached_table(
+        "ice_stats",
+        f"{sf_dir}:{res}:{n_snaps}",
+        [batch(i) for i in range(n_snaps)],
+        stats_cols=["x_u", "y_u"],
+        occupancy=(res, "x_u", "y_u"),
+        sketch_cols=["user_id"],
+    )
 
 
-def ice_events_sketch_store(spark: SparkSession, sf_dir: str, n_snaps: int = 3):
-    """Events committed as a multi-snapshot append sequence with
-    COMMIT-MAINTAINED FIELD SKETCHES on user_id (CMS + Bloom + HLL
-    deltas recorded per snapshot — icetable.commit_write(sketch_cols);
-    the reference's CountMinSketchStatistic / BloomFilterStatistic /
-    HyperLogLogStatistic updated transactionally per write). Readers
-    answer frequency/membership/cardinality questions from metadata
-    alone (merged_field_sketches). Same resume-by-batch-id discipline
-    as ice_events_stats_store."""
-    import hashlib as _h
-
-    from geowave_spark.sources.icetable import IceTable
+def ice_events_appends_store(spark: SparkSession, sf_dir: str, res: int = 16):
+    """Events as two append commits — even event_ids (batch 0), then
+    odd (batch 1) — with footer stats on cell, x_u, y_u and value: the
+    incremental read's changelog (the appends after batch 0) and the
+    metadata-answered GWQL aggregates, which must fold across
+    snapshots."""
+    from geowave_spark.index.native import cell_col
     from geowave_spark.sources.testgeo import events_points
 
-    digest = _h.md5(f"ice_sketch:{sf_dir}:{n_snaps}".encode()).hexdigest()[:12]
-    t = IceTable(os.path.join(CACHE_ROOT, f"ice_sketch_{digest}"))
-    done = {(s.get("summary") or {}).get("batch") for s in t.snapshots()}
-    todo = [i for i in range(n_snaps) if i not in done]
-    if todo:
-        pts = events_points(spark, sf_dir)
-        for i in todo:
-            batch = pts.where(F.pmod(F.xxhash64("event_id"), F.lit(n_snaps)) == i)
-            t.commit_write(
-                batch,
-                mode="append",
-                stats_cols=["x_u", "y_u"],
-                sketch_cols=["user_id"],
-                summary={"batch": i},
-            )
-    return t
+    def batch(parity):
+        return lambda: events_points(spark, sf_dir).withColumn(
+            "cell", cell_col(F.col("x_u"), F.col("y_u"), res)
+        ).where(F.col("event_id") % 2 == parity)
+
+    return cached_table(
+        "ice_appends",
+        f"{sf_dir}:{res}",
+        [batch(0), batch(1)],
+        stats_cols=["cell", "x_u", "y_u", "value"],
+    )
 
 
 # ---------------------------------------------------- attribute (secondary)
@@ -402,14 +400,10 @@ def attr_store(spark: SparkSession, sf_dir: str, column: str = "user_id") -> Dat
     row-group level (PushedFilters + min/max stats), the same
     write-once / scan-sorted contract as the spatial stores above."""
 
-    def build():
-        return (
-            spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-            .repartitionByRange(8, column)
-            .sortWithinPartitions(column)
-        )
-
-    return _materialize(spark, f"attr_{column}", sf_dir, build)
+    return _sorted_layout(
+        spark, f"attr_{column}", sf_dir,
+        lambda: spark.read.parquet(os.path.join(sf_dir, "events.parquet")), column,
+    )
 
 
 def attr_range_query(stored: DataFrame, column: str, lo, hi) -> DataFrame:
@@ -438,27 +432,20 @@ def ice_images_store(
     scan before Spark lists them; within files, row groups prune on the
     same stored column. Captions, phash and geometry ride the same
     rows (input_hint schema + x_u/y_u + cell)."""
-    import hashlib as _h
-
+    from geowave_spark.index.native import cell_col
     from geowave_spark.operators.tiling import pick_level
-    from geowave_spark.sources.icetable import IceTable
     from geowave_spark.sources.images import images_table
 
     level = pick_level(2 * half_span_u, w, tile_size or w)
-    digest = _h.md5(f"ice_images:{n}:{w}:{h}:{half_span_u}:{level}".encode()).hexdigest()[:12]
-    t = IceTable(os.path.join(CACHE_ROOT, f"ice_images_{digest}"))
-    if t.current_snapshot_id() is None:
-        from geowave_spark.index.native import cell_col
 
-        imgs = images_table(spark, n, w=w, h=h, partitions=8).withColumn(
-            "cell", cell_col(F.col("x_u"), F.col("y_u"), level)
-        )
-        t.commit_write(
-            imgs.repartitionByRange(8, "cell").sortWithinPartitions("cell"),
-            mode="overwrite",
-            stats_cols=["cell", "image_id"],
-            summary={"level": level, "n_images": n},
-        )
+    def build():
+        imgs = images_table(spark, n, w=w, h=h, partitions=8)
+        return _sorted(imgs.withColumn("cell", cell_col(F.col("x_u"), F.col("y_u"), level)), "cell")
+
+    t = cached_table(
+        "ice_images", f"{n}:{w}:{h}:{half_span_u}:{level}", [build],
+        stats_cols=["cell", "image_id"],
+    )
     return t, level
 
 
@@ -476,13 +463,9 @@ def ngram_store(spark: SparkSession, sf_dir: str, n: int = 3) -> DataFrame:
 
     def build():
         docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-        return (
-            ngram_index(docs, "text", "doc_id", n)
-            .repartitionByRange(8, "gram")
-            .sortWithinPartitions("gram")
-        )
+        return ngram_index(docs, "text", "doc_id", n)
 
-    return _materialize(spark, f"ngram{n}", sf_dir, build)
+    return _sorted_layout(spark, f"ngram{n}", sf_dir, build, "gram")
 
 
 # ------------------------------------------------- text REVERSE index
@@ -500,13 +483,9 @@ def reverse_text_store(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build():
         docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-        return (
-            docs.withColumn("rtext", F.reverse(F.col("text")))
-            .repartitionByRange(8, "rtext")
-            .sortWithinPartitions("rtext")
-        )
+        return docs.withColumn("rtext", F.reverse(F.col("text")))
 
-    return _materialize(spark, "revtext", sf_dir, build)
+    return _sorted_layout(spark, "revtext", sf_dir, build, "rtext")
 
 
 def suffix_stored_query(stored: DataFrame, col: str, suffix: str) -> DataFrame:
@@ -548,20 +527,12 @@ def hilbert_store(
     from geowave_spark.index.native import grid_coord_col
 
     def build():
-        pts = events_points(spark, sf_dir)
-        return (
-            pts.withColumn(
-                "hkey",
-                hkey(
-                    grid_coord_col(F.col("x_u"), res),
-                    grid_coord_col(F.col("y_u"), res),
-                ),
-            )
-            .repartitionByRange(8, "hkey")
-            .sortWithinPartitions("hkey")
+        return events_points(spark, sf_dir).withColumn(
+            "hkey",
+            hkey(grid_coord_col(F.col("x_u"), res), grid_coord_col(F.col("y_u"), res)),
         )
 
-    return _materialize(spark, "hilbert", f"{sf_dir}:{res}", build)
+    return _sorted_layout(spark, "hilbert", f"{sf_dir}:{res}", build, "hkey")
 
 
 def hilbert_bbox_query(
@@ -602,13 +573,8 @@ def crs_store(spark: SparkSession, sf_dir: str, res: int | None = None) -> DataF
         res = CRS_RES  # single shared constant with crs_bbox_stored_query
 
     def build():
-        pts = mercator_mm_points(spark, sf_dir)
-        return (
-            pts.withColumn(
-                "cell", cell_col_crs(F.col("x"), F.col("y"), res, WEB_MERCATOR_MM)
-            )
-            .repartitionByRange(8, "cell")
-            .sortWithinPartitions("cell")
+        return mercator_mm_points(spark, sf_dir).withColumn(
+            "cell", cell_col_crs(F.col("x"), F.col("y"), res, WEB_MERCATOR_MM)
         )
 
-    return _materialize(spark, "crsstore", f"{sf_dir}:{res}", build)
+    return _sorted_layout(spark, "crsstore", f"{sf_dir}:{res}", build, "cell")

@@ -867,20 +867,31 @@ def ingest_directory(
 # ------------------------------------------------------ fixture generator
 
 
-def formats_fixture_dir(sf_dir: str) -> str:
-    """Build-once deterministic raw-format fixture tree for a testdata
-    scale (atomic-rename + _SUCCESS, like plans/store._materialize)."""
-    digest = hashlib.md5(f"formats:v5:{sf_dir}".encode()).hexdigest()[:12]
-    path = os.path.join(CACHE_ROOT, f"formats_{digest}")
+def build_dir_once(path: str, write) -> str:
+    """Build the raw file tree at ``path`` once: ``write(tmp)`` fills a
+    private temp dir, a ``_SUCCESS`` marker seals it and a rename
+    publishes it whole. A builder that loses the rename to a concurrent
+    one drops its copy (the trees are deterministic). Returns ``path``."""
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         tmp = f"{path}.tmp{os.getpid()}"
-        write_format_fixtures(sf_dir, tmp)
+        os.makedirs(tmp, exist_ok=True)
+        write(tmp)
         open(os.path.join(tmp, "_SUCCESS"), "w").close()
         try:
             os.rename(tmp, path)
         except OSError:
             shutil.rmtree(tmp, ignore_errors=True)  # concurrent winner
     return path
+
+
+def formats_fixture_dir(sf_dir: str) -> str:
+    """Build-once deterministic raw-format fixture tree for a testdata
+    scale."""
+    digest = hashlib.md5(f"formats:v5:{sf_dir}".encode()).hexdigest()[:12]
+    return build_dir_once(
+        os.path.join(CACHE_ROOT, f"formats_{digest}"),
+        lambda tmp: write_format_fixtures(sf_dir, tmp),
+    )
 
 
 def _fixture_rows(sf_dir: str) -> pd.DataFrame:

@@ -436,6 +436,19 @@ class IceTable:
     def snapshots(self) -> list[dict]:
         return self._metadata()["snapshots"]
 
+    def properties(self) -> dict:
+        """Table properties (Iceberg's table-level key/values): unlike a
+        snapshot summary they outlive expire_snapshots."""
+        return self._metadata().get("properties", {})
+
+    def set_properties(self, **props) -> None:
+        """Merge ``props`` into the table properties: one metadata
+        commit under the commit lock, no new snapshot."""
+        with self._commit_lock():
+            meta = self._metadata()
+            meta.setdefault("properties", {}).update(props)
+            self._commit_metadata(meta)
+
     def current_snapshot_id(self) -> int | None:
         return self._metadata()["current_snapshot_id"]
 
@@ -1103,7 +1116,9 @@ class IceTable:
         live: set[str] = set()
         for s in keep:
             live.update(f["path"] for f in self._manifest(s["id"]))
+        live_dirs = {os.path.dirname(p) for p in live}
         removed_files = 0
+        emptied: set[str] = set()
         for s in snaps:
             if s in keep:
                 continue
@@ -1112,7 +1127,12 @@ class IceTable:
                     os.remove(f["path"])
                     removed_files += 1
                     live.add(f["path"])  # count each orphan once
+                    emptied.add(os.path.dirname(f["path"]))
             os.remove(os.path.join(self.meta_dir, f"manifest-{s['id']}.json"))
+        # a write's dir holds no live file once all of its files went:
+        # drop it with its _SUCCESS marker and checksum files
+        for d in emptied - live_dirs:
+            shutil.rmtree(d, ignore_errors=True)
         removed = len(snaps) - len(keep)
         meta["snapshots"] = keep
         self._commit_metadata(meta)

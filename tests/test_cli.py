@@ -123,6 +123,95 @@ def test_stat_list(store):
     assert "gdelt.eventid: FIELD_MIN_MAX" in out
 
 
+def _cli_jobs(spark, argv, group):
+    """(stdout of the CLI run, number of Spark jobs it started)."""
+    import time
+
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        rc, out = run(argv)
+        sc.setJobGroup(group + "-probe", group)  # events arrive in order
+        spark.range(1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert rc == 0
+    tracker = sc.statusTracker()
+    for _ in range(200):
+        if tracker.getJobIdsForGroup(group + "-probe"):
+            break
+        time.sleep(0.05)
+    return out, len(tracker.getJobIdsForGroup(group))
+
+
+def test_stat_list_is_one_aggregate_per_type(spark, tmp_path):
+    """`stat list` is one GWQL aggregate per type. Footer stats that
+    cover COUNT and every MIN/MAX answer it from the manifest: at most
+    one job per type (the literal row). A timestamp field (no footer
+    stats) makes it one scan — its shuffle map stage and its result
+    stage are one job each under adaptive execution — where a separate
+    count() and agg() ran two scans, four jobs."""
+    from pyspark.sql import functions as F
+
+    store = _tiny_store(spark, str(tmp_path))
+    _commit(store, "pts2", spark.range(0, 30, numPartitions=3).select(
+        F.col("id").alias("eventid"), (F.col("id") * 0.5).alias("w")
+    ))
+    out, n_jobs = _cli_jobs(spark, ["stat", "list", store], "stat-list-stats")
+    assert out.splitlines() == [
+        "pts: COUNT = 20",
+        "pts.eventid: FIELD_MIN_MAX = [0, 19]",
+        "pts.x_u: FIELD_MIN_MAX = [0, 19000]",
+        "pts.y_u: FIELD_MIN_MAX = [0, 19000]",
+        "pts2: COUNT = 30",
+        "pts2.eventid: FIELD_MIN_MAX = [0, 29]",
+        "pts2.w: FIELD_MIN_MAX = [0.0, 14.5]",
+    ]
+    assert n_jobs <= 2
+
+    _commit(store, "ts", spark.range(0, 10, numPartitions=2).select(
+        F.col("id").alias("eventid"), F.timestamp_seconds("id").alias("t")
+    ))
+    out, n_jobs = _cli_jobs(spark, ["stat", "list", store, "--type", "ts"], "stat-list-scan")
+    assert out.splitlines() == [
+        "ts: COUNT = 10",
+        "ts.eventid: FIELD_MIN_MAX = [0, 9]",
+        "ts.t: FIELD_MIN_MAX = [1970-01-01 00:00:00, 1970-01-01 00:00:09]",
+    ]
+    assert n_jobs <= 2
+
+
+def test_rewrites_keep_only_the_current_snapshot(spark, tmp_path):
+    """Re-ingesting a type and a DELETE drop the superseded snapshots
+    and their files: three ingests of one type leave one data dir and
+    print what one ingest prints; after a DELETE the type keeps one
+    data dir, its format and the post-delete rows."""
+    src = FM.formats_fixture_dir(SF)
+    store = str(tmp_path / "s")
+    outs = []
+    for _ in range(3):
+        rc, _ = run(["ingest", "localtogw", src, store, "--formats", "gdelt"])
+        assert rc == 0
+        outs.append([
+            run(["type", "list", store])[1],
+            run(["query", store, "SELECT eventid FROM gdelt WHERE eventid < 30",
+                 "--format", "csv"])[1],
+            run(["stat", "list", store])[1],
+        ])
+        assert len(os.listdir(os.path.join(store, "gdelt", "data"))) == 1
+    assert outs[0] == outs[1] == outs[2]
+    assert outs[0][0] == "gdelt\tgdelt\t978 rows\n"
+
+    rc, out = run(["query", store, "DELETE FROM gdelt WHERE eventid < 50"])
+    assert rc == 0 and "deleted" in out
+    t = IceTable(os.path.join(store, "gdelt"))
+    assert len(t.snapshots()) == 1 and t.snapshots()[0]["operation"] == "delete"
+    assert len(os.listdir(os.path.join(store, "gdelt", "data"))) == 1
+    n = t.read(spark).count()
+    assert run(["type", "list", store])[1] == f"gdelt\tgdelt\t{n} rows\n"
+    assert n < 978
+
+
 def test_query_delete_persists(store, spark):
     """GWQL DELETE through the CLI commits one delete snapshot to the
     stored type."""
@@ -156,9 +245,9 @@ def _tiny_store(spark, root: str) -> str:
 
 
 def _commit(root: str, name: str, df) -> None:
-    IceTable(os.path.join(root, name)).commit_write(
-        df, mode="overwrite", summary={"format": "gdelt"}
-    )
+    t = IceTable(os.path.join(root, name))
+    t.commit_write(df, mode="overwrite")
+    t.set_properties(format="gdelt")
 
 
 def _stored_ids(store):

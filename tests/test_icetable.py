@@ -195,6 +195,26 @@ def test_compact_and_expire(spark, tmp_path):
     assert len(live_files) == 3
 
 
+def test_expire_drops_emptied_data_dirs_and_keeps_properties(spark, tmp_path):
+    """expire_snapshots removes a write's whole data dir (its _SUCCESS
+    and checksum files too) once none of its files is live, keeps a dir
+    that still holds a live file, and leaves the table properties."""
+    t = IceTable(str(tmp_path / "ex"))
+    t.commit_write(_mk(spark, 0, 100), mode="overwrite")
+    t.set_properties(format="x")
+    t.commit_write(_mk(spark, 100, 200), mode="overwrite")
+    kept = t.commit_write(_mk(spark, 200, 300), mode="overwrite")
+    t.commit_write(_mk(spark, 300, 310), mode="append")
+    live_dirs = {os.path.dirname(f["path"]) for f in t.files()}
+    assert {os.path.dirname(f["path"]) for f in t.files(kept)} < live_dirs
+
+    t.expire_snapshots(keep_last=1)
+    data = str(tmp_path / "ex" / "data")
+    assert {os.path.join(data, d) for d in os.listdir(data)} == live_dirs
+    assert t.properties() == {"format": "x"}
+    assert sorted(r.id for r in t.read(spark).collect()) == list(range(200, 310))
+
+
 def test_concurrent_commits_no_lost_update(spark, tmp_path):
     """Two writers racing commit_write must serialize on the writer
     lock: every snapshot survives (no silent lost update from both

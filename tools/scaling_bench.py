@@ -200,17 +200,17 @@ if jobs is not None and "format_parse" in jobs:
     # timed window (same stance as the bench fixture warmups).
     import glob as _glob
 
-    from geowave_spark.sources.formats import formats_fixture_dir, read_gdelt
+    from geowave_spark.plans.store import CACHE_ROOT
+    from geowave_spark.sources.formats import (
+        build_dir_once,
+        formats_fixture_dir,
+        read_gdelt,
+    )
 
     src = formats_fixture_dir(sf_dir) + "/gdelt"
     rep = max(scale // 4, 1)
-    scaled = os.path.join(
-        os.environ.get("GEOWAVE_SPARK_CACHE", "/tmp/geowave_spark_cache"),
-        f"gdelt_scaled_{os.path.basename(sf_dir.rstrip('/'))}_{rep}",
-    )
-    if not os.path.exists(os.path.join(scaled, "_SUCCESS")):
-        tmp = scaled + f".tmp{os.getpid()}"
-        os.makedirs(tmp, exist_ok=True)
+
+    def replicate(tmp):
         for f in sorted(_glob.glob(src + "/*.export.csv")):
             data = open(f, "rb").read()
             base = os.path.basename(f)[: -len(".export.csv")]
@@ -219,11 +219,13 @@ if jobs is not None and "format_parse" in jobs:
                     os.path.join(tmp, f"{base}_{i}.export.csv"), "wb"
                 ) as out:
                     out.write(data)
-        open(os.path.join(tmp, "_SUCCESS"), "w").close()
-        try:
-            os.rename(tmp, scaled)
-        except OSError:
-            pass  # concurrent winner; identical content
+
+    scaled = build_dir_once(
+        os.path.join(
+            CACHE_ROOT, f"gdelt_scaled_{os.path.basename(sf_dir.rstrip('/'))}_{rep}"
+        ),
+        replicate,
+    )
     run("format_parse", lambda: read_gdelt(spark, scaled), reuse_df=True)
 
 print(json.dumps({
