@@ -20,7 +20,8 @@ holding ``metadata/version-hint.text``, its format is a table property
 and its row count the manifest's footer stats. Every write — ingest,
 analytic output, DELETE — is one atomic IceTable commit, after which
 the type keeps only its current snapshot (``expire_snapshots``), so
-superseded data files do not pile up. Everything runs through the same
+superseded data files do not pile up, and the same sweep reclaims the
+data dir of a write that crashed before it published. Everything runs through the same
 engine surfaces the driver gate checks: sources/formats.ingest_directory
 → IceTable.commit_write, api.DataStore + plans/gwql for queries,
 deletes and stats.
@@ -83,7 +84,7 @@ def _commit_type(store: str, name: str, df, fmt: str) -> int:
     t = IceTable(os.path.join(store, name))
     t.commit_write(indexed_frame(df), mode="overwrite")
     t.set_properties(format=fmt)
-    t.expire_snapshots(keep_last=1)
+    t.expire_snapshots()
     return t.merged_column_stats()["n_rows"]
 
 
@@ -236,7 +237,7 @@ def cmd_query(args) -> int:
 
         # the parser's type name: GWQL also takes quoted names
         name = parse_statement(args.statement).table
-        _table(args.store, name).expire_snapshots(keep_last=1)
+        _table(args.store, name).expire_snapshots()
         print(f"deleted {result} rows from '{name}'")
         return 0
     _emit(result, args.format, args.limit)

@@ -807,7 +807,7 @@ def _stats_select(
     Soundness gates (any miss returns None → normal scan path):
     - no WHERE (or INCLUDE): footer stats describe whole files only;
     - no pending merge-on-read deletes (`mor_pending` — footer counts
-      would overcount until apply_deletes folds them);
+      would overcount until an overwrite retires them);
     - COUNT(*) only (COUNT(col) needs null counts footers don't carry);
     - MIN/MAX only on NUMERIC columns with complete stats — parquet
       writers may TRUNCATE binary (string) min/max statistics, so a

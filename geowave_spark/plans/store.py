@@ -9,9 +9,10 @@ but pays plan-compile + full-scan cost every run — the round-1
 xz_extent pathology).
 
 Every cached table here is an IceTable snapshot table built once by
-``cached_table``: it lives at ``CACHE_ROOT/<tag>_<md5(key)>``, each
-build batch is one append commit tagged ``{"batch": i}``, and a build
-killed between commits resumes with the batches it lacks. The sorted
+``cached_table``: it lives at ``CACHE_ROOT/<tag>_<version>_<digest>``,
+each build batch is one append commit tagged ``{"batch": i}``, a build
+killed between commits resumes with the batches it lacks, and a build
+removes the dirs of its tag that an older cache version left. The sorted
 layouts (XZ extents, spatial-temporal, interval, attribute, n-gram,
 reverse text, Hilbert, custom CRS) are one-batch tables with footer
 stats on their sort columns, read back under the recorded schema (no
@@ -42,22 +43,37 @@ from __future__ import annotations
 
 import hashlib
 import os
+import re
+import shutil
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 CACHE_ROOT = os.environ.get("GEOWAVE_SPARK_CACHE", "/tmp/geowave_spark_cache")
-# part of every cache key: bump it when a cached table's rows, layout or
-# build batches change, so a build opens a fresh directory instead of
-# resuming one an older build wrote
+# part of every cache dir name (letters, then a number): bump it when a
+# cached table's rows, layout or build batches change, so a build opens
+# a fresh directory instead of resuming one an older build wrote
 CACHE_VERSION = "ice1"
 
 
 def cache_path(tag: str, key: str) -> str:
-    """The cache directory of the build ``tag`` keyed by ``key``."""
+    """The cache directory of the build ``tag`` keyed by ``key``:
+    ``<tag>_<CACHE_VERSION>_<12 hex of md5>``."""
     digest = hashlib.md5(f"{tag}:{CACHE_VERSION}:{key}".encode()).hexdigest()[:12]
-    return os.path.join(CACHE_ROOT, f"{tag}_{digest}")
+    return os.path.join(CACHE_ROOT, f"{tag}_{CACHE_VERSION}_{digest}")
+
+
+def _drop_stale_versions(tag: str) -> None:
+    """Remove the cache dirs of ``tag`` that no build opens again: those
+    of another cache version and those from before dir names carried
+    one (``<tag>_<12 hex>``). Same-version dirs of other keys stay, and
+    so does every dir of another tag."""
+    named = re.compile(rf"{re.escape(tag)}_(?:[a-z]+\d+_)?[0-9a-f]{{12}}")
+    current = f"{tag}_{CACHE_VERSION}_"
+    for name in os.listdir(CACHE_ROOT) if os.path.isdir(CACHE_ROOT) else []:
+        if named.fullmatch(name) and not name.startswith(current):
+            shutil.rmtree(os.path.join(CACHE_ROOT, name), ignore_errors=True)
 
 
 def cached_table(tag: str, key: str, batches, **commit):
@@ -70,14 +86,18 @@ def cached_table(tag: str, key: str, batches, **commit):
     (stats_cols, occupancy, sketch_cols). Snapshots committed on top
     (deletes) carry no batch id and leave the build complete; expiring
     a cached table's snapshots would drop its batch ids, so none is
-    expired. One process builds a given table at a time."""
+    expired. A call that commits first removes the stale dirs of
+    ``tag`` (``_drop_stale_versions``). One process builds a given
+    table at a time."""
     from geowave_spark.sources.icetable import IceTable
 
     t = IceTable(cache_path(tag, key))
     done = {(s.get("summary") or {}).get("batch") for s in t.snapshots()}
-    for i, batch in enumerate(batches):
-        if i not in done:
-            t.commit_write(batch(), mode="append", summary={"batch": i}, **commit)
+    todo = [(i, batch) for i, batch in enumerate(batches) if i not in done]
+    if todo:
+        _drop_stale_versions(tag)
+    for i, batch in todo:
+        t.commit_write(batch(), mode="append", summary={"batch": i}, **commit)
     return t
 
 

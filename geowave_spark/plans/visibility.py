@@ -74,20 +74,6 @@ class _Value:
     def evaluate(self, auths: frozenset[str]) -> bool:
         return self.token in auths
 
-    def unparse(self) -> str:
-        return self.token
-
-
-def _child_str(node) -> str:
-    """Render a child for unparse. Operator children are ALWAYS
-    parenthesized (OperatorNode.buildExpression:168-186 wraps any
-    OperatorNode child in parens) — without this, Or(a, And(b, c))
-    would print as ``a|b&c``, which the equal-precedence
-    left-associative grammar re-parses as ``(a|b)&c``: different
-    semantics. The parens make unparse→parse an exact round trip."""
-    s = node.unparse()
-    return f"({s})" if isinstance(node, (_And, _Or)) else s
-
 
 @dataclass(frozen=True)
 class _And:
@@ -96,9 +82,6 @@ class _And:
 
     def evaluate(self, auths: frozenset[str]) -> bool:
         return self.left.evaluate(auths) and self.right.evaluate(auths)
-
-    def unparse(self) -> str:
-        return f"{_child_str(self.left)}&{_child_str(self.right)}"
 
 
 @dataclass(frozen=True)
@@ -109,9 +92,6 @@ class _Or:
     def evaluate(self, auths: frozenset[str]) -> bool:
         return self.left.evaluate(auths) or self.right.evaluate(auths)
 
-    def unparse(self) -> str:
-        return f"{_child_str(self.left)}|{_child_str(self.right)}"
-
 
 @dataclass(frozen=True)
 class _NoAuth:
@@ -120,9 +100,6 @@ class _NoAuth:
 
     def evaluate(self, auths: frozenset[str]) -> bool:
         return True
-
-    def unparse(self) -> str:
-        return ""
 
 
 def parse_visibility(expression: str):

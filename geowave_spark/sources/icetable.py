@@ -11,25 +11,23 @@ per-file column stats, atomic metadata swap, time travel):
   <root>/metadata/manifest-<snap>.json   file list + per-file stats
   <root>/data/<op>-<uuid>/part-*.parquet immutable files of ONE write;
                                          op is w (commit_write), d (CoW
-                                         delete), u (upsert), a
-                                         (apply_deletes) or del (a
-                                         merge-on-read key file)
+                                         delete) or del (a merge-on-read
+                                         key file)
 
 Commit protocol — one path, ``IceTable._publish``, for every writer:
 
 1. the writer lands its parquet files in a fresh data dir, outside any
    lock; no snapshot names them yet, so no reader sees them;
 2. under the table's commit lock it re-reads the log and — for a
-   row-level write (delete, upsert, apply_deletes, rollback) — checks
-   the table still sits on the snapshot it planned against and raises
-   RuntimeError otherwise (append and overwrite stack on whatever is
-   current);
+   delete — checks the table still sits on the snapshot it planned
+   against and raises RuntimeError otherwise (append and overwrite
+   stack on whatever is current);
 3. it takes the next snapshot id (also the sequence number of the new
    files), writes ``manifest-<id>.json`` and ``v<N+1>.metadata.json``;
 4. ``os.replace`` of version-hint publishes. A crash before this step
    leaves only files no snapshot references: readers keep the old
-   snapshot, a retry overwrites the leftovers, and ``remove_orphans``
-   reclaims the data dir.
+   snapshot, a retry overwrites the leftovers, and ``expire_snapshots``
+   reclaims the data dir once it is ``ORPHAN_GRACE_S`` old.
 
 Schemas, in Iceberg's shape: the metadata JSON holds a table-level
 ``schemas`` list of ``{"schema_id": i, "type": "struct", "fields":
@@ -42,16 +40,15 @@ under that schema (``spark.read.schema``), so a read starts no Spark
 job; without it Spark infers the schema from a parquet footer, one job
 per read. Files without a recorded schema (tables committed before
 schemas were recorded) or a snapshot mixing schemas fall back to that
-inference. Time travel and rollback read the schema of the snapshot
-they open.
+inference. Time travel reads the schema of the snapshot it opens.
 
 Guarantees the engine uses:
 
 - **Atomic commits**: readers see the old or the new snapshot, never a
   partial write. Appends never rewrite old files.
-- **Snapshot isolation / time travel**: `read(snapshot_id=...)` and
-  `rollback()` replay any historical state (a killed pipeline resumes
-  against the snapshot it planned on).
+- **Snapshot isolation / time travel**: `read(snapshot_id=...)` replays
+  any historical state until ``expire_snapshots`` drops it (a killed
+  pipeline resumes against the snapshot it planned on).
 - **Manifest file pruning**: per-file min/max column stats are read
   from parquet FOOTERS at commit time (no data scan); `scan()` drops
   whole files whose stat ranges miss the predicate before Spark ever
@@ -59,12 +56,11 @@ Guarantees the engine uses:
   row-group pruning. At 100 TB this is the difference between listing
   a few hundred files and a few hundred thousand.
 - **Row-level deletes, both Iceberg strategies**: copy-on-write
-  (`delete_where` / `delete_keys(mode='cow')` / `upsert` rewrite only
-  the stat-overlapping files) and merge-on-read
-  (`delete_keys(mode='mor')` commits an equality-delete key file in
-  O(keys) with zero data rewrite; readers anti-join it, sequence
-  numbers keep later re-inserts alive, and `apply_deletes()` /
-  `compact()` fold it in off the query path). At 100 TB a hot-path
+  (`delete_where` / `delete_keys(mode='cow')` rewrite only the
+  stat-overlapping files) and merge-on-read (`delete_keys(mode='mor')`
+  commits an equality-delete key file in O(keys) with zero data
+  rewrite; readers anti-join it, sequence numbers keep later
+  re-inserts alive, and an overwrite retires it). At 100 TB a hot-path
   delete must not synchronously rewrite terabytes — that is what
   mode='mor' is for.
 
@@ -192,23 +188,10 @@ def _read_parquet(spark: SparkSession, entries: list[dict], schemas: dict) -> Da
     return reader.parquet(*[e["path"] for e in entries])
 
 
-def _inherit_stats_cols(stats_cols: list[str] | None, files: list[dict]):
-    """Stats columns of a rewrite: the caller's, else every column the
-    rewritten files carried stats for (None = all when they had none)."""
-    if stats_cols is not None:
-        return stats_cols
-    return sorted({c for f in files for c in f["stats"]}) or None
-
-
 def _removes_rows(s: dict) -> bool:
     """Whether a snapshot entry removed rows — a point where the
     add-only occupancy and sketch deltas stop describing the table."""
-    summary = s.get("summary") or {}
-    return (
-        str(s.get("operation", "")) in ("delete", "upsert")
-        or int(summary.get("deleted_rows", 0)) > 0
-        or int(summary.get("replaced_rows", 0)) > 0
-    )
+    return s.get("operation") == "delete"
 
 
 @contextlib.contextmanager
@@ -229,6 +212,11 @@ CMS_DEPTH = 4
 BF_M = 1 << 16
 BF_K = 3
 HLL_M = 256  # registers; the 60-bit md5-prefix hash leaves 52 rho bits
+
+# expire_snapshots sweeps a data dir no snapshot names only once it is
+# this old: a younger one may belong to a write whose commit has not
+# published yet (data lands outside the commit lock)
+ORPHAN_GRACE_S = 3600.0
 
 
 def _sketch_delta(batch, col: str) -> dict:
@@ -467,7 +455,7 @@ class IceTable:
         spec 'equality delete files'): each carries its key column, the
         parquet file of deleted key values, and the sequence number it
         committed at. A delete applies to data files with a STRICTLY
-        SMALLER seq — a row re-inserted by a later upsert survives,
+        SMALLER seq — a row re-inserted by a later append survives,
         exactly the Iceberg sequence-number rule."""
         sid = snapshot_id if snapshot_id is not None else self.current_snapshot_id()
         if sid is None:
@@ -569,9 +557,9 @@ class IceTable:
 
         With live merge-on-read deletes, footer counts are an UPPER
         BOUND on live rows (deleted keys still sit in data files until
-        apply_deletes/compact folds them) — reported via
-        ``mor_pending``; callers needing the exact live count under
-        pending deletes must scan or fold first."""
+        an overwrite retires them) — reported via ``mor_pending``;
+        callers needing the exact live count under pending deletes must
+        scan."""
         files = self.files()
         n_rows = sum(f["rows"] for f in files)
         mor_pending = bool(self.delete_entries())
@@ -599,13 +587,11 @@ class IceTable:
     def _lineage(self) -> tuple[list[dict], bool]:
         """The snapshot entries whose deltas make up the CURRENT state,
         newest first — the walk both metadata-only stat folds share.
-        Follows parent pointers; a rollback entry redirects the walk to
-        its target; a compaction (data-identical rewrite) is
-        transparent, neither a reset point nor a gap; an 'overwrite' is
-        the reset point (its delta IS the table state, the walk stops
-        there). Returns (chain, intact): ``intact`` is False when the
-        walk reached a snapshot expire_snapshots dropped — its deltas
-        are unrecoverable from metadata, so any fold is PARTIAL."""
+        Follows parent pointers; an 'overwrite' is the reset point (its
+        delta IS the table state, the walk stops there). Returns (chain,
+        intact): ``intact`` is False when the walk reached a snapshot
+        expire_snapshots dropped — its deltas are unrecoverable from
+        metadata, so any fold is PARTIAL."""
         meta = self._metadata()
         by_id = {s["id"]: s for s in meta["snapshots"]}
         sid = meta["current_snapshot_id"]
@@ -614,14 +600,9 @@ class IceTable:
             s = by_id.get(sid)
             if s is None:
                 return chain, False
-            op = str(s.get("operation", ""))
-            if op.startswith("rollback-to-"):
-                sid = int(op[len("rollback-to-") :])
-                continue
-            if not (s.get("summary") or {}).get("compaction"):
-                chain.append(s)
-                if op == "overwrite":
-                    break
+            chain.append(s)
+            if s.get("operation") == "overwrite":
+                break
             sid = s.get("parent")
         return chain, True
 
@@ -662,7 +643,7 @@ class IceTable:
         or/union; HLL registers: max). ``complete`` is False when any
         row-adding OR row-removing snapshot in the chain carries no
         sketch entry for the column — none of the three sketches
-        supports deletion, so a delete/upsert always flips the flag.
+        supports deletion, so a delete always flips the flag.
         Metadata-only: never touches data files.
 
         Returns {"cms": {(d, bucket): n}, "bloom": set[int],
@@ -688,20 +669,6 @@ class IceTable:
             elif int(s.get("added_rows", 0)) > 0:
                 complete = False  # this snapshot's rows are not folded
         return {"cms": cms, "bloom": bloom, "hll": hll, "complete": complete}
-
-    def rollback(self, snapshot_id: int) -> int:
-        """Commit a new snapshot whose state is a historical one (time
-        travel as a WRITE — the audit trail keeps going forward)."""
-        meta = self._metadata()
-        if snapshot_id not in {s["id"] for s in meta["snapshots"]}:
-            raise KeyError(snapshot_id)
-        return self._publish(
-            f"rollback-to-{snapshot_id}",
-            [],
-            self._manifest(snapshot_id),
-            meta["current_snapshot_id"],
-            {},
-        )
 
     # ------------------------------------------------------ row-level writes
 
@@ -736,32 +703,6 @@ class IceTable:
             return [], list(files)
         return self._split(files, {key_col: (b["lo"], b["hi"])})
 
-    def _rewrite(
-        self,
-        spark: SparkSession,
-        base_sid: int | None,
-        touched: list[dict],
-        survivors,
-        stats_cols: list[str] | None,
-        op: str,
-    ) -> tuple[int, str, list[dict]]:
-        """The copy-on-write rewrite: read ``touched`` with the live
-        eq-deletes of ``base_sid`` applied, keep ``survivors(frame)``
-        and write it as new files. No broadcast hint: AQE picks
-        broadcast vs shuffle from the key set's actual size (a polygon
-        delete or a large upsert batch can match millions of keys;
-        forcing a broadcast would be the 100 TB failure mode). Returns
-        (live rows read, data dir, new files) — with live deletes the
-        raw footer counts include rows already logically deleted, so
-        the live base is counted instead, keeping reports exact."""
-        dels = self.delete_entries(base_sid)
-        base = self._read_with_deletes(spark, touched, dels, self._schemas())
-        n_before = base.count() if dels else sum(f["rows"] for f in touched)
-        data_dir, new_files = self._write(
-            survivors(base), _inherit_stats_cols(stats_cols, touched), op
-        )
-        return n_before, data_dir, new_files
-
     def _cow_delete(
         self,
         spark: SparkSession,
@@ -769,11 +710,15 @@ class IceTable:
         touched: list[dict],
         untouched: list[dict],
         survivors,
-        stats_cols: list[str] | None,
     ) -> tuple[int, dict]:
-        """Shared tail of delete_where and delete_keys(mode='cow'):
-        rewrite ``touched``, carry ``untouched`` as is, and commit one
-        'delete' snapshot — or nothing when no row goes."""
+        """Shared tail of delete_where and delete_keys(mode='cow'): read
+        ``touched`` with the live eq-deletes of ``base_sid`` applied,
+        write ``survivors(frame)`` as new files with the stats columns
+        the rewritten files carried, carry ``untouched`` as is, and
+        commit one 'delete' snapshot — or nothing when no row goes. No
+        broadcast hint: AQE picks broadcast vs shuffle from the key
+        set's actual size (a polygon delete can match millions of keys;
+        forcing a broadcast would be the 100 TB failure mode)."""
         report = {
             "files_total": len(touched) + len(untouched),
             "files_rewritten": len(touched),
@@ -781,9 +726,13 @@ class IceTable:
         }
         deleted = 0
         if touched:
-            n_before, data_dir, new_files = self._rewrite(
-                spark, base_sid, touched, survivors, stats_cols, "d"
-            )
+            dels = self.delete_entries(base_sid)
+            base = self._read_with_deletes(spark, touched, dels, self._schemas())
+            # with live deletes the raw footer counts include rows
+            # already logically deleted: count the live base instead
+            n_before = base.count() if dels else sum(f["rows"] for f in touched)
+            stats_cols = sorted({c for f in touched for c in f["stats"]}) or None
+            data_dir, new_files = self._write(survivors(base), stats_cols, "d")
             deleted = n_before - sum(x["rows"] for x in new_files)
             if deleted == 0:
                 shutil.rmtree(data_dir)  # no empty delete snapshots
@@ -794,7 +743,7 @@ class IceTable:
                 self._publish(
                     "delete",
                     new_files,
-                    untouched + new_files + self.delete_entries(base_sid),
+                    untouched + new_files + dels,
                     base_sid,
                     {"deleted_rows": int(deleted), **report},
                 )
@@ -806,7 +755,6 @@ class IceTable:
         spark: SparkSession,
         ranges: dict[str, tuple] | None = None,
         predicate: str | None = None,
-        stats_cols: list[str] | None = None,
     ) -> tuple[int, dict]:
         """Row-level DELETE, copy-on-write (Iceberg v1 semantics; the
         reference's row deletion rides the KV store's delete-by-row-id —
@@ -845,14 +793,13 @@ class IceTable:
         keep = ~F.coalesce(cond, F.lit(False))
         touched, untouched = self._split(files, ranges)
         return self._cow_delete(
-            spark, base_sid, touched, untouched, lambda b: b.where(keep), stats_cols
+            spark, base_sid, touched, untouched, lambda b: b.where(keep)
         )
 
     def delete_keys(
         self,
         keys_df: DataFrame,
         key_col: str,
-        stats_cols: list[str] | None = None,
         mode: str = "cow",
     ) -> tuple[int, dict]:
         """Row-level DELETE by an arbitrary matched-key set, in ONE
@@ -873,10 +820,9 @@ class IceTable:
         ``mode='mor'`` (merge-on-read, Iceberg v2 equality deletes):
         the key set is WRITTEN as a delete file and no data file is
         touched — the delete costs O(keys), not O(overlapping files),
-        and readers anti-join it until apply_deletes()/compact() folds
-        it in. At 100 TB this is the difference between a delete that
-        rewrites terabytes synchronously and one that commits in
-        seconds with the rewrite deferred to maintenance. Write
+        and readers anti-join it until an overwrite retires it. At
+        100 TB this is the difference between a delete that rewrites
+        terabytes synchronously and one that commits in seconds. Write
         amplification moves to the read path; the seq-number rule
         keeps later re-inserts of the same key alive.
 
@@ -895,7 +841,6 @@ class IceTable:
                 touched,
                 untouched,
                 lambda b: b.join(keys, key_col, "leftanti"),
-                stats_cols,
             )
 
     def _delete_keys_mor(
@@ -910,8 +855,7 @@ class IceTable:
         backend's delete markers). One count job against the
         stat-overlapping live files reports how many rows the delete
         actually hits (also what flips the metadata-stat completeness
-        guards); the key file itself carries footer stats on the key
-        column so apply_deletes can prune which data files to rewrite."""
+        guards)."""
         base_sid = self.current_snapshot_id()
         files = self.files(base_sid)
         if not files:
@@ -949,232 +893,50 @@ class IceTable:
         report["deleted_rows"] = int(deleted)
         return int(deleted), report
 
-    def apply_deletes(
-        self, spark: SparkSession, stats_cols: list[str] | None = None
-    ) -> tuple[int, dict]:
-        """Fold live equality-delete files into the data (minor
-        compaction — Iceberg's rewrite_data_files with
-        delete-file-threshold): rewrite ONLY the data files some delete
-        can hit (key-stat overlap AND seq < the delete's seq), carry
-        every other file untouched, and drop the delete entries from
-        the manifest. The deferred write amplification of mode='mor'
-        deletes is paid here, off the query path, file-pruned. No-op
-        returning (0, report) when no deletes are live. Returns
-        (folded_rows, report)."""
-        base_sid = self.current_snapshot_id()
-        dels = self.delete_entries(base_sid)
-        files = self.files(base_sid)
-        report = {"files_total": len(files), "delete_files": len(dels)}
-        if not dels:
-            report.update(files_rewritten=0, folded_rows=0)
-            return 0, report
-
-        def may_hit(fi: dict) -> bool:
-            for d in dels:
-                if int(d["seq"]) <= int(fi.get("seq", 0)):
-                    continue
-                st = fi["stats"].get(d["key_col"])
-                dst = d["stats"].get(d["key_col"])
-                if st is None or dst is None:
-                    return True  # no stats -> must assume a hit
-                if not (st[0] > dst[1] or st[1] < dst[0]):
-                    return True
-            return False
-
-        touched, untouched = [], []
-        for fi in files:
-            (touched if may_hit(fi) else untouched).append(fi)
-        report["files_rewritten"] = len(touched)
-        new_files: list[dict] = []
-        if touched:
-            _, new_files = self._write(
-                self._read_with_deletes(spark, touched, dels, self._schemas()),
-                _inherit_stats_cols(stats_cols, touched),
-                "a",
-            )
-        # raw footer rows in minus rows out: the rows the deletes removed
-        folded = sum(f["rows"] for f in touched) - sum(x["rows"] for x in new_files)
-        self._publish(
-            "rewrite-deletes",
-            new_files,
-            untouched + new_files,
-            base_sid,
-            # data-identical to the parent's LOGICAL state: the
-            # occupancy/sketch folds treat it like a compaction
-            {"compaction": True, "folded_rows": int(folded)},
-        )
-        report["folded_rows"] = int(folded)
-        return int(folded), report
-
-    def upsert(
-        self,
-        df: DataFrame,
-        key_col: str,
-        stats_cols: list[str] | None = None,
-    ) -> tuple[int, dict]:
-        """MERGE INTO semantics in ONE atomic snapshot: rows of ``df``
-        replace existing rows with the same ``key_col`` value; new keys
-        append. The reference's ingest has exactly this contract — a
-        re-written data id replaces the stored entry
-        (core/store/.../base/BaseDataStore write path, dataId identity).
-
-        Copy-on-write like delete_where: the incoming batch's
-        [min, max] key range prunes the manifest, so only files whose
-        key stats overlap the batch are anti-joined and rewritten;
-        everything else carries forward untouched. Rewrite + append
-        publish as a SINGLE snapshot — a reader never observes the
-        deleted-but-not-yet-reinserted intermediate state.
-
-        Returns (replaced_rows, report)."""
-        base_sid = self.current_snapshot_id()
-        files = self.files(base_sid)
-        with _distinct_keys(df, key_col) as keys:
-            touched, untouched = self._key_split(files, keys, key_col)
-            stats_cols = _inherit_stats_cols(stats_cols, touched)
-            replaced, new_files = 0, []
-            if touched:
-                n_before, _, new_files = self._rewrite(
-                    df.sparkSession,
-                    base_sid,
-                    touched,
-                    lambda b: b.join(keys, key_col, "leftanti"),
-                    stats_cols,
-                    "u",
-                )
-                replaced = n_before - sum(x["rows"] for x in new_files)
-            _, batch_files = self._write(df, stats_cols, "u")
-        report = {
-            "files_total": len(files),
-            "files_rewritten": len(touched),
-            "files_skipped": len(untouched),
-        }
-        # carried eq-deletes apply only to older-seq files; the fresh
-        # batch outranks them, so an upsert of a previously MoR-deleted
-        # key correctly resurrects it (Iceberg seq rule)
-        self._publish(
-            "upsert",
-            new_files + batch_files,
-            untouched + new_files + batch_files + self.delete_entries(base_sid),
-            base_sid,
-            {"replaced_rows": int(replaced), **report},
-        )
-        report["replaced_rows"] = int(replaced)
-        return int(replaced), report
-
     # -------------------------------------------------------- maintenance
 
-    def compact(
-        self,
-        spark: SparkSession,
-        sort_by: list[str] | None = None,
-        target_files: int | None = None,
-        stats_cols: list[str] | None = None,
-    ) -> int:
-        """Rewrite the current file set into ``target_files`` larger
-        files (Iceberg's rewrite_data_files): incremental appends (e.g.
-        one snapshot per checkpointed partition) accumulate small files
-        whose per-file stat ranges overlap; compaction bin-packs them
-        re-sorted by ``sort_by`` (the index key), restoring tight
-        manifest ranges so file pruning works again. Data is identical;
-        committed as a normal overwrite snapshot (old files stay
-        time-travelable until expire_snapshots)."""
-        files = self.files()
-        if not files:
-            raise ValueError("empty table")
-        if target_files is None:
-            total = sum(f["bytes"] for f in files)
-            target_files = max(1, -(-total // (128 << 20)))  # ~128 MiB each
-        df = self.read(spark)
-        if sort_by:
-            df = df.repartitionByRange(target_files, *sort_by).sortWithinPartitions(
-                *sort_by
-            )
-        else:
-            df = df.coalesce(target_files)
-        if stats_cols is None and sort_by:
-            stats_cols = sort_by
-        return self.commit_write(
-            df, mode="overwrite", stats_cols=stats_cols, summary={"compaction": True}
-        )
-
-    def expire_snapshots(self, keep_last: int = 1) -> dict:
-        """Drop history older than the last ``keep_last`` snapshots and
-        delete data files no retained snapshot references (Iceberg's
-        expire_snapshots). The current snapshot is always retained."""
+    def expire_snapshots(self) -> dict:
+        """Drop every snapshot but the current one and delete the data
+        files only they referenced (Iceberg's expire_snapshots), then
+        sweep orphaned data dirs (Iceberg's remove_orphan_files): a
+        writer that crashed between its parquet write and the publish
+        leaves a dir no manifest names, so the manifest walk never sees
+        it. A write's dir goes with its _SUCCESS marker and checksum
+        files once none of its files is live; an orphan goes once it is
+        ``ORPHAN_GRACE_S`` old, as a younger one may be an in-flight
+        write. Runs under the commit lock, so the live set is a
+        consistent snapshot of the log. Dirs match by name, so a table
+        opened through another spelling of its root keeps its files."""
         with self._commit_lock():
-            return self._expire_locked(keep_last)
-
-    def _expire_locked(self, keep_last: int) -> dict:
-        meta = self._metadata()
-        snaps = meta["snapshots"]
-        if len(snaps) <= keep_last:
-            return {"removed_snapshots": 0, "removed_files": 0}
-        keep = snaps[-keep_last:]
-        cur = meta["current_snapshot_id"]
-        if cur is not None and cur not in {s["id"] for s in keep}:
-            keep = [s for s in snaps if s["id"] == cur] + keep
-        live: set[str] = set()
-        for s in keep:
-            live.update(f["path"] for f in self._manifest(s["id"]))
-        live_dirs = {os.path.dirname(p) for p in live}
-        removed_files = 0
-        emptied: set[str] = set()
-        for s in snaps:
-            if s in keep:
-                continue
-            for f in self._manifest(s["id"]):
-                if f["path"] not in live and os.path.exists(f["path"]):
-                    os.remove(f["path"])
-                    removed_files += 1
-                    live.add(f["path"])  # count each orphan once
-                    emptied.add(os.path.dirname(f["path"]))
-            os.remove(os.path.join(self.meta_dir, f"manifest-{s['id']}.json"))
-        # a write's dir holds no live file once all of its files went:
-        # drop it with its _SUCCESS marker and checksum files
-        for d in emptied - live_dirs:
-            shutil.rmtree(d, ignore_errors=True)
-        removed = len(snaps) - len(keep)
-        meta["snapshots"] = keep
-        self._commit_metadata(meta)
-        return {"removed_snapshots": removed, "removed_files": removed_files}
-
-    def remove_orphans(self, older_than_s: float = 3600.0) -> dict:
-        """Delete data directories no retained snapshot references
-        (Iceberg's remove_orphan_files): a writer that crashed between
-        its parquet write and the metadata publish leaves an invisible
-        orphan dir that expire_snapshots never sees (it walks manifests;
-        an uncommitted dir is in none). Orphans are harmless to
-        correctness — commits are the only visibility point — but at
-        100 TB they are real storage; this is the maintenance sweep
-        that reclaims them.
-
-        ``older_than_s`` is the safety grace period (Iceberg's default
-        is 3 days): a dir younger than it may belong to an IN-FLIGHT
-        write whose commit hasn't published yet, so it is never
-        touched — the lock only guards metadata, data lands outside it.
-        Runs under the commit lock so the live-path set is a consistent
-        snapshot of the log."""
-        data_root = os.path.join(self.root, "data")
-        removed_dirs = 0
-        removed_bytes = 0
-        with self._commit_lock():
-            live_dirs: set[str] = set()
-            for s in self.snapshots():
+            meta = self._metadata()
+            snaps = meta["snapshots"]
+            live = {f["path"] for s in snaps[-1:] for f in self._manifest(s["id"])}
+            removed_files = 0
+            emptied: set[str] = set()
+            for s in snaps[:-1]:
                 for f in self._manifest(s["id"]):
-                    live_dirs.add(os.path.dirname(f["path"]))
-            now = time.time()
-            for name in sorted(os.listdir(data_root)) if os.path.isdir(data_root) else []:
+                    if f["path"] not in live and os.path.exists(f["path"]):
+                        os.remove(f["path"])
+                        removed_files += 1
+                        emptied.add(os.path.basename(os.path.dirname(f["path"])))
+                os.remove(os.path.join(self.meta_dir, f"manifest-{s['id']}.json"))
+            if len(snaps) > 1:
+                meta["snapshots"] = snaps[-1:]  # the current: commits append
+                self._commit_metadata(meta)
+            live_dirs = {os.path.basename(os.path.dirname(p)) for p in live}
+            data_root = os.path.join(self.root, "data")
+            old = time.time() - ORPHAN_GRACE_S
+            removed_dirs = 0
+            for name in os.listdir(data_root) if os.path.isdir(data_root) else []:
                 d = os.path.join(data_root, name)
-                if not os.path.isdir(d) or d in live_dirs:
-                    continue
-                if now - os.path.getmtime(d) < older_than_s:
-                    continue  # possibly an in-flight write: keep
-                removed_bytes += sum(
-                    os.path.getsize(os.path.join(d, fn)) for fn in os.listdir(d)
-                )
-                shutil.rmtree(d)
-                removed_dirs += 1
-        return {"removed_dirs": removed_dirs, "removed_bytes": removed_bytes}
+                if name not in live_dirs and (name in emptied or os.path.getmtime(d) < old):
+                    shutil.rmtree(d, ignore_errors=True)
+                    removed_dirs += 1
+        return {
+            "removed_snapshots": max(len(snaps) - 1, 0),
+            "removed_files": removed_files,
+            "removed_dirs": removed_dirs,
+        }
 
     # --------------------------------------------------------------- read
 
@@ -1190,7 +952,7 @@ class IceTable:
         seq s) removes rows whose K value appears in its key file from
         every data file with seq < s. Data files are grouped by seq —
         one group per writing snapshot, so the number of groups is
-        bounded by commits since the last compaction, not by file
+        bounded by commits since the last overwrite, not by file
         count — and each group is anti-joined against the union of the
         delete files that postdate it, one anti-join per key column.
         The anti-join's build side is the key set, small relative to
@@ -1266,13 +1028,11 @@ class IceTable:
         files, so a downstream incremental job consumes one commit's
         worth of data instead of rescanning the table — at 100 TB the
         difference between a changelog read and a full-table scan per
-        consumer cycle. Compaction snapshots (compact / apply_deletes)
-        are data-identical rewrites and are skipped; their rewritten
-        files are NOT appends. Any row-level CHANGE in the range —
-        overwrite, delete, upsert, rollback — cannot be expressed as an
-        append-only changelog, so the scan raises ValueError (exactly
-        Iceberg's behavior for non-append snapshots in an incremental
-        read). Rows come back AS WRITTEN by their snapshot.
+        consumer cycle. Any row-level CHANGE in the range — overwrite or
+        delete — cannot be expressed as an append-only changelog, so
+        the scan raises ValueError (exactly Iceberg's behavior for
+        non-append snapshots in an incremental read). Rows come back AS
+        WRITTEN by their snapshot.
 
         Returns (df, report) with report = {"snapshots": [ids read],
         "files": n}. ``from_snapshot_id`` must be a live ancestor of
@@ -1310,9 +1070,7 @@ class IceTable:
         added: list[dict] = []
         snaps_read: list[int] = []
         for s in reversed(chain):  # oldest → newest, changelog order
-            if (s.get("summary") or {}).get("compaction"):
-                continue  # data-identical rewrite: not an append
-            op = str(s.get("operation", ""))
+            op = s.get("operation")
             if op != "append":
                 raise ValueError(
                     f"snapshot {s['id']} is {op!r}: the range "

@@ -1,8 +1,8 @@
 """Reference implementations the tests compare the engine against: the
 inverse curve maps, the cell ancestry rule, image fidelity, a
-brute-force geometry-pair refine, the DuckDB text of the time bins and
-on-demand field sketches. They check the engine; the engine never
-calls them."""
+brute-force geometry-pair refine, the DuckDB text of the time bins,
+on-demand field sketches and the visibility-expression renderer. They
+check the engine; the engine never calls them."""
 
 from __future__ import annotations
 
@@ -179,3 +179,29 @@ def field_sketches(
     as the sketches an IceTable commit maintains."""
     cms_table, positions = sketch_bucket_rows(df, col, width, depth, m, k)
     return CountMinSketch(width, depth, cms_table), BloomFilter(m, k, positions)
+
+
+# ------------------------------------------------------------ visibility
+
+
+def unparse_visibility(node) -> str:
+    """Render a plans/visibility AST as expression text. Operator
+    children are ALWAYS parenthesized (OperatorNode.buildExpression:
+    168-186 wraps any OperatorNode child in parens): without this,
+    Or(a, And(b, c)) would print as ``a|b&c``, which the
+    equal-precedence left-associative grammar re-parses as ``(a|b)&c``,
+    different semantics. The parens make render→parse an exact round
+    trip."""
+    from geowave_spark.plans.visibility import _And, _Or, _Value
+
+    if isinstance(node, _Value):
+        return node.token
+    if not isinstance(node, (_And, _Or)):
+        return ""  # _NoAuth: the empty expression
+
+    def child(n) -> str:
+        text = unparse_visibility(n)
+        return f"({text})" if isinstance(n, (_And, _Or)) else text
+
+    op = "&" if isinstance(node, _And) else "|"
+    return f"{child(node.left)}{op}{child(node.right)}"

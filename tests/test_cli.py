@@ -298,6 +298,45 @@ def test_query_delete_failed_publish_keeps_the_pre_delete_rows(
     assert _stored_ids(store) == list(range(5, 20))
 
 
+def test_write_crashed_before_publish_is_reclaimed_by_the_next_write(
+    spark, tmp_path, monkeypatch
+):
+    """A CLI write that crashes at the version-hint swap leaves a data
+    dir no snapshot names. The next write on the type reclaims it once
+    it is older than the grace period, keeps a younger one (it may be
+    an in-flight write), and the type reads its rows."""
+    import time
+
+    from geowave_spark.sources import icetable
+
+    store = _tiny_store(spark, str(tmp_path))
+    data = os.path.join(store, "pts", "data")
+    real_replace = icetable.os.replace
+
+    def crash(src, dst, *a, **kw):
+        if os.path.basename(dst) == "version-hint.text":
+            raise OSError("simulated crash before publish")
+        return real_replace(src, dst, *a, **kw)
+
+    orphans = []
+    for _ in range(2):
+        before = set(os.listdir(data))
+        monkeypatch.setattr(icetable.os, "replace", crash)
+        with pytest.raises(OSError, match="simulated crash"):
+            run(["query", store, "DELETE FROM pts WHERE eventid < 5"])
+        monkeypatch.undo()
+        (new,) = set(os.listdir(data)) - before
+        orphans.append(os.path.join(data, new))
+    aged, young = orphans
+    old = time.time() - 2 * icetable.ORPHAN_GRACE_S
+    os.utime(aged, (old, old))
+
+    rc, out = run(["query", store, "DELETE FROM pts WHERE eventid >= 15"])
+    assert rc == 0 and "deleted 5 rows from 'pts'" in out
+    assert not os.path.exists(aged) and os.path.isdir(young)
+    assert _stored_ids(store) == list(range(15))
+
+
 def test_query_result_streams_in_blocks(spark, tmp_path, monkeypatch):
     """`query` prints its result block by block through toLocalIterator;
     a toPandas of the whole result would hold all of it on the driver."""

@@ -1,23 +1,25 @@
 """Every top-level function, class and module constant under
-geowave_spark/ is reached from a non-test entry point.
+geowave_spark/, and every method of a class so reached, is reached from
+a non-test entry point.
 
 AST only, no Spark. Roots are the driver entry (``__spark_entry__.py``),
 ``bench.py``, ``tools/``, ``geobench/``, the CLI (``geowave_spark/cli.py``)
-and the ``DataStore`` class. A definition is reached when a root, or a
-reached definition, names it: an ``ast.Name`` or an ``ast.Attribute``
-with its name. Strings do not count, so neither a docstring nor an
-``__all__`` entry keeps code alive, and neither does an import alone;
-the one exception is a root's module-level string that holds a script
-(``tools/scaling_bench.py`` runs its ``WORKER`` with ``python -c``).
+and ``DataStore`` with its public methods (the user API). A definition
+is reached when a root, or a reached definition, names it: an
+``ast.Name`` or an ``ast.Attribute`` with its name. A method is reached
+when its class is reached and its name is so named, whatever the
+receiver; a dunder method comes with its class. Strings do not count,
+so neither a docstring nor an ``__all__`` entry keeps code alive, and
+neither does an import alone; the one exception is a root's
+module-level string that holds a script (``tools/scaling_bench.py``
+runs its ``WORKER`` with ``python -c``).
 Names are matched without their module, which can only over-count
 reach. Module-level statements that are not definitions (they run on
 import) count as roots of their module.
 
 Engine code that only tests reach is deleted together with the tests
 that check only it, or its reference implementation moves to tests/.
-``KEEP`` lists the exceptions, each with its reason. Methods are not
-checked: a reached class keeps all of its methods (IceTable's
-maintenance writers, DataStore's public API).
+``KEEP`` lists the exceptions, each with its reason.
 """
 
 from __future__ import annotations
@@ -51,14 +53,33 @@ def _refs(node: ast.AST) -> set[str]:
     return out
 
 
+def _class_graph(cls: ast.ClassDef):
+    """(refs of the class outside its methods, {method: refs})."""
+    outside = set()
+    for n in cls.bases + cls.keywords + cls.decorator_list:
+        outside |= _refs(n)
+    methods = {}
+    for stmt in cls.body:
+        if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            methods[stmt.name] = _refs(stmt)
+        else:
+            outside |= _refs(stmt)
+    return outside, methods
+
+
 def _engine_graph():
-    """({(module, name): refs}, refs of module-level statements)."""
+    """({(module, name): refs}, refs of module-level statements). A
+    method is keyed by ``Class.method``."""
     defs: dict[tuple[str, str], set[str]] = {}
     on_import: set[str] = set()
     for path in _py_files(ENGINE):
         rel = path.relative_to(ENGINE).as_posix()
         for stmt in ast.parse(path.read_text()).body:
-            if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            if isinstance(stmt, ast.ClassDef):
+                defs[(rel, stmt.name)], methods = _class_graph(stmt)
+                for name, refs in methods.items():
+                    defs[(rel, f"{stmt.name}.{name}")] = refs
+            elif isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef)):
                 defs[(rel, stmt.name)] = _refs(stmt)
             elif isinstance(stmt, (ast.Assign, ast.AnnAssign)):
                 targets = stmt.targets if isinstance(stmt, ast.Assign) else [stmt.target]
@@ -74,7 +95,7 @@ def _engine_graph():
     return defs, on_import
 
 
-def _root_refs(defs) -> set[str]:
+def _root_refs() -> set[str]:
     files = [ROOT / "__spark_entry__.py", ROOT / "bench.py", ENGINE / "cli.py"]
     files += _py_files(ROOT / "tools") + _py_files(ROOT / "geobench")
     out = set()
@@ -88,26 +109,31 @@ def _root_refs(defs) -> set[str]:
                     out |= _refs(ast.parse(stmt.value.value))
                 except SyntaxError:
                     pass
-    return out | defs[("api.py", "DataStore")]
+    return out
+
+
+def _named(key: tuple[str, str], names: set[str], reached) -> bool:
+    cls, _, method = key[1].rpartition(".")
+    if not cls:
+        return method in names
+    dunder = method.startswith("__") and method.endswith("__")
+    return (key[0], cls) in reached and (dunder or method in names)
 
 
 def _unreached() -> list[tuple[str, str]]:
     defs, on_import = _engine_graph()
-    by_name: dict[str, list[tuple[str, str]]] = {}
-    for key in defs:
-        by_name.setdefault(key[1], []).append(key)
-    reached: set[tuple[str, str]] = {("api.py", "DataStore")}
-    frontier = _root_refs(defs) | on_import
-    seen: set[str] = set()
-    while frontier:
-        name = frontier.pop()
-        if name in seen:
-            continue
-        seen.add(name)
-        for key in by_name.get(name, ()):
-            if key not in reached:
-                reached.add(key)
-                frontier |= defs[key] - seen
+    reached = {("api.py", "DataStore")} | {
+        k for k in defs
+        if k[0] == "api.py" and k[1].startswith("DataStore.")
+        and not k[1].startswith("DataStore._")
+    }
+    names = _root_refs() | on_import
+    new = reached
+    while new:
+        for k in new:
+            names |= defs[k]
+        new = {k for k in defs if k not in reached and _named(k, names, reached)}
+        reached |= new
     return sorted(k for k in defs if k not in reached)
 
 

@@ -1,6 +1,6 @@
 """Snapshot-table (Iceberg-style format) contract tests: atomic
-commits, snapshot isolation / time travel, rollback, and manifest
-file pruning."""
+commits, snapshot isolation / time travel, row-level deletes, expiry
+and manifest file pruning."""
 
 from __future__ import annotations
 
@@ -34,17 +34,6 @@ def test_append_overwrite_time_travel(spark, tmp_path):
     hist = t.snapshots()
     assert [s["id"] for s in hist] == [s1, s2, s3]
     assert hist[1]["parent"] == s1
-
-
-def test_rollback(spark, tmp_path):
-    t = IceTable(str(tmp_path / "t2"))
-    s1 = t.commit_write(_mk(spark, 0, 50), mode="overwrite")
-    t.commit_write(_mk(spark, 50, 60), mode="overwrite")
-    s3 = t.rollback(s1)
-    assert t.current_snapshot_id() == s3
-    assert t.read(spark).count() == 50
-    # rollback is a forward-moving commit, not history rewrite
-    assert len(t.snapshots()) == 3
 
 
 def test_manifest_file_pruning(spark, tmp_path):
@@ -157,6 +146,9 @@ def test_ice_stage_store_resume_and_atomicity(spark, tmp_path):
 
 
 def test_compact_and_expire(spark, tmp_path):
+    """Compacting is an overwrite of the table's rows re-sorted into
+    fewer files: pruning works again, and expiry then drops the
+    superseded small files."""
     t = IceTable(str(tmp_path / "t6"))
     # many small appends with interleaved key ranges -> overlapping stats
     for i in range(6):
@@ -172,7 +164,11 @@ def test_compact_and_expire(spark, tmp_path):
     assert rep0["files_read"] == 6
     expected = sorted(r.id for r in t.read(spark).collect())
 
-    sid = t.compact(spark, sort_by=["id"], target_files=3)
+    sid = t.commit_write(
+        t.read(spark).repartitionByRange(3, "id").sortWithinPartitions("id"),
+        mode="overwrite",
+        stats_cols=["id"],
+    )
     assert t.current_snapshot_id() == sid
     after = t.files()
     assert len(after) == 3
@@ -185,7 +181,7 @@ def test_compact_and_expire(spark, tmp_path):
     # expiry drops history + unreferenced files but keeps the current state
     n_snapshots = len(t.snapshots())
     assert n_snapshots == 7
-    res = t.expire_snapshots(keep_last=1)
+    res = t.expire_snapshots()
     assert res["removed_snapshots"] == 6 and res["removed_files"] == 12
     assert len(t.snapshots()) == 1
     assert sorted(r.id for r in t.read(spark).collect()) == expected
@@ -208,7 +204,7 @@ def test_expire_drops_emptied_data_dirs_and_keeps_properties(spark, tmp_path):
     live_dirs = {os.path.dirname(f["path"]) for f in t.files()}
     assert {os.path.dirname(f["path"]) for f in t.files(kept)} < live_dirs
 
-    t.expire_snapshots(keep_last=1)
+    t.expire_snapshots()
     data = str(tmp_path / "ex" / "data")
     assert {os.path.join(data, d) for d in os.listdir(data)} == live_dirs
     assert t.properties() == {"format": "x"}
@@ -383,8 +379,8 @@ def test_ice_stage_store_resumes_pre_added_paths_format(spark, tmp_path):
 def test_incremental_stats_match_on_demand(spark, tmp_path):
     """Write-path statistics (round-4): occupancy deltas + footer
     min/max folded from metadata must equal an on-demand scan after a
-    multi-snapshot append sequence, stay consistent through rollback,
-    and reset on overwrite."""
+    multi-snapshot append sequence, follow a delete (the footer stats)
+    or flag it (the occupancy fold), and reset on overwrite."""
     from geowave_spark.index.native import grid_coord_col
     from geowave_spark.sources.icetable import IceTable
 
@@ -401,15 +397,12 @@ def test_incremental_stats_match_on_demand(spark, tmp_path):
             )
         )
 
-    sids = []
     for lo, hi in [(0, 400), (400, 900), (900, 1200)]:
-        sids.append(
-            t.commit_write(
-                pts(lo, hi),
-                mode="append",
-                stats_cols=["x_u", "y_u"],
-                occupancy=(res, "x_u", "y_u"),
-            )
+        t.commit_write(
+            pts(lo, hi),
+            mode="append",
+            stats_cols=["x_u", "y_u"],
+            occupancy=(res, "x_u", "y_u"),
         )
 
     def on_demand(df):
@@ -435,11 +428,14 @@ def test_incremental_stats_match_on_demand(spark, tmp_path):
     assert cs["cols"]["x_u"] == [row[1], row[2]]
     assert cs["cols"]["y_u"] == [row[3], row[4]]
 
-    # rollback to the 2-append state: stats follow the redirected chain
-    t.rollback(sids[1])
-    occ2 = t.merged_occupancy()
-    assert occ2["cells"] == on_demand(pts(0, 900))
-    assert t.merged_column_stats(["x_u"])["n_rows"] == 900
+    # a delete: the footer stats follow the rewrite, the occupancy
+    # deltas cannot subtract, so the fold says it is partial
+    deleted, _ = t.delete_where(spark, ranges={"x_u": (None, -175_000_000)})
+    assert 0 < deleted < 1200
+    cs2 = t.merged_column_stats(["x_u"])
+    assert cs2["n_rows"] == 1200 - deleted
+    assert cs2["cols"]["x_u"][0] > -175_000_000
+    assert t.merged_occupancy()["complete"] is False
 
     # overwrite resets: stats reflect ONLY the overwrite batch
     t.commit_write(
@@ -627,29 +623,6 @@ def test_stats_store_resumes_partial_build(spark, tmp_path, monkeypatch):
     assert sum(occ["cells"].values()) == n_events
 
 
-def test_occupancy_survives_compaction(spark, tmp_path):
-    """compact() is a data-identical rewrite: the occupancy fold walks
-    through it to the pre-compaction chain (neither a reset point nor an
-    incompleteness gap)."""
-    from geowave_spark.sources.icetable import IceTable
-
-    def pts(lo, hi):
-        return spark.range(lo, hi).select(
-            F.col("id").cast("string").alias("pid"),
-            ((F.col("id") * 7919) % 360_000_000 - 180_000_000).alias("x_u"),
-            ((F.col("id") * 104729) % 360_000_000 - 180_000_000).alias("y_u"),
-        )
-
-    t = IceTable(str(tmp_path / "t"))
-    t.commit_write(pts(0, 150), mode="append", occupancy=(4, "x_u", "y_u"))
-    t.commit_write(pts(150, 400), mode="append", occupancy=(4, "x_u", "y_u"))
-    before = t.merged_occupancy()
-    t.compact(spark, sort_by=["x_u"])
-    after = t.merged_occupancy()
-    assert after == before and after["complete"] is True
-    assert sum(after["cells"].values()) == 400
-
-
 def test_delete_where_copy_on_write(spark, tmp_path):
     """Row-level DELETE: only overlapping files rewritten, untouched
     files carried into the new manifest byte-identical; old snapshot
@@ -720,85 +693,11 @@ def test_delete_where_detects_concurrent_commit(spark, tmp_path, monkeypatch):
     assert t.read(spark).count() == 110
 
 
-def test_delete_then_rollback_restores(spark, tmp_path):
-    t = IceTable(str(tmp_path / "del5"))
-    s1 = t.commit_write(_mk(spark, 0, 100), mode="overwrite", stats_cols=["id"])
-    t.delete_where(spark, ranges={"id": (0, 49)})
-    assert t.read(spark).count() == 50
-    t.rollback(s1)
-    assert t.read(spark).count() == 100
-
-
-def test_upsert_single_atomic_snapshot(spark, tmp_path):
-    """MERGE: same-key rows replaced, new keys appended, ONE snapshot,
-    file skipping on the batch's key range."""
-    t = IceTable(str(tmp_path / "up1"))
-    base = (
-        spark.range(0, 400)
-        .select(F.col("id"), (F.col("id") * 2).alias("val"))
-        .repartitionByRange(4, "id")
-        .sortWithinPartitions("id")
-    )
-    s1 = t.commit_write(base, mode="overwrite", stats_cols=["id"])
-    # batch: keys 90-109 straddle two of the four range files; the
-    # other two files fall outside [90, 109] and must not rewrite
-    batch = spark.createDataFrame(
-        [(i, i * 1000) for i in range(90, 110)] + [(405, 405000)],
-        "id LONG, val LONG",
-    )
-    replaced, rep = t.upsert(batch, "id")
-    assert replaced == 20
-    assert len(t.snapshots()) == 2  # one atomic snapshot
-    assert t.snapshots()[-1]["operation"] == "upsert"
-    got = t.read(spark)
-    assert got.count() == 401
-    assert got.where("id = 95").first()["val"] == 95000  # replaced
-    assert got.where("id = 10").first()["val"] == 20     # untouched
-    assert got.where("id = 405").first()["val"] == 405000  # appended
-    assert got.select("id").distinct().count() == 401
-    # pre-upsert snapshot time-travels
-    assert t.read(spark, snapshot_id=s1).where("id = 95").first()["val"] == 190
-    # second upsert with a TIGHT key range: only the one overlapping
-    # range file rewrites, the rest skip via manifest key stats
-    replaced2, rep2 = t.upsert(
-        spark.createDataFrame([(250, 9)], "id LONG, val LONG"), "id"
-    )
-    assert replaced2 == 1 and rep2["files_skipped"] > 0
-
-
-def test_upsert_all_new_keys_appends(spark, tmp_path):
-    t = IceTable(str(tmp_path / "up2"))
-    t.commit_write(_mk(spark, 0, 100), mode="overwrite", stats_cols=["id"])
-    batch = spark.createDataFrame([(500, 1)], "id LONG, val LONG")
-    replaced, rep = t.upsert(batch, "id")
-    assert replaced == 0
-    assert rep["files_skipped"] == rep["files_total"]  # disjoint key range
-    assert t.read(spark).count() == 101
-
-
-def test_upsert_detects_concurrent_commit(spark, tmp_path, monkeypatch):
-    import pytest
-
-    t = IceTable(str(tmp_path / "up3"))
-    t.commit_write(_mk(spark, 0, 100), mode="overwrite", stats_cols=["id"])
-    orig_lock = t._commit_lock
-
-    def racing_lock(*a, **kw):
-        monkeypatch.setattr(t, "_commit_lock", orig_lock)
-        t.commit_write(_mk(spark, 100, 105), mode="append", stats_cols=["id"])
-        return orig_lock(*a, **kw)
-
-    monkeypatch.setattr(t, "_commit_lock", racing_lock)
-    with pytest.raises(RuntimeError, match="concurrent commit"):
-        t.upsert(spark.createDataFrame([(5, 9)], "id LONG, val LONG"), "id")
-    assert t.read(spark).count() == 105
-
-
 def test_occupancy_fold_incomplete_after_empty_file_delete(spark, tmp_path):
     """A delete snapshot whose rewritten files keep 0 rows has
     added_rows == 0, yet the removed rows are still counted in the
     ancestor occupancy deltas — merged_occupancy must flip
-    complete=False for ANY delete/upsert in the chain, never report an
+    complete=False for ANY delete in the chain, never report an
     overcount as complete."""
     from geowave_spark.sources.icetable import IceTable
 
@@ -834,8 +733,8 @@ def test_occupancy_fold_incomplete_after_empty_file_delete(spark, tmp_path):
 def test_commit_maintained_sketches_match_on_demand(spark, tmp_path):
     """Field sketches folded from snapshot metadata must equal the
     on-demand computation (tests/oracles.field_sketches) over the live
-    table — after a multi-snapshot append sequence AND after a
-    rollback redirects the fold."""
+    table after a multi-snapshot append sequence; a delete flags the
+    fold partial and an overwrite resets it."""
     from oracles import field_sketches
     from geowave_spark.sources.icetable import (
         BF_K,
@@ -851,11 +750,8 @@ def test_commit_maintained_sketches_match_on_demand(spark, tmp_path):
         )
 
     t = IceTable(str(tmp_path / "t"))
-    sids = []
     for lo, hi in [(0, 400), (400, 700), (700, 1000)]:
-        sids.append(
-            t.commit_write(batch(lo, hi), mode="append", sketch_cols=["uid"])
-        )
+        t.commit_write(batch(lo, hi), mode="append", sketch_cols=["uid"])
 
     def on_demand(df):
         cms, bf = field_sketches(
@@ -881,16 +777,16 @@ def test_commit_maintained_sketches_match_on_demand(spark, tmp_path):
         regs[r] = max(regs.get(r, 0), rho)
     assert m["hll"] == regs
 
-    # rollback to the 2-append state: the fold follows the redirect
-    t.rollback(sids[1])
-    m2 = t.merged_field_sketches("uid")
-    exp_cms2, exp_bits2 = on_demand(batch(0, 700))
-    assert m2["complete"] is True
-    assert m2["cms"] == exp_cms2 and m2["bloom"] == exp_bits2
-
     # a delete makes the fold incomplete (sketches cannot subtract)
     t.delete_where(spark, predicate="rid < 100")
     assert t.merged_field_sketches("uid")["complete"] is False
+
+    # an overwrite is the reset point: the fold is its batch alone
+    t.commit_write(batch(200, 700), mode="overwrite", sketch_cols=["uid"])
+    m2 = t.merged_field_sketches("uid")
+    exp_cms2, exp_bits2 = on_demand(batch(200, 700))
+    assert m2["complete"] is True
+    assert m2["cms"] == exp_cms2 and m2["bloom"] == exp_bits2
 
 
 def test_delete_keys_copy_on_write(spark, tmp_path):
@@ -995,10 +891,6 @@ def test_sketch_columns_tolerate_nulls(spark, tmp_path):
 # ----------------------------------------- crash between write and publish
 
 
-def _batch(spark, rows):
-    return spark.createDataFrame(rows, "id LONG, val LONG")
-
-
 # op -> (set-up, the write under test, live rows after it publishes);
 # every table starts as ids 0..99 in four files with id stats
 CRASH_OPS = {
@@ -1011,11 +903,6 @@ CRASH_OPS = {
         None,
         lambda spark, t: t.commit_write(_mk(spark, 0, 10), mode="overwrite"),
         10,
-    ),
-    "rollback": (
-        lambda spark, t: t.commit_write(_mk(spark, 100, 110), stats_cols=["id"]),
-        lambda spark, t: t.rollback(t.snapshots()[0]["id"]),
-        100,
     ),
     "delete_where": (
         None,
@@ -1032,21 +919,6 @@ CRASH_OPS = {
         lambda spark, t: t.delete_keys(spark.range(0, 10), "id", mode="mor"),
         90,
     ),
-    "apply_deletes": (
-        lambda spark, t: t.delete_keys(spark.range(0, 10), "id", mode="mor"),
-        lambda spark, t: t.apply_deletes(spark),
-        90,
-    ),
-    "upsert": (
-        None,
-        lambda spark, t: t.upsert(_batch(spark, [(5, 9), (500, 1)]), "id"),
-        101,
-    ),
-    "compact": (
-        None,
-        lambda spark, t: t.compact(spark, sort_by=["id"], target_files=1),
-        100,
-    ),
 }
 
 
@@ -1056,7 +928,8 @@ def test_crash_before_publish_leaves_table_intact(spark, tmp_path, monkeypatch, 
     them all: the version-hint swap fails after the manifest and the
     metadata JSON are written. The table must still read its previous
     snapshot, hold no commit lock, accept a retry over the leftovers,
-    and keep every live file through an orphan sweep."""
+    and keep every live file through the expiry sweep, which reclaims
+    the crashed write's aged data dir."""
     from geowave_spark.sources import icetable
 
     setup, write, n_after = CRASH_OPS[op]
@@ -1090,28 +963,15 @@ def test_crash_before_publish_leaves_table_intact(spark, tmp_path, monkeypatch, 
     write(spark, t)  # the retry publishes over the leftovers
     assert t.current_snapshot_id() == sid + 1
     assert t.read(spark).count() == n_after
-    live = {f["path"] for s in t.snapshots() for f in t._manifest(s["id"])}
-    t.remove_orphans(older_than_s=0)
+    old = time.time() - 2 * icetable.ORPHAN_GRACE_S
+    data = os.path.join(t.root, "data")
+    for name in os.listdir(data):
+        os.utime(os.path.join(data, name), (old, old))
+    t.expire_snapshots()
+    live = {f["path"] for f in t.files()} | {d["path"] for d in t.delete_entries()}
     assert all(os.path.exists(p) for p in live)
+    assert set(os.listdir(data)) == {os.path.basename(os.path.dirname(p)) for p in live}
     assert t.read(spark).count() == n_after
-
-
-def test_upsert_leaves_the_join_strategy_to_aqe(spark, tmp_path, monkeypatch):
-    """An upsert's key set is as large as its batch, which is unbounded:
-    a broadcast hint would force all of it through the driver. Like
-    delete_keys, upsert lets AQE choose between broadcast and shuffle."""
-    t = IceTable(str(tmp_path / "upb"))
-    t.commit_write(_mk(spark, 0, 100), mode="overwrite", stats_cols=["id"])
-
-    def no_broadcast(df):
-        raise AssertionError("upsert hinted a broadcast of its key set")
-
-    monkeypatch.setattr(F, "broadcast", no_broadcast)
-    replaced, rep = t.upsert(_batch(spark, [(5, 9), (500, 1)]), "id")
-    monkeypatch.undo()
-    assert replaced == 1 and rep["files_rewritten"] >= 1
-    assert t.read(spark).count() == 101
-    assert t.read(spark).where("id = 5").first()["val"] == 9
 
 
 # ----------------------------------------------- schema-pinned reads
@@ -1208,29 +1068,6 @@ SCHEMA_CASES = {
     ),
     "delete_keys_mor": (
         lambda spark, t: t.delete_keys(spark.range(0, 10), "id", mode="mor"),
-        None,
-        True,
-    ),
-    "apply_deletes": (
-        lambda spark, t: (
-            t.delete_keys(spark.range(0, 10), "id", mode="mor"),
-            t.apply_deletes(spark),
-        ),
-        None,
-        True,
-    ),
-    "upsert": (
-        lambda spark, t: t.upsert(_batch(spark, [(5, 9), (500, 1)]), "id"),
-        None,
-        True,
-    ),
-    "compact": (
-        lambda spark, t: t.compact(spark, sort_by=["id"], target_files=1),
-        None,
-        True,
-    ),
-    "rollback": (
-        lambda spark, t: (_overwrite_new_columns(spark, t), t.rollback(t.snapshots()[0]["id"])),
         None,
         True,
     ),

@@ -1,11 +1,10 @@
 """Model-based property test of the snapshot table's row-level
 semantics: random interleavings of append / CoW delete-by-key /
-MoR delete-by-key / upsert / apply_deletes / compact are replayed
-against a plain in-memory dict model. After EVERY step the table's
-live rows must equal the model exactly — one invariant covering the
-interaction space (sequence-number rule, carried delete entries,
-rewrite-never-resurrects, compaction transparency) that example-based
-tests can only sample.
+MoR delete-by-key / CoW delete of a key range are replayed against a
+plain in-memory dict model. After EVERY step the table's live rows
+must equal the model exactly — one invariant covering the interaction
+space (sequence-number rule, carried delete entries,
+rewrite-never-resurrects) that example-based tests can only sample.
 
 The op sequences come from hypothesis but the check is deterministic
 per sequence; shrinking yields the minimal failing interleaving."""
@@ -14,7 +13,6 @@ from __future__ import annotations
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
-from pyspark.sql import functions as F
 
 from geowave_spark.sources.icetable import IceTable
 
@@ -27,32 +25,21 @@ def _df(spark, pairs):
     )
 
 
+_key = st.integers(0, KEYSPACE - 1)
+
 # an op is (kind, payload); payloads are drawn from a small keyspace so
-# deletes/upserts regularly hit rows written by earlier (and later) ops
+# deletes regularly hit rows written by earlier (and later) ops
 _ops = st.lists(
     st.one_of(
         st.tuples(
-            st.just("append"),
-            st.lists(
-                st.integers(0, KEYSPACE - 1), min_size=1, max_size=8, unique=True
-            ),
+            st.just("append"), st.lists(_key, min_size=1, max_size=8, unique=True)
         ),
+        st.tuples(st.just("del_cow"), st.lists(_key, min_size=1, max_size=6)),
+        st.tuples(st.just("del_mor"), st.lists(_key, min_size=1, max_size=6)),
         st.tuples(
-            st.just("del_cow"),
-            st.lists(st.integers(0, KEYSPACE - 1), min_size=1, max_size=6),
+            st.just("del_where"),
+            st.tuples(_key, st.integers(0, 12)).map(lambda p: (p[0], p[0] + p[1])),
         ),
-        st.tuples(
-            st.just("del_mor"),
-            st.lists(st.integers(0, KEYSPACE - 1), min_size=1, max_size=6),
-        ),
-        st.tuples(
-            st.just("upsert"),
-            st.lists(
-                st.integers(0, KEYSPACE - 1), min_size=1, max_size=6, unique=True
-            ),
-        ),
-        st.tuples(st.just("apply_deletes"), st.just(None)),
-        st.tuples(st.just("compact"), st.just(None)),
     ),
     min_size=2,
     max_size=9,
@@ -73,8 +60,9 @@ def test_icetable_matches_dict_model(spark, tmp_path_factory, ops):
     ver = 0  # value generation: distinguishes re-inserts from survivors
 
     # seed rows + one sentinel OUTSIDE the delete keyspace so the table
-    # can never go fully empty (read/compact on an empty table raise by
-    # contract; emptiness is covered by the example-based tests)
+    # can never go fully empty (a read or delete on an empty table
+    # raises by contract; emptiness is covered by the example-based
+    # tests)
     seed = [(k, 0) for k in range(0, KEYSPACE, 3)] + [(KEYSPACE + 1000, 0)]
     t.commit_write(_df(spark, seed), mode="overwrite", stats_cols=["id"])
     model.update(dict(seed))
@@ -82,34 +70,26 @@ def test_icetable_matches_dict_model(spark, tmp_path_factory, ops):
     for kind, payload in ops:
         ver += 1
         if kind == "append":
-            # append is not upsert: appending a live key would create a
-            # duplicate row, which a dict model cannot express — so the
-            # generated appends target currently-ABSENT keys only. That
-            # still covers the interesting case: an append of a key a
-            # MoR delete removed earlier must resurrect it (seq rule).
+            # appending a live key would create a duplicate row, which a
+            # dict model cannot express — so the generated appends
+            # target currently-ABSENT keys only. That still covers the
+            # interesting case: an append of a key a MoR delete removed
+            # earlier must resurrect it (seq rule).
             rows = [(k, ver * 1000 + k) for k in payload if k not in model]
             if not rows:
                 continue
             t.commit_write(_df(spark, rows), mode="append", stats_cols=["id"])
             model.update(dict(rows))
-        elif kind == "del_cow":
-            t.delete_keys(_df(spark, [(k, 0) for k in payload]).select("id"),
-                          "id", mode="cow")
+        elif kind in ("del_cow", "del_mor"):
+            keys = _df(spark, [(k, 0) for k in payload]).select("id")
+            t.delete_keys(keys, "id", mode="cow" if kind == "del_cow" else "mor")
             for k in payload:
                 model.pop(k, None)
-        elif kind == "del_mor":
-            t.delete_keys(_df(spark, [(k, 0) for k in payload]).select("id"),
-                          "id", mode="mor")
-            for k in payload:
+        elif kind == "del_where":
+            lo, hi = payload
+            t.delete_where(spark, ranges={"id": (lo, hi)})
+            for k in range(lo, hi + 1):
                 model.pop(k, None)
-        elif kind == "upsert":
-            rows = [(k, ver * 1000 + k) for k in payload]
-            t.upsert(_df(spark, rows), "id")
-            model.update(dict(rows))
-        elif kind == "apply_deletes":
-            t.apply_deletes(spark)
-        elif kind == "compact":
-            t.compact(spark, sort_by=["id"], target_files=2)
 
         got = {
             (r["id"], r["val"]) for r in t.read(spark).collect()

@@ -1,7 +1,7 @@
 """Merge-on-read equality-delete contract tests (Iceberg v2 semantics
 from scratch): O(keys) delete commits, read/scan-time anti-join,
-sequence-number ordering vs later writes, fold via apply_deletes /
-compact, and interaction with the copy-on-write paths.
+sequence-number ordering vs later appends, retirement by an overwrite,
+and interaction with the copy-on-write delete.
 
 Reference parity: the KV backends delete by writing tombstones the
 store's compaction later folds (core/store/.../base/BaseDataStore.java
@@ -70,7 +70,7 @@ def test_mor_time_travel_and_double_delete(spark, tmp_path):
     assert len(t.snapshots()) == n_snaps
 
 
-def test_mor_sequence_rule_append_and_upsert(spark, tmp_path):
+def test_mor_sequence_rule_append(spark, tmp_path):
     t = _sorted_table(spark, tmp_path, "m3", n=100)
     t.delete_keys(spark.range(5, 6).select("id"), "id", mode="mor")
     assert t.read(spark).where(F.col("id") == 5).count() == 0
@@ -83,15 +83,6 @@ def test_mor_sequence_rule_append_and_upsert(spark, tmp_path):
     )
     live = t.read(spark).where(F.col("id") == 5).collect()
     assert [(r["id"], r["val"]) for r in live] == [(5, 999)]
-    # an UPSERT of another MoR-deleted key resurrects it too, and the
-    # upsert's own rewrite must NOT resurrect different deleted keys
-    t.delete_keys(spark.range(6, 8).select("id"), "id", mode="mor")
-    t.upsert(spark.createDataFrame([(6, 777)], "id long, val long"), "id")
-    got = {
-        r["id"]: r["val"]
-        for r in t.read(spark).where(F.col("id").isin(5, 6, 7)).collect()
-    }
-    assert got == {5: 999, 6: 777}  # 7 stays deleted through the rewrite
 
 
 def test_cow_delete_after_mor_never_resurrects(spark, tmp_path):
@@ -118,39 +109,16 @@ def test_scan_applies_mor_deletes(spark, tmp_path):
     assert got.where((F.col("id") >= 900) & (F.col("id") < 950)).count() == 0
 
 
-def test_apply_deletes_folds_and_prunes(spark, tmp_path):
-    t = _sorted_table(spark, tmp_path, "m6")
-    t.delete_keys(spark.range(100, 200).select("id"), "id", mode="mor")
-    folded, rep = t.apply_deletes(spark)
-    assert folded == 100
-    # only the stat-overlapping files were rewritten (sorted layout ->
-    # the delete key range hits a strict subset of the 8 files)
-    assert 0 < rep["files_rewritten"] < rep["files_total"]
-    assert t.delete_entries() == []
-    assert t.read(spark).count() == 900
-    assert t.merged_column_stats(["id"])["n_rows"] == 900
-    assert t.merged_column_stats(["id"])["mor_pending"] is False
-    # second call is a metadata no-op
-    folded2, rep2 = t.apply_deletes(spark)
-    assert folded2 == 0 and rep2["files_rewritten"] == 0
-
-
-def test_compact_folds_deletes(spark, tmp_path):
-    t = _sorted_table(spark, tmp_path, "m7")
-    t.delete_keys(spark.range(0, 500).select("id"), "id", mode="mor")
-    t.compact(spark, sort_by=["id"], target_files=2)
-    assert t.delete_entries() == []
-    assert t.read(spark).count() == 500
-    assert t.read(spark).agg(F.min("id")).first()[0] == 500
-
-
 def test_expire_removes_orphaned_delete_files(spark, tmp_path):
     t = _sorted_table(spark, tmp_path, "m8")
     t.delete_keys(spark.range(0, 10).select("id"), "id", mode="mor")
     del_paths = [d["path"] for d in t.delete_entries()]
     assert all(os.path.exists(p) for p in del_paths)
-    t.apply_deletes(spark)
-    t.expire_snapshots(keep_last=1)
+    # an overwrite with the live rows retires the delete file
+    t.commit_write(t.read(spark), mode="overwrite", stats_cols=["id"])
+    assert t.delete_entries() == []
+    assert t.merged_column_stats(["id"])["mor_pending"] is False
+    t.expire_snapshots()
     assert not any(os.path.exists(p) for p in del_paths)
     assert t.read(spark).count() == 990
 
@@ -170,13 +138,13 @@ def test_mor_flips_occupancy_completeness(spark, tmp_path):
     assert t.merged_occupancy()["complete"] is False
 
 
-def test_remove_orphans(spark, tmp_path):
-    """A crashed write (parquet dir, no commit) is invisible to reads
-    and to expire_snapshots; remove_orphans reclaims it after the
-    grace period — and never touches live dirs or young dirs."""
-    import os
+def test_expire_sweeps_aged_orphan_dirs(spark, tmp_path):
+    """A crashed write (parquet dir, no commit) is invisible to reads;
+    expire_snapshots reclaims it once it is older than the grace period
+    and never touches live dirs or young dirs."""
+    import time
 
-    from geowave_spark.sources.icetable import IceTable
+    from geowave_spark.sources import icetable
     from geowave_spark.sources.testgeo import events_points
 
     t = IceTable(str(tmp_path / "tbl"))
@@ -190,11 +158,14 @@ def test_remove_orphans(spark, tmp_path):
     assert t.read(spark).count() == n  # invisible to reads
 
     # young dir: protected by the grace period
-    rep = t.remove_orphans(older_than_s=3600)
-    assert rep["removed_dirs"] == 0 and os.path.isdir(orphan)
+    assert t.expire_snapshots()["removed_dirs"] == 0 and os.path.isdir(orphan)
 
-    # past the grace period: reclaimed, live data untouched
-    rep = t.remove_orphans(older_than_s=0)
-    assert rep["removed_dirs"] == 1 and rep["removed_bytes"] > 0
+    # past the grace period: reclaimed, live data untouched, even when
+    # the live dir is as old
+    old = time.time() - 2 * icetable.ORPHAN_GRACE_S
+    data = os.path.join(str(tmp_path / "tbl"), "data")
+    for name in os.listdir(data):
+        os.utime(os.path.join(data, name), (old, old))
+    assert t.expire_snapshots()["removed_dirs"] == 1
     assert not os.path.exists(orphan)
     assert t.read(spark).count() == n

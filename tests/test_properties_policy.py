@@ -15,6 +15,7 @@ from datetime import datetime, timedelta
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
+from oracles import unparse_visibility
 
 from geowave_spark.plans.store import interval_query_bin_bounds
 from geowave_spark.plans.visibility import (
@@ -44,11 +45,12 @@ ast = st.recursive(
 
 @given(ast)
 def test_unparse_parse_round_trip_is_structural(node):
-    """unparse parenthesizes operator children (the reference's
-    OperatorNode.buildExpression), so parse(unparse(ast)) must
-    reconstruct the EXACT tree — including right-nested operators the
-    left-associative grammar could never produce bare."""
-    assert parse_visibility(node.unparse()) == node
+    """The renderer (tests/oracles.unparse_visibility) parenthesizes
+    operator children (the reference's OperatorNode.buildExpression),
+    so parse(unparse(ast)) must reconstruct the EXACT tree — including
+    right-nested operators the left-associative grammar could never
+    produce bare."""
+    assert parse_visibility(unparse_visibility(node)) == node
 
 
 @given(st.text(alphabet="ab()&| ", max_size=24), auth_set)

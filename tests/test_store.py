@@ -90,6 +90,34 @@ def test_cached_layout_is_built_once_and_read_without_a_job(spark, sf_dir, monke
     assert again.count() == first.count() > 0
 
 
+def test_a_build_removes_only_the_stale_cache_dirs_of_its_tag(
+    spark, sf_dir, monkeypatch, tmp_path
+):
+    """A cache dir is named ``<tag>_<version>_<digest>``. Building a
+    table removes the dirs of its tag that another cache version wrote
+    or that carry no version (the older ``<tag>_<digest>`` form), and
+    keeps a same-version dir of another key and the dirs of other tags:
+    one this tag prefixes, the formats fixture and the scaled gdelt
+    copies."""
+    from geowave_spark.plans import store as S
+
+    root = tmp_path / "cache"
+    monkeypatch.setattr(S, "CACHE_ROOT", str(root))
+    stale = ["revtext_0123456789ab", "revtext_ice0_0123456789ab"]
+    kept = [
+        f"revtext_{S.CACHE_VERSION}_0123456789ab",
+        "revtext_extra_0123456789ab",
+        "formats_0123456789ab",
+        "gdelt_scaled_sf0.01_0",
+    ]
+    for name in stale + kept:
+        (root / name / "metadata").mkdir(parents=True)
+    S.reverse_text_store(spark, sf_dir)
+    built = os.path.basename(S.cache_path("revtext", sf_dir))
+    assert built.startswith(f"revtext_{S.CACHE_VERSION}_")
+    assert sorted(os.listdir(root)) == sorted(kept + [built])
+
+
 def test_attribute_index_store_and_range_query(spark, sf_dir, monkeypatch, tmp_path):
     """AttributeIndex analog: a non-spatial column backs a sorted
     stored layout; the range predicate reaches PushedFilters and the

